@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XXH64}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
@@ -19,7 +18,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * the eval loop IS the fast path; codegen would only inline the call.
   *
   * Registered as SQL functions (`simhash64`, `minhash32`) via
-  * [[GraftFunctions.register]] so they compose with the rest of the
+  * the [[GraftFunctions]] table so they compose with the rest of the
   * declarative plan.
   */
 final case class SimHash64(child: Expression)
@@ -693,41 +692,4 @@ final case class GramMassStats(child: Expression)
 
   override protected def withNewChildInternal(newChild: Expression): GramMassStats =
     copy(child = newChild)
-}
-
-/** Registration: makes the native expressions available to SQL/expr(). */
-object GraftFunctions {
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("simhash64", es => SimHash64(es.head), "built-in")
-    reg.createOrReplaceTempFunction("minhash32", es => MinHash32(es.head), "built-in")
-    reg.createOrReplaceTempFunction("minhash_shingle32", es => MinHashShingle32(es.head), "built-in")
-    reg.createOrReplaceTempFunction("shingle_hashes", es => ShingleHashes(es.head), "built-in")
-    reg.createOrReplaceTempFunction("ordered_pairs64", es => OrderedPairs64(es.head), "built-in")
-    reg.createOrReplaceTempFunction("vec_dot", es => VecDot(es(0), es(1)), "built-in")
-    reg.createOrReplaceTempFunction("vec_norm", es => VecNorm(es.head), "built-in")
-    reg.createOrReplaceTempFunction("lsh_bucket64", es => LshBucket64(es.head), "built-in")
-    reg.createOrReplaceTempFunction("vec_sign64", es => VecSign64(es.head), "built-in")
-    reg.createOrReplaceTempFunction("fingerprint64", es => Fingerprint64(es.head), "built-in")
-    reg.createOrReplaceTempFunction("token_stats", es => TokenStats(es.head), "built-in")
-    reg.createOrReplaceTempFunction("ngram_dup_stats", es => NgramDupStats(es.head), "built-in")
-    reg.createOrReplaceTempFunction("gram_mass_stats", es => GramMassStats(es.head), "built-in")
-    reg.createOrReplaceTempFunction("bigrams", es => Bigrams(es.head), "built-in")
-    reg.createOrReplaceTempFunction("sig_pairs", es => SigPairs(es.head), "built-in")
-    reg.createOrReplaceTempFunction("token_entropy", es => TokenEntropy(es.head), "built-in")
-    reg.createOrReplaceTempFunction("hamming_pairs", es => HammingPairs(es.head), "built-in")
-    reg.createOrReplaceTempFunction("pq_adc", es => PqAdc(es(0), es(1)), "built-in")
-    reg.createOrReplaceTempFunction("bucket_of", es => BucketOf(es(0), es(1)), "built-in")
-    reg.createOrReplaceTempFunction("theta_sketch_agg", es => ThetaSketchAgg(es.head), "built-in")
-    reg.createOrReplaceTempFunction("theta_count", es => ThetaCount(es.head), "built-in")
-    reg.createOrReplaceTempFunction("theta_intersect_count", es => ThetaSetOpCount(es(0), es(1), "intersect"), "built-in")
-    reg.createOrReplaceTempFunction("theta_anotb_count", es => ThetaSetOpCount(es(0), es(1), "anotb"), "built-in")
-    reg.createOrReplaceTempFunction("theta_union_count", es => ThetaSetOpCount(es(0), es(1), "union"), "built-in")
-    reg.createOrReplaceTempFunction("kll_sketch_agg", es => KllSketchAgg(es.head), "built-in")
-    reg.createOrReplaceTempFunction("kll_merge_agg", es => KllMergeAgg(es.head), "built-in")
-    reg.createOrReplaceTempFunction("kll_quantiles", es => KllQuantiles(es(0), es(1)), "built-in")
-    // table functions live in their own registry — keep parity with
-    // GraftExtensions' injectTableFunction
-    graft.sources.GraftTvf.register(spark)
-  }
 }

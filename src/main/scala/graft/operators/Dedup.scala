@@ -112,7 +112,6 @@ object Dedup {
     * emitted pair (~1.3M at sf0.1). */
   private[graft] def sharedShinglePairs(docsDf: DataFrame,
       nDocs: Option[Long] = None): DataFrame = {
-    graft.functions.GraftFunctions.register(docsDf.sparkSession)
     val nd = nDocs.getOrElse(approxRowCount(docsDf))
     val cap = math.max(20L, (nd * 0.01).toLong)
     val hashed = docsDf
@@ -270,7 +269,6 @@ object Dedup {
     * written yesterday collides with a delta row computed today iff
     * the same full recompute would have paired them. */
   private[graft] def bandRows(docsDf: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(docsDf.sparkSession)
     docsDf
       .withColumn("toks", expr(tokExpr))
       .where(size(col("toks")) >= 3)
@@ -379,7 +377,6 @@ object Dedup {
     * quadrants) is testable against adversarial synthetic signatures,
     * not just whatever the corpus happens to contain. */
   private[graft] def simhashPairs(sig: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(sig.sparkSession)
     sig.select(
         col("doc_id"), col("simhash"),
         explode(expr(
@@ -403,7 +400,6 @@ object Dedup {
     * replays the quadrant blocking, the xor/bit_count Hamming distance
     * and the ≤3 cut from the exported signatures. */
   private def d04(s: SparkSession, d: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val sigs = docs(s, d)
       .withColumn("toks", expr(tokExpr))
       .where(size(col("toks")) >= 1)
@@ -434,7 +430,6 @@ object Dedup {
     * aggregate fold, threshold 0.3 (this synthetic set has no tight
     * dup clusters; the operator semantics are threshold-parametric). */
   private def d05(s: SparkSession, d: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val n = Tables.df(s, d, "embeddings")
       .withColumn("nrm", expr("vec_norm(embedding)"))
       .select(col("vec_id"), col("label"), col("embedding").as("e"), col("nrm"))
@@ -697,7 +692,6 @@ object Dedup {
     * double cosine from the raw embeddings, the 0.3 cut and the
     * 6-digit round. */
   private def d07(s: SparkSession, d: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val blocks = Tables.df(s, d, "embeddings")
       .withColumn("blk", expr("CAST(lsh_bucket64(embedding) AS INT) >> 4"))
       .select("vec_id", "blk")
@@ -729,7 +723,6 @@ object Dedup {
     * NOT) is golden-pinned on constructed vectors in PipelineSpec, the
     * d14/m07 arms-length pattern; the driver corpus stays rows-only. */
   private[graft] def embedLshPairs(embDf: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(embDf.sparkSession)
     val n = embDf
       .withColumn("nrm", expr("vec_norm(embedding)"))
       .withColumn("blk", expr("CAST(lsh_bucket64(embedding) AS INT) >> 4"))
@@ -1184,7 +1177,6 @@ object Dedup {
     * that empty result, the spec proves detection). */
   private[graft] def sentenceNearDupPairs(docsDf: DataFrame,
       minJac: Double = 0.5): DataFrame = {
-    graft.functions.GraftFunctions.register(docsDf.sparkSession)
     // One row per DISTINCT sentence, keyed by its 64-bit hash: every
     // shuffle downstream moves 8-byte ids, never sentence text (the
     // first cut of this operator self-joined on the text and was 12.6 s
@@ -2019,7 +2011,6 @@ object Dedup {
     * cosines (pairwise and to-centroid), the 0.3 cut and the
     * keep-the-diverse-one removal rule from raw embeddings. */
   private def d22(s: SparkSession, d: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val (idx, cents) = Similarity.ivfIndex(s, d)
     val centDf = Similarity.centroidsDf(s, cents)
     centDf.coalesce(1).write.mode("overwrite")

@@ -719,7 +719,6 @@ object Multimodal {
     * asserted in PipelineSpec. */
   private def m05(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    graft.functions.GraftFunctions.register(s)
     val media = graft.Tables.df(s, d, "documents")
       .select(col("doc_id")).as[Long]
       .mapPartitions(_.map(id => (id, 0, synthImageBytes(id))))

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
-import graft.functions.{GraftFunctions, LshOps}
+import graft.functions.LshOps
 
 /** Similarity search over the `embeddings` table (64-dim float vectors).
   *
@@ -20,7 +20,6 @@ import graft.functions.{GraftFunctions, LshOps}
 object Similarity {
 
   private def emb(s: SparkSession, d: String): DataFrame = {
-    GraftFunctions.register(s)
     Tables.df(s, d, "embeddings")
       .withColumn("nrm", expr("vec_norm(embedding)"))
   }

@@ -121,7 +121,6 @@ object SketchMv {
     * Spark's exact percentiles — and proves merge-of-parts ==
     * direct-sketch agreement within the bound). */
   private def q107(s: SparkSession, d: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val o = Tables.df(s, d, "orders")
     val p = o.groupBy(date_format(col("o_orderdate"), "yyyy-MM").as("batch"))
       .agg(expr("kll_sketch_agg(o_totalprice)").as("sk"),
@@ -205,7 +204,6 @@ object SketchMv {
     * is broadcast-trivial; raw customer rows never cross the wire —
     * only per-month sketch states (partial/final split). */
   private def q108(s: SparkSession, d: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val o = Tables.df(s, d, "orders")
     val sk = o
       .groupBy((year(col("o_orderdate")) * 12 + month(col("o_orderdate")) - 1)
@@ -252,9 +250,7 @@ object SketchMv {
     * family shares one maintenance contract): each micro-batch's
     * per-key sketch states land idempotently under `batch_id=`, and
     * the matching merge aggregate (`hll_union_agg` / `kll_merge_agg` /
-    * theta union) over the partials dir is the live card. The caller
-    * registers GraftFunctions on the streaming session when using the
-    * native sketch aggs. */
+    * theta union) over the partials dir is the live card. */
   def streamingSketchPartials(stream: DataFrame, batchKey: Column,
       sketchCol: Column, outDir: String): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
     stream.writeStream.foreachBatch {
@@ -317,7 +313,6 @@ object SketchMv {
     * oracle'd path: it proves partials→merge loses nothing below
     * capacity. */
   private def q118(s: SparkSession, d: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val sup = Tables.df(s, d, "supplier")
       .join(Tables.df(s, d, "nation"),
         col("s_nationkey") === col("n_nationkey"))

@@ -422,7 +422,6 @@ object SnapshotOps {
     * SFs). The SQL a Thrift/notebook user would actually type. */
   private def q130(s: SparkSession, d: String): DataFrame = {
     val (root, mk) = cloneBase(s, d, "snaptvf")
-    graft.sources.GraftTvf.register(s)
     s.sql(
       s"""SELECT pr, COUNT(*) AS n,
          |  CAST(SUM(CAST(price AS DECIMAL(18,2))) AS DOUBLE) AS total,
@@ -461,7 +460,6 @@ object SnapshotOps {
     GraftCatalog.commitSnapshot(batchA.repartition(1), root, append = true) // v2
     GraftCatalog.commitSnapshot(batchB.repartition(1), root, append = true) // v3
     GraftCatalog.rollbackSnapshot(s, root, 2L)                              // v4 undoes v3
-    graft.sources.GraftTvf.register(s)
     s.sql(
       s"""SELECT _version, _change, COUNT(*) AS n,
          |  CAST(SUM(CAST(price AS DECIMAL(18,2))) AS DOUBLE) AS total
@@ -631,7 +629,6 @@ object SnapshotOps {
     val (root, _) = cloneBase(s, d, "snaptag")
     GraftCatalog.tagSnapshot(s, root, "baseline", 1L)
     GraftCatalog.deleteSnapshotWhere(s, root, col("o_orderkey") % 3 === 0)
-    graft.sources.GraftTvf.register(s)
     s.sql(
       s"""SELECT pr, COUNT(*) AS n,
          |  CAST(SUM(CAST(price AS DECIMAL(18,2))) AS DOUBLE) AS total,
@@ -686,7 +683,6 @@ object SnapshotOps {
         root, append = false)
       0L
     }
-    graft.sources.GraftTvf.register(s)
     s.sql(
       s"""SELECT o_orderdate_month AS om, n_rows
          |FROM graft_snapshot_partitions('$root')
@@ -769,7 +765,6 @@ object SnapshotOps {
     val ts = System.currentTimeMillis()
     Thread.sleep(15)
     GraftCatalog.deleteSnapshotWhere(s, root, col("o_orderkey") % 3 === 0)
-    graft.sources.GraftTvf.register(s)
     val tsLit = java.time.Instant.ofEpochMilli(ts)
       .atZone(java.time.ZoneOffset.UTC)
       .format(java.time.format.DateTimeFormatter
@@ -1012,7 +1007,6 @@ object SnapshotOps {
     * actually types. Same fixtures, same DuckDB oracle. */
   private def q144(s: SparkSession, d: String): DataFrame = {
     val (l, r) = spjFixtures(s, d)
-    graft.sources.GraftTvf.register(s)
     s.sql(
       s"""SELECT o.pr, COUNT(*) AS n,
          |  CAST(SUM(CAST(c.cust_total AS DECIMAL(18,2))) AS DOUBLE) AS joined_total

@@ -201,7 +201,6 @@ object TextAnalysis {
     * formulation it replaces (nested aggregate-inside-transform) ran
     * interpreted and dominated t04's bench time. */
   private[graft] def fingerprint(docsDf: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(docsDf.sparkSession)
     docsDf
       .withColumn("fp", expr(
         "fingerprint64(regexp_extract_all(lower(text), '[a-z]+', 0))"))
@@ -250,7 +249,6 @@ object TextAnalysis {
     * partition's bigrams before the shuffle; the final top-N is a
     * TakeOrdered, never a global sort. */
   private def t06(s: SparkSession, d: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     Tables.df(s, d, "documents")
       .withColumn("toks", expr("regexp_extract_all(lower(text), '[a-z]+', 0)"))
       .where(size(col("toks")) >= 2)
@@ -277,7 +275,6 @@ object TextAnalysis {
     * math over the token list — narrow, no shuffle, and the divisions
     * are integer-exact doubles so the oracle matches bit-for-bit. */
   private def t07(s: SparkSession, d: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     Tables.df(s, d, "documents")
       .withColumn("toks", expr("regexp_extract_all(lower(text), '[a-z]+', 0)"))
       .where(size(col("toks")) >= 1)
@@ -315,7 +312,6 @@ object TextAnalysis {
     * shuffle; rounded to 6 decimals so double summation order across
     * engines cannot surface. */
   private def t08(s: SparkSession, d: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     Tables.df(s, d, "documents")
       .withColumn("toks", expr("regexp_extract_all(lower(text), '[a-z]+', 0)"))
       .where(size(col("toks")) >= 1)
@@ -405,7 +401,6 @@ object TextAnalysis {
     * partial aggregation on both sides (the LM table itself is the
     * corpus-wide aggregate a real pipeline materializes once). */
   private def t11(s: SparkSession, d: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val docBg = Tables.df(s, d, "documents")
       .withColumn("toks", expr("regexp_extract_all(lower(text), '[a-z]+', 0)"))
       .where(size(col("toks")) >= 2)
@@ -523,7 +518,6 @@ object TextAnalysis {
     * byte-identical to its standalone operator's, and the oracle
     * composes the standalone oracles. */
   private def t14(s: SparkSession, d: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val allStops = langs.flatMap(stopwords).distinct
     Tables.df(s, d, "documents")
       .withColumn("toks", expr("regexp_extract_all(lower(text), '[a-z]+', 0)"))
@@ -898,7 +892,6 @@ object TextAnalysis {
     * the identical double (the t21 lift discipline).
     */
   private[graft] def dupNgramProfile(docsDf: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(docsDf.sparkSession)
     docsDf
       .withColumn("st",
         expr("ngram_dup_stats(regexp_extract_all(lower(text), '[a-z]+', 0))"))
@@ -951,7 +944,6 @@ object TextAnalysis {
     * (vocabulary-bounded, never corpus-bounded) and the totals are
     * 1-row broadcasts. */
   private def t23(s: SparkSession, d: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val toks = Tables.df(s, d, "documents")
       .withColumn("toks", expr("regexp_extract_all(lower(text), '[a-z]+', 0)"))
     val uc = toks.select(explode(col("toks")).as("w"))
@@ -1436,7 +1428,6 @@ object TextAnalysis {
     // tokens (token lengths are ≥ 1, so a real 5-gram mass is > 0) —
     // translated to NULL exactly where the old left_outer join was
     // unmatched. Division/round shapes identical to the old form.
-    graft.functions.GraftFunctions.register(s)
     Tables.df(s, d, "documents")
       .withColumn("t", expr("regexp_extract_all(lower(text), '[a-z]+', 0)"))
       .where(size(col("t")) >= 2)

@@ -175,9 +175,6 @@ object GraftCatalog {
   // Sinks.
   // -------------------------------------------------------------------
 
-  def writeParquet(df: DataFrame, path: String): Unit =
-    df.write.mode(SaveMode.Overwrite).parquet(path)
-
   def writeCsv(df: DataFrame, path: String, header: Boolean = true): Unit =
     df.write.mode(SaveMode.Overwrite).option("header", header.toString).csv(path)
 
@@ -187,21 +184,10 @@ object GraftCatalog {
   def writeOrc(df: DataFrame, path: String): Unit =
     df.write.mode(SaveMode.Overwrite).orc(path)
 
-  /** Z-order (Morton) interleaving of two numeric columns into one
-    * cluster key: each value is scaled to a 16-bit bucket inside its
-    * column's [min, max], and the bucket bits are interleaved, so rows
-    * close in BOTH dimensions land close in the key order. Pure
-    * codegen'd shift/or arithmetic — 32 terms, no UDF. */
-  private def zBucket(v: Column, mn: Column, mx: Column): Column =
-    when(mx === mn, lit(0L)).otherwise(
-      least(lit(65535L), greatest(lit(0L),
-        ((v - mn).cast("double") / (mx - mn).cast("double") * 65535.0)
-          .cast("long"))))
-
-  def zValue(a: Column, b: Column, aMin: Column, aMax: Column,
-      bMin: Column, bMax: Column): Column =
-    zValueN(Seq((a, aMin, aMax), (b, bMin, bMax)))
-
+  /** Z-order (Morton) interleave of per-column buckets into one 64-bit
+    * cluster key: bit i of bucket j lands at position i·k + j, so rows
+    * close in EVERY dimension land close in the key order. Pure
+    * codegen'd shift/or arithmetic — bits·k terms, no UDF. */
   private def interleaveBits(buckets: Seq[Column], bits: Int): Column =
     (0 until bits).foldLeft(lit(0L)) { (acc, i) =>
       buckets.zipWithIndex.foldLeft(acc) { case (a, (b, j)) =>
@@ -209,15 +195,6 @@ object GraftCatalog {
           i * buckets.size + j))
       }
     }
-
-  /** N-column Morton interleave (2–4 columns in one 64-bit key): each
-    * value scales to a 16-bit bucket in its [min, max]; bit i of
-    * column j lands at position i·k + j. Still pure codegen'd
-    * shift/or arithmetic — 16·k terms. */
-  def zValueN(cols: Seq[(Column, Column, Column)]): Column = {
-    require(cols.size >= 2 && cols.size <= 4, "zValueN takes 2-4 columns")
-    interleaveBits(cols.map { case (v, mn, mx) => zBucket(v, mn, mx) }, 16)
-  }
 
   /** Multi-dimensional layout: write `df` parquet clustered by the
     * Z-order of two columns. A linear sort gives row-group min/max
@@ -259,7 +236,6 @@ object GraftCatalog {
     * interpreted-HOF-on-hot-path lesson, SURVEY §4); NULL values keep
     * that formulation's bucket 0. */
   private[graft] def zKeyed(df: DataFrame, cols: Seq[String], bnds: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(df.sparkSession)
     val buckets = cols.zipWithIndex.map { case (c, i) =>
       expr(s"coalesce(bucket_of(CAST($c AS DOUBLE), bnd$i), 0)").cast("long")
     }

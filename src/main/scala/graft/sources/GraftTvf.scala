@@ -25,8 +25,7 @@ import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
   * data-skips through the manifest stats exactly like the DataFrame
   * path — SQL users get the Iceberg behavior for free. Arguments must
   * be literals (a TVF's table identity has to be known at planning).
-  * Registered per-session here or cluster-wide via
-  * [[graft.GraftExtensions]]'s `injectTableFunction`.
+  * Registered by name in [[graft.functions.GraftFunctions]]' table.
   */
 object GraftTvf {
 
@@ -194,24 +193,5 @@ object GraftTvf {
       args.lift(2).map(v => String.valueOf(v.eval()).toLong)
         .getOrElse(10 * 60 * 1000L))
       .queryExecution.logical
-  }
-
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.tableFunctionRegistry.createOrReplaceTempFunction(
-      "graft_snapshot_cursors", cursorsBuilder, "built-in")
-    spark.sessionState.tableFunctionRegistry.createOrReplaceTempFunction(
-      "graft_vacuum_dry_run", vacuumDryRunBuilder, "built-in")
-    spark.sessionState.tableFunctionRegistry.createOrReplaceTempFunction(
-      "graft_snapshot_files", filesBuilder, "built-in")
-    spark.sessionState.tableFunctionRegistry.createOrReplaceTempFunction(
-      "graft_snapshot_spj", spjBuilder, "built-in")
-    spark.sessionState.tableFunctionRegistry.createOrReplaceTempFunction(
-      "graft_snapshot", snapshotBuilder, "built-in")
-    spark.sessionState.tableFunctionRegistry.createOrReplaceTempFunction(
-      "graft_snapshot_changes", changesBuilder, "built-in")
-    spark.sessionState.tableFunctionRegistry.createOrReplaceTempFunction(
-      "graft_snapshot_history", historyBuilder, "built-in")
-    spark.sessionState.tableFunctionRegistry.createOrReplaceTempFunction(
-      "graft_snapshot_partitions", partitionsBuilder, "built-in")
   }
 }

@@ -20,6 +20,7 @@ object BenchAB {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     bare.sparkContext.setLogLevel("ERROR")
+    graft.functions.GraftFunctions.register(bare) // functions, but no rules
     SparkSession.clearActiveSession(); SparkSession.clearDefaultSession()
     val ext = SparkSession.builder().master("local[32]")
       .appName("bench-ab-ext")

@@ -183,6 +183,50 @@ class CoreSpec extends AnyFunSuite {
       assert(sk.getAs[Number]("dc").longValue == 5L)
       assert(sk.getAs[Double]("med") >= 1.0 && sk.getAs[Double]("med") <= 5.0)
       assert(sk.getAs[Long]("d2") == 2L) // "a b" occurs twice
+      // every entry of the one function table resolves, each in its
+      // own registry
+      graft.functions.GraftFunctions.scalar.foreach { case (id, _, _) =>
+        assert(s2.sessionState.functionRegistry.functionExists(id), s"missing $id")
+      }
+      graft.functions.GraftFunctions.table.foreach { case (id, _, _) =>
+        assert(s2.sessionState.tableFunctionRegistry.functionExists(id), s"missing $id")
+      }
+      // the one "a b" 2-gram: 3 characters, seen once; no 5-grams
+      val gm = s2.sql("SELECT gram_mass_stats(array('a', 'b')) AS g").head()
+        .getStruct(0)
+      assert(gm.getAs[Long]("tot2") == 3L && gm.getAs[Long]("dupm2") == 0L &&
+        gm.getAs[Long]("tot5") == 0L)
+    } finally {
+      org.apache.spark.sql.SparkSession.setDefaultSession(spark)
+      org.apache.spark.sql.SparkSession.setActiveSession(spark)
+    }
+  }
+
+  test("GraftFunctions.register installs the function table on a session built without the extension") {
+    // the imperative path: a session that never saw GraftExtensions
+    // (shares the SparkContext, so it must NOT be stopped)
+    import org.apache.spark.sql.SparkSession
+    SparkSession.clearActiveSession()
+    SparkSession.clearDefaultSession()
+    val s3 = SparkSession.builder()
+      .master("local[2]")
+      .appName("graft-register-test")
+      .config("spark.sql.shuffle.partitions", "2")
+      .getOrCreate()
+    try {
+      val fns = s3.sessionState.functionRegistry
+      val tvfs = s3.sessionState.tableFunctionRegistry
+      assert(!fns.functionExists(graft.functions.GraftFunctions.scalar.head._1),
+        "the bare session already carries the graft functions")
+      graft.functions.GraftFunctions.register(s3)
+      graft.functions.GraftFunctions.scalar.foreach { case (id, _, _) =>
+        assert(fns.functionExists(id), s"missing $id")
+      }
+      graft.functions.GraftFunctions.table.foreach { case (id, _, _) =>
+        assert(tvfs.functionExists(id), s"missing $id")
+      }
+      assert(s3.sql("SELECT vec_dot(array(1.0D, 2.0D), array(3.0D, 4.0D)) AS vd")
+        .head().getDouble(0) == 11.0)
     } finally {
       org.apache.spark.sql.SparkSession.setDefaultSession(spark)
       org.apache.spark.sql.SparkSession.setActiveSession(spark)

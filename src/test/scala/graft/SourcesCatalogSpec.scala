@@ -1143,7 +1143,7 @@ class SourcesCatalogSpec extends AnyFunSuite {
 
     // the TABLE-VALUED FUNCTION surface: pure SQL, head and time
     // travel, with the same automatic data skipping
-    graft.sources.GraftTvf.register(spark)
+    graft.functions.GraftFunctions.register(spark)
     assert(spark.sql(s"SELECT count(*) FROM graft_snapshot('$root')")
       .head().getLong(0) == 401L)
     assert(spark.sql(s"SELECT count(*) FROM graft_snapshot('$root', 2)")
@@ -1667,7 +1667,7 @@ class SourcesCatalogSpec extends AnyFunSuite {
     assert(auto.columns.toSeq == Seq("id", "v", "score"))
     assert(auto.where(col("score").isNotNull).count() == 3)
     // pure-SQL users get the evolved schema through the TVF too
-    graft.sources.GraftTvf.register(spark)
+    graft.functions.GraftFunctions.register(spark)
     assert(spark.sql(s"SELECT score FROM graft_snapshot('$root') WHERE score IS NOT NULL")
       .count() == 3)
     // rollback carries the schema line with the file list
@@ -1763,7 +1763,7 @@ class SourcesCatalogSpec extends AnyFunSuite {
     }
     // tag-name travel through the TVF: pure SQL, head has moved on
     GraftCatalog.tagSnapshot(spark, root, "rel-1", 1L)
-    graft.sources.GraftTvf.register(spark)
+    graft.functions.GraftFunctions.register(spark)
     assert(spark.sql(s"SELECT COUNT(*) AS n FROM graft_snapshot('$root', 'rel-1')")
       .head().getLong(0) == 10L, "the tag must serve the pinned v1")
     assert(spark.sql(s"SELECT COUNT(*) AS n FROM graft_snapshot('$root')")
@@ -2193,7 +2193,7 @@ class SourcesCatalogSpec extends AnyFunSuite {
       spark.range(400).select(col("id"), (col("id") * 2).as("v")).repartition(1),
       root, append = false)
     GraftCatalog.deleteSnapshotWhereMor(spark, root, col("id").isin(3L, 5L, 7L))
-    graft.sources.GraftTvf.register(spark)
+    graft.functions.GraftFunctions.register(spark)
     val files = spark.sql(
       s"SELECT * FROM graft_snapshot_files('$root')").collect()
     assert(files.length == 4, "one file per bucket")
@@ -2228,7 +2228,7 @@ class SourcesCatalogSpec extends AnyFunSuite {
     val prior = spark.conf.getOption("spark.sql.sources.v2.bucketing.enabled")
     spark.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
     try {
-      graft.sources.GraftTvf.register(spark)
+      graft.functions.GraftFunctions.register(spark)
       val j = spark.sql(
         s"""SELECT a.k, a.lv, b.rv FROM graft_snapshot_spj('$l') a
            |JOIN graft_snapshot_spj('$r') b ON a.k = b.k""".stripMargin)
