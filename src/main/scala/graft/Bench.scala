@@ -12,7 +12,9 @@ import org.apache.spark.sql.SparkSession
   * round-1's single-shot harness attributed one-off GC/compile storms
   * to whichever query ran next (63 s of phantom regression). Failures
   * are reported explicitly in a "failed" list — a -1 can't silently
-  * shrink the total.
+  * shrink the total. A failed query's entry in the detailed line's
+  * `errors` object names the exception class and the first line of
+  * its message, so the record says why it failed.
   *
   * WHY TWO LINES (r16): the detailed line carries all 270+ per-query
   * medians and is ~9 KB — any log tail shorter than that truncates it
@@ -48,23 +50,33 @@ object Bench {
     spark.sparkContext.setLogLevel("WARN")
     val tSession = secsSince(tSess0)
 
-    def once(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
+    /** Seconds to materialize one query, or the failure that stopped it. */
+    def once(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
+        : Either[Throwable, Double] = {
       val t0 = System.nanoTime()
-      try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-      catch { case _: Throwable => return -1.0 }
-      (System.nanoTime() - t0) / 1e9
+      try {
+        fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+        Right((System.nanoTime() - t0) / 1e9)
+      } catch { case e: Throwable => Left(e) }
     }
 
-    /** (reps, median, t_start offset secs, loadavg at start) — the
-      * reps/offset/load ride into the record so an outlier median is
-      * diagnosable from the file alone (r17). */
+    /** (reps, median, t_start offset secs, loadavg at start, first
+      * failure) — the reps/offset/load ride into the record so an
+      * outlier median is diagnosable from the file alone (r17). A
+      * failed rep records -1 and makes the median -1; the failure is
+      * kept as "ExceptionClass: first message line". */
     def reps3(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
-        : (Seq[Double], Double, Double, Double) = {
+        : (Seq[Double], Double, Double, Double, Option[String]) = {
       val off = secsSince(tJvm0)
       val load = BenchControls.loadAvg()
-      val ts = Seq.fill(3)(once(fn))
+      val runs = Seq.fill(3)(once(fn))
+      val ts = runs.map(_.getOrElse(-1.0))
       val med = if (ts.exists(_ < 0)) -1.0 else ts.sorted.apply(1)
-      (ts, med, off, load)
+      val err = runs.collectFirst { case Left(e) =>
+        e.getClass.getName + ": " +
+          Option(e.getMessage).flatMap(_.linesIterator.nextOption()).getOrElse("")
+      }
+      (ts, med, off, load, err)
     }
 
     // One warm-up query BEFORE the build timers: the first job in a
@@ -127,22 +139,24 @@ object Bench {
     val detailed = SparkEntry.allQs.map(q => q.name -> reps3(q.run))
     val loadEnd = BenchControls.loadAvg()
     val tLoop = secsSince(tLoop0)
-    val results = detailed.map { case (k, (_, med, _, _)) => k -> med }
+    val results = detailed.map { case (k, (_, med, _, _, _)) => k -> med }
     val qs = results.map { case (k, v) => "\"" + k + "\":" + v }
       .mkString("{", ",", "}")
-    val repsJson = detailed.map { case (k, (ts, _, _, _)) =>
+    val repsJson = detailed.map { case (k, (ts, _, _, _, _)) =>
       "\"" + k + "\":[" + ts.map(t => BenchControls.num(t, 3)).mkString(",") + "]" }
       .mkString("{", ",", "}")
-    val tStartJson = detailed.map { case (k, (_, _, off, _)) =>
+    val tStartJson = detailed.map { case (k, (_, _, off, _, _)) =>
       "\"" + k + "\":" + BenchControls.num(off, 1) }.mkString("{", ",", "}")
-    val loadJson = detailed.map { case (k, (_, _, _, ld)) =>
+    val loadJson = detailed.map { case (k, (_, _, _, ld, _)) =>
       "\"" + k + "\":" + BenchControls.num(ld, 2) }.mkString("{", ",", "}")
+    val errorsJson = detailed.collect { case (k, (_, _, _, _, Some(e))) =>
+      "\"" + k + "\":" + graft.sources.GraftCatalog.jsonEsc(e) }.mkString("{", ",", "}")
     val failed = results.collect { case (k, v) if v < 0 => "\"" + k + "\"" }
       .mkString("[", ",", "]")
     val total = results.map(_._2).filter(_ >= 0).sum
     val buildJson = builds.map { case (k, v) => "\"" + k + "\":" + v }
       .mkString("{", ",", "}")
-    println(s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"reps":$repsJson,"t_start":$tStartJson,"load":$loadJson,"failed":$failed,"build":$buildJson,"sf":"$sfDir"}""")
+    println(s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"reps":$repsJson,"t_start":$tStartJson,"load":$loadJson,"failed":$failed,"errors":$errorsJson,"build":$buildJson,"sf":"$sfDir"}""")
 
     // Compact, tail-proof phase breakdown — printed LAST so a 2,000-char
     // log tail still contains one complete parseable JSON object.

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Canonical loaders for the driver's testdata tables.
   *
@@ -10,6 +11,26 @@ import org.apache.spark.sql.functions._
   * Spark-first: `spark.read.parquet` + temp views; sort-order /
   * partitioning hints are the planner's job (AQE + pushdown), not
   * manual registration flags.
+  *
+  * SCHEMA MEMO. The reference resolves a table's schema once, when it
+  * registers the table. A schemaless `spark.read.parquet` instead
+  * launches a one-task inference job on every call, and every query
+  * re-registers its views — at sf0.1 on 4 cores ten such jobs were
+  * 1.1 s of `tpch_q6`'s 1.4 s. So [[df]] reads with the schema looked
+  * up in a JVM-wide, size-bounded LRU memo (the `GraftCatalog` stats
+  * memo's shape), and the read plans with no Spark job. The key is
+  * everything the inferred schema depends on:
+  *
+  *  - the qualified path, plus its length and mtime (one
+  *    `getFileStatus`) — a rewritten file is a new key;
+  *  - the session's set values of `spark.sql.parquet.*`,
+  *    `spark.sql.legacy.parquet.*` and `spark.sql.caseSensitive` — a
+  *    changed inference conf (`binaryAsString`, `nanosAsLong`,
+  *    `inferTimestampNTZ`, …) is a new key.
+  *
+  * A miss infers exactly as before, so there is one read path and no
+  * knob: a hit returns the very schema a miss would infer, and the
+  * memo holds a few `StructType`s.
   */
 object Tables {
   val names: Seq[String] = Seq(
@@ -29,20 +50,55 @@ object Tables {
     * microsecond TIMESTAMP column, so queries are encoding-agnostic.
     * Queries that output raw timestamps truncate to whole seconds so
     * the DuckDB oracle agrees at any precision (SURVEY.md §5).
+    * `nanosAsLong` is set before the schema lookup, so it is part of
+    * the memo key as well as of the read.
     */
-  def df(spark: SparkSession, sfDir: String, name: String): DataFrame =
+  def df(spark: SparkSession, sfDir: String, name: String): DataFrame = {
+    val p = path(sfDir, name)
     if (name == "events") {
       spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      val raw = spark.read.parquet(path(sfDir, name))
-      val ts = raw.schema("ts").dataType match {
+      val s = schemaOf(spark, p)
+      val ts = s("ts").dataType match {
         case org.apache.spark.sql.types.LongType => expr("timestamp_micros(ts div 1000)")
         case _ => col("ts").cast("timestamp")
       }
-      raw.withColumn("ts", ts)
+      spark.read.schema(s).parquet(p).withColumn("ts", ts)
         .select("event_id", "ts", "user_id", "event_type", "value", "props")
-    } else spark.read.parquet(path(sfDir, name))
+    } else spark.read.schema(schemaOf(spark, p)).parquet(p)
+  }
 
-  /** Register every table as a temp view named after the file. Idempotent. */
+  private val schemaMemoMax = 32
+  private val schemaMemo =
+    java.util.Collections.synchronizedMap(
+      new java.util.LinkedHashMap[String, StructType](schemaMemoMax, 0.75f, true) {
+        override def removeEldestEntry(
+            e: java.util.Map.Entry[String, StructType]): Boolean =
+          size() > schemaMemoMax
+      })
+
+  /** The schema `spark.read.parquet(p)` would infer, memoized on the
+    * key described in the object doc. */
+  private def schemaOf(spark: SparkSession, p: String): StructType = {
+    val hp = new org.apache.hadoop.fs.Path(p)
+    val fs = hp.getFileSystem(spark.sessionState.newHadoopConf())
+    val st = fs.getFileStatus(hp)
+    val confs = spark.conf.getAll.toSeq.filter { case (k, _) =>
+      k.startsWith("spark.sql.parquet.") || k.startsWith("spark.sql.legacy.parquet.") ||
+        k == "spark.sql.caseSensitive"
+    }.sorted
+    val key = (Seq(fs.makeQualified(hp).toString, st.getLen, st.getModificationTime) ++
+      confs.map { case (k, v) => s"$k=$v" }).mkString("|")
+    val hit = schemaMemo.get(key)
+    if (hit != null) hit
+    else {
+      val s = spark.read.parquet(p).schema
+      schemaMemo.put(key, s)
+      s
+    }
+  }
+
+  /** Register every table as a temp view named after the file.
+    * Idempotent; with the schema memo warm it launches no Spark job. */
   def ensure(spark: SparkSession, sfDir: String): Unit =
     names.foreach { n => df(spark, sfDir, n).createOrReplaceTempView(n) }
 

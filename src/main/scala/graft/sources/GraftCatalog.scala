@@ -1378,10 +1378,11 @@ object GraftCatalog {
     * it via a `#stats:<name>` meta line — names are writer-unique, so
     * racing committers can never clobber each other's sidecars the way
     * version-named sidecars would. */
-  /** JSON string escape for the stats sidecar — the standard set plus
-    * all control chars, matching what Jackson (and the old
-    * Dataset.toJSON path) emits for the same input. */
-  private def jsonEsc(s: String): String = {
+  /** Quoted JSON string literal for the stats sidecar and the bench
+    * record — the standard escape set plus all control chars, matching
+    * what Jackson (and the old Dataset.toJSON path) emits for the same
+    * input. */
+  private[graft] def jsonEsc(s: String): String = {
     val sb = new java.lang.StringBuilder(s.length + 8)
     sb.append('"')
     s.foreach {
@@ -2347,8 +2348,7 @@ object GraftCatalog {
       val eqDel = freshEq.flatMap { l =>
         val (name, physPks) = parseEqDel(l)
         val base = new org.apache.hadoop.fs.Path(deletesDir(r), name)
-        val covered = spark.read
-          .parquet(new org.apache.hadoop.fs.Path(base, "cover").toString)
+        val covered = eqCover(spark, r, name)
           .collect().map(_.getString(0)).filter(cur).sorted
         if (covered.isEmpty) None
         else {
@@ -2766,12 +2766,34 @@ object GraftCatalog {
     readManifestRawLines(fs, root, v).filter(_.startsWith("#dv:"))
       .map(_.stripPrefix("#dv:"))
 
+  /** Graft writes every deletion-vector sidecar with exactly
+    * (__path string, __pos long) and every equality-delete `cover` list
+    * with exactly (__path string), so both read with that fixed schema
+    * and plan with no inference job. Equality-delete `keys` stay on
+    * inference: a sidecar written before a type widening still stores
+    * the narrower type. */
+  private val dvSchema = org.apache.spark.sql.types.StructType(Seq(
+    org.apache.spark.sql.types.StructField("__path", org.apache.spark.sql.types.StringType),
+    org.apache.spark.sql.types.StructField("__pos", org.apache.spark.sql.types.LongType)))
+  private val coverSchema = org.apache.spark.sql.types.StructType(dvSchema.take(1))
+
+  private def readSidecar(spark: SparkSession,
+      schema: org.apache.spark.sql.types.StructType, paths: String*): DataFrame =
+    spark.read.schema(schema).parquet(paths: _*)
+
+  /** An equality-delete sidecar's `cover` list: the data files its
+    * keys apply to. */
+  private def eqCover(spark: SparkSession, root: org.apache.hadoop.fs.Path,
+      name: String): DataFrame =
+    readSidecar(spark, coverSchema, new org.apache.hadoop.fs.Path(
+      new org.apache.hadoop.fs.Path(deletesDir(root), name), "cover").toString)
+
   /** The union of a version's DV sidecars as (__path, __pos), or None
     * when the version carries no deletion vectors. */
   private def dvDf(spark: SparkSession, root: org.apache.hadoop.fs.Path,
       names: Seq[String]): Option[DataFrame] =
     if (names.isEmpty) None
-    else Some(spark.read.parquet(
+    else Some(readSidecar(spark, dvSchema,
       names.map(n => new org.apache.hadoop.fs.Path(deletesDir(root), n).toString): _*))
 
   /** Filter a files-scan DataFrame through the version's deletion
@@ -2890,7 +2912,7 @@ object GraftCatalog {
       val (name, physPks) = parseEqDel(l)
       val base = new org.apache.hadoop.fs.Path(deletesDir(root), name)
       val keys = spark.read.parquet(new org.apache.hadoop.fs.Path(base, "keys").toString)
-      val cover = spark.read.parquet(new org.apache.hadoop.fs.Path(base, "cover").toString)
+      val cover = eqCover(spark, root, name)
       val kf = s"__eqk$i"
       val cf = s"__eqc$i"
       out = out
@@ -3095,14 +3117,9 @@ object GraftCatalog {
       r: org.apache.hadoop.fs.Path, lines: Seq[String]): Set[String] =
     lines.flatMap { l =>
       val pathsDf =
-        if (l.startsWith("#dv:"))
-          spark.read.parquet(new org.apache.hadoop.fs.Path(
-            deletesDir(r), l.stripPrefix("#dv:")).toString)
-        else {
-          val (name, _) = parseEqDel(l.stripPrefix("#eqdel:"))
-          spark.read.parquet(new org.apache.hadoop.fs.Path(
-            new org.apache.hadoop.fs.Path(deletesDir(r), name), "cover").toString)
-        }
+        if (l.startsWith("#dv:")) readSidecar(spark, dvSchema,
+          new org.apache.hadoop.fs.Path(deletesDir(r), l.stripPrefix("#dv:")).toString)
+        else eqCover(spark, r, parseEqDel(l.stripPrefix("#eqdel:"))._1)
       pathsDf.select(col("__path")).distinct().collect()
         .map(_.getString(0))
     }.toSet
@@ -3161,7 +3178,7 @@ object GraftCatalog {
     fresh.write.parquet(new org.apache.hadoop.fs.Path(deletesDir(r), name).toString)
     // an empty DV (nothing matched, or everything already deleted) is
     // a no-op: drop the just-written empty sidecar, head unchanged
-    if (spark.read.parquet(
+    if (readSidecar(spark, dvSchema,
         new org.apache.hadoop.fs.Path(deletesDir(r), name).toString).isEmpty) {
       fs.delete(new org.apache.hadoop.fs.Path(deletesDir(r), name), true)
       return head
@@ -3277,8 +3294,7 @@ object GraftCatalog {
     val hits: Seq[DataFrame] = eqLines.flatMap { l =>
       val (name, physPks) = parseEqDel(l)
       val base = new org.apache.hadoop.fs.Path(deletesDir(r), name)
-      val covered = spark.read
-        .parquet(new org.apache.hadoop.fs.Path(base, "cover").toString)
+      val covered = eqCover(spark, r, name)
         .collect().map(_.getString(0)).filter(liveSet).sorted
       if (covered.isEmpty) None
       else {
@@ -3314,7 +3330,7 @@ object GraftCatalog {
     val name = s"dv-${writerToken()}"
     val dvPath = new org.apache.hadoop.fs.Path(deletesDir(r), name)
     fresh.write.parquet(dvPath.toString)
-    if (spark.read.parquet(dvPath.toString).isEmpty) {
+    if (readSidecar(spark, dvSchema, dvPath.toString).isEmpty) {
       // every eqdel row was already positionally dead (or matched
       // nothing live): the lines still drop, no new DV needed
       fs.delete(dvPath, true)
@@ -4297,10 +4313,7 @@ object GraftCatalog {
       if (eqParsed.isEmpty) Map.empty
       else {
         val covers = eqParsed.map { case (name, _) =>
-          val base = new org.apache.hadoop.fs.Path(deletesDir(r), name)
-          spark.read.parquet(
-            new org.apache.hadoop.fs.Path(base, "cover").toString)
-            .collect().map(_.getString(0)).toSet
+          eqCover(spark, r, name).collect().map(_.getString(0)).toSet
         }
         files.flatMap { f =>
           val idxs = covers.zipWithIndex.collect {

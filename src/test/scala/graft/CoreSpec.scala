@@ -233,6 +233,73 @@ class CoreSpec extends AnyFunSuite {
     }
   }
 
+  test("Tables schema memo: a warm ensure plus every df launches no Spark job") {
+    // two passes warm it: `events` sets nanosAsLong mid-pass, and that
+    // conf is part of every later table's key
+    Tables.ensure(spark, sf)
+    Tables.ensure(spark, sf)
+    val jobs = TestSpark.jobsLaunched(spark) {
+      Tables.ensure(spark, sf)
+      Tables.names.foreach(Tables.df(spark, sf, _))
+    }
+    assert(jobs == 0)
+  }
+
+  test("Tables schema memo: every table reads the schema and rows a plain read infers") {
+    def digest(df: org.apache.spark.sql.DataFrame): Long =
+      df.select(sum(hash(df.columns.map(col): _*).cast("long"))).head().getLong(0)
+    Tables.names.foreach { n =>
+      val got = Tables.df(spark, sf, n)
+      val raw = spark.read.parquet(Tables.path(sf, n))
+      val plain =
+        if (n != "events") raw
+        else raw.withColumn("ts", raw.schema("ts").dataType match {
+          case org.apache.spark.sql.types.LongType => expr("timestamp_micros(ts div 1000)")
+          case _ => col("ts").cast("timestamp")
+        }).select("event_id", "ts", "user_id", "event_type", "value", "props")
+      assert(got.schema == plain.schema, n)
+      assert(got.queryExecution.analyzed.collectLeaves().map(_.schema) == Seq(raw.schema), n)
+      assert(digest(got) == digest(plain), n)
+    }
+  }
+
+  test("Tables schema memo: a rewritten file or a changed parquet conf re-infers") {
+    import org.apache.spark.sql.types._
+    import org.apache.parquet.schema.MessageTypeParser
+    val dir = java.nio.file.Files.createTempDirectory("graft-tables-memo").toString
+    // Tables reads one parquet FILE per table. The file comes from a
+    // plain parquet writer, as the testdata does: a Spark-written footer
+    // carries Spark's own schema, which inference prefers over every
+    // parquet conf.
+    def writeT(schema: String, withBin: Boolean): Unit = {
+      val mt = MessageTypeParser.parseMessageType(schema)
+      val w = org.apache.parquet.hadoop.example.ExampleParquetWriter
+        .builder(new org.apache.hadoop.fs.Path(Tables.path(dir, "t")))
+        .withType(mt).withConf(spark.sessionState.newHadoopConf())
+        .withWriteMode(org.apache.parquet.hadoop.ParquetFileWriter.Mode.OVERWRITE)
+        .build()
+      try (0L until 3L).foreach { a =>
+        val g = new org.apache.parquet.example.data.simple.SimpleGroupFactory(mt)
+          .newGroup().append("a", a)
+        w.write(if (withBin)
+          g.append("bin", org.apache.parquet.io.api.Binary.fromString(a.toString)) else g)
+      } finally w.close()
+    }
+    writeT("message t { required int64 a; }", withBin = false)
+    assert(Tables.df(spark, dir, "t").schema.fieldNames.toSeq == Seq("a"))
+    writeT("message t { required int64 a; required binary bin; }", withBin = true)
+    val rewritten = Tables.df(spark, dir, "t")
+    assert(rewritten.schema.fieldNames.toSeq == Seq("a", "bin"))
+    assert(rewritten.schema("bin").dataType == BinaryType)
+    spark.conf.set("spark.sql.parquet.binaryAsString", "true")
+    try {
+      val asString = Tables.df(spark, dir, "t")
+      assert(asString.schema("bin").dataType == StringType)
+      assert(asString.where(col("a") === 2L).head().getAs[String]("bin") == "2")
+    } finally spark.conf.unset("spark.sql.parquet.binaryAsString")
+    assert(Tables.df(spark, dir, "t").schema("bin").dataType == BinaryType)
+  }
+
   test("round-6 analytics keep their declared plan shapes") {
     // q70: the surviving price spine broadcasts back to the fact table
     assert(usesBroadcastHashJoin(SparkEntry.queries("q70_skyline")(spark, sf)),

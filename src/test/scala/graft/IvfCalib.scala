@@ -6,7 +6,6 @@ import org.apache.spark.sql.functions._
 object IvfCalib {
   def main(args: Array[String]): Unit = {
     val spark = TestSpark.spark
-    graft.functions.GraftFunctions.register(spark)
     for (sf <- Seq("/root/testdata/sf0.001", "/root/testdata/sf0.01", "/root/testdata/sf0.1")) {
       val (idx, cents) = graft.operators.Similarity.ivfIndex(spark, sf)
       val rows = Tables.df(spark, sf, "embeddings")

@@ -6,7 +6,6 @@ import org.apache.spark.sql.functions._
 object LshCalib {
   def main(args: Array[String]): Unit = {
     val spark = TestSpark.spark
-    graft.functions.GraftFunctions.register(spark)
     for (sf <- Seq("/root/testdata/sf0.001", "/root/testdata/sf0.01", "/root/testdata/sf0.1")) {
       val emb = Tables.df(spark, sf, "embeddings")
         .withColumn("nrm", expr("vec_norm(embedding)"))

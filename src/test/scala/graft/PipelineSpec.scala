@@ -346,7 +346,6 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("native exprs match their HOF reference formulations on a seeded corpus") {
-    graft.functions.GraftFunctions.register(spark)
     import spark.implicits._
     // seeded token arrays of varied length (0,1,2,…,40) over a small
     // vocabulary (collisions guaranteed — the interesting case for
@@ -396,7 +395,6 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("native expr goldens: bigrams, token_entropy, sig_pairs") {
-    graft.functions.GraftFunctions.register(spark)
     import spark.implicits._
     val df = Seq(Tuple1(Seq("a", "b", "c"))).toDF("t")
     assert(df.select(expr("bigrams(t)")).head().getSeq[String](0) == Seq("a b", "b c"))
@@ -470,7 +468,6 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("shingle_hashes matches the string-shingle formulation") {
-    graft.functions.GraftFunctions.register(spark)
     // per doc: |distinct hashed 3-shingles| == |distinct string 3-shingles|
     // (collision-free on this corpus), and equal token windows hash equal
     val df = graft.Tables.df(spark, sf, "documents")
@@ -907,7 +904,6 @@ class PipelineSpec extends AnyFunSuite {
     // the persisted index — any drift in the assignment code (wrong
     // norm, wrong argmax tie, stale centroids) breaks the equality.
     import org.apache.spark.sql.functions._
-    graft.functions.GraftFunctions.register(spark)
     val (idx, cents) = graft.operators.Similarity.ivfIndex(spark, sf)
     val byVec = idx.select("vec_id", "cl").collect()
       .map(r => r.getLong(0) -> r.getInt(1)).toMap
@@ -937,7 +933,6 @@ class PipelineSpec extends AnyFunSuite {
     // key for key. Deletes are included (the merge path can't make
     // them, so a deleteSnapshotWhere commit exercises that arm).
     import org.apache.spark.sql.functions._
-    graft.functions.GraftFunctions.register(spark)
     val cat = graft.sources.GraftCatalog
     val sim = graft.operators.Similarity
     val (_, cents) = sim.ivfIndex(spark, sf)
@@ -972,7 +967,6 @@ class PipelineSpec extends AnyFunSuite {
 
   test("IVF drift signal: in-distribution deltas score high, off-distribution deltas drop") {
     import org.apache.spark.sql.functions._
-    graft.functions.GraftFunctions.register(spark)
     val s = spark
     import s.implicits._
     val (_, cents) = graft.operators.Similarity.ivfIndex(spark, sf)

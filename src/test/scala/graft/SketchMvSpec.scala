@@ -115,7 +115,6 @@ class SketchMvSpec extends AnyFunSuite {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    graft.functions.GraftFunctions.register(spark)
     val dir = s"/tmp/graft-sketchmv/kllstream_${System.nanoTime()}"
     val ms = MemoryStream[(String, Double)]
     val q = SketchMv.streamingSketchPartials(
@@ -145,7 +144,6 @@ class SketchMvSpec extends AnyFunSuite {
 
   test("theta golden: set algebra on constructed cohorts is exact") {
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     // cohort A = {1..100}, cohort B = {51..180}: |A|=100, |B|=130,
     // |A∩B|=50, |A\B|=50, |B\A|=80, |A∪B|=180 — all hand-derivable.
     val df = ((1L to 100L).map(("A", _)) ++ (51L to 180L).map(("B", _)))
@@ -165,7 +163,6 @@ class SketchMvSpec extends AnyFunSuite {
   }
 
   test("theta exact regime is partition-order independent, matching countDistinct") {
-    graft.functions.GraftFunctions.register(spark)
     // per-month active counts from the sketch == exact COUNT DISTINCT,
     // under two different partitionings (merge order changes; in the
     // exact regime theta=1 and the ordered compact result is canonical
@@ -187,7 +184,6 @@ class SketchMvSpec extends AnyFunSuite {
   }
 
   test("kll merged-of-parts quantiles stay within the published rank-error bound") {
-    graft.functions.GraftFunctions.register(spark)
     val ps = Array(0.5, 0.95, 0.99)
     // exact rank window: value at rank p ± eps brackets the estimate.
     // k=200 → normalized rank error ~1.65% (two-sided, 99% conf); use

@@ -449,7 +449,6 @@ class SourcesCatalogSpec extends AnyFunSuite {
     // duplicate boundaries, NULLs, and values outside the sketch range.
     val s = spark
     import s.implicits._
-    graft.functions.GraftFunctions.register(s)
     val rnd = new scala.util.Random(31)
     val vals: Seq[Option[Double]] =
       (1 to 5000).map(_ => Some(math.exp(rnd.nextGaussian() * 2))) ++
@@ -1143,7 +1142,6 @@ class SourcesCatalogSpec extends AnyFunSuite {
 
     // the TABLE-VALUED FUNCTION surface: pure SQL, head and time
     // travel, with the same automatic data skipping
-    graft.functions.GraftFunctions.register(spark)
     assert(spark.sql(s"SELECT count(*) FROM graft_snapshot('$root')")
       .head().getLong(0) == 401L)
     assert(spark.sql(s"SELECT count(*) FROM graft_snapshot('$root', 2)")
@@ -1667,7 +1665,6 @@ class SourcesCatalogSpec extends AnyFunSuite {
     assert(auto.columns.toSeq == Seq("id", "v", "score"))
     assert(auto.where(col("score").isNotNull).count() == 3)
     // pure-SQL users get the evolved schema through the TVF too
-    graft.functions.GraftFunctions.register(spark)
     assert(spark.sql(s"SELECT score FROM graft_snapshot('$root') WHERE score IS NOT NULL")
       .count() == 3)
     // rollback carries the schema line with the file list
@@ -1763,7 +1760,6 @@ class SourcesCatalogSpec extends AnyFunSuite {
     }
     // tag-name travel through the TVF: pure SQL, head has moved on
     GraftCatalog.tagSnapshot(spark, root, "rel-1", 1L)
-    graft.functions.GraftFunctions.register(spark)
     assert(spark.sql(s"SELECT COUNT(*) AS n FROM graft_snapshot('$root', 'rel-1')")
       .head().getLong(0) == 10L, "the tag must serve the pinned v1")
     assert(spark.sql(s"SELECT COUNT(*) AS n FROM graft_snapshot('$root')")
@@ -2193,7 +2189,6 @@ class SourcesCatalogSpec extends AnyFunSuite {
       spark.range(400).select(col("id"), (col("id") * 2).as("v")).repartition(1),
       root, append = false)
     GraftCatalog.deleteSnapshotWhereMor(spark, root, col("id").isin(3L, 5L, 7L))
-    graft.functions.GraftFunctions.register(spark)
     val files = spark.sql(
       s"SELECT * FROM graft_snapshot_files('$root')").collect()
     assert(files.length == 4, "one file per bucket")
@@ -2228,7 +2223,6 @@ class SourcesCatalogSpec extends AnyFunSuite {
     val prior = spark.conf.getOption("spark.sql.sources.v2.bucketing.enabled")
     spark.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
     try {
-      graft.functions.GraftFunctions.register(spark)
       val j = spark.sql(
         s"""SELECT a.k, a.lv, b.rv FROM graft_snapshot_spj('$l') a
            |JOIN graft_snapshot_spj('$r') b ON a.k = b.k""".stripMargin)
@@ -2288,6 +2282,33 @@ class SourcesCatalogSpec extends AnyFunSuite {
       case Some(vv) => spark.conf.set("spark.sql.sources.v2.bucketing.enabled", vv)
       case None => spark.conf.unset("spark.sql.sources.v2.bucketing.enabled")
     }
+  }
+
+  test("MoR sidecars read with their fixed schema: readSnapshot runs no DV or cover inference job") {
+    import spark.implicits._
+    val root = s"$tmp/sidecar_schema_${System.nanoTime()}"
+    GraftCatalog.commitSnapshot(
+      spark.range(100).select(col("id"), (col("id") * 2).as("v")).repartition(2),
+      root, append = false)
+    GraftCatalog.deleteSnapshotWhereMor(spark, root, col("id").isin(3L, 5L))
+    GraftCatalog.deleteSnapshotKeysMor(spark, root, Seq(7L, 9L).toDF("id"), Seq("id"))
+    val deletes = new java.io.File(s"$root/_deletes")
+    assert(deletes.list().count(_.startsWith("dv-")) == 1)
+    assert(deletes.list().count(_.startsWith("eq-")) == 1)
+    // planning still counts the DV (two jobs under AQE), collects it for
+    // the broadcast probe and infers the eq-delete keys; the DV and
+    // cover schemas are fixed, so their two inference jobs (6 in all
+    // when they ran) are gone
+    var df: org.apache.spark.sql.DataFrame = null
+    val jobs = TestSpark.jobsLaunched(spark) { df = GraftCatalog.readSnapshot(spark, root) }
+    assert(jobs == 4)
+    assert(df.count() == 96L)
+    assert(df.where(col("id").isin(3L, 5L, 7L, 9L)).isEmpty)
+    // an empty DV (every match already deleted) is still a no-op: the
+    // freshly written sidecar is read back empty and removed
+    val head = GraftCatalog.snapshotVersions(spark, root).last
+    assert(GraftCatalog.deleteSnapshotWhereMor(spark, root, col("id") === 3L) == head)
+    assert(deletes.list().count(_.startsWith("dv-")) == 1)
   }
 
   test("SPJ stays shuffle-free under merge-on-read deletion vectors") {

@@ -682,7 +682,6 @@ class TableCatalogSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(props.get("check.id_pos").contains("id >= 0"))
     spark.sql("CALL graft.system.drop_check('db.src', 'id_pos')")
     // the TVF surface accepts catalog identifiers, not just paths
-    graft.functions.GraftFunctions.register(spark)
     assert(spark.sql(
       "SELECT count(*) FROM graft_snapshot('graft.db.dst')")
       .head().getLong(0) == 40)

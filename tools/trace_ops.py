@@ -1,0 +1,112 @@
+#!/usr/bin/env python3
+"""Per-op breakdown of a perfbench traced record.
+
+usage: python3 tools/trace_ops.py RECORD.json
+
+RECORD.json is a run record written by `perfbench/run.py --trace 1`
+(`.bench_build/perfbench/records/<workload>-s<seed>-t1.json`). The tool
+reads only that file. It prints one row per traced op execution:
+
+  wall_ms     the op's span
+  untraced_ms the same op's wall in the untraced passes (mean), if any;
+              table_churn ops match on their verb, not their cycle
+  jobs        Spark jobs started inside the op
+  busy_ms     union of those jobs' intervals
+  gap_ms      wall minus busy: driver time between and around jobs
+  plan_ms     Catalyst phases inside the op (parsing, analysis,
+              optimization, planning), summed per phase name
+  gaps_ms     the driver gap before each job, in start order
+
+A last row gives the mean over all ops.
+"""
+import json
+import sys
+
+PHASES = ("parsing", "analysis", "optimization", "planning")
+
+
+def base(op):
+    """An op's name without its `@cycle` suffix (table_churn numbers its
+    verb calls per cycle), so a traced op meets its untraced runs."""
+    return op.split("@", 1)[0]
+
+
+def job_gaps(lo, jobs):
+    """Driver gap before each job, and the union length of the jobs."""
+    cursor, gaps, busy = lo, [], 0.0
+    for j in sorted(jobs, key=lambda j: j["start"]):
+        start, end = j["start"], j["end"]
+        gaps.append(max(0.0, start - cursor))
+        if end > cursor:
+            busy += end - max(start, cursor)
+            cursor = end
+    return gaps, busy
+
+
+def rows(rec):
+    tr = rec["trace"]
+    untraced = {}
+    for s in rec.get("samples", []):
+        if not s["traced"] and s["ok"]:
+            untraced.setdefault(base(s["op"]), []).append(s["wall_s"] * 1e3)
+    jobs_by, phases_by = {}, {}
+    for j in tr["jobs"]:
+        jobs_by.setdefault(j["op"], []).append(j)
+    for p in tr["phases"]:
+        phases_by.setdefault(p["op"], []).append(p)
+    out = []
+    for o in sorted((s for s in tr["spans"] if s["name"] == "op"), key=lambda s: s["start"]):
+        lo, hi = o["start"], o["end"]
+        js = [j for j in jobs_by.get(o["op"], []) if lo <= j["start"] <= hi]
+        gaps, busy = job_gaps(lo, js)
+        ph = phases_by.get(o["op"], [])
+        un = untraced.get(base(o["op"].split(":", 1)[1]), [])
+        out.append({
+            "op": o["op"],
+            "wall_ms": hi - lo,
+            "untraced_ms": sum(un) / len(un) if un else None,
+            "jobs": len(js),
+            "busy_ms": busy,
+            "gap_ms": hi - lo - busy,
+            "plan_ms": {n: sum(p["end"] - p["start"] for p in ph if p["name"] == n) for n in PHASES},
+            "gaps_ms": gaps,
+        })
+    return out
+
+
+def fmt(x):
+    return "-" if x is None else f"{x:.0f}"
+
+
+def table(rs):
+    """The rows as text lines, one per op, then the mean row."""
+    lines = [["op", "wall_ms", "untraced_ms", "jobs", "busy_ms", "gap_ms"] +
+             [f"{n}_ms" for n in PHASES] + ["gaps_ms"]]
+    for r in rs:
+        lines.append([r["op"], fmt(r["wall_ms"]), fmt(r["untraced_ms"]), str(r["jobs"]),
+                      fmt(r["busy_ms"]), fmt(r["gap_ms"])] +
+                     [fmt(r["plan_ms"][n]) for n in PHASES] +
+                     [",".join(fmt(g) for g in r["gaps_ms"])])
+    if rs:
+        n = len(rs)
+        un = [r["untraced_ms"] for r in rs if r["untraced_ms"] is not None]
+        lines.append(["mean", fmt(sum(r["wall_ms"] for r in rs) / n),
+                      fmt(sum(un) / len(un) if un else None),
+                      f"{sum(r['jobs'] for r in rs) / n:.1f}",
+                      fmt(sum(r["busy_ms"] for r in rs) / n),
+                      fmt(sum(r["gap_ms"] for r in rs) / n)] +
+                     [fmt(sum(r["plan_ms"][p] for r in rs) / n) for p in PHASES] + [""])
+    widths = [max(len(l[i]) for l in lines) for i in range(len(lines[0]))]
+    return ["  ".join(c.ljust(w) for c, w in zip(l, widths)).rstrip() for l in lines]
+
+
+def main(argv):
+    if len(argv) != 2:
+        sys.exit(__doc__)
+    with open(argv[1]) as f:
+        rec = json.load(f)
+    print("\n".join(table(rows(rec))))
+
+
+if __name__ == "__main__":
+    main(sys.argv)
