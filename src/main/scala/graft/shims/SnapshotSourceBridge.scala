@@ -1,9 +1,10 @@
 package org.apache.spark.sql
 
 import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.spark.paths.SparkPath
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.execution.datasources.{FileIndex, HadoopFsRelation, PartitionDirectory}
+import org.apache.spark.sql.execution.datasources.{FileFormat, FileIndex, HadoopFsRelation, PartitionDirectory, PartitionedFile}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.types.StructType
 
@@ -49,5 +50,36 @@ object GraftSnapshotRelation {
     val rel = HadoopFsRelation(idx, StructType(Nil), schema, None,
       new ParquetFileFormat, Map.empty[String, String])(spark)
     spark.asInstanceOf[classic.SparkSession].baseRelationToDataFrame(rel)
+  }
+}
+
+/** Reads small parquet files ON THE DRIVER through the function a
+  * parquet file scan's tasks call, so the requested schema, type
+  * widening and value conversions are exactly a scan's — but no Spark
+  * job runs. For metadata-sized files only (graft's delete sidecars).
+  * Stops after `limit` rows; rows come back as copies (the reader
+  * reuses its buffers). */
+object GraftLocalParquet {
+  def read(spark: SparkSession, schema: StructType, files: Seq[FileStatus],
+      limit: Int): Array[InternalRow] = {
+    val cs = spark.asInstanceOf[classic.SparkSession]
+    val readFile = new ParquetFileFormat().buildReaderWithPartitionValues(cs,
+      schema, StructType(Nil), schema, Nil,
+      Map(FileFormat.OPTION_RETURNING_BATCH -> "false"),
+      cs.sessionState.newHadoopConf())
+    val out = scala.collection.mutable.ArrayBuffer.empty[InternalRow]
+    val it = files.iterator
+    while (out.length < limit && it.hasNext) {
+      val st = it.next()
+      val rows = readFile(PartitionedFile(InternalRow.empty,
+        SparkPath.fromPath(st.getPath), 0L, st.getLen, Array.empty,
+        st.getModificationTime, st.getLen))
+      try while (out.length < limit && rows.hasNext) out += rows.next().copy()
+      finally rows match {
+        case c: java.io.Closeable => c.close()
+        case _ =>
+      }
+    }
+    out.toArray
   }
 }

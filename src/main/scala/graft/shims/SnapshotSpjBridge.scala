@@ -45,10 +45,12 @@ object GraftSpjBridge {
   type SpjField = (String, String, Int)
 
   /** One equality-delete sidecar for the SPJ readers: key column
-    * PHYSICAL names and the distinct key tuples as EXTERNAL Spark
-    * values (Row-style: String, not UTF8String) — converted to
-    * Catalyst internal form once, driver-side, in [[GraftSpjScan]]. */
-  final case class SpjEqDelete(keyCols: Seq[String], keys: Array[Seq[Any]])
+    * PHYSICAL names and the key tuples, indexed in the declared types
+    * of those columns (the parquet reader widens narrower on-disk
+    * columns to them, so row values and set members always compare
+    * like-for-like). */
+  final case class SpjEqDelete(keyCols: Seq[String],
+      keys: graft.functions.EqDeleteIndex)
 
   /** `groups` maps each partition-key TUPLE (Catalyst internal values:
     * java types for numerics, UTF8String for strings — one value per
@@ -177,19 +179,10 @@ final class GraftSpjScan(factory: PartitionReaderFactory,
   override def readSchema(): StructType = schema
   override def toBatch: Batch = this
 
-  /** Sidecar key tuples converted ONCE, driver-side, to Catalyst
-    * internal values typed by the EXTENDED read schema (the parquet
-    * reader widens narrower on-disk columns to these declared types,
-    * so row values and set members always compare like-for-like). */
+  /** Sidecar key columns resolved against the EXTENDED read schema. */
   private val eqResolved: Array[GraftSpjEqResolved] = eq.map { s =>
     val ords = s.keyCols.map(extended.fieldIndex).toArray
-    val dts = ords.map(o => extended(o).dataType)
-    val convs = dts.map(
-      org.apache.spark.sql.catalyst.CatalystTypeConverters.createToCatalystConverter)
-    val keySet: Set[Seq[Any]] = s.keys.iterator.map { t =>
-      t.iterator.zip(convs.iterator).map { case (v, c) => c(v) }.toSeq
-    }.toSet
-    GraftSpjEqResolved(ords, dts, keySet)
+    GraftSpjEqResolved(ords, ords.map(o => extended(o).dataType), s.keys)
   }.toArray
 
   // deterministic partition order across planInputPartitions calls
@@ -240,11 +233,10 @@ final class GraftSpjScan(factory: PartitionReaderFactory,
 }
 
 /** One sidecar, resolved against the extended read schema: key column
-  * ordinals, their declared types, and the key-tuple set in Catalyst
-  * internal form. */
+  * ordinals, their declared types, and the key-tuple index. */
 final case class GraftSpjEqResolved(ordinals: Array[Int],
     types: Array[org.apache.spark.sql.types.DataType],
-    keys: Set[Seq[Any]])
+    keys: graft.functions.EqDeleteIndex)
 
 /** All files of one key group; `partitionKey` is the spec tuple the
   * reported transforms evaluate to (Catalyst internal values). `dv`
@@ -366,7 +358,7 @@ final class GraftSpjDeleteReader(bucket: Int, files: Array[PartitionedFile],
         else tuple(i) = row.get(o, s.types(i))
         i += 1
       }
-      if (!hasNull && s.keys.contains(tuple.toSeq)) return true
+      if (!hasNull && s.keys.hit(tuple)) return true
       j += 1
     }
     false

@@ -849,11 +849,17 @@ object GraftCatalog {
     * construction — returns None (caller falls back to the scanning
     * agg) whenever any statable column carries footer stats this path
     * cannot prove faithful: dropped/unset stats, INT96 timestamps,
-    * decimals, NaN or signed-zero float envelopes. NDV is not recorded
-    * (footers carry none); [[snapshotColumnProfile]] NULL-guards files
-    * without it — the documented pre-NDV-sidecar contract. */
+    * decimals, NaN float envelopes, and zero float envelopes on columns
+    * outside `zeroSafe`. Parquet reads a zero minimum back as `-0.0`
+    * whatever the data held; for a column the write's observation
+    * proved free of `-0.0` ([[batchObserveAggs]]), a `±0.0` bound can
+    * only be `0.0` and renders as the scanning path's "0.0". NDV is not
+    * recorded (footers carry none); [[snapshotColumnProfile]]
+    * NULL-guards files without it — the documented pre-NDV-sidecar
+    * contract. */
   private[graft] def footerFileStats(spark: SparkSession, files: Seq[String],
-      fsMeta: Map[String, (Long, Long)]): Option[Seq[FileStat]] = {
+      fsMeta: Map[String, (Long, Long)],
+      zeroSafe: Set[String] = Set.empty): Option[Seq[FileStat]] = {
     import org.apache.spark.sql.types._
     import org.apache.spark.sql.catalyst.expressions.{Cast, Literal}
     import org.apache.parquet.schema.{LogicalTypeAnnotation, PrimitiveType}
@@ -897,13 +903,18 @@ object GraftCatalog {
       case (i: java.lang.Integer, ShortType) => i.shortValue()
       case (x, _) => x
     }
-    // a float envelope containing NaN or ±0.0 falls back: parquet stats
-    // order NaN unreliably, and -0.0 vs 0.0 would render differently
-    // from whichever value the scanning min/max happened to return
-    def unsafeFloat(v: Any): Boolean = v match {
-      case d: java.lang.Double => d.isNaN || d.doubleValue() == 0.0d
-      case f: java.lang.Float => f.isNaN || f.floatValue() == 0.0f
-      case _ => false
+    // a float bound that is NaN, or ±0.0 on a column that may hold
+    // -0.0, falls back (None): parquet stats order NaN unreliably, and
+    // -0.0 vs 0.0 would render differently from whichever value the
+    // scanning min/max happened to return. A zero-safe zero is 0.0.
+    def floatBound(v: Any, zeroOk: Boolean): Option[Any] = v match {
+      case d: java.lang.Double if d.isNaN => None
+      case d: java.lang.Double if d.doubleValue() == 0.0d =>
+        if (zeroOk) Some(java.lang.Double.valueOf(0.0d)) else None
+      case f: java.lang.Float if f.isNaN => None
+      case f: java.lang.Float if f.floatValue() == 0.0f =>
+        if (zeroOk) Some(java.lang.Float.valueOf(0.0f)) else None
+      case x => Some(x)
     }
     try {
       val out = files.map { f =>
@@ -943,9 +954,9 @@ object GraftCatalog {
                   if (st == null || st.isEmpty || !st.isNumNullsSet) return None
                   nulls += st.getNumNulls
                   if (st.hasNonNullValue) {
-                    val bmn = st.genericGetMin.asInstanceOf[Any]
-                    val bmx = st.genericGetMax.asInstanceOf[Any]
-                    if (unsafeFloat(bmn) || unsafeFloat(bmx)) return None
+                    val zeroOk = zeroSafe(name)
+                    val bmn = floatBound(st.genericGetMin, zeroOk).getOrElse(return None)
+                    val bmx = floatBound(st.genericGetMax, zeroOk).getOrElse(return None)
                     if (mn == null || cmp.compare(bmn, mn) < 0) mn = bmn
                     if (mx == null || cmp.compare(bmx, mx) > 0) mx = bmx
                   } else if (st.getNumNulls != b.getRowCount) {
@@ -991,17 +1002,33 @@ object GraftCatalog {
       fields: Seq[org.apache.spark.sql.types.StructField],
       obs: org.apache.spark.sql.Observation)
 
+  /** Per column: the NDV sketch `h`; for strings the avg/max lengths
+    * `al`/`ml`; for floats and doubles the count `nz` of `-0.0` values,
+    * which tells [[footerFileStats]] whether a zero footer bound is
+    * `0.0` (the string render runs only on zero-valued rows). */
   private def batchObserveAggs(
       fields: Seq[org.apache.spark.sql.types.StructField]): Seq[Column] =
     fields.zipWithIndex.flatMap { case (f, i) =>
+      import org.apache.spark.sql.types._
+      val c = col(f.name)
       Seq(hll_sketch_agg(
-        if (integralSketch(f.dataType)) col(f.name).cast("long")
-        else col(f.name).cast("string"), 10).as(s"h$i")) ++
-        (if (f.dataType == org.apache.spark.sql.types.StringType)
-          Seq(avg(length(col(f.name))).as(s"al$i"),
-            max(length(col(f.name))).cast("long").as(s"ml$i"))
-        else Nil)
+        if (integralSketch(f.dataType)) c.cast("long")
+        else c.cast("string"), 10).as(s"h$i")) ++
+        (f.dataType match {
+          case StringType =>
+            Seq(avg(length(c)).as(s"al$i"), max(length(c)).cast("long").as(s"ml$i"))
+          case FloatType | DoubleType =>
+            Seq(count(when(c === 0 && c.cast("string").startsWith("-"), 1)).as(s"nz$i"))
+          case _ => Nil
+        })
     }
+
+  /** Float/double columns the observation proved free of `-0.0`. */
+  private def zeroSafeColumns(m: Map[String, Any],
+      fields: Seq[org.apache.spark.sql.types.StructField]): Set[String] =
+    fields.zipWithIndex.collect {
+      case (f, i) if m.get(s"nz$i").contains(0L) => f.name
+    }.toSet
 
   /** Stamp the write-time observation onto footer-derived per-file
     * stats: batch sketch + batch NDV on every file (see [[BatchObs]]
@@ -1045,8 +1072,9 @@ object GraftCatalog {
     * (bit-position collect_sets need a real aggregation), batches past
     * `spark.graft.stats.footerMaxFiles` (default 64 — the driver-side
     * footer loop loses to the agg's parallelism), footer shapes the
-    * fast path cannot prove faithful (INT96, decimals, NaN envelopes),
-    * and callers without an observation (z-order compaction, analyze).
+    * fast path cannot prove faithful (INT96, decimals, NaN bounds, and
+    * zero float bounds in a batch holding any `-0.0`), and callers
+    * without an observation (z-order compaction, analyze).
     * `spark.graft.stats.verbScanMaxBytes` keeps its r17 contract:
     * above it (or at 0, the opt-out) the batch takes the zero-job
     * footer path WITHOUT sketches and leaves the gap to
@@ -1075,8 +1103,8 @@ object GraftCatalog {
           scala.concurrent.duration.Duration(60, "s"))).toOption
           .map(row => row.schema.fieldNames.zip(row.toSeq).toMap)
           .filter(_.nonEmpty)
-          .flatMap(m => footerFileStats(spark, files, fsMeta)
-            .map(fuseObservedStats(_, m, bo.fields)))
+          .flatMap(m => footerFileStats(spark, files, fsMeta,
+            zeroSafeColumns(m, bo.fields)).map(fuseObservedStats(_, m, bo.fields)))
       }
     fused
       .orElse(
@@ -2348,8 +2376,7 @@ object GraftCatalog {
       val eqDel = freshEq.flatMap { l =>
         val (name, physPks) = parseEqDel(l)
         val base = new org.apache.hadoop.fs.Path(deletesDir(r), name)
-        val covered = eqCover(spark, r, name)
-          .collect().map(_.getString(0)).filter(cur).sorted
+        val covered = eqCoverPaths(spark, r, name).filter(cur).sorted
         if (covered.isEmpty) None
         else {
           val keys = spark.read
@@ -2357,7 +2384,7 @@ object GraftCatalog {
           val (based, eqPath) = captureEqPath(priorEq,
             spark.read.option("mergeSchema", "true").parquet(covered: _*))
           val live = applyEqDeletes(spark, r, priorEq,
-            applyDvNames(spark, r, priorDv, based), eqPath)
+            applyDvNames(spark, r, priorDv, based), covered, eqPath)
           val cleaned = eqPath.fold(live)(live.drop(_))
           Some(cleaned.join(keys, physPks.toSeq, "left_semi")
             .withColumn("_change", lit("delete")).withColumn("_version", lit(v)))
@@ -2769,9 +2796,9 @@ object GraftCatalog {
   /** Graft writes every deletion-vector sidecar with exactly
     * (__path string, __pos long) and every equality-delete `cover` list
     * with exactly (__path string), so both read with that fixed schema
-    * and plan with no inference job. Equality-delete `keys` stay on
-    * inference: a sidecar written before a type widening still stores
-    * the narrower type. */
+    * and plan with no inference job. Equality-delete `keys` read as
+    * the scan's current key types ([[eqKeyIndex]]); only the join
+    * regime and the CDC and fold verbs still infer them. */
   private val dvSchema = org.apache.spark.sql.types.StructType(Seq(
     org.apache.spark.sql.types.StructField("__path", org.apache.spark.sql.types.StringType),
     org.apache.spark.sql.types.StructField("__pos", org.apache.spark.sql.types.LongType)))
@@ -2802,9 +2829,10 @@ object GraftCatalog {
     *
     *  - up to [[dvBroadcastMaxPositions]] deleted positions (the
     *    overwhelmingly common state between compactions): the DV loads
-    *    ONCE on the driver as `path → sorted positions`, broadcasts,
-    *    and the scan filters through the codegen'd [[graft.functions.DvHit]]
-    *    probe — NO exchange in the plan at any scan size, the per-file
+    *    ONCE on the driver ([[dvPositions]], no Spark job) as
+    *    `path → sorted positions`, broadcasts, and the scan filters
+    *    through the codegen'd [[graft.functions.DvHit]] probe — NO
+    *    exchange in the plan at any scan size, the per-file
     *    application shape Iceberg readers use, expressed at plan level;
     *  - beyond it (a pathological DV right before compaction, too big
     *    to pin on the driver): anti-join on the scan's (file_path,
@@ -2818,28 +2846,58 @@ object GraftCatalog {
       v: Long, df: DataFrame): DataFrame =
     applyDvNames(spark, root, readDvNames(fs, root, v), df)
 
-  /** Positions bound for the broadcast DV index: 4M (path, pos) pairs
-    * ≈ tens of MB on the driver/executors — far beyond any sane
-    * between-compaction DV, far below driver danger. Tunable per
+  /** Rows bound for the sidecars a read loads onto the driver: DV
+    * positions, and the key tuples of each equality-delete sidecar. 4M
+    * rows ≈ tens of MB on the driver/executors — far beyond any sane
+    * between-compaction sidecar, far below driver danger. Tunable per
     * session (`spark.graft.dv.broadcastMaxPositions`); 0 forces the
-    * anti-join (test hook). */
+    * joins (test hook). */
   private def dvBroadcastMaxPositions(spark: SparkSession): Long =
     spark.conf.getOption("spark.graft.dv.broadcastMaxPositions")
       .map(_.toLong).getOrElse(4_000_000L)
 
+  /** Rows of graft-written delete sidecars (parquet directories or
+    * files) read as `schema` on the driver, with no Spark job
+    * ([[org.apache.spark.sql.GraftLocalParquet]]: a scan's own reader,
+    * so a key sidecar written before a type widening reads widened), or
+    * None when they hold more than `bound` rows — the read stops one
+    * row past it. */
+  private def sidecarRows(spark: SparkSession, root: org.apache.hadoop.fs.Path,
+      schema: org.apache.spark.sql.types.StructType,
+      paths: Seq[org.apache.hadoop.fs.Path], bound: Long = Long.MaxValue)
+      : Option[Array[org.apache.spark.sql.catalyst.InternalRow]] = {
+    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
+    val files = paths.flatMap(p => fs.listStatus(p)).filterNot { st =>
+      val n = st.getPath.getName
+      n.startsWith("_") || n.startsWith(".")
+    }
+    val rows = org.apache.spark.sql.GraftLocalParquet.read(spark, schema, files,
+      if (bound >= Int.MaxValue) Int.MaxValue else (bound + 1).toInt)
+    if (rows.length > bound) None else Some(rows)
+  }
+
+  /** The DV loader every reader shares: a version's DV sidecars as
+    * `path → sorted positions`, or None above the bound. */
+  private def dvPositions(spark: SparkSession, root: org.apache.hadoop.fs.Path,
+      names: Seq[String]): Option[Map[String, Array[Long]]] =
+    sidecarRows(spark, root, dvSchema,
+      names.map(n => new org.apache.hadoop.fs.Path(deletesDir(root), n)),
+      dvBroadcastMaxPositions(spark))
+      .map(_.groupBy(_.getUTF8String(0).toString).map {
+        case (p, rows) => p -> rows.map(_.getLong(1)).sorted
+      })
+
   private def applyDvNames(spark: SparkSession,
       root: org.apache.hadoop.fs.Path, names: Seq[String],
       df: DataFrame): DataFrame =
-    dvDf(spark, root, names).fold(df) { dv =>
-      val nPos = dv.count() // parquet metadata count on the sidecar
-      if (nPos <= dvBroadcastMaxPositions(spark)) {
+    if (names.isEmpty) df
+    else dvPositions(spark, root, names) match {
+      case Some(byPath) =>
         val byFile = new java.util.HashMap[
           org.apache.spark.unsafe.types.UTF8String, Array[Long]]()
-        dv.select(col("__path"), col("__pos")).collect()
-          .groupBy(_.getString(0)).foreach { case (p, rows) =>
-            byFile.put(org.apache.spark.unsafe.types.UTF8String.fromString(p),
-              rows.map(_.getLong(1)).sorted)
-          }
+        byPath.foreach { case (p, pos) =>
+          byFile.put(org.apache.spark.unsafe.types.UTF8String.fromString(p), pos)
+        }
         val bc = spark.sparkContext.broadcast(byFile)
         val hit = graft.functions.DvHit(
           org.apache.spark.sql.GraftColumnBridge.expression(
@@ -2848,17 +2906,17 @@ object GraftCatalog {
             col("_metadata.row_index")),
           bc)
         df.where(!org.apache.spark.sql.GraftColumnBridge.column(hit))
-      } else {
+      case None =>
         val cols = df.columns.toSeq
         val known = cols.toSet
         val pCol = Iterator.from(0).map(i => s"__dvp$i").find(!known(_)).get
         val xCol = Iterator.from(0).map(i => s"__dvx$i").find(!known(_)).get
         df.withColumn(pCol, dvPathKey(col("_metadata.file_path")))
           .withColumn(xCol, col("_metadata.row_index"))
-          .join(dv.select(col("__path").as(pCol), col("__pos").as(xCol)),
+          .join(dvDf(spark, root, names).get
+            .select(col("__path").as(pCol), col("__pos").as(xCol)),
             Seq(pCol, xCol), "left_anti")
           .select(cols.map(col): _*)
-      }
     }
 
   // ---------------------------------------------------------------------
@@ -2883,13 +2941,44 @@ object GraftCatalog {
     (l.substring(0, i), l.substring(i + 1).split(',').toSeq)
   }
 
-  /** Filter a files-scan frame (PHYSICAL column names) through the
-    * version's equality-delete sidecars: a row drops iff its key tuple
-    * appears in a sidecar whose covered set contains the row's file.
-    * NULL keys never match (standard equality-delete semantics). Zero
-    * plan change without sidecars; with them, per sidecar one key
-    * left-join + one covered-file left-join over metadata-sized frames
-    * (AQE broadcasts).
+  /** An equality-delete sidecar's covered data files, read on the
+    * driver (the list is manifest-sized). */
+  private def eqCoverPaths(spark: SparkSession,
+      root: org.apache.hadoop.fs.Path, name: String): Array[String] =
+    sidecarRows(spark, root, coverSchema, Seq(new org.apache.hadoop.fs.Path(
+      new org.apache.hadoop.fs.Path(deletesDir(root), name), "cover")))
+      .get.map(_.getUTF8String(0).toString)
+
+  /** The key loader every reader shares: one equality-delete sidecar's
+    * key tuples, read as `keySchema` — the scan's CURRENT key types,
+    * which parquet widens a sidecar written before a type widening to,
+    * exactly as it widens the data files — and indexed over `covered`;
+    * or None when the sidecar holds more than [[dvBroadcastMaxPositions]]
+    * keys. */
+  private def eqKeyIndex(spark: SparkSession, root: org.apache.hadoop.fs.Path,
+      name: String, keySchema: org.apache.spark.sql.types.StructType,
+      covered: Iterable[String]): Option[graft.functions.EqDeleteIndex] =
+    sidecarRows(spark, root, keySchema, Seq(new org.apache.hadoop.fs.Path(
+      new org.apache.hadoop.fs.Path(deletesDir(root), name), "keys")),
+      dvBroadcastMaxPositions(spark))
+      .map(rows => new graft.functions.EqDeleteIndex(covered,
+        rows.map(_.toSeq(keySchema).toArray)))
+
+  /** Filter a files-scan frame (PHYSICAL column names) over `files`
+    * through the version's equality-delete sidecars: a row drops iff
+    * its key tuple appears in a sidecar whose covered set contains the
+    * row's file. NULL keys never match (standard equality-delete
+    * semantics). Zero plan change without sidecars, and a sidecar
+    * covering none of `files` adds nothing. Per sidecar, TWO regimes,
+    * on the same bound as the DVs:
+    *
+    *  - up to [[dvBroadcastMaxPositions]] keys: the keys
+    *    ([[eqKeyIndex]]) and the cover list load once on the driver,
+    *    the cover resolved against `files`, and the scan filters
+    *    through the broadcast [[graft.functions.EqDeleteHit]] probe —
+    *    no join, no exchange. The probe folds float/double `-0.0` to
+    *    `0.0` on both sides, as the join's key normalization does;
+    *  - beyond it: one key left-join + one covered-file left-join.
     *
     * `pathCol`: metadata columns do NOT propagate through joins, so a
     * caller composing this after any join (the DV anti-join fallback,
@@ -2900,7 +2989,8 @@ object GraftCatalog {
     * dropped here. */
   private def applyEqDeletes(spark: SparkSession,
       root: org.apache.hadoop.fs.Path, eqDels: Seq[String],
-      df: DataFrame, pathColIn: Option[String] = None): DataFrame = {
+      df: DataFrame, files: Seq[String],
+      pathColIn: Option[String] = None): DataFrame = {
     if (eqDels.isEmpty) return df
     val outCols = df.columns.toSeq
     val known = outCols.toSet
@@ -2908,19 +2998,36 @@ object GraftCatalog {
       Iterator.from(0).map(i => s"__eqp$i").find(!known(_)).get)
     var out = pathColIn.fold(
       df.withColumn(pathCol, dvPathKey(col("_metadata.file_path"))))(_ => df)
+    val scanned = files.toSet
     eqDels.zipWithIndex.foreach { case (l, i) =>
       val (name, physPks) = parseEqDel(l)
-      val base = new org.apache.hadoop.fs.Path(deletesDir(root), name)
-      val keys = spark.read.parquet(new org.apache.hadoop.fs.Path(base, "keys").toString)
-      val cover = eqCover(spark, root, name)
-      val kf = s"__eqk$i"
-      val cf = s"__eqc$i"
-      out = out
-        .join(keys.withColumn(kf, lit(1)), physPks, "left")
-        .join(cover.select(col("__path").as(pathCol), lit(1).as(cf)),
-          Seq(pathCol), "left")
-        .where(col(kf).isNull || col(cf).isNull)
-        .drop(kf, cf)
+      val covered = eqCoverPaths(spark, root, name).filter(scanned)
+      if (covered.nonEmpty) {
+        val keySchema = org.apache.spark.sql.types.StructType(
+          physPks.zip(out.select(physPks.map(col): _*).schema.fields).map {
+            case (p, f) => f.copy(name = p)
+          })
+        eqKeyIndex(spark, root, name, keySchema, covered) match {
+          case Some(index) =>
+            val bc = spark.sparkContext.broadcast(index)
+            val hit = graft.functions.EqDeleteHit(
+              (pathCol +: physPks).map(c =>
+                org.apache.spark.sql.GraftColumnBridge.expression(col(c))), bc)
+            out = out.where(!org.apache.spark.sql.GraftColumnBridge.column(hit))
+          case None =>
+            val keys = spark.read.parquet(new org.apache.hadoop.fs.Path(
+              new org.apache.hadoop.fs.Path(deletesDir(root), name), "keys").toString)
+            val kf = s"__eqk$i"
+            val cf = s"__eqc$i"
+            out = out
+              .join(keys.withColumn(kf, lit(1)), physPks, "left")
+              .join(eqCover(spark, root, name)
+                .select(col("__path").as(pathCol), lit(1).as(cf)),
+                Seq(pathCol), "left")
+              .where(col(kf).isNull || col(cf).isNull)
+              .drop(kf, cf)
+        }
+      }
     }
     out.select(outCols.map(col): _*)
   }
@@ -3028,7 +3135,7 @@ object GraftCatalog {
       .filter(_.startsWith("#eqdel:")).map(_.stripPrefix("#eqdel:"))
     val (based, eqPath) = captureEqPath(eqDels, raw)
     val dv = applyDv(spark, fs, root, v, based)
-    val eq = applyEqDeletes(spark, root, eqDels, dv, eqPath)
+    val eq = applyEqDeletes(spark, root, eqDels, dv, files, eqPath)
     val cleaned = eqPath.fold(eq)(eq.drop(_))
     cs.fold(cleaned)(s => toLogicalDf(cleaned, s))
   }
@@ -3294,8 +3401,7 @@ object GraftCatalog {
     val hits: Seq[DataFrame] = eqLines.flatMap { l =>
       val (name, physPks) = parseEqDel(l)
       val base = new org.apache.hadoop.fs.Path(deletesDir(r), name)
-      val covered = eqCover(spark, r, name)
-        .collect().map(_.getString(0)).filter(liveSet).sorted
+      val covered = eqCoverPaths(spark, r, name).filter(liveSet).sorted
       if (covered.isEmpty) None
       else {
         val keys = spark.read
@@ -3390,9 +3496,9 @@ object GraftCatalog {
       fs: org.apache.hadoop.fs.FileSystem, r: org.apache.hadoop.fs.Path,
       v: Long, files: Seq[String]): DataFrame = {
     // position keys derive from `_metadata` BEFORE anything joins
-    // (metadata columns survive Projects, not Joins); the equality
-    // deletes then filter on the already-captured __path — their rows
-    // are not live
+    // (metadata columns survive Projects, not Joins); the DVs apply on
+    // the raw scan, and the equality deletes then filter on the
+    // already-captured __path — their rows are not live
     val cs = readSchemaLine(fs, r, v)
     val scan = cs.fold(spark.read.parquet(files: _*))(s =>
       spark.read.schema(physicalSchema(s)).parquet(files: _*))
@@ -3401,10 +3507,9 @@ object GraftCatalog {
       .withColumn("__pos", col("_metadata.row_index"))
     val eq = applyEqDeletes(spark, r,
       readManifestLines(fs, r, v).filter(_.startsWith("#eqdel:"))
-        .map(_.stripPrefix("#eqdel:")), keyed, Some("__path"))
-    val raw = cs.fold(eq)(s => toLogicalDf(eq, s))
-    dvDf(spark, r, readDvNames(fs, r, v))
-      .fold(raw)(p => raw.join(p, Seq("__path", "__pos"), "left_anti"))
+        .map(_.stripPrefix("#eqdel:")),
+      applyDvNames(spark, r, readDvNames(fs, r, v), keyed), files, Some("__path"))
+    cs.fold(eq)(s => toLogicalDf(eq, s))
   }
 
   /** Shared MoR commit: write a DV sidecar for `positions` (skipped
@@ -4116,7 +4221,7 @@ object GraftCatalog {
     // metadata columns don't survive the DV anti-join fallback.
     val (based, eqPath) = captureEqPath(pm.eqDels, df)
     val withDv = applyEqDeletes(spark, r, pm.eqDels,
-      applyDvNames(spark, r, pm.dvNames, based), eqPath)
+      applyDvNames(spark, r, pm.dvNames, based), files, eqPath)
     val cleaned = eqPath.fold(withDv)(withDv.drop(_))
     val logical = pm.schema.fold(cleaned)(s => toLogicalDf(cleaned, s))
     predicate.fold(logical)(logical.where)
@@ -4187,7 +4292,7 @@ object GraftCatalog {
     val (based, eqPath) = captureEqPath(pm.eqDels,
       org.apache.spark.sql.GraftSnapshotRelation.dataFrame(spark, r, statuses, schema, keep))
     val withDv = applyEqDeletes(spark, r, pm.eqDels,
-      applyDvNames(spark, r, pm.dvNames, based), eqPath)
+      applyDvNames(spark, r, pm.dvNames, based), files, eqPath)
     val cleaned = eqPath.fold(withDv)(withDv.drop(_))
     pm.schema.fold(cleaned)(s => toLogicalDf(cleaned, s))
   }
@@ -4230,17 +4335,13 @@ object GraftCatalog {
     // compactions. The positions load once on the driver to slice; a
     // pathological DV beyond the planning bound still demands a
     // compaction first (the same loud contract the pre-DV SPJ had).
+    def overBound(what: String): Nothing = throw new IllegalArgumentException(
+      s"SPJ read of $root v$v: more than ${dvBroadcastMaxPositions(spark)} " +
+        s"$what exceed the planning bound - compact first " +
+        "(spark.graft.dv.broadcastMaxPositions)")
     val dvByFile: Map[String, Array[Long]] =
-      dvDf(spark, r, readDvNames(fs, r, v)).fold(Map.empty[String, Array[Long]]) { dv =>
-        val nPos = dv.count()
-        require(nPos <= dvBroadcastMaxPositions(spark),
-          s"SPJ read of $root v$v: $nPos DV positions exceed the " +
-            "planning bound - compact first " +
-            "(spark.graft.dv.broadcastMaxPositions)")
-        dv.select(col("__path"), col("__pos")).collect()
-          .groupBy(_.getString(0))
-          .map { case (p, rows) => p -> rows.map(_.getLong(1)).sorted }
-      }
+      dvPositions(spark, r, readDvNames(fs, r, v))
+        .getOrElse(overBound("DV positions"))
     val specs = readPartitionSpecsAt(fs, r)
     require(specs.nonEmpty, s"SPJ read of $root: no partition spec")
     val activeId = specs.keys.max
@@ -4289,31 +4390,25 @@ object GraftCatalog {
         fs.getFileStatus(new org.apache.hadoop.fs.Path(f)).getLen)
       (key, (f, len))
     }.groupBy(_._1).map { case (k, xs) => k -> xs.map(_._2) }
-    // Equality-delete sidecars: key tuples collect once (cast to the
-    // CURRENT declared types, so a post-delete widening still compares
-    // like-for-like against the widened read schema), coverage resolves
-    // per file against the manifest paths both sides share verbatim.
+    // Equality-delete sidecars: key tuples collect once through the
+    // shared loader (read as the CURRENT declared types, so a
+    // post-delete widening still compares like-for-like against the
+    // widened read schema), coverage resolves per file against the
+    // manifest paths both sides share verbatim.
     val physSchema = physicalSchema(schema)
     val eqSidecars: Seq[org.apache.spark.sql.GraftSpjBridge.SpjEqDelete] =
       eqParsed.map { case (name, physPks) =>
-        val base = new org.apache.hadoop.fs.Path(deletesDir(r), name)
-        val keysDf = spark.read.parquet(
-          new org.apache.hadoop.fs.Path(base, "keys").toString)
-        val nKeys = keysDf.count()
-        require(nKeys <= dvBroadcastMaxPositions(spark),
-          s"SPJ read of $root v$v: $nKeys equality-delete keys exceed " +
-            "the planning bound - compact first " +
-            "(spark.graft.dv.broadcastMaxPositions)")
-        val rows = keysDf.select(physPks.map(p =>
-          col(p).cast(physSchema(p).dataType)): _*).collect()
-        org.apache.spark.sql.GraftSpjBridge.SpjEqDelete(physPks,
-          rows.map(_.toSeq))
+        // coverage resolves per file below, in the readers
+        val keys = eqKeyIndex(spark, r, name,
+          org.apache.spark.sql.types.StructType(physPks.map(physSchema(_))), Nil)
+          .getOrElse(overBound("equality-delete keys"))
+        org.apache.spark.sql.GraftSpjBridge.SpjEqDelete(physPks, keys)
       }
     val eqByFile: Map[String, Seq[Int]] =
       if (eqParsed.isEmpty) Map.empty
       else {
         val covers = eqParsed.map { case (name, _) =>
-          eqCover(spark, r, name).collect().map(_.getString(0)).toSet
+          eqCoverPaths(spark, r, name).toSet
         }
         files.flatMap { f =>
           val idxs = covers.zipWithIndex.collect {

@@ -26,6 +26,22 @@ class MorDvSpec extends AnyFunSuite {
   private def dataFiles(root: String): Seq[String] =
     GraftCatalog.snapshotScanFiles(spark, root)._1
 
+  /** Runs `body` under the default delete-sidecar regime (the broadcast
+    * probes) and again with `spark.graft.dv.broadcastMaxPositions=0`,
+    * which forces the joins, and returns (probe result, join result). */
+  private def bothRegimes[T](body: => T): (T, T) = {
+    val probe = body
+    spark.conf.set("spark.graft.dv.broadcastMaxPositions", "0")
+    try (probe, body) finally spark.conf.unset("spark.graft.dv.broadcastMaxPositions")
+  }
+
+  /** Physical plan nodes of `df` before adaptive execution. */
+  private def planNodes(df: org.apache.spark.sql.DataFrame) =
+    (df.queryExecution.executedPlan match {
+      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec => a.initialPlan
+      case other => other
+    }).collect { case n => n }
+
   test("rewrite_eqdels folds equality-delete sidecars into one DV, zero data rewrite") {
     import spark.implicits._
     val root = freshTable("eqfold")
@@ -309,47 +325,61 @@ class MorDvSpec extends AnyFunSuite {
 
   test("EQUALITY delete: zero-read key purge; re-insert survives; rewrites/compaction fold") {
     import spark.implicits._
-    val root = freshTable("eqdel")
-    val before = dataFiles(root).toSet
-    // purge 3 scattered keys by KEY LIST — no positional scan ever runs
-    val v = GraftCatalog.deleteSnapshotKeysMor(spark, root,
-      Seq(5L, 250L, 999L).toDF("id"), Seq("id"))
-    assert(v == 2L)
-    assert(dataFiles(root).toSet == before,
-      "equality delete must not add/remove/rewrite any data file")
-    val t = GraftCatalog.readSnapshot(spark, root)
-    assert(t.count() == 997 &&
-      t.where(col("id").isin(5L, 250L, 999L)).isEmpty)
-    assert(GraftCatalog.readSnapshotAuto(spark, root).count() == 997,
-      "the auto FileIndex read path must apply equality deletes too")
-    assert(GraftCatalog.readSnapshot(spark, root, Some(1L)).count() == 1000,
-      "time travel to the pre-delete version stays intact")
-    // CDC: the eq version emits exactly the 3 covered live rows as deletes
-    val ch = GraftCatalog.readChanges(spark, root, 1L, 2L)
-    assert(ch.where(col("_change") === "delete").count() == 3)
-    // RE-INSERT of a purged key survives: the new batch is outside the
-    // sidecar's covered set (the Iceberg sequence-number scoping)
-    GraftCatalog.commitSnapshot(
-      Seq((5L, 5L, 50L)).toDF("id", "grp", "amount"), root, append = true)
-    val t2 = GraftCatalog.readSnapshot(spark, root)
-    assert(t2.count() == 998)
-    assert(t2.where(col("id") === 5L).head().getLong(2) == 50L)
-    // composes with a positional MoR delete
-    GraftCatalog.deleteSnapshotWhereMor(spark, root, col("id") === 7L)
-    assert(GraftCatalog.readSnapshot(spark, root).count() == 997)
-    // a CoW rewrite of a covered file never resurrects the purged row
-    GraftCatalog.updateSnapshotWhere(spark, root, col("id") === 251L,
-      Seq("amount" -> lit(1L)))
-    val t3 = GraftCatalog.readSnapshot(spark, root)
-    assert(t3.where(col("id") === 250L).isEmpty,
-      "the rewrite of 250's file must not resurrect the eq-deleted row")
-    assert(t3.count() == 997)
-    // compaction folds: clean head, no #eqdel/#dv lines, content identical
-    val vc = GraftCatalog.compactSnapshot(spark, root)
-    val headMeta = GraftCatalog.snapshotMeta(spark, root, vc)
-    assert(!headMeta.exists(l => l.startsWith("#eqdel:") || l.startsWith("#dv:")),
-      s"compaction must fold all delete sidecars: $headMeta")
-    assert(GraftCatalog.readSnapshot(spark, root).count() == 997)
+    def run(): (Seq[Set[org.apache.spark.sql.Row]], Seq[Int]) = {
+      val root = freshTable("eqdel")
+      val before = dataFiles(root).toSet
+      // purge 3 scattered keys by KEY LIST — no positional scan ever runs
+      val v = GraftCatalog.deleteSnapshotKeysMor(spark, root,
+        Seq(5L, 250L, 999L).toDF("id"), Seq("id"))
+      assert(v == 2L)
+      assert(dataFiles(root).toSet == before,
+        "equality delete must not add/remove/rewrite any data file")
+      val t = GraftCatalog.readSnapshot(spark, root)
+      assert(t.count() == 997 &&
+        t.where(col("id").isin(5L, 250L, 999L)).isEmpty)
+      val nodes = planNodes(t)
+      val shape = Seq(
+        nodes.count(_.isInstanceOf[org.apache.spark.sql.execution.exchange.BroadcastExchangeExec]),
+        nodes.count(_.isInstanceOf[org.apache.spark.sql.execution.joins.BaseJoinExec]))
+      assert(GraftCatalog.readSnapshotAuto(spark, root).count() == 997,
+        "the auto FileIndex read path must apply equality deletes too")
+      assert(GraftCatalog.readSnapshot(spark, root, Some(1L)).count() == 1000,
+        "time travel to the pre-delete version stays intact")
+      // CDC: the eq version emits exactly the 3 covered live rows as deletes
+      val ch = GraftCatalog.readChanges(spark, root, 1L, 2L)
+      assert(ch.where(col("_change") === "delete").count() == 3)
+      // RE-INSERT of a purged key survives: the new batch is outside the
+      // sidecar's covered set (the Iceberg sequence-number scoping)
+      GraftCatalog.commitSnapshot(
+        Seq((5L, 5L, 50L)).toDF("id", "grp", "amount"), root, append = true)
+      val t2 = GraftCatalog.readSnapshot(spark, root)
+      assert(t2.count() == 998)
+      assert(t2.where(col("id") === 5L).head().getLong(2) == 50L)
+      // composes with a positional MoR delete
+      GraftCatalog.deleteSnapshotWhereMor(spark, root, col("id") === 7L)
+      assert(GraftCatalog.readSnapshot(spark, root).count() == 997)
+      // a CoW rewrite of a covered file never resurrects the purged row
+      GraftCatalog.updateSnapshotWhere(spark, root, col("id") === 251L,
+        Seq("amount" -> lit(1L)))
+      val t3 = GraftCatalog.readSnapshot(spark, root)
+      assert(t3.where(col("id") === 250L).isEmpty,
+        "the rewrite of 250's file must not resurrect the eq-deleted row")
+      assert(t3.count() == 997)
+      // compaction folds: clean head, no #eqdel/#dv lines, content identical
+      val vc = GraftCatalog.compactSnapshot(spark, root)
+      val headMeta = GraftCatalog.snapshotMeta(spark, root, vc)
+      assert(!headMeta.exists(l => l.startsWith("#eqdel:") || l.startsWith("#dv:")),
+        s"compaction must fold all delete sidecars: $headMeta")
+      val t4 = GraftCatalog.readSnapshot(spark, root)
+      assert(t4.count() == 997)
+      (Seq(t, ch.drop("_version"), t2, t3, t4).map(_.collect().toSet), shape)
+    }
+    val ((probeRows, probeShape), (joinRows, joinShape)) = bothRegimes(run())
+    assert(probeRows == joinRows, "both delete regimes must serve the same rows")
+    // under the default bound the sidecar applies through the broadcast
+    // probe: no join and no broadcast exchange in the read plan
+    assert(probeShape == Seq(0, 0), s"probe read plan: $probeShape")
+    assert(joinShape(1) > 0, s"bound 0 must force the joins: $joinShape")
   }
 
   test("equality-delete batch wrapper lands exactly once under replay") {
@@ -423,20 +453,40 @@ class MorDvSpec extends AnyFunSuite {
 
   test("equality deletes survive type widening") {
     import spark.implicits._
-    val root = s"$tmp/eqwide_${System.nanoTime()}"
-    GraftCatalog.commitSnapshot(
-      spark.range(100).select(col("id"),
-        col("id").cast("int").as("score")), root, append = false)
-    GraftCatalog.deleteSnapshotKeysMor(spark, root,
-      Seq(1L, 2L).toDF("id"), Seq("id"))
-    assert(GraftCatalog.readSnapshot(spark, root).count() == 98)
-    GraftCatalog.widenSnapshotColumn(spark, root, "score",
-      org.apache.spark.sql.types.LongType)
-    val t = GraftCatalog.readSnapshot(spark, root)
-    assert(t.schema("score").dataType ==
-      org.apache.spark.sql.types.LongType)
-    assert(t.count() == 98 && t.where(col("id").isin(1L, 2L)).isEmpty,
-      "widening dropped the equality-delete sidecar")
+    def run(): Seq[Set[org.apache.spark.sql.Row]] = {
+      val root = s"$tmp/eqwide_${System.nanoTime()}"
+      // f holds 0.0 on ids ≡ 0 (mod 10), and -0.0 on id 50
+      GraftCatalog.commitSnapshot(
+        spark.range(100).select(col("id"),
+          col("id").cast("int").as("score"),
+          when(col("id") === 50, lit(-0.0f))
+            .otherwise((col("id") % 10).cast("float")).as("f")),
+        root, append = false)
+      GraftCatalog.deleteSnapshotKeysMor(spark, root,
+        Seq(1L, 2L).toDF("id"), Seq("id"))
+      assert(GraftCatalog.readSnapshot(spark, root).count() == 98)
+      // keys of the narrower types: score int, f float; a float key
+      // matches -0.0 and 0.0 alike, as the join's normalization does
+      GraftCatalog.deleteSnapshotKeysMor(spark, root,
+        Seq(3, 4).toDF("score"), Seq("score"))
+      GraftCatalog.deleteSnapshotKeysMor(spark, root,
+        Seq(0.0f).toDF("f"), Seq("f"))
+      val narrow = GraftCatalog.readSnapshot(spark, root)
+      assert(narrow.count() == 86 && narrow.where(col("id") === 50L).isEmpty)
+      GraftCatalog.widenSnapshotColumn(spark, root, "score",
+        org.apache.spark.sql.types.LongType)
+      GraftCatalog.widenSnapshotColumn(spark, root, "f",
+        org.apache.spark.sql.types.DoubleType)
+      val t = GraftCatalog.readSnapshot(spark, root)
+      assert(t.schema("score").dataType ==
+        org.apache.spark.sql.types.LongType)
+      assert(t.count() == 86 &&
+        t.where(col("id").isin(1L, 2L, 3L, 4L, 10L, 50L)).isEmpty,
+        "widening dropped an equality-delete sidecar")
+      Seq(narrow, t).map(_.collect().toSet)
+    }
+    val (probe, join) = bothRegimes(run())
+    assert(probe == join, "both delete regimes must serve the same rows")
   }
 
   test("MoR MERGE schema evolution: evolved feed appends, old files read NULL, CDC intact") {

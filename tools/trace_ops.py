@@ -2,10 +2,12 @@
 """Per-op breakdown of a perfbench traced record.
 
 usage: python3 tools/trace_ops.py RECORD.json
+       python3 tools/trace_ops.py BEFORE.json AFTER.json
 
 RECORD.json is a run record written by `perfbench/run.py --trace 1`
 (`.bench_build/perfbench/records/<workload>-s<seed>-t1.json`). The tool
-reads only that file. It prints one row per traced op execution:
+reads only the records it is given. With one record it prints one row
+per traced op execution:
 
   wall_ms     the op's span
   untraced_ms the same op's wall in the untraced passes (mean), if any;
@@ -18,6 +20,12 @@ reads only that file. It prints one row per traced op execution:
   gaps_ms     the driver gap before each job, in start order
 
 A last row gives the mean over all ops.
+
+With two records (compare mode: say a parent commit's and a change's
+run of the same workload and seed) it prints one row per op with both
+runs side by side: jobs, wall_ms and untraced_ms before and after, and
+the change in jobs. A last row gives the totals over the traced pass
+(for table_churn, one cycle).
 """
 import json
 import sys
@@ -100,12 +108,41 @@ def table(rs):
     return ["  ".join(c.ljust(w) for c, w in zip(l, widths)).rstrip() for l in lines]
 
 
+def compare(before, after):
+    """Text lines pairing two records' ops by name, then the totals."""
+    a = {r["op"]: r for r in before}
+    b = {r["op"]: r for r in after}
+    names = [r["op"] for r in before] + [r["op"] for r in after if r["op"] not in a]
+    lines = [["op", "jobs_before", "jobs_after", "jobs_delta", "wall_before_ms",
+              "wall_after_ms", "untraced_before_ms", "untraced_after_ms"]]
+
+    def cell(r, k):
+        return "-" if r is None else (str(r[k]) if k == "jobs" else fmt(r[k]))
+    for n in names:
+        ra, rb = a.get(n), b.get(n)
+        delta = "-" if ra is None or rb is None else f"{rb['jobs'] - ra['jobs']:+d}"
+        lines.append([n, cell(ra, "jobs"), cell(rb, "jobs"), delta, cell(ra, "wall_ms"),
+                      cell(rb, "wall_ms"), cell(ra, "untraced_ms"), cell(rb, "untraced_ms")])
+
+    def total(rs, k):
+        vs = [r[k] for r in rs if r[k] is not None]
+        return sum(vs) if vs else None
+    ja, jb = total(before, "jobs"), total(after, "jobs")
+    lines.append(["total", str(ja), str(jb), f"{jb - ja:+d}",
+                  fmt(total(before, "wall_ms")), fmt(total(after, "wall_ms")),
+                  fmt(total(before, "untraced_ms")), fmt(total(after, "untraced_ms"))])
+    widths = [max(len(l[i]) for l in lines) for i in range(len(lines[0]))]
+    return ["  ".join(c.ljust(w) for c, w in zip(l, widths)).rstrip() for l in lines]
+
+
 def main(argv):
-    if len(argv) != 2:
+    if len(argv) not in (2, 3):
         sys.exit(__doc__)
-    with open(argv[1]) as f:
-        rec = json.load(f)
-    print("\n".join(table(rows(rec))))
+    recs = []
+    for path in argv[1:]:
+        with open(path) as f:
+            recs.append(rows(json.load(f)))
+    print("\n".join(table(recs[0]) if len(recs) == 1 else compare(*recs)))
 
 
 if __name__ == "__main__":
