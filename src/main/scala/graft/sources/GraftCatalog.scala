@@ -1895,13 +1895,23 @@ object GraftCatalog {
       inv.get(c.col).fold(c)(lg => c.copy(col = lg)))) }
   }
 
-  /** Read specific data files under a committed schema, physical names
-    * renamed to logical — the front end of every verb's pin scan. */
-  private def readFilesAsLogical(spark: SparkSession, files: Seq[String],
+  /** Read specific data files under a committed schema's PHYSICAL
+    * names (footer inference without one) — the raw scan the verbs'
+    * delete chains ([[liveRows]]) and pin scans start from. */
+  private def scanPhysical(spark: SparkSession, files: Seq[String],
       cs: Option[org.apache.spark.sql.types.StructType]): DataFrame =
-    cs.fold(spark.read.parquet(files: _*)) { s =>
-      toLogicalDf(spark.read.schema(physicalSchema(s)).parquet(files: _*), s)
-    }
+    cs.fold(spark.read.parquet(files: _*))(s =>
+      spark.read.schema(physicalSchema(s)).parquet(files: _*))
+
+  /** [[scanPhysical]] renamed to logical names, deletes NOT applied —
+    * the pin scans ([[pinFilesWhere]], [[pinFilesByKeys]]): a dead
+    * matching row at worst pins a file whose rewrite, which reads
+    * [[readLiveFiles]], drops the row anyway. */
+  private def readFilesAsLogical(spark: SparkSession, files: Seq[String],
+      cs: Option[org.apache.spark.sql.types.StructType]): DataFrame = {
+    val raw = scanPhysical(spark, files, cs)
+    cs.fold(raw)(toLogicalDf(raw, _))
+  }
 
   /** Publish `df` as the next snapshot version. `append = true` carries
     * the previous version's files forward (ingest batch); `false`
@@ -2121,7 +2131,6 @@ object GraftCatalog {
     val baseSchema = baseLines.find(_.startsWith("#schema:"))
     val baseFiles = baseLines.filterNot(_.startsWith("#")).toSet
     val baseDvEq = dvEq(baseLines)
-    val tz = spark.sessionState.conf.sessionLocalTimeZone
     var attempt = 0
     while (attempt < 20) {
       attempt += 1
@@ -2152,31 +2161,16 @@ object GraftCatalog {
         // #dv:/#eqdel: line covers has a stats envelope provably
         // DISJOINT from the scope (then the deleted rows are out of
         // scope too). Unprovable → the strict abort stands.
-        val racerDvOk = !racerDeletesOutOfScope || {
-          val racerDvNew = (headDvEq -- baseDvEq).toSeq
-          racerDvNew.isEmpty || {
-            val csHead0 = readSchemaLine(fs, r, head)
-            val consult0 = statsLogical(readStats(spark, r.toString, head), csHead0)
-            val ptSpec0 = readPartitionSpecsAt(fs, r)
-            val ptSchema0 = if (ptSpec0.isEmpty) None else csHead0
-            deleteLineTargets(spark, r, racerDvNew).forall { f =>
-              consult0.get(f).exists(st => !mayContain(st, scope, tz)) ||
-                !tupleMayMatch(ptSpec0, ptSchema0, f, scope, tz)
-            }
-          }
-        }
-        if (!racerDvOk) throw original
-        if (racerNew.nonEmpty) {
+        lazy val mayMatch = {
           val csHead = readSchemaLine(fs, r, head)
-          val consult = statsLogical(readStats(spark, r.toString, head), csHead)
-          val ptSpec = readPartitionSpecsAt(fs, r)
-          val ptSchema = if (ptSpec.isEmpty) None else csHead
-          val provablyOut = racerNew.forall { f =>
-            consult.get(f).exists(st => !mayContain(st, scope, tz)) ||
-              !tupleMayMatch(ptSpec, ptSchema, f, scope, tz)
-          }
-          if (!provablyOut) throw original
+          filePruner(spark, fs, r,
+            statsLogical(readStats(spark, r.toString, head), csHead), csHead)
         }
+        val racerDvNew = (headDvEq -- baseDvEq).toSeq
+        if (racerDeletesOutOfScope && racerDvNew.nonEmpty &&
+            deleteLineTargets(spark, r, racerDvNew).exists(mayMatch(_, scope)))
+          throw original
+        if (racerNew.exists(mayMatch(_, scope))) throw original
       }
       val carriedFiles = headFiles.filterNot(consumed)
       // structural carry + chained stats, like commitCow: the
@@ -2381,12 +2375,10 @@ object GraftCatalog {
         else {
           val keys = spark.read
             .parquet(new org.apache.hadoop.fs.Path(base, "keys").toString)
-          val (based, eqPath) = captureEqPath(priorEq,
-            spark.read.option("mergeSchema", "true").parquet(covered: _*))
-          val live = applyEqDeletes(spark, r, priorEq,
-            applyDvNames(spark, r, priorDv, based), covered, eqPath)
-          val cleaned = eqPath.fold(live)(live.drop(_))
-          Some(cleaned.join(keys, physPks.toSeq, "left_semi")
+          val live = liveRows(spark, r,
+            spark.read.option("mergeSchema", "true").parquet(covered: _*),
+            covered, priorDv, priorEq, None)
+          Some(live.join(keys, physPks.toSeq, "left_semi")
             .withColumn("_change", lit("delete")).withColumn("_version", lit(v)))
         }
       }
@@ -2517,22 +2509,7 @@ object GraftCatalog {
     try {
       if (keys.isEmpty) return head
       validateChecks(spark, root, updates)
-      val cs = readSchemaLine(fs, r, head)
-      val stats = readStats(spark, root, head)
-      val candidates =
-        nominateFilesByKeys(spark, files, statsLogical(stats, cs), keys, pks)
-      val matchedFiles: Set[String] =
-        if (candidates.isEmpty) Set.empty
-        else pinnedPaths(readFilesAsLogical(spark, candidates, cs)
-          .withColumn("__file", input_file_name())
-          .join(keys, pks, "left_semi")
-          .select("__file").distinct().collect())
-      val carried = files.filterNot(matchedFiles)
-      val survivors =
-        if (matchedFiles.isEmpty)
-          readFilesAsLogical(spark, Seq(files.head), cs).where(lit(false))
-        else readFilesDv(spark, fs, r, head, matchedFiles.toSeq.sorted)
-          .join(keys, pks, "left_anti")
+      val (_, carried, survivors) = pinFilesByKeys(spark, fs, r, head, files, keys, pks)
       // Schema evolution (opt-in, Delta's mergeSchema-on-MERGE): columns
       // new in `updates` land in the rewritten batch; carried files stay
       // as-is and read NULL for them under readSnapshot(mergeSchema).
@@ -2549,8 +2526,7 @@ object GraftCatalog {
       // but carrying OUR file list rather than blind-appending the head.
       // A lost race re-validates against the merge's key envelope —
       // disjoint concurrent ingest no longer starves a backfill MERGE.
-      commitCow(spark, fs, r, head, carried,
-        stats.filter { case (p, _) => carried.contains(p) }, newData, meta,
+      commitCow(spark, fs, r, head, carried, newData, meta,
         scopePred = Some(() => keyScopeEnvelope(keys, pks)))
     } finally keys.unpersist()
   }
@@ -2666,27 +2642,12 @@ object GraftCatalog {
       val upserts = pinned.where(col(opCol) =!= "D").drop(opCol)
       validateChecks(spark, root, upserts)
       val files = readManifest(fs, r, head)
-      val cs = readSchemaLine(fs, r, head)
-      val stats = readStats(spark, root, head)
-      val candidates =
-        nominateFilesByKeys(spark, files, statsLogical(stats, cs), keys, pks)
-      val matchedFiles: Set[String] =
-        if (candidates.isEmpty) Set.empty
-        else pinnedPaths(readFilesAsLogical(spark, candidates, cs)
-          .withColumn("__file", input_file_name())
-          .join(keys, pks, "left_semi")
-          .select("__file").distinct().collect())
+      val (matchedFiles, carried, survivors) =
+        pinFilesByKeys(spark, fs, r, head, files, keys, pks)
       if (matchedFiles.isEmpty && upserts.isEmpty) return head
-      val carried = files.filterNot(matchedFiles)
-      val survivors =
-        if (matchedFiles.isEmpty)
-          readFilesAsLogical(spark, Seq(files.head), cs).where(lit(false))
-        else readFilesDv(spark, fs, r, head, matchedFiles.toSeq.sorted)
-          .join(keys, pks, "left_anti")
       val newData = survivors.unionByName(
         upserts.select(survivors.columns.toSeq.map(col): _*))
-      commitCow(spark, fs, r, head, carried,
-        stats.filter { case (p, _) => carried.contains(p) }, newData, meta,
+      commitCow(spark, fs, r, head, carried, newData, meta,
         scopePred = Some(() => keyScopeEnvelope(keys, pks)))
     } finally { km.unpersist(); pinned.unpersist() }
   }
@@ -2740,23 +2701,15 @@ object GraftCatalog {
     val head = snapshotVersions(spark, root).last
     val files = readManifest(fs, r, head)
     val cs = readSchemaLine(fs, r, head)
-    val stats = readStats(spark, root, head)
-    val consult = statsLogical(stats, cs)
-    val tz = spark.sessionState.conf.sessionLocalTimeZone
-    val predExpr = org.apache.spark.sql.GraftColumnBridge.expression(pred)
-    val ptSpec = readPartitionSpecsAt(fs, r)
-    val ptSchema = if (ptSpec.isEmpty) None else cs
-    val candidates = files.filter(f =>
-      consult.get(f).forall(st => mayContain(st, predExpr, tz)) &&
-        tupleMayMatch(ptSpec, ptSchema, f, predExpr, tz))
+    val candidates = filesMayMatch(spark, fs, r, files,
+      readStats(spark, root, head), cs, pred)
     val matchedFiles: Set[String] = pinFilesWhere(spark, candidates, pred, cs)
     if (matchedFiles.isEmpty) return head
     val carried = files.filterNot(matchedFiles)
     // DELETE WHERE p removes rows where p is TRUE; FALSE and NULL stay.
-    val survivors = readFilesDv(spark, fs, r, head, matchedFiles.toSeq.sorted)
+    val survivors = readLiveFiles(spark, fs, r, head, matchedFiles.toSeq.sorted)
       .where(!coalesce(pred, lit(false)))
-    commitCow(spark, fs, r, head, carried,
-      stats.filter { case (p, _) => carried.contains(p) }, survivors, meta,
+    commitCow(spark, fs, r, head, carried, survivors, meta,
       scopePred = Some(() => Some(pred)))
   }
 
@@ -2796,14 +2749,19 @@ object GraftCatalog {
   /** Graft writes every deletion-vector sidecar with exactly
     * (__path string, __pos long) and every equality-delete `cover` list
     * with exactly (__path string), so both read with that fixed schema
-    * and plan with no inference job. Equality-delete `keys` read as
+    * — on the driver ([[sidecarRows]]) or as a frame ([[readSidecar]])
+    * — and plan with no inference job. Equality-delete `keys` read as
     * the scan's current key types ([[eqKeyIndex]]); only the join
-    * regime and the CDC and fold verbs still infer them. */
+    * regime, [[readChanges]] and [[rewriteEqDeletesToDv]] infer them. */
   private val dvSchema = org.apache.spark.sql.types.StructType(Seq(
     org.apache.spark.sql.types.StructField("__path", org.apache.spark.sql.types.StringType),
     org.apache.spark.sql.types.StructField("__pos", org.apache.spark.sql.types.LongType)))
   private val coverSchema = org.apache.spark.sql.types.StructType(dvSchema.take(1))
 
+  /** Sidecars as a Spark frame: the join regime, CDC's DV rows and the
+    * conflict path's target reads. Every other read, the post-write
+    * emptiness checks included, goes through [[sidecarRows]] with no
+    * job. */
   private def readSidecar(spark: SparkSession,
       schema: org.apache.spark.sql.types.StructType, paths: String*): DataFrame =
     spark.read.schema(schema).parquet(paths: _*)
@@ -2822,29 +2780,6 @@ object GraftCatalog {
     if (names.isEmpty) None
     else Some(readSidecar(spark, dvSchema,
       names.map(n => new org.apache.hadoop.fs.Path(deletesDir(root), n).toString): _*))
-
-  /** Filter a files-scan DataFrame through the version's deletion
-    * vectors. Zero plan change when the version has no DVs. With DVs,
-    * TWO regimes:
-    *
-    *  - up to [[dvBroadcastMaxPositions]] deleted positions (the
-    *    overwhelmingly common state between compactions): the DV loads
-    *    ONCE on the driver ([[dvPositions]], no Spark job) as
-    *    `path → sorted positions`, broadcasts, and the scan filters
-    *    through the codegen'd [[graft.functions.DvHit]] probe — NO
-    *    exchange in the plan at any scan size, the per-file
-    *    application shape Iceberg readers use, expressed at plan level;
-    *  - beyond it (a pathological DV right before compaction, too big
-    *    to pin on the driver): anti-join on the scan's (file_path,
-    *    row_index) metadata columns — correct at any size, and AQE
-    *    still broadcasts when the runtime size allows.
-    *
-    * Join-key columns are generated OUTSIDE the table's own column
-    * space. */
-  private def applyDv(spark: SparkSession,
-      fs: org.apache.hadoop.fs.FileSystem, root: org.apache.hadoop.fs.Path,
-      v: Long, df: DataFrame): DataFrame =
-    applyDvNames(spark, root, readDvNames(fs, root, v), df)
 
   /** Rows bound for the sidecars a read loads onto the driver: DV
     * positions, and the key tuples of each equality-delete sidecar. 4M
@@ -2887,6 +2822,24 @@ object GraftCatalog {
         case (p, rows) => p -> rows.map(_.getLong(1)).sorted
       })
 
+  /** Filter a files-scan DataFrame through the deletion vectors
+    * `names`. Zero plan change without DVs. With DVs, TWO regimes:
+    *
+    *  - up to [[dvBroadcastMaxPositions]] deleted positions (the
+    *    overwhelmingly common state between compactions): the DV loads
+    *    ONCE on the driver ([[dvPositions]], no Spark job) as
+    *    `path → sorted positions`, broadcasts, and the scan filters
+    *    through the codegen'd [[graft.functions.DvHit]] probe — NO
+    *    exchange in the plan at any scan size, the per-file
+    *    application shape Iceberg readers use, expressed at plan level;
+    *  - beyond it (a pathological DV right before compaction, too big
+    *    to pin on the driver): anti-join on the scan's (file_path,
+    *    row_index) metadata columns — correct at any size, and AQE
+    *    still broadcasts when the runtime size allows.
+    *
+    * Both bind to the scan's own `_metadata` columns, so `df` must
+    * still resolve them ([[liveRows]] applies this first). Join-key
+    * columns are generated OUTSIDE the table's own column space. */
   private def applyDvNames(spark: SparkSession,
       root: org.apache.hadoop.fs.Path, names: Seq[String],
       df: DataFrame): DataFrame =
@@ -2980,24 +2933,16 @@ object GraftCatalog {
     *    `0.0` on both sides, as the join's key normalization does;
     *  - beyond it: one key left-join + one covered-file left-join.
     *
-    * `pathCol`: metadata columns do NOT propagate through joins, so a
-    * caller composing this after any join (the DV anti-join fallback,
-    * its own position keying) must CAPTURE the dvPathKey-normalized
-    * file path on the raw scan first and pass the column's name; the
-    * column stays in the output (the caller drops it). With None the
-    * frame must still resolve `_metadata` and the derived column is
-    * dropped here. */
+    * `pathCol` names `df`'s dvPathKey-normalized file-path column,
+    * which [[liveRows]] captures on the raw scan (metadata columns do
+    * not propagate through the DV join regime); it stays in the
+    * output. */
   private def applyEqDeletes(spark: SparkSession,
       root: org.apache.hadoop.fs.Path, eqDels: Seq[String],
-      df: DataFrame, files: Seq[String],
-      pathColIn: Option[String] = None): DataFrame = {
+      df: DataFrame, files: Seq[String], pathCol: String): DataFrame = {
     if (eqDels.isEmpty) return df
     val outCols = df.columns.toSeq
-    val known = outCols.toSet
-    val pathCol = pathColIn.getOrElse(
-      Iterator.from(0).map(i => s"__eqp$i").find(!known(_)).get)
-    var out = pathColIn.fold(
-      df.withColumn(pathCol, dvPathKey(col("_metadata.file_path"))))(_ => df)
+    var out = df
     val scanned = files.toSet
     eqDels.zipWithIndex.foreach { case (l, i) =>
       val (name, physPks) = parseEqDel(l)
@@ -3032,18 +2977,46 @@ object GraftCatalog {
     out.select(outCols.map(col): _*)
   }
 
-  /** A fresh dvPathKey-normalized path column over a RAW scan — the
-    * capture [[applyEqDeletes]] needs when it composes after joins.
-    * Returns (frame with the column, its name); None when no
-    * equality deletes are active. */
-  private def captureEqPath(eqDels: Seq[String],
-      df: DataFrame): (DataFrame, Option[String]) =
-    if (eqDels.isEmpty) (df, None)
-    else {
-      val known = df.columns.toSet
-      val p = Iterator.from(0).map(i => s"__eqp$i").find(!known(_)).get
-      (df.withColumn(p, dvPathKey(col("_metadata.file_path"))), Some(p))
-    }
+  /** The live rows of `raw`, a scan of `files` under their PHYSICAL
+    * names — the one delete chain every reader and verb applies: rows
+    * at the positions the `dvNames` sidecars hold drop
+    * ([[applyDvNames]]), then rows whose key tuple an `eqDels` sidecar
+    * deletes over their file ([[applyEqDeletes]]), then the columns
+    * take their logical names under `cs` (None keeps them physical).
+    * Callers pass the sidecar sets as data: a version's own, or (CDC,
+    * the eqdel fold) a prior or partial set. Metadata columns survive
+    * projections but not joins, so the file path is captured on the
+    * raw scan before either join regime runs; `withPos` keeps it, with
+    * the row position, as (__path, __pos) — the MoR verbs' DV keys. */
+  private def liveRows(spark: SparkSession, root: org.apache.hadoop.fs.Path,
+      raw: DataFrame, files: Seq[String], dvNames: Seq[String],
+      eqDels: Seq[String], cs: Option[org.apache.spark.sql.types.StructType],
+      withPos: Boolean = false): DataFrame = {
+    val pathCol =
+      if (withPos) "__path"
+      else Iterator.from(0).map(i => s"__eqp$i").find(!raw.columns.contains(_)).get
+    val keyed =
+      if (withPos) raw.withColumn("__path", dvPathKey(col("_metadata.file_path")))
+        .withColumn("__pos", col("_metadata.row_index"))
+      else if (eqDels.isEmpty) raw
+      else raw.withColumn(pathCol, dvPathKey(col("_metadata.file_path")))
+    val live = applyEqDeletes(spark, root, eqDels,
+      applyDvNames(spark, root, dvNames, keyed), files, pathCol)
+    val cleaned = if (withPos || eqDels.isEmpty) live else live.drop(pathCol)
+    cs.fold(cleaned)(toLogicalDf(cleaned, _))
+  }
+
+  /** [[liveRows]] of specific data files at version `v`, logical names
+    * — what every CoW rewrite reads its survivor/source rows through,
+    * so a rewrite can never resurrect a deleted row, and (`withPos`)
+    * what the MoR verbs find their hit positions in. */
+  private def readLiveFiles(spark: SparkSession,
+      fs: org.apache.hadoop.fs.FileSystem, root: org.apache.hadoop.fs.Path,
+      v: Long, files: Seq[String], withPos: Boolean = false): DataFrame = {
+    val pm = parseManifest(fs, root, v)
+    liveRows(spark, root, scanPhysical(spark, files, pm.schema), files,
+      pm.dvNames, pm.eqDels, pm.schema, withPos)
+  }
 
   /** MERGE-ON-READ EQUALITY DELETE: remove every row whose `pks` tuple
     * appears in `keys`, publishing ONE key-list sidecar and ZERO data
@@ -3082,7 +3055,7 @@ object GraftCatalog {
     dk.toDF(physPks: _*).write
       .parquet(new org.apache.hadoop.fs.Path(base, "keys").toString)
     val sp = spark; import sp.implicits._
-    files.toDF("__path").repartition(1).write
+    files.toDF("__path").coalesce(1).write
       .parquet(new org.apache.hadoop.fs.Path(base, "cover").toString)
     val carriedMeta = readManifestLines(fs, r, head).filter(l =>
       l.startsWith("#stats:") || l.startsWith("#schema:") ||
@@ -3115,29 +3088,6 @@ object GraftCatalog {
       case None => deleteSnapshotKeysMor(spark, root, keys, pks,
         meta = Seq(s"$prefix$batchId"))
     }
-  }
-
-  /** DV-aware read of specific data files at a version — what every
-    * CoW rewrite uses for its survivor/source rows, so a file rewrite
-    * can never resurrect rows a deletion vector OR equality delete
-    * removed. */
-  private def readFilesDv(spark: SparkSession,
-      fs: org.apache.hadoop.fs.FileSystem, root: org.apache.hadoop.fs.Path,
-      v: Long, files: Seq[String]): DataFrame = {
-    // committed read schema (physical names for the files), DV +
-    // equality-delete filters on the scan's own metadata columns,
-    // logical names on top (eq path captured on the raw scan — see
-    // applyEqDeletes' join caveat)
-    val cs = readSchemaLine(fs, root, v)
-    val raw = cs.fold(spark.read.parquet(files: _*))(s =>
-      spark.read.schema(physicalSchema(s)).parquet(files: _*))
-    val eqDels = readManifestLines(fs, root, v)
-      .filter(_.startsWith("#eqdel:")).map(_.stripPrefix("#eqdel:"))
-    val (based, eqPath) = captureEqPath(eqDels, raw)
-    val dv = applyDv(spark, fs, root, v, based)
-    val eq = applyEqDeletes(spark, root, eqDels, dv, files, eqPath)
-    val cleaned = eqPath.fold(eq)(eq.drop(_))
-    cs.fold(cleaned)(s => toLogicalDf(cleaned, s))
   }
 
   /** Declare the table's row-level WRITE MODE — `"cow"` (default:
@@ -3239,9 +3189,9 @@ object GraftCatalog {
     *
     *  1. PLAN on metadata — stats envelopes + partition tuples
     *     nominate candidate files exactly like the CoW verb.
-    *  2. POSITIONS, not rewrites — one scan of the candidates emits
-    *     the matching rows' `_metadata` (file_path, row_index) pairs,
-    *     minus positions already deleted by prior DVs.
+    *  2. POSITIONS, not rewrites — one scan of the candidates' live
+    *     rows ([[readLiveFiles]]) emits the matching rows' `_metadata`
+    *     (file_path, row_index) pairs.
     *  3. SIDECAR — the pairs land as parquet under `_deletes/` (cost ∝
     *     deleted rows, not touched files).
     *  4. FLIP — the next manifest lists the same files, carries prior
@@ -3259,35 +3209,22 @@ object GraftCatalog {
     val (fs, r) = fsOf(spark, root)
     val head = snapshotVersions(spark, root).last
     val files = readManifest(fs, r, head)
-    val cs = readSchemaLine(fs, r, head)
-    val stats = statsLogical(readStats(spark, root, head), cs)
-    val tz = spark.sessionState.conf.sessionLocalTimeZone
-    val predExpr = org.apache.spark.sql.GraftColumnBridge.expression(pred)
-    val ptSpec = readPartitionSpecsAt(fs, r)
-    val ptSchema = if (ptSpec.isEmpty) None else cs
-    val candidates = files.filter(f =>
-      stats.get(f).forall(st => mayContain(st, predExpr, tz)) &&
-        tupleMayMatch(ptSpec, ptSchema, f, predExpr, tz))
+    val candidates = filesMayMatch(spark, fs, r, files,
+      readStats(spark, root, head), readSchemaLine(fs, r, head), pred)
     if (candidates.isEmpty) return head
-    // position keys derive from `_metadata` BELOW the logical-name
-    // projection; the predicate (logical names) applies above it
-    val scan = cs.fold(spark.read.parquet(candidates: _*))(s =>
-      spark.read.schema(physicalSchema(s)).parquet(candidates: _*))
-      .withColumn("__path", dvPathKey(col("_metadata.file_path")))
-      .withColumn("__pos", col("_metadata.row_index"))
-    val hits = cs.fold(scan)(s => toLogicalDf(scan, s))
+    // live rows only: a row a prior DV or equality delete already
+    // removed is no hit, so it is never deleted (and streamed) twice
+    val hits = readLiveFiles(spark, fs, r, head, candidates, withPos = true)
       .where(coalesce(pred, lit(false)))
       .select(col("__path"), col("__pos"))
-    val prior = dvDf(spark, r, readDvNames(fs, r, head))
-    val fresh = prior.fold(hits)(p =>
-      hits.join(p, Seq("__path", "__pos"), "left_anti"))
     val name = s"dv-${writerToken()}"
-    fresh.write.parquet(new org.apache.hadoop.fs.Path(deletesDir(r), name).toString)
-    // an empty DV (nothing matched, or everything already deleted) is
-    // a no-op: drop the just-written empty sidecar, head unchanged
-    if (readSidecar(spark, dvSchema,
-        new org.apache.hadoop.fs.Path(deletesDir(r), name).toString).isEmpty) {
-      fs.delete(new org.apache.hadoop.fs.Path(deletesDir(r), name), true)
+    val dvPath = new org.apache.hadoop.fs.Path(deletesDir(r), name)
+    hits.write.parquet(dvPath.toString)
+    // an empty DV (nothing live matched) is a no-op: drop the
+    // just-written empty sidecar, head unchanged. A driver read of at
+    // most one row, no Spark job: Some means no row at all.
+    if (sidecarRows(spark, r, dvSchema, Seq(dvPath), bound = 0).isDefined) {
+      fs.delete(dvPath, true)
       return head
     }
     val carriedMeta = readManifestLines(fs, r, head).filter(l =>
@@ -3300,7 +3237,7 @@ object GraftCatalog {
       next
     } catch {
       case e: SnapshotConflictException =>
-        fs.delete(new org.apache.hadoop.fs.Path(deletesDir(r), name), true)
+        fs.delete(dvPath, true)
         throw e
     }
   }
@@ -3321,18 +3258,10 @@ object GraftCatalog {
     val (fs, r) = fsOf(spark, root)
     val head = snapshotVersions(spark, root).last
     val files = readManifest(fs, r, head)
-    val cs = readSchemaLine(fs, r, head)
-    val stats = readStats(spark, root, head)
-    val consult = statsLogical(stats, cs)
-    val tz = spark.sessionState.conf.sessionLocalTimeZone
-    val predExpr = org.apache.spark.sql.GraftColumnBridge.expression(pred)
-    val ptSpec = readPartitionSpecsAt(fs, r)
-    val ptSchema = if (ptSpec.isEmpty) None else cs
-    val candidates = files.filter(f =>
-      consult.get(f).forall(st => mayContain(st, predExpr, tz)) &&
-        tupleMayMatch(ptSpec, ptSchema, f, predExpr, tz))
+    val candidates = filesMayMatch(spark, fs, r, files,
+      readStats(spark, root, head), readSchemaLine(fs, r, head), pred)
     if (candidates.isEmpty) return head
-    val hit = liveRowsWithPos(spark, fs, r, head, candidates)
+    val hit = readLiveFiles(spark, fs, r, head, candidates, withPos = true)
       .where(coalesce(pred, lit(false)))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
@@ -3350,7 +3279,7 @@ object GraftCatalog {
         }
       }: _*)
       validateChecks(spark, root, updated)
-      publishDvPlusBatch(spark, fs, r, root, head, files, stats,
+      publishDvPlusBatch(spark, fs, r, head, files,
         hit.select("__path", "__pos"), updated, meta)
     } finally hit.unpersist()
   }
@@ -3406,13 +3335,12 @@ object GraftCatalog {
       else {
         val keys = spark.read
           .parquet(new org.apache.hadoop.fs.Path(base, "keys").toString)
-        // PHYSICAL-name scan (keys are stored physical, rename-proof);
-        // position keys captured on the raw scan, the MoR discipline
-        val scan = cs.fold(spark.read.parquet(covered: _*))(s =>
-          spark.read.schema(physicalSchema(s)).parquet(covered: _*))
-          .withColumn("__path", dvPathKey(col("_metadata.file_path")))
-          .withColumn("__pos", col("_metadata.row_index"))
-        Some(scan.join(keys, physPks.toSeq, "left_semi")
+        // rows still live under the prior DVs, PHYSICAL names (keys are
+        // stored physical, rename-proof): a row a prior DV deleted
+        // needs no second position
+        Some(liveRows(spark, r, scanPhysical(spark, covered, cs), covered,
+            priorDvNames, Seq.empty, None, withPos = true)
+          .join(keys, physPks.toSeq, "left_semi")
           .select(col("__path"), col("__pos")))
       }
     }
@@ -3430,13 +3358,10 @@ object GraftCatalog {
       }
     }
     if (hits.isEmpty) return publish(None, ())
-    val matched = hits.reduce(_ unionAll _).distinct()
-    val fresh = dvDf(spark, r, priorDvNames)
-      .fold(matched)(p => matched.join(p, Seq("__path", "__pos"), "left_anti"))
     val name = s"dv-${writerToken()}"
     val dvPath = new org.apache.hadoop.fs.Path(deletesDir(r), name)
-    fresh.write.parquet(dvPath.toString)
-    if (readSidecar(spark, dvSchema, dvPath.toString).isEmpty) {
+    hits.reduce(_ unionAll _).distinct().write.parquet(dvPath.toString)
+    if (sidecarRows(spark, r, dvSchema, Seq(dvPath), bound = 0).isDefined) {
       // every eqdel row was already positionally dead (or matched
       // nothing live): the lines still drop, no new DV needed
       fs.delete(dvPath, true)
@@ -3462,12 +3387,11 @@ object GraftCatalog {
       if (keys.isEmpty) return head
       validateChecks(spark, root, updates)
       val cs = readSchemaLine(fs, r, head)
-      val stats = readStats(spark, root, head)
-      val candidates =
-        nominateFilesByKeys(spark, files, statsLogical(stats, cs), keys, pks)
+      val candidates = nominateFilesByKeys(spark, files,
+        statsLogical(readStats(spark, root, head), cs), keys, pks)
       val matchedPos =
         if (candidates.isEmpty) None
-        else Some(liveRowsWithPos(spark, fs, r, head, candidates)
+        else Some(readLiveFiles(spark, fs, r, head, candidates, withPos = true)
           .join(keys, pks, "left_semi")
           .select("__path", "__pos"))
       val tableCols = cs.map(_.fieldNames.toSeq)
@@ -3483,33 +3407,10 @@ object GraftCatalog {
             updates.columns.filterNot(tableCols.contains)
           updates.select(cols.map(col): _*)
         } else updates.select(tableCols.map(col): _*)
-      publishDvPlusBatch(spark, fs, r, root, head, files, stats,
+      publishDvPlusBatch(spark, fs, r, head, files,
         matchedPos.getOrElse(spark.emptyDataFrame), // empty → pure append
         batch, meta)
     } finally keys.unpersist()
-  }
-
-  /** Live (not-yet-DV-deleted) rows of specific files WITH their
-    * (__path, __pos) metadata keys — the shared front end of the MoR
-    * update/merge verbs. */
-  private def liveRowsWithPos(spark: SparkSession,
-      fs: org.apache.hadoop.fs.FileSystem, r: org.apache.hadoop.fs.Path,
-      v: Long, files: Seq[String]): DataFrame = {
-    // position keys derive from `_metadata` BEFORE anything joins
-    // (metadata columns survive Projects, not Joins); the DVs apply on
-    // the raw scan, and the equality deletes then filter on the
-    // already-captured __path — their rows are not live
-    val cs = readSchemaLine(fs, r, v)
-    val scan = cs.fold(spark.read.parquet(files: _*))(s =>
-      spark.read.schema(physicalSchema(s)).parquet(files: _*))
-    val keyed = scan
-      .withColumn("__path", dvPathKey(col("_metadata.file_path")))
-      .withColumn("__pos", col("_metadata.row_index"))
-    val eq = applyEqDeletes(spark, r,
-      readManifestLines(fs, r, v).filter(_.startsWith("#eqdel:"))
-        .map(_.stripPrefix("#eqdel:")),
-      applyDvNames(spark, r, readDvNames(fs, r, v), keyed), files, Some("__path"))
-    cs.fold(eq)(s => toLogicalDf(eq, s))
   }
 
   /** Shared MoR commit: write a DV sidecar for `positions` (skipped
@@ -3518,8 +3419,7 @@ object GraftCatalog {
     * the sidecar and the batch. */
   private def publishDvPlusBatch(spark: SparkSession,
       fs: org.apache.hadoop.fs.FileSystem, r: org.apache.hadoop.fs.Path,
-      root: String, head: Long, files: Seq[String],
-      stats: Map[String, FileStat], positions: DataFrame, newData: DataFrame,
+      head: Long, files: Seq[String], positions: DataFrame, newData: DataFrame,
       meta: Seq[String]): Long = {
     val dvName: Option[String] =
       if (positions.isEmpty) None
@@ -3530,7 +3430,7 @@ object GraftCatalog {
         Some(n)
       }
     try {
-      commitCow(spark, fs, r, head, carried = files, carriedStats = stats,
+      commitCow(spark, fs, r, head, carried = files,
         newData = newData, meta = dvName.map(n => s"#dv:$n").toSeq ++ meta)
     } catch {
       case e: SnapshotConflictException =>
@@ -3672,8 +3572,36 @@ object GraftCatalog {
       .where(pred)
       .select("__file").distinct().collect())
 
+  /** [[pinFilesWhere]]'s key-scoped twin, the front end of the CoW key
+    * verbs (MERGE, CDC apply): nominate `head`'s `files` by their key
+    * envelopes ([[nominateFilesByKeys]]), pin the candidates holding a
+    * row whose `pks` tuple is in `keys` (one `input_file_name`
+    * semi-join pass), and return (the pinned files, the rest — carried
+    * by path —, the pinned files' live rows outside `keys`). */
+  private def pinFilesByKeys(spark: SparkSession,
+      fs: org.apache.hadoop.fs.FileSystem, r: org.apache.hadoop.fs.Path,
+      head: Long, files: Seq[String], keys: DataFrame,
+      pks: Seq[String]): (Set[String], Seq[String], DataFrame) = {
+    val cs = readSchemaLine(fs, r, head)
+    val candidates = nominateFilesByKeys(spark, files,
+      statsLogical(readStats(spark, r.toString, head), cs), keys, pks)
+    val matched: Set[String] =
+      if (candidates.isEmpty) Set.empty
+      else pinnedPaths(readFilesAsLogical(spark, candidates, cs)
+        .withColumn("__file", input_file_name())
+        .join(keys, pks, "left_semi")
+        .select("__file").distinct().collect())
+    val survivors =
+      if (matched.isEmpty)
+        readFilesAsLogical(spark, Seq(files.head), cs).where(lit(false))
+      else readLiveFiles(spark, fs, r, head, matched.toSeq.sorted)
+        .join(keys, pks, "left_anti")
+    (matched, files.filterNot(matched), survivors)
+  }
+
   /** Shared copy-on-write commit tail: land `newData` as ONE new batch,
-    * compute its stats, carry `carried`'s, publish `head + 1`. A lost
+    * compute its stats, carry `carried` (a subset of the head's files)
+    * with theirs, publish `head + 1`. A lost
     * commit race deletes the unpublished batch and stats sidecar (no
     * orphans) and rethrows — the serializable contract all CoW verbs
     * share (the caller replans against the new head) — UNLESS the race
@@ -3686,36 +3614,29 @@ object GraftCatalog {
     * the thunk means "no provable scope" and keeps the strict abort. */
   private def commitCow(spark: SparkSession,
       fs: org.apache.hadoop.fs.FileSystem, r: org.apache.hadoop.fs.Path,
-      head: Long, carried: Seq[String], carriedStats: Map[String, FileStat],
+      head: Long, carried: Seq[String],
       newData: DataFrame, meta: Seq[String],
       rewriteOf: Option[Set[String]] = None,
       scopePred: Option[() => Option[Column]] = None): Long = {
+    // STRUCTURAL carry (Iceberg's manifest-level filtering): the carried
+    // list is "the head's files minus the consumed ones", so the commit
+    // republishes the head's raw data section excluding the consumed
+    // files — untouched segments ride as pointers — and chains the
+    // stats sidecar at the head's. Both make the commit's METADATA cost
+    // ∝ touched files.
+    val headResolved = readManifest(fs, r, head).toSet
+    val carriedSet = carried.toSet
+    require(carriedSet.subsetOf(headResolved),
+      s"CoW carry must be a subset of v$head's files")
+    val consumed = headResolved -- carriedSet
     val (batch, newFiles, newStatuses, batchObs) = writeBatch(spark, fs, r, newData)
     val newStats = batchFileStats(spark, newFiles, fsMetaOf(newStatuses),
       readBloomConfAt(fs, r), batchObs)
-    // STRUCTURAL carry (Iceberg's manifest-level filtering): when the
-    // carried list is, as every CoW verb constructs it, "the head's
-    // files minus the consumed ones", republish the head's raw data
-    // section excluding the consumed files — untouched segments ride
-    // as pointers — and chain the stats sidecar at the head's. Both
-    // make the commit's METADATA cost ∝ touched files. Anything else
-    // (defensive: a caller whose carried list is not a head subset)
-    // falls back to the flat publish.
-    val headResolved = readManifest(fs, r, head)
-    val carriedSet = carried.toSet
-    val structural = carriedSet.subsetOf(headResolved.toSet)
-    val consumed = headResolved.toSet -- carriedSet
-    val statsName =
-      if (structural)
-        writeStatsDelta(spark, fs, r,
-          readManifestRawLines(fs, r, head)
-            .find(_.startsWith("#stats:")).map(_.stripPrefix("#stats:")),
-          newStats, liveAtFlatten = carriedSet ++ newFiles)
-      else writeStatsFile(spark, fs, r,
-        (carriedStats.values.toSeq ++ newStats).sortBy(_.path))
-    val carryLines =
-      if (structural) carriedDataRawExcluding(fs, r, head, consumed)
-      else carried
+    val statsName = writeStatsDelta(spark, fs, r,
+      readManifestRawLines(fs, r, head)
+        .find(_.startsWith("#stats:")).map(_.stripPrefix("#stats:")),
+      newStats, liveAtFlatten = carriedSet ++ newFiles)
+    val carryLines = carriedDataRawExcluding(fs, r, head, consumed)
     // Committed schema: carried files are covered by the head's
     // recorded schema; the rewritten batch may add evolved columns.
     val priorSchema = readSchemaLine(fs, r, head)
@@ -3793,19 +3714,12 @@ object GraftCatalog {
     val head = snapshotVersions(spark, root).last
     val files = readManifest(fs, r, head)
     val cs = readSchemaLine(fs, r, head)
-    val stats = readStats(spark, root, head)
-    val consult = statsLogical(stats, cs)
-    val tz = spark.sessionState.conf.sessionLocalTimeZone
-    val predExpr = org.apache.spark.sql.GraftColumnBridge.expression(pred)
-    val ptSpec = readPartitionSpecsAt(fs, r)
-    val ptSchema = if (ptSpec.isEmpty) None else cs
-    val candidates = files.filter(f =>
-      consult.get(f).forall(st => mayContain(st, predExpr, tz)) &&
-        tupleMayMatch(ptSpec, ptSchema, f, predExpr, tz))
+    val candidates = filesMayMatch(spark, fs, r, files,
+      readStats(spark, root, head), cs, pred)
     val matchedFiles = pinFilesWhere(spark, candidates, pred, cs)
     if (matchedFiles.isEmpty) return head
     val carried = files.filterNot(matchedFiles)
-    val src = readFilesDv(spark, fs, r, head, matchedFiles.toSeq.sorted)
+    val src = readLiveFiles(spark, fs, r, head, matchedFiles.toSeq.sorted)
     val known = src.schema.fieldNames.toSet
     val unknown = set.map(_._1).filterNot(known)
     require(unknown.isEmpty,
@@ -3828,8 +3742,7 @@ object GraftCatalog {
       } :+ col(hitCol)): _*)
     validateChecks(spark, root, marked.where(col(hitCol)).drop(hitCol))
     val updated = marked.drop(hitCol)
-    commitCow(spark, fs, r, head, carried,
-      stats.filter { case (p, _) => carried.contains(p) }, updated, meta,
+    commitCow(spark, fs, r, head, carried, updated, meta,
       scopePred = Some(() => Some(pred)))
   }
 
@@ -3854,15 +3767,8 @@ object GraftCatalog {
     val head = snapshotVersions(spark, root).last
     val files = readManifest(fs, r, head)
     val cs = readSchemaLine(fs, r, head)
-    val stats = readStats(spark, root, head)
-    val consult = statsLogical(stats, cs)
-    val tz = spark.sessionState.conf.sessionLocalTimeZone
-    val predExpr = org.apache.spark.sql.GraftColumnBridge.expression(pred)
-    val ptSpec = readPartitionSpecsAt(fs, r)
-    val ptSchema = if (ptSpec.isEmpty) None else cs
-    val candidates = files.filter(f =>
-      consult.get(f).forall(st => mayContain(st, predExpr, tz)) &&
-        tupleMayMatch(ptSpec, ptSchema, f, predExpr, tz))
+    val candidates = filesMayMatch(spark, fs, r, files,
+      readStats(spark, root, head), cs, pred)
     val matchedFiles = pinFilesWhere(spark, candidates, pred, cs)
     if (matchedFiles.isEmpty && rows.isEmpty) return head
     val carried = files.filterNot(matchedFiles)
@@ -3870,12 +3776,11 @@ object GraftCatalog {
       .getOrElse(spark.read.parquet(files.head).columns.toSeq)
     val survivors =
       if (matchedFiles.isEmpty) rows.select(tableCols.map(col): _*).where(lit(false))
-      else readFilesDv(spark, fs, r, head, matchedFiles.toSeq.sorted)
+      else readLiveFiles(spark, fs, r, head, matchedFiles.toSeq.sorted)
         .where(!coalesce(pred, lit(false)))
     val newData = survivors.select(tableCols.map(col): _*)
       .unionByName(rows.select(tableCols.map(col): _*))
-    commitCow(spark, fs, r, head, carried,
-      stats.filter { case (p, _) => carried.contains(p) }, newData, meta,
+    commitCow(spark, fs, r, head, carried, newData, meta,
       scopePred = Some(() => Some(pred)))
   }
 
@@ -4128,6 +4033,36 @@ object GraftCatalog {
     keep(norm(pred))
   }
 
+  /** The file-skipping rule, written once for every reader and verb:
+    * may file `f` hold a row satisfying `e`? It may not only when its
+    * stats envelope ([[mayContain]]) or its hidden-partition tuple
+    * ([[tupleMayMatch]]) proves so; a file with neither is kept.
+    * `stats` must name columns as the expressions do (logical names
+    * for user predicates — [[statsLogical]]); `cs` types the bucket
+    * source columns. */
+  private def filePruner(spark: SparkSession,
+      fs: org.apache.hadoop.fs.FileSystem, r: org.apache.hadoop.fs.Path,
+      stats: Map[String, FileStat],
+      cs: Option[org.apache.spark.sql.types.StructType])
+      : (String, org.apache.spark.sql.catalyst.expressions.Expression) => Boolean = {
+    val specs = readPartitionSpecsAt(fs, r)
+    val tz = spark.sessionState.conf.sessionLocalTimeZone
+    (f, e) => stats.get(f).forall(mayContain(_, e, tz)) &&
+      tupleMayMatch(specs, cs, f, e, tz)
+  }
+
+  /** The PLAN step every predicate reader and verb shares: the `files`
+    * [[filePruner]] keeps for `pred`, given their raw (physical-name)
+    * `stats` and the committed schema `cs`. */
+  private def filesMayMatch(spark: SparkSession,
+      fs: org.apache.hadoop.fs.FileSystem, r: org.apache.hadoop.fs.Path,
+      files: Seq[String], stats: Map[String, FileStat],
+      cs: Option[org.apache.spark.sql.types.StructType], pred: Column): Seq[String] = {
+    val mayMatch = filePruner(spark, fs, r, statsLogical(stats, cs), cs)
+    val e = org.apache.spark.sql.GraftColumnBridge.expression(pred)
+    files.filter(mayMatch(_, e))
+  }
+
   /** The file list a read of `version` under `predicate` will scan,
     * plus the manifest's total file count — the data-skipping planner,
     * exposed for observability (and the spec's files-opened proof).
@@ -4141,21 +4076,8 @@ object GraftCatalog {
       vs.last
     }
     val files = readManifest(fs, r, v)
-    predicate match {
-      case None => (files, files.size)
-      case Some(p) =>
-        val stats = statsLogical(readStats(spark, root, v),
-          readSchemaLine(fs, r, v))
-        val tz = spark.sessionState.conf.sessionLocalTimeZone
-        val expr = org.apache.spark.sql.GraftColumnBridge.expression(p)
-        // Stats envelopes first, then the hidden-partition tuple (the
-        // hash-bucket case stats cannot express).
-        val spec = readPartitionSpecsAt(fs, r)
-        val schema = if (spec.isEmpty) None else readSchemaLine(fs, r, v)
-        (files.filter(f =>
-          stats.get(f).forall(st => mayContain(st, expr, tz)) &&
-            tupleMayMatch(spec, schema, f, expr, tz)), files.size)
-    }
+    (predicate.fold(files)(p => filesMayMatch(spark, fs, r, files,
+      readStats(spark, root, v), readSchemaLine(fs, r, v), p)), files.size)
   }
 
   /** Read a snapshot — the latest version, or an explicit one (time
@@ -4185,25 +4107,11 @@ object GraftCatalog {
     // names and stats pointer (object-store GET discipline).
     val pm = parseManifest(fs, r, v)
     require(pm.files.nonEmpty, s"snapshot of $root is empty")
-    val kept = predicate match {
-      case None => pm.files
-      case Some(p) =>
-        // predicates reference LOGICAL names; sidecar stats record
-        // physical ones — consult a logically-remapped view
-        val stats = statsLogical(
-          readStatsNamed(spark, fs, r, pm.statsName), pm.schema)
-        val tz = spark.sessionState.conf.sessionLocalTimeZone
-        val expr = org.apache.spark.sql.GraftColumnBridge.expression(p)
-        val specs = readPartitionSpecsAt(fs, r)
-        val schema = if (specs.isEmpty) None else pm.schema
-        pm.files.filter(f =>
-          stats.get(f).forall(st => mayContain(st, expr, tz)) &&
-            tupleMayMatch(specs, schema, f, expr, tz))
-    }
+    val kept = predicate.fold(pm.files)(p => filesMayMatch(spark, fs, r,
+      pm.files, readStatsNamed(spark, fs, r, pm.statsName), pm.schema, p))
     // All files pruned: scan one manifest file so the schema survives;
     // the row filter below still yields the (correct) empty result.
     val files = if (kept.nonEmpty) kept else pm.files.take(1)
-    val rd = spark.read
     // Non-merge reads use the manifest's COMMITTED schema when recorded:
     // on a schema-evolved table this surfaces every committed column
     // (older files read NULL for columns they predate) regardless of
@@ -4211,20 +4119,11 @@ object GraftCatalog {
     // mergeSchema=true keeps the footer-union read (ground truth when a
     // file was written wider than its commit declared).
     val df =
-      if (mergeSchema) rd.option("mergeSchema", "true").parquet(files: _*)
-      else pm.schema
-        .fold(rd.parquet(files: _*))(s => rd.schema(physicalSchema(s)).parquet(files: _*))
-    // DV + equality-delete filtering binds to the scan's `_metadata`
-    // columns and the files' physical names, so it sits BELOW the
-    // logical-name projection; the user predicate (logical names)
-    // applies above it. The eq path column captures on the raw scan —
-    // metadata columns don't survive the DV anti-join fallback.
-    val (based, eqPath) = captureEqPath(pm.eqDels, df)
-    val withDv = applyEqDeletes(spark, r, pm.eqDels,
-      applyDvNames(spark, r, pm.dvNames, based), files, eqPath)
-    val cleaned = eqPath.fold(withDv)(withDv.drop(_))
-    val logical = pm.schema.fold(cleaned)(s => toLogicalDf(cleaned, s))
-    predicate.fold(logical)(logical.where)
+      if (mergeSchema) spark.read.option("mergeSchema", "true").parquet(files: _*)
+      else scanPhysical(spark, files, pm.schema)
+    // the user predicate (logical names) applies above the delete chain
+    val live = liveRows(spark, r, df, files, pm.dvNames, pm.eqDels, pm.schema)
+    predicate.fold(live)(live.where)
   }
 
   /** Read a snapshot as a CATALYST-INTEGRATED relation: unlike
@@ -4252,7 +4151,6 @@ object GraftCatalog {
     val pm = parseManifest(fs, r, v)
     val files = pm.files
     val stats = readStatsNamed(spark, fs, r, pm.statsName)
-    val tz = spark.sessionState.conf.sessionLocalTimeZone
     // Planning metadata comes from the manifest's own sidecar: file
     // length + mtime were recorded at commit, so building the scan's
     // FileStatus list issues ZERO per-file status RPCs — the listing
@@ -4278,23 +4176,20 @@ object GraftCatalog {
         spark.read.option("mergeSchema", "true").parquet(files: _*).schema
       else pm.schema.map(physicalSchema)
         .getOrElse(spark.read.parquet(files.head).schema)
-    val spec = readPartitionSpecsAt(fs, r)
-    val specSchema = if (spec.isEmpty) None else pm.schema
+    // the pushed filters name the relation's physical columns, as the
+    // raw stats do
+    val mayMatch = filePruner(spark, fs, r, stats, pm.schema)
     val keep: Seq[org.apache.spark.sql.catalyst.expressions.Expression] =>
         Seq[org.apache.hadoop.fs.FileStatus] = filters =>
       if (filters.isEmpty) statuses
       else statuses.filter { st =>
         val p = org.apache.hadoop.fs.Path
           .getPathWithoutSchemeAndAuthority(st.getPath).toString
-        stats.get(p).forall(fst => filters.forall(f => mayContain(fst, f, tz))) &&
-          filters.forall(f => tupleMayMatch(spec, specSchema, p, f, tz))
+        filters.forall(mayMatch(p, _))
       }
-    val (based, eqPath) = captureEqPath(pm.eqDels,
-      org.apache.spark.sql.GraftSnapshotRelation.dataFrame(spark, r, statuses, schema, keep))
-    val withDv = applyEqDeletes(spark, r, pm.eqDels,
-      applyDvNames(spark, r, pm.dvNames, based), files, eqPath)
-    val cleaned = eqPath.fold(withDv)(withDv.drop(_))
-    pm.schema.fold(cleaned)(s => toLogicalDf(cleaned, s))
+    liveRows(spark, r,
+      org.apache.spark.sql.GraftSnapshotRelation.dataFrame(spark, r, statuses, schema, keep),
+      files, pm.dvNames, pm.eqDels, pm.schema)
   }
 
   /** STORAGE-PARTITIONED read: expose the table's hidden `bucket(n,
@@ -6217,27 +6112,16 @@ object GraftCatalog {
     // PARTITION-SCOPED compaction (Delta's `OPTIMIZE … WHERE`): only
     // tuples the predicate may match rewrite — a trickle-writer's one
     // hot partition compacts without touching the rest of a 100 TB
-    // layout. Scope resolves through the same tuple pruning the scan
-    // planner uses, so any predicate on spec SOURCE columns works
-    // (identity values, bucket ordinals). Tuple-less files (pre-spec /
+    // layout. Scope resolves through the verbs' own planning rule
+    // ([[filesMayMatch]]), so any predicate on spec SOURCE columns
+    // works: stats envelopes prune identity partitions (each file's
+    // source-column envelope IS its partition value), tuple pruning
+    // handles bucket ordinals. Tuple-less files (pre-spec /
     // retired-spec) belong to no partition and stay out of a scoped
     // run — the unscoped spelling migrates them.
-    val inScope: String => Boolean = where match {
-      case None => _ => true
-      case Some(pred) =>
-        val predExpr = org.apache.spark.sql.GraftColumnBridge.expression(pred)
-        val tz = spark.sessionState.conf.sessionLocalTimeZone
-        val ptSchema = readSchemaLine(fs, r, head)
-        // the verbs' own planning consults: stats envelopes prune
-        // identity partitions (each file's source-column envelope IS
-        // its partition value), tuple pruning handles bucket ordinals
-        val consult = statsLogical(stats, ptSchema)
-        f => specIdOfPath(f) == activeId &&
-          filePartitionTuple(f).nonEmpty &&
-          consult.get(f).forall(st => mayContain(st, predExpr, tz)) &&
-          tupleMayMatch(specs, ptSchema, f, predExpr, tz)
-    }
-    val scoped = files.filter(inScope)
+    val scoped = where.fold(files)(pred => filesMayMatch(spark, fs, r,
+      files.filter(f => specIdOfPath(f) == activeId && filePartitionTuple(f).nonEmpty),
+      stats, readSchemaLine(fs, r, head), pred))
     val groups = scoped.groupBy(f =>
       // retired-spec files group as tuple-less -> they MIGRATE into
       // the active layout alongside pre-spec files
@@ -6259,7 +6143,7 @@ object GraftCatalog {
       if (migrating.isEmpty) rewrite0
       else {
         val committed = readSchemaLine(fs, r, head)
-        val mdf = readFilesDv(spark, fs, r, head, migrating)
+        val mdf = readLiveFiles(spark, fs, r, head, migrating)
         def declared(c: String) = committed
           .flatMap(cs => cs.fields.find(_.name == c)).map(_.dataType)
           .getOrElse(mdf.schema(c).dataType)
@@ -6275,7 +6159,8 @@ object GraftCatalog {
         }.flatten
         (rewrite0 ++ extra).distinct.sorted
       }
-    val carried = files.filterNot(rewrite.toSet)
+    val rewriteSet = rewrite.toSet
+    val carried = files.filterNot(rewriteSet)
     // writeBatch hash-distributes by the tuple itself, so the rewrite
     // needs no pre-clustering here. targetBytes bounds rewritten file
     // size through spark.sql.files.maxRecordsPerFile, derived from the
@@ -6284,7 +6169,7 @@ object GraftCatalog {
     // one giant file. Zero extra I/O: both numbers are already in the
     // stats the compactor holds.
     val rewriteStats = stats.collect {
-      case (p, st) if rewrite.contains(p) && st.len.isDefined && st.rows > 0 =>
+      case (p, st) if rewriteSet(p) && st.len.isDefined && st.rows > 0 =>
         (st.rows, st.len.get)
     }
     val maxRecords: Option[Long] = {
@@ -6296,13 +6181,12 @@ object GraftCatalog {
     // DV-aware rewrite: folds this partition's deleted positions into
     // the clean files; carried partitions keep their #dv protection
     // via commitCow's dv carry (their DV rows stay path-valid).
-    val newData = readFilesDv(spark, fs, r, head, rewrite)
+    val newData = readLiveFiles(spark, fs, r, head, rewrite)
     val confKey = "spark.sql.files.maxRecordsPerFile"
     val prior = spark.conf.getOption(confKey)
     maxRecords.foreach(n => spark.conf.set(confKey, n.toString))
-    try commitCow(spark, fs, r, head, carried,
-      stats.filter { case (p, _) => carried.contains(p) }, newData,
-      Seq("#compact:partitioned"), rewriteOf = Some(rewrite.toSet))
+    try commitCow(spark, fs, r, head, carried, newData,
+      Seq("#compact:partitioned"), rewriteOf = Some(rewriteSet))
     finally prior match {
       case Some(v) => spark.conf.set(confKey, v)
       case None => spark.conf.unset(confKey)

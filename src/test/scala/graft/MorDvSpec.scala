@@ -176,6 +176,29 @@ class MorDvSpec extends AnyFunSuite {
       col("id") === 99999L) == head)
   }
 
+  test("MoR delete of an equality-deleted row is a no-op and CDC deletes it once") {
+    import spark.implicits._
+    def dvSidecars(root: String): Set[String] =
+      Option(new java.io.File(s"$root/_deletes").list()).toSeq.flatten
+        .filter(_.startsWith("dv-")).toSet
+    def run(): Seq[Long] = {
+      val root = freshTable("eqthendv")
+      val head = GraftCatalog.deleteSnapshotKeysMor(spark, root,
+        Seq(42L).toDF("id"), Seq("id"))
+      // the row is already dead: no live hit, so no DV and no version
+      assert(GraftCatalog.deleteSnapshotWhereMor(spark, root, col("id") === 42L) == head)
+      assert(GraftCatalog.snapshotVersions(spark, root).last == head)
+      assert(dvSidecars(root).isEmpty, "no dv- sidecar for an already-deleted row")
+      GraftCatalog.readChanges(spark, root, 0L,
+          GraftCatalog.snapshotVersions(spark, root).last)
+        .where(col("_change") === "delete" && col("id") === 42L)
+        .select("_version").as[Long].collect().toSeq
+    }
+    val (probe, join) = bothRegimes(run())
+    assert(probe == Seq(2L) && join == Seq(2L),
+      s"the key's delete streams once, at the eqdel version: $probe / $join")
+  }
+
   test("compaction folds deletion vectors into clean files") {
     val root = freshTable("fold")
     GraftCatalog.deleteSnapshotWhereMor(spark, root, col("id") % 250 === 3)

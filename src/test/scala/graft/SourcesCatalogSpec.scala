@@ -2961,20 +2961,35 @@ class SourcesCatalogSpec extends AnyFunSuite {
 
   test("hidden partitioning: CoW delete nominates only the predicate's bucket file") {
     import spark.implicits._
-    val root = s"$tmp/snapptdel_${System.nanoTime()}"
-    GraftCatalog.setSnapshotPartitionSpec(spark, root,
-      Seq(graft.sources.PartitionField("id", "bucket", 4)))
-    GraftCatalog.commitSnapshot(
-      spark.range(1000).select(col("id"), (col("id") % 97).as("v"))
-        .repartition(1),
-      root, append = false)
-    val before = GraftCatalog.snapshotScanFiles(spark, root)._1.toSet
-    GraftCatalog.deleteSnapshotWhere(spark, root, col("id") === 123L)
-    val after = GraftCatalog.snapshotScanFiles(spark, root)._1.toSet
-    assert((before -- after).size == 1 && (after -- before).size >= 1,
-      s"exactly one bucket file rewrites; carried=${(before & after).size}")
-    assert((before & after).size == 3, "the other three buckets carry by path")
-    assert(GraftCatalog.readSnapshot(spark, root).count() == 999)
+    val pred = col("id") === 123L
+    // every CoW predicate verb plans through the same pruning rule
+    val verbs: Seq[(String, String => Long, Long)] = Seq(
+      ("delete", root => GraftCatalog.deleteSnapshotWhere(spark, root, pred), 999L),
+      ("update", root => GraftCatalog.updateSnapshotWhere(spark, root, pred,
+        Seq("v" -> lit(-1L))), 1000L),
+      ("overwrite", root => GraftCatalog.overwriteSnapshotWhere(spark, root, pred,
+        Seq((123L, -1L)).toDF("id", "v")), 1000L))
+    verbs.foreach { case (verb, run, rows) =>
+      val root = s"$tmp/snapptdel_${verb}_${System.nanoTime()}"
+      GraftCatalog.setSnapshotPartitionSpec(spark, root,
+        Seq(graft.sources.PartitionField("id", "bucket", 4)))
+      GraftCatalog.commitSnapshot(
+        spark.range(1000).select(col("id"), (col("id") % 97).as("v"))
+          .repartition(1),
+        root, append = false)
+      val before = GraftCatalog.snapshotScanFiles(spark, root)._1.toSet
+      assert(GraftCatalog.snapshotScanFiles(spark, root, predicate = Some(pred))._1.size == 1,
+        s"$verb: the bucket tuple prunes to one file")
+      run(root)
+      val after = GraftCatalog.snapshotScanFiles(spark, root)._1.toSet
+      assert((before -- after).size == 1 && (after -- before).size >= 1,
+        s"$verb: exactly one bucket file rewrites; carried=${(before & after).size}")
+      assert((before & after).size == 3, s"$verb: the other three buckets carry by path")
+      val read = GraftCatalog.readSnapshot(spark, root)
+      assert(read.count() == rows, verb)
+      if (verb != "delete")
+        assert(read.where(pred).select("v").as[Long].collect().toSeq == Seq(-1L), verb)
+    }
   }
 
   test("describeSnapshotPartitions: pure-metadata counts equal data group-by") {
