@@ -29,7 +29,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * the covered files and key tuples load once on the driver into an
   * [[EqDeleteIndex]], broadcast, and each row of a covered file probes
   * its key tuple — in place of a key join plus a cover join, under the
-  * same threshold.
+  * same threshold. The key-scoped verbs (MERGE, CDC apply, MoR MERGE)
+  * probe their loaded key feed through the same index, with one
+  * constant path.
   */
 object DvIndex {
 
@@ -93,7 +95,9 @@ final class EqDeleteIndex(covered: Iterable[String], tuples: Iterable[Array[Any]
 }
 
 object EqDeleteIndex {
-  private def row(vals: Array[Any]): InternalRow = {
+  /** `vals` as a hashable key tuple, float and double zeros folded in
+    * place — also how a key-scoped verb's feed dedupes on load. */
+  private[graft] def row(vals: Array[Any]): GenericInternalRow = {
     var i = 0
     while (i < vals.length) {
       vals(i) match {

@@ -594,4 +594,176 @@ class MorDvSpec extends AnyFunSuite {
     // ids ≡ 6 (mod 7) in 0..999: 142; id=77 is grp 0 → 1000-142-1
     assert(t.count() == 1000 - 142 - 1)
   }
+
+  test("CoW verbs pin through live rows: a match already DV-deleted rewrites nothing") {
+    import spark.implicits._
+    def run(): Seq[String] = {
+      val root = freshTable("livepin")
+      val head = GraftCatalog.deleteSnapshotWhereMor(spark, root, col("id") === 42L)
+      val files = dataFiles(root)
+      assert(files.size == 4)
+      // the only matching row is dead: no file pins, no version publishes
+      assert(GraftCatalog.deleteSnapshotWhere(spark, root, col("id") === 42L) == head)
+      assert(GraftCatalog.updateSnapshotWhere(spark, root, col("id") === 42L,
+        Seq("amount" -> lit(0L))) == head)
+      assert(GraftCatalog.snapshotVersions(spark, root).last == head)
+      assert(dataFiles(root) == files, "a verb matching only a dead row rewrote a file")
+      // the key is absent, so MERGE carries every file and inserts the row
+      assert(GraftCatalog.mergeSnapshotKeys(spark, root,
+        Seq((42L, 0L, 7L)).toDF("id", "grp", "amount"), Seq("id")) == head + 1)
+      val after = dataFiles(root)
+      assert(files.toSet.subsetOf(after.toSet) && after.size == files.size + 1,
+        "MERGE of a dead key must carry every file by path")
+      GraftCatalog.readSnapshot(spark, root).collect().map(_.toString).sorted.toSeq
+    }
+    val (probe, join) = bothRegimes(run())
+    assert(probe == join)
+    assert(probe.size == 1000 && probe.contains("[42,0,7]"))
+  }
+
+  test("eqdel fold and CDC select the same rows through the key probe and the semi-join") {
+    import spark.implicits._
+    def run(): (Set[(Int, Long)], Seq[String]) = {
+      val root = freshTable("eqprobe")
+      val files = dataFiles(root).map(p => new java.io.File(new java.net.URI(p).getPath).getName)
+      GraftCatalog.deleteSnapshotWhereMor(spark, root, col("id") === 4L)
+      GraftCatalog.deleteSnapshotKeysMor(spark, root,
+        Seq(2L, 3L, 4L, 500L, 999999L).toDF("id"), Seq("id"))
+      val v = GraftCatalog.rewriteEqDeletesToDv(spark, root)
+      def dvs(at: Long) = spark.read.textFile(s"$root/_manifests/v$at.manifest")
+        .collect().filter(_.startsWith("#dv:")).map(_.stripPrefix("#dv:")).toSet
+      val fresh = (dvs(v) -- dvs(v - 1)).toSeq
+      assert(fresh.size == 1, s"the fold writes one DV: $fresh")
+      val positions = spark.read.parquet(s"$root/_deletes/${fresh.head}").collect()
+        .map(r => (files.indexOf(new java.io.File(r.getString(0)).getName), r.getLong(1)))
+        .toSet
+      val cdc = GraftCatalog.readChanges(spark, root, 0L, v - 1)
+        .where(col("_change") === "delete")
+        .select("id", "_version").collect().map(_.toString).sorted.toSeq
+      (positions, cdc)
+    }
+    val (probe, join) = bothRegimes(run())
+    assert(probe == join)
+    // id 4 was positionally dead already: the fold positions 2, 3, 500
+    assert(probe._1.size == 3 && probe._1.forall(_._1 >= 0))
+    assert(probe._2 == Seq("[2,3]", "[3,3]", "[4,2]", "[500,3]"))
+  }
+
+  test("key verbs return the same rows and CDC whether the key feed is probed or joined") {
+    import org.apache.spark.sql.Row
+    def frame(ddl: String, rows: Row*) = spark.createDataFrame(
+      java.util.Arrays.asList(rows: _*),
+      org.apache.spark.sql.types.StructType.fromDDL(ddl))
+    val schema = "id bigint, grp bigint, d double, amount bigint"
+    def run(): (Seq[String], Seq[String]) = {
+      val root = s"$tmp/keyreg_${System.nanoTime()}"
+      GraftCatalog.commitSnapshot(spark.range(400).select(col("id"),
+          (col("id") % 3).as("grp"),
+          when(col("id") === 0L, lit(-0.0)).when(col("id") === 1L, lit(Double.NaN))
+            .otherwise(col("id") * 0.5).as("d"),
+          (col("id") * 10).as("amount")).repartitionByRange(4, col("id")),
+        root, append = false)
+      val pks = Seq("id", "grp")
+      // composite keys: (5,2) matches; (6,1) and a NULL-component key
+      // match nothing and insert; the duplicate (7,1) replaces 7 twice
+      GraftCatalog.mergeSnapshotKeys(spark, root, frame(schema,
+        Row(5L, 2L, 900.5, 1L), Row(6L, 1L, 900.25, 2L), Row(null, 1L, 901.5, 3L),
+        Row(7L, 1L, 902.5, 4L), Row(7L, 1L, 903.5, 5L)), pks)
+      val cdc = s"$schema, _op string"
+      GraftCatalog.applyCdcSnapshotKeys(spark, root, frame(cdc,
+        Row(10L, 1L, 910.5, 6L, "U"), Row(11L, 2L, 0.0, 0L, "D"),
+        Row(1000L, 1L, 911.5, 7L, "I"), Row(null, 1L, 0.0, 0L, "D")), pks)
+      val dup = intercept[IllegalArgumentException](
+        GraftCatalog.applyCdcSnapshotKeys(spark, root, frame(cdc,
+          Row(12L, 0L, 0.0, 0L, "U"), Row(12L, 0L, 0.0, 0L, "D")), pks))
+      assert(dup.getMessage.contains("multiple events"))
+      // a double key: 0.0 matches the stored -0.0, NaN matches NaN
+      GraftCatalog.mergeSnapshotMorKeys(spark, root, frame(schema,
+        Row(900L, 0L, 0.0, 8L), Row(901L, 0L, Double.NaN, 9L)), Seq("d"))
+      // an int feed on the bigint key takes the join regime and matches
+      GraftCatalog.mergeSnapshotKeys(spark, root,
+        spark.range(30, 32).select(col("id").cast("int").as("id"),
+          (col("id") % 3).as("grp"), lit(0.25).as("d"), lit(11L).as("amount")),
+        pks)
+      GraftCatalog.deleteSnapshotKeysMor(spark, root, frame("id bigint, grp bigint",
+        Row(20L, 2L), Row(21L, null), Row(22L, 1L), Row(22L, 1L)), pks)
+      val t = GraftCatalog.readSnapshot(spark, root)
+      assert(t.where(col("id").isin(0L, 1L, 11L, 20L, 22L)).count() == 0)
+      assert(t.where(col("id").isin(5L, 7L, 10L, 21L, 30L, 31L, 900L, 901L, 1000L))
+        .groupBy("id").count().where(col("count") =!= 1L).select("id")
+        .collect().map(_.getLong(0)).toSeq == Seq(7L))
+      val head = GraftCatalog.snapshotVersions(spark, root).last
+      (t.collect().map(_.toString).sorted.toSeq,
+        GraftCatalog.readChanges(spark, root, 1L, head).collect().map(_.toString).sorted.toSeq)
+    }
+    val (probe, join) = bothRegimes(run())
+    assert(probe._1 == join._1, "head rows differ between the regimes")
+    assert(probe._2 == join._2, "CDC rows differ between the regimes")
+    // 400, +3 from the MERGE, -1 +1 from the CDC apply, -2 from the purge
+    assert(probe._1.size == 401)
+  }
+
+  test("a MERGE of a cached feed into a small table runs at most 3 jobs, none joining the keys") {
+    import spark.implicits._
+    val root = freshTable("mergejobs")
+    val feed = Seq((5L, 5L, 1L), (700L, 0L, 2L), (2000L, 1L, 3L))
+      .toDF("id", "grp", "amount").cache()
+    feed.count()
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+          ns: Long): Unit = plans.add(qe.executedPlan.toString)
+      def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+          e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    val jobs = try TestSpark.jobsLaunched(spark)(
+        GraftCatalog.mergeSnapshotKeys(spark, root, feed, Seq("id")))
+      finally feed.unpersist()
+    // the pin's collect and the write each report their plan
+    val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
+    while (plans.size < 2 && System.nanoTime() < deadline) Thread.sleep(10)
+    spark.listenerManager.unregister(listener)
+    assert(jobs <= 3, s"MERGE launched $jobs jobs: load, pin and write expected")
+    val all = plans.toArray.mkString("\n")
+    assert(all.contains("graft_eq_delete_hit"), s"the key feed is probed:\n$all")
+    assert(!all.contains("LeftAnti") && !all.contains("LeftSemi") &&
+      !all.contains("BroadcastExchange"), s"no key join or key broadcast:\n$all")
+    val t = GraftCatalog.readSnapshot(spark, root)
+    assert(t.count() == 1001)
+    assert(t.where(col("id").isin(5L, 700L)).select("amount").as[Long].collect().toSet ==
+      Set(1L, 2L))
+  }
+
+  test("CoW pins map a scan path with an authority back to the manifest path") {
+    import spark.implicits._
+    // Under a view filesystem every scanned path carries an authority
+    // (viewfs://<mount>/t/...) that the manifest's paths (/t/...) drop.
+    val mount = s"graftpin${System.nanoTime()}"
+    val local = java.nio.file.Files.createTempDirectory("graft-viewfs").toUri.toString
+    val confs = Seq("fs.defaultFS" -> s"viewfs://$mount/",
+      s"fs.viewfs.mounttable.$mount.link./t" -> local)
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try {
+      val root = "/t/authpin"
+      GraftCatalog.commitSnapshot(
+        spark.range(1000).select(col("id"), (col("id") % 7).as("grp"),
+          (col("id") * 10).as("amount")).repartitionByRange(4, col("id")),
+        root, append = false)
+      val files = dataFiles(root)
+      assert(files.size == 4)
+      def carried() = dataFiles(root).count(files.contains)
+      GraftCatalog.deleteSnapshotWhere(spark, root, col("id") === 42L)
+      assert(carried() == 3, "DELETE rewrites exactly the file holding id 42")
+      GraftCatalog.updateSnapshotWhere(spark, root, col("id") === 43L,
+        Seq("amount" -> lit(0L)))
+      GraftCatalog.mergeSnapshotKeys(spark, root,
+        Seq((44L, 2L, 7L)).toDF("id", "grp", "amount"), Seq("id"))
+      assert(carried() == 3, "UPDATE and MERGE rewrite only that file again")
+      val t = GraftCatalog.readSnapshot(spark, root)
+      assert(t.count() == 999)
+      assert(t.where(col("id").isin(42L, 43L, 44L)).orderBy("id")
+        .select("amount").as[Long].collect().toSeq == Seq(0L, 7L))
+    } finally confs.foreach { case (k, _) => spark.conf.unset(k) }
+  }
 }

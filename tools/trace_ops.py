@@ -3,6 +3,7 @@
 
 usage: python3 tools/trace_ops.py RECORD.json
        python3 tools/trace_ops.py BEFORE.json AFTER.json
+       python3 tools/trace_ops.py --jobs RECORD.json
 
 RECORD.json is a run record written by `perfbench/run.py --trace 1`
 (`.bench_build/perfbench/records/<workload>-s<seed>-t1.json`). The tool
@@ -26,6 +27,18 @@ run of the same workload and seed) it prints one row per op with both
 runs side by side: jobs, wall_ms and untraced_ms before and after, and
 the change in jobs. A last row gives the totals over the traced pass
 (for table_churn, one cycle).
+
+With --jobs it prints, for each op, one row per Spark job the op
+started, in start order:
+
+  job         the job id
+  wall_ms     the job's span
+  gap_ms      the driver gap before it (from the op's start or the end
+              of the jobs before it)
+  stages      the job's stage ids
+  tasks       each stage's task count, in the same order (0: the stage
+              was skipped, its output reused)
+  shuffle_b   bytes the job's stages wrote to shuffle
 """
 import json
 import sys
@@ -49,6 +62,42 @@ def job_gaps(lo, jobs):
             busy += end - max(start, cursor)
             cursor = end
     return gaps, busy
+
+
+def job_rows(rec):
+    """(op name, op wall ms, one dict per job of the op) per traced op."""
+    tr = rec["trace"]
+    stages = {s["id"]: s for s in tr["stages"]}
+    out = []
+    for o in sorted((s for s in tr["spans"] if s["name"] == "op"), key=lambda s: s["start"]):
+        lo, hi = o["start"], o["end"]
+        js = sorted((j for j in tr["jobs"] if j["op"] == o["op"] and lo <= j["start"] <= hi),
+                    key=lambda j: j["start"])
+        gaps, _ = job_gaps(lo, js)
+        out.append((o["op"], hi - lo, [{
+            "job": j["id"],
+            "wall_ms": j["end"] - j["start"],
+            "gap_ms": g,
+            "stages": j["stages"],
+            "tasks": [stages[s]["tasks"] if s in stages else 0 for s in j["stages"]],
+            "shuffle_b": sum(stages[s]["shuffle_write"] for s in j["stages"] if s in stages),
+        } for j, g in zip(js, gaps)]))
+    return out
+
+
+def jobs_table(ops):
+    """Text lines: per op a heading, then its jobs as aligned rows."""
+    lines = []
+    for op, wall, js in ops:
+        lines.append(f"{op}  wall_ms={wall:.0f}  jobs={len(js)}")
+        cells = [["  job", "wall_ms", "gap_ms", "stages", "tasks", "shuffle_b"]]
+        for j in js:
+            cells.append([f"  {j['job']}", fmt(j["wall_ms"]), fmt(j["gap_ms"]),
+                          ",".join(str(s) for s in j["stages"]) or "-",
+                          ",".join(str(t) for t in j["tasks"]) or "-", str(j["shuffle_b"])])
+        widths = [max(len(c[i]) for c in cells) for i in range(len(cells[0]))]
+        lines += ["  ".join(c.ljust(w) for c, w in zip(l, widths)).rstrip() for l in cells]
+    return lines
 
 
 def rows(rec):
@@ -136,7 +185,11 @@ def compare(before, after):
 
 
 def main(argv):
-    if len(argv) not in (2, 3):
+    if len(argv) == 3 and argv[1] == "--jobs":
+        with open(argv[2]) as f:
+            print("\n".join(jobs_table(job_rows(json.load(f)))))
+        return
+    if len(argv) not in (2, 3) or "--jobs" in argv:
         sys.exit(__doc__)
     recs = []
     for path in argv[1:]:
