@@ -2158,7 +2158,7 @@ object GraftCatalog {
         }
         val racerDvNew = (headDvEq -- baseDvEq).toSeq
         if (racerDeletesOutOfScope && racerDvNew.nonEmpty &&
-            deleteLineTargets(spark, r, racerDvNew).exists(mayMatch(_, scope)))
+            deleteLineTargets(spark, r, racerDvNew, headFiles).exists(mayMatch(_, scope)))
           throw original
         if (racerNew.exists(mayMatch(_, scope))) throw original
       }
@@ -2195,7 +2195,7 @@ object GraftCatalog {
       r: org.apache.hadoop.fs.Path, lines: Seq[String],
       consumed: Set[String]): Boolean =
     lines.exists(l =>
-      deleteLineTargets(spark, r, Seq(l)).exists(consumed.contains))
+      deleteLineTargets(spark, r, Seq(l), consumed).exists(consumed.contains))
 
   /** EXACTLY-ONCE streaming commit: append `df` as the next version
     * tagged with its micro-batch id — and refuse to commit a batch id
@@ -2328,26 +2328,30 @@ object GraftCatalog {
       val removed = (prev -- cur).toSeq.sorted
       prev = cur
       // A merge-on-read delete changes NO files — its delta is the new
-      // `#dv:` sidecars. The deleted ROWS come from joining the (still
-      // present) data files against the fresh (path, pos) pairs on the
-      // scan's own metadata columns; the read opens only the files the
-      // DV actually references, so cost ∝ touched files, like the
-      // file-level stream everywhere else.
+      // `#dv:` sidecars. The deleted ROWS are the ones the fresh DVs'
+      // set keeps ([[DvSet]]) of the (still present) data files they
+      // reference ([[DvSet.deletedRows]], off the same load), matched on
+      // the scan's own metadata columns; the read opens only those
+      // files, so cost ∝ touched files, like the file-level stream
+      // everywhere else. When `v` records its schema the files read
+      // under it, so a probed DV plans with no Spark job; a column a
+      // file holds beyond its commit then reads only in the other
+      // parts, which merge footers.
       val curDv = readDvNames(fs, r, v).toSet
       val freshDv = (curDv -- prevDv).toSeq.sorted
       val priorDv = prevDv.toSeq.sorted
       prevDv = curDv
       val dvDel =
         if (freshDv.isEmpty || isFold) None
-        else dvDf(spark, r, freshDv).map { dv =>
-          val touched = dv.select("__path").distinct()
-            .collect().map(_.getString(0)).sorted
-          spark.read.option("mergeSchema", "true").parquet(touched: _*)
-            .withColumn("__path", dvPathKey(col("_metadata.file_path")))
-            .withColumn("__pos", col("_metadata.row_index"))
-            .join(dv, Seq("__path", "__pos"), "left_semi")
-            .drop("__path", "__pos")
-            .withColumn("_change", lit("delete")).withColumn("_version", lit(v))
+        else {
+          val dv = new DvSet(spark, r, freshDv)
+          val touched = dv.deletedRows(cur).keys.toSeq.sorted
+          val vSchema = readSchemaLine(fs, r, v)
+          if (touched.isEmpty) None
+          else Some(dv.keep(
+              if (vSchema.isEmpty) spark.read.option("mergeSchema", "true").parquet(touched: _*)
+              else scanPhysical(spark, touched, vSchema))
+            .withColumn("_change", lit("delete")).withColumn("_version", lit(v)))
         }
       // An EQUALITY delete also changes no files: emit the covered
       // files' rows matching the fresh key sets — LIVE at the previous
@@ -2365,7 +2369,7 @@ object GraftCatalog {
           val live = liveRows(spark, r,
             spark.read.option("mergeSchema", "true").parquet(covered: _*),
             covered, priorDv, priorEq, None, withPos = true)
-          Some(eqDeleted(spark, r, name, physPks, covered, live)
+          Some(eqDeleteSet(spark, r, name, physPks, covered, live, "__path").keep(live)
             .drop("__path", "__pos")
             .withColumn("_change", lit("delete")).withColumn("_version", lit(v)))
         }
@@ -2450,7 +2454,7 @@ object GraftCatalog {
     *     not the whole table); with stats present, files whose
     *     envelope holds no key are never opened.
     *  2. PIN exactly — the candidates' live rows are probed against
-    *     the update keys, loaded once on the driver ([[loadKeyFeed]]),
+    *     the update keys, loaded once on the driver ([[feedSet]]),
     *     so only files that TRULY contain a live matched key are
     *     rewritten; range-overlapping but unmatched candidates are
     *     carried untouched.
@@ -2487,9 +2491,10 @@ object GraftCatalog {
     val files = readManifest(fs, r, head)
     // The distinct key tuples drive nomination, the pin, the survivors
     // and the empty-feed early-out. One job loads them onto the driver
-    // and the pin and survivors probe them ([[loadKeyFeed]]); a feed
-    // past the bound persists them as a frame those steps join instead.
-    val keys = loadKeyFeed(spark, updates, pks, readSchemaLine(fs, r, head))
+    // and the pin and survivors probe them ([[feedSet]]); a feed past
+    // the bound persists them as a frame those steps join instead.
+    val keys = feedSet(spark, updates, pks,
+      probeableKeys(updates, pks, readSchemaLine(fs, r, head)))
     try {
       if (keys.isEmpty) return head
       validateChecks(spark, root, updates)
@@ -2591,46 +2596,19 @@ object GraftCatalog {
     // The resolved batch (post last-wins reduction) persists, and its
     // (key tuple, op tag) pairs feed every planning consumer: the
     // distinct key tuples (nomination, pinning, the survivors), the
-    // per-key cardinality rule and the op-tag validation. Up to the
-    // bound one job loads the pairs with their counts onto the driver
-    // ([[loadTuples]]) and both rules run there; past it (or when a key
-    // type differs from the table's) one grouped key frame persists,
-    // and one tiny combined job checks it (explode over per-key
-    // op-sets, map-side combined — never a per-key collect).
+    // per-key cardinality rule and the op-tag validation, all read off
+    // one feed set ([[feedSet]]) and its tally — loaded on the driver
+    // up to the bound, else one grouped key frame and one tiny combined
+    // job (never a per-key collect).
     val pinned = resolved
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      val opTag = coalesce(col(opCol), lit("NULL"))
-      val keyTypes = pinned.select(pks.map(col): _*).schema.map(_.dataType)
-      val loaded =
-        if (!probeableKeys(pinned, pks, readSchemaLine(fs, r, head))) None
-        else loadTuples(pinned.select(pks.map(col) :+ opTag: _*),
-          keyFeedMaxTuples(spark))
-      // (key feed, most events on one key, op tags)
-      val (keys, most, ops): (KeyFeed, Long, Set[String]) = loaded match {
-        case Some(pairs) =>
-          if (pairs.isEmpty) return head
-          val perKey = pairs.toSeq.groupMapReduce[KeyTuple, Long] {
-            case (t, _) => new KeyTuple(t.values.take(pks.size))
-          }(_._2)(_ + _)
-          (new LoadedKeys(spark, pks, keyTypes, perKey.keys), perKey.values.max,
-            pairs.keys.map(_.getUTF8String(pks.size).toString).toSet)
-        case None =>
-          val km = pinned.groupBy(pks.map(col): _*).agg(
-            count(lit(1)).as("__n"), collect_set(opTag).as("__ops"))
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          val chk = km
-            .select(col("__n"), explode(col("__ops")).as("__op"))
-            .groupBy().agg(max(col("__n")).as("mx"),
-              collect_set(col("__op")).as("ops"))
-            .collect()
-          // a global agg yields ONE row even over an empty frame — a null
-          // max is the empty-batch signal
-          if (chk.isEmpty || chk(0).isNullAt(0)) { km.unpersist(); return head }
-          (new JoinedKeys(pks, km.select(pks.map(col): _*), km, empty = false),
-            chk(0).getLong(0), chk(0).getSeq[String](1).toSet)
-      }
+      val keys = feedSet(spark, pinned, pks,
+        probeableKeys(pinned, pks, readSchemaLine(fs, r, head)),
+        tag = Some(coalesce(col(opCol), lit("NULL"))))
       try {
+        if (keys.isEmpty) return head
+        val (most, ops) = keys.tally
         if (seqCol.isEmpty) require(most <= 1,
           s"CDC batch carries multiple events for one ${pks.mkString(",")} — " +
             "pass seqCol for last-wins resolution or pre-compact the batch")
@@ -2754,138 +2732,28 @@ object GraftCatalog {
     * with exactly (__path string), so both read with that fixed schema
     * — on the driver ([[sidecarRows]]) or as a frame ([[readSidecar]])
     * — and plan with no inference job. Equality-delete `keys` read as
-    * the scan's current key types ([[eqKeyIndex]]); only the join
-    * regime ([[eqKeysFrame]]) infers them. */
+    * the key types of the scan they filter ([[eqDeleteSet]]). */
   private val dvSchema = org.apache.spark.sql.types.StructType(Seq(
     org.apache.spark.sql.types.StructField("__path", org.apache.spark.sql.types.StringType),
     org.apache.spark.sql.types.StructField("__pos", org.apache.spark.sql.types.LongType)))
   private val coverSchema = org.apache.spark.sql.types.StructType(dvSchema.take(1))
 
-  /** Sidecars as a Spark frame: the join regime, CDC's DV rows and the
-    * conflict path's target reads. Every other read, the post-write
-    * emptiness checks included, goes through [[sidecarRows]] with no
-    * job. */
+  /** Sidecars as a Spark frame: a [[Joined]] set, the DV counts past
+    * the bound and the conflict path's target reads. Every other
+    * read, the post-write emptiness checks included, goes through
+    * [[sidecarRows]] with no job. */
   private def readSidecar(spark: SparkSession,
       schema: org.apache.spark.sql.types.StructType, paths: String*): DataFrame =
     spark.read.schema(schema).parquet(paths: _*)
 
-  /** An equality-delete sidecar's `cover` list: the data files its
-    * keys apply to. */
-  private def eqCover(spark: SparkSession, root: org.apache.hadoop.fs.Path,
-      name: String): DataFrame =
-    readSidecar(spark, coverSchema, new org.apache.hadoop.fs.Path(
-      new org.apache.hadoop.fs.Path(deletesDir(root), name), "cover").toString)
+  /** The path of a version's DV sidecar `name`. */
+  private def dvSidecar(root: org.apache.hadoop.fs.Path, name: String) =
+    new org.apache.hadoop.fs.Path(deletesDir(root), name)
 
-  /** The union of a version's DV sidecars as (__path, __pos), or None
-    * when the version carries no deletion vectors. */
-  private def dvDf(spark: SparkSession, root: org.apache.hadoop.fs.Path,
-      names: Seq[String]): Option[DataFrame] =
-    if (names.isEmpty) None
-    else Some(readSidecar(spark, dvSchema,
-      names.map(n => new org.apache.hadoop.fs.Path(deletesDir(root), n).toString): _*))
-
-  /** Rows bound for what graft loads onto the driver and broadcasts:
-    * DV positions and the key tuples of each equality-delete sidecar.
-    * 4M rows ≈ tens of MB on the driver/executors — far beyond any sane
-    * between-compaction sidecar, far below driver danger. Tunable per
-    * session (`spark.graft.dv.broadcastMaxPositions`); 0 forces the
-    * joins (test hook), the key feeds' included ([[keyFeedMaxTuples]]). */
-  private def dvBroadcastMaxPositions(spark: SparkSession): Long =
-    spark.conf.getOption("spark.graft.dv.broadcastMaxPositions")
-      .map(_.toLong).getOrElse(4_000_000L)
-
-  /** Distinct tuples bound for a key-scoped verb's feed on the driver
-    * ([[loadTuples]]): [[dvBroadcastMaxPositions]], capped at 10,000,
-    * the largest feed measured to gain from the probe. A MERGE whose
-    * keys spread over a 2M-row, 8-file table (4 cores, median of 3)
-    * took 1.60 s probed against 1.83 s joined at 10^4 keys; the two
-    * were within noise at 2·10^4 and 5·10^4, and the probe lost at 10^5
-    * (2.40 s against 1.80 s) and 10^6 (11.7 s against 3.8 s): every
-    * scanned row hashes a boxed tuple into a driver-built set, where
-    * the join's broadcast hash relation probes unboxed. */
-  private def keyFeedMaxTuples(spark: SparkSession): Long =
-    math.min(dvBroadcastMaxPositions(spark), 10_000L)
-
-  /** Rows of graft-written delete sidecars (parquet directories or
-    * files) read as `schema` on the driver, with no Spark job
-    * ([[org.apache.spark.sql.GraftLocalParquet]]: a scan's own reader,
-    * so a key sidecar written before a type widening reads widened), or
-    * None when they hold more than `bound` rows — the read stops one
-    * row past it. */
-  private def sidecarRows(spark: SparkSession, root: org.apache.hadoop.fs.Path,
-      schema: org.apache.spark.sql.types.StructType,
-      paths: Seq[org.apache.hadoop.fs.Path], bound: Long = Long.MaxValue)
-      : Option[Array[org.apache.spark.sql.catalyst.InternalRow]] = {
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    val files = paths.flatMap(p => fs.listStatus(p)).filterNot { st =>
-      val n = st.getPath.getName
-      n.startsWith("_") || n.startsWith(".")
-    }
-    val rows = org.apache.spark.sql.GraftLocalParquet.read(spark, schema, files,
-      if (bound >= Int.MaxValue) Int.MaxValue else (bound + 1).toInt)
-    if (rows.length > bound) None else Some(rows)
-  }
-
-  /** The DV loader every reader shares: a version's DV sidecars as
-    * `path → sorted positions`, or None above the bound. */
-  private def dvPositions(spark: SparkSession, root: org.apache.hadoop.fs.Path,
-      names: Seq[String]): Option[Map[String, Array[Long]]] =
-    sidecarRows(spark, root, dvSchema,
-      names.map(n => new org.apache.hadoop.fs.Path(deletesDir(root), n)),
-      dvBroadcastMaxPositions(spark))
-      .map(_.groupBy(_.getUTF8String(0).toString).map {
-        case (p, rows) => p -> rows.map(_.getLong(1)).sorted
-      })
-
-  /** Filter a files-scan DataFrame through the deletion vectors
-    * `names`. Zero plan change without DVs. With DVs, TWO regimes:
-    *
-    *  - up to [[dvBroadcastMaxPositions]] deleted positions (the
-    *    overwhelmingly common state between compactions): the DV loads
-    *    ONCE on the driver ([[dvPositions]], no Spark job) as
-    *    `path → sorted positions`, broadcasts, and the scan filters
-    *    through the codegen'd [[graft.functions.DvHit]] probe — NO
-    *    exchange in the plan at any scan size, the per-file
-    *    application shape Iceberg readers use, expressed at plan level;
-    *  - beyond it (a pathological DV right before compaction, too big
-    *    to pin on the driver): anti-join on the scan's (file_path,
-    *    row_index) metadata columns — correct at any size, and AQE
-    *    still broadcasts when the runtime size allows.
-    *
-    * Both bind to the scan's own `_metadata` columns, so `df` must
-    * still resolve them ([[liveRows]] applies this first). Join-key
-    * columns are generated OUTSIDE the table's own column space. */
-  private def applyDvNames(spark: SparkSession,
-      root: org.apache.hadoop.fs.Path, names: Seq[String],
-      df: DataFrame): DataFrame =
-    if (names.isEmpty) df
-    else dvPositions(spark, root, names) match {
-      case Some(byPath) =>
-        val byFile = new java.util.HashMap[
-          org.apache.spark.unsafe.types.UTF8String, Array[Long]]()
-        byPath.foreach { case (p, pos) =>
-          byFile.put(org.apache.spark.unsafe.types.UTF8String.fromString(p), pos)
-        }
-        val bc = spark.sparkContext.broadcast(byFile)
-        val hit = graft.functions.DvHit(
-          org.apache.spark.sql.GraftColumnBridge.expression(
-            dvPathKey(col("_metadata.file_path"))),
-          org.apache.spark.sql.GraftColumnBridge.expression(
-            col("_metadata.row_index")),
-          bc)
-        df.where(!org.apache.spark.sql.GraftColumnBridge.column(hit))
-      case None =>
-        val cols = df.columns.toSeq
-        val known = cols.toSet
-        val pCol = Iterator.from(0).map(i => s"__dvp$i").find(!known(_)).get
-        val xCol = Iterator.from(0).map(i => s"__dvx$i").find(!known(_)).get
-        df.withColumn(pCol, dvPathKey(col("_metadata.file_path")))
-          .withColumn(xCol, col("_metadata.row_index"))
-          .join(dvDf(spark, root, names).get
-            .select(col("__path").as(pCol), col("__pos").as(xCol)),
-            Seq(pCol, xCol), "left_anti")
-          .select(cols.map(col): _*)
-    }
+  /** The path of `part` (`keys` or `cover`) of the equality-delete
+    * sidecar `name`. */
+  private def eqSidecar(root: org.apache.hadoop.fs.Path, name: String, part: String) =
+    new org.apache.hadoop.fs.Path(new org.apache.hadoop.fs.Path(deletesDir(root), name), part)
 
   // ---------------------------------------------------------------------
   // EQUALITY DELETES (Iceberg v2 equality-delete files): "delete
@@ -2896,11 +2764,11 @@ object GraftCatalog {
   // the columns' PHYSICAL storage names — rename-proof) plus the
   // COVERED file list (the files present at publish): a later append
   // re-inserting a deleted key survives — the Iceberg sequence-number
-  // scoping, expressed manifest-side. Readers anti-join covered
-  // files' rows against the key set; CoW rewrites read eq-aware so
-  // deleted rows never resurrect; compaction folds sidecars away (an
-  // overwrite commit carries no #eqdel: lines); vacuum keeps
-  // referenced sidecars, reaps orphans.
+  // scoping, expressed manifest-side. Readers drop covered files'
+  // rows whose key tuple the sidecar holds ([[eqDeleteSet]]); CoW
+  // rewrites read eq-aware so deleted rows never resurrect; compaction
+  // folds sidecars away (an overwrite commit carries no #eqdel: lines);
+  // vacuum keeps referenced sidecars, reaps orphans.
   // ---------------------------------------------------------------------
 
   /** Parse one `#eqdel:` suffix: `<name>:<physPk1,physPk2,…>`. */
@@ -2909,128 +2777,47 @@ object GraftCatalog {
     (l.substring(0, i), l.substring(i + 1).split(',').toSeq)
   }
 
-  /** An equality-delete sidecar's covered data files, read on the
-    * driver (the list is manifest-sized). */
+  /** An equality-delete sidecar's covered data files (manifest paths),
+    * read on the driver (the list is manifest-sized). */
   private def eqCoverPaths(spark: SparkSession,
       root: org.apache.hadoop.fs.Path, name: String): Array[String] =
-    sidecarRows(spark, root, coverSchema, Seq(new org.apache.hadoop.fs.Path(
-      new org.apache.hadoop.fs.Path(deletesDir(root), name), "cover")))
+    sidecarRows(spark, root, coverSchema, Seq(eqSidecar(root, name, "cover")))
       .get.map(_.getUTF8String(0).toString)
-
-  /** The key loader every reader shares: one equality-delete sidecar's
-    * key tuples, read as `keySchema` — the scan's CURRENT key types,
-    * which parquet widens a sidecar written before a type widening to,
-    * exactly as it widens the data files — and indexed over `covered`;
-    * or None when the sidecar holds more than [[dvBroadcastMaxPositions]]
-    * keys. */
-  private def eqKeyIndex(spark: SparkSession, root: org.apache.hadoop.fs.Path,
-      name: String, keySchema: org.apache.spark.sql.types.StructType,
-      covered: Iterable[String]): Option[graft.functions.EqDeleteIndex] =
-    sidecarRows(spark, root, keySchema, Seq(new org.apache.hadoop.fs.Path(
-      new org.apache.hadoop.fs.Path(deletesDir(root), name), "keys")),
-      dvBroadcastMaxPositions(spark))
-      .map(rows => new graft.functions.EqDeleteIndex(covered,
-        rows.map(_.toSeq(keySchema).toArray)))
-
-  /** An equality-delete sidecar's keys as a frame (types inferred): the
-    * join regime. */
-  private def eqKeysFrame(spark: SparkSession, root: org.apache.hadoop.fs.Path,
-      name: String): DataFrame =
-    spark.read.parquet(new org.apache.hadoop.fs.Path(
-      new org.apache.hadoop.fs.Path(deletesDir(root), name), "keys").toString)
-
-  /** `df`'s types of the key columns `physPks`: what [[eqKeyIndex]]
-    * reads a sidecar's keys as. */
-  private def keySchemaOf(df: DataFrame,
-      physPks: Seq[String]): org.apache.spark.sql.types.StructType =
-    org.apache.spark.sql.types.StructType(
-      physPks.zip(df.select(physPks.map(col): _*).schema.fields).map {
-        case (p, f) => f.copy(name = p)
-      })
-
-  /** The broadcast [[graft.functions.EqDeleteHit]] probe of `index`
-    * over `cols`: a file-path column, then the key columns. */
-  private def eqHit(spark: SparkSession, index: graft.functions.EqDeleteIndex,
-      cols: Seq[Column]): Column =
-    org.apache.spark.sql.GraftColumnBridge.column(graft.functions.EqDeleteHit(
-      cols.map(org.apache.spark.sql.GraftColumnBridge.expression),
-      spark.sparkContext.broadcast(index)))
-
-  /** The rows of `live` — a `withPos` [[liveRows]] frame of `covered`
-    * under PHYSICAL names — whose key tuple the equality-delete sidecar
-    * `name` holds: what CDC streams as the sidecar's deletes and the
-    * eqdel→DV fold positions. Up to [[dvBroadcastMaxPositions]] keys
-    * through the [[eqKeyIndex]] probe, beyond it a key semi-join. */
-  private def eqDeleted(spark: SparkSession, root: org.apache.hadoop.fs.Path,
-      name: String, physPks: Seq[String], covered: Seq[String],
-      live: DataFrame): DataFrame =
-    eqKeyIndex(spark, root, name, keySchemaOf(live, physPks), covered) match {
-      case Some(index) => live.where(eqHit(spark, index, ("__path" +: physPks).map(col)))
-      case None => live.join(eqKeysFrame(spark, root, name), physPks, "left_semi")
-    }
 
   /** Filter a files-scan frame (PHYSICAL column names) over `files`
     * through the version's equality-delete sidecars: a row drops iff
     * its key tuple appears in a sidecar whose covered set contains the
-    * row's file. NULL keys never match (standard equality-delete
-    * semantics). Zero plan change without sidecars, and a sidecar
-    * covering none of `files` adds nothing. Per sidecar, TWO regimes,
-    * on the same bound as the DVs:
-    *
-    *  - up to [[dvBroadcastMaxPositions]] keys: the keys
-    *    ([[eqKeyIndex]]) and the cover list load once on the driver,
-    *    the cover resolved against `files`, and the scan filters
-    *    through the broadcast [[graft.functions.EqDeleteHit]] probe —
-    *    no join, no exchange. The probe folds float/double `-0.0` to
-    *    `0.0` on both sides, as the join's key normalization does;
-    *  - beyond it: one key left-join + one covered-file left-join.
-    *
-    * `pathCol` names `df`'s dvPathKey-normalized file-path column,
-    * which [[liveRows]] captures on the raw scan (metadata columns do
-    * not propagate through the DV join regime); it stays in the
+    * row's file ([[eqDeleteSet]], probed or joined). Zero plan change
+    * without sidecars, and a sidecar covering none of `files` adds
+    * nothing. `pathCol` names `df`'s dvPathKey-normalized file-path
+    * column, which [[liveRows]] captures on the raw scan (metadata
+    * columns do not propagate through a DV join); it stays in the
     * output. */
   private def applyEqDeletes(spark: SparkSession,
       root: org.apache.hadoop.fs.Path, eqDels: Seq[String],
       df: DataFrame, files: Seq[String], pathCol: String): DataFrame = {
-    if (eqDels.isEmpty) return df
-    val outCols = df.columns.toSeq
-    var out = df
     val scanned = files.toSet
-    eqDels.zipWithIndex.foreach { case (l, i) =>
+    eqDels.foldLeft(df) { (out, l) =>
       val (name, physPks) = parseEqDel(l)
       val covered = eqCoverPaths(spark, root, name).filter(scanned)
-      if (covered.nonEmpty) {
-        eqKeyIndex(spark, root, name, keySchemaOf(out, physPks), covered) match {
-          case Some(index) =>
-            out = out.where(!eqHit(spark, index, (pathCol +: physPks).map(col)))
-          case None =>
-            val kf = s"__eqk$i"
-            val cf = s"__eqc$i"
-            out = out
-              .join(eqKeysFrame(spark, root, name).withColumn(kf, lit(1)), physPks, "left")
-              .join(eqCover(spark, root, name)
-                .select(col("__path").as(pathCol), lit(1).as(cf)),
-                Seq(pathCol), "left")
-              .where(col(kf).isNull || col(cf).isNull)
-              .drop(kf, cf)
-        }
-      }
+      if (covered.isEmpty) out
+      else eqDeleteSet(spark, root, name, physPks, covered, out, pathCol).drop(out)
     }
-    out.select(outCols.map(col): _*)
   }
 
   /** The live rows of `raw`, a scan of `files` under their PHYSICAL
     * names — the one delete chain every reader and verb applies: rows
-    * at the positions the `dvNames` sidecars hold drop
-    * ([[applyDvNames]]), then rows whose key tuple an `eqDels` sidecar
-    * deletes over their file ([[applyEqDeletes]]), then the columns
-    * take their logical names under `cs` (None keeps them physical).
-    * Callers pass the sidecar sets as data: a version's own, or (CDC,
-    * the eqdel fold) a prior or partial set. Metadata columns survive
-    * projections but not joins, so the file path is captured on the
-    * raw scan before either join regime runs; `withPos` keeps it, with
-    * the row position, as (__path, __pos) — the MoR verbs' DV keys and
-    * the file paths the pins gather ([[pinnedFiles]]). */
+    * at the positions the `dvNames` sidecars hold drop ([[DvSet]]), then
+    * rows whose key tuple an `eqDels` sidecar deletes over their file
+    * ([[applyEqDeletes]]), then the columns take their logical names
+    * under `cs` (None keeps them physical). Which regime each set takes
+    * is the [[KeySet]] module's decision. Callers pass the sidecar sets
+    * as data: a version's own, or (CDC, the eqdel fold) a prior or
+    * partial set. Metadata columns survive projections but not joins,
+    * so the file path is captured on the raw scan before either set
+    * applies; `withPos` keeps it, with the row position, as (__path,
+    * __pos) — the MoR verbs' DV keys and the scan keys the pins map
+    * back to manifest paths ([[pinnedFiles]]). */
   private def liveRows(spark: SparkSession, root: org.apache.hadoop.fs.Path,
       raw: DataFrame, files: Seq[String], dvNames: Seq[String],
       eqDels: Seq[String], cs: Option[org.apache.spark.sql.types.StructType],
@@ -3043,8 +2830,8 @@ object GraftCatalog {
         .withColumn("__pos", col("_metadata.row_index"))
       else if (eqDels.isEmpty) raw
       else raw.withColumn(pathCol, dvPathKey(col("_metadata.file_path")))
-    val live = applyEqDeletes(spark, root, eqDels,
-      applyDvNames(spark, root, dvNames, keyed), files, pathCol)
+    val positional = if (dvNames.isEmpty) keyed else new DvSet(spark, root, dvNames).drop(keyed)
+    val live = applyEqDeletes(spark, root, eqDels, positional, files, pathCol)
     val cleaned = if (withPos || eqDels.isEmpty) live else live.drop(pathCol)
     cs.fold(cleaned)(toLogicalDf(cleaned, _))
   }
@@ -3052,8 +2839,8 @@ object GraftCatalog {
   /** [[liveRows]] of specific data files at version `v`, logical names
     * — what every CoW rewrite reads its survivor/source rows through,
     * so a rewrite can never resurrect a deleted row, and (`withPos`)
-    * what the MoR verbs find their hit positions in and the CoW pins
-    * their files. */
+    * what the MoR verbs find their hit positions in, the CoW pins their
+    * files and the key verbs' feeds `keep` and `drop` rows of. */
   private def readLiveFiles(spark: SparkSession,
       fs: org.apache.hadoop.fs.FileSystem, root: org.apache.hadoop.fs.Path,
       v: Long, files: Seq[String], withPos: Boolean = false): DataFrame = {
@@ -3092,49 +2879,54 @@ object GraftCatalog {
     val physPks = pks.map(p => declaredField(p).map(physicalNameOf).getOrElse(p))
     val cast = keys.select(pks.map(c =>
       declared(c).fold(col(c))(t => col(c).cast(t)).as(c)): _*)
-    val name = s"eq-${writerToken()}"
-    val base = new org.apache.hadoop.fs.Path(deletesDir(r), name)
-    val keysDir = new org.apache.hadoop.fs.Path(base, "keys")
-    // No separate emptiness probe evaluates the feed; a feed with no
-    // non-NULL key publishes nothing. Up to [[keyFeedMaxTuples]] the cast
-    // feed's distinct tuples load onto the driver in one job, the NULL
-    // drop and the emptiness check run there, and the sidecar is written
-    // from them as one file: no shuffle, ~150 ms less per call than the
-    // frame's distinct in traced `table_churn` runs at the same job
-    // count. Past it the sidecar is written from the frame and checked
-    // on the driver (a read of at most one row, no job).
-    val keySchema = org.apache.spark.sql.types.StructType(
-      physPks.zip(cast.schema.fields).map { case (p, f) => f.copy(name = p) })
-    loadTuples(cast, keyFeedMaxTuples(spark)) match {
-      case Some(tuples) =>
-        val live = tuples.keys.filterNot(_.anyNull).toSeq
-        if (live.isEmpty) return head
-        localFrame(spark, keySchema, live).coalesce(1).write.parquet(keysDir.toString)
-      case None =>
-        cast.na.drop("any").distinct().toDF(physPks: _*).write.parquet(keysDir.toString)
-        if (sidecarRows(spark, r, keySchema, Seq(keysDir), bound = 0).isDefined) {
-          fs.delete(base, true)
-          return head
-        }
-    }
-    val sp = spark; import sp.implicits._
-    files.toDF("__path").coalesce(1).write
-      .parquet(new org.apache.hadoop.fs.Path(base, "cover").toString)
-    val carriedMeta = readManifestLines(fs, r, head).filter(l =>
-      l.startsWith("#stats:") || l.startsWith("#schema:") ||
-        l.startsWith("#dv:") || l.startsWith("#eqdel:"))
+    // The sidecar is the feed's distinct key tuples with no NULL
+    // component (NaN is a value, and matches NaN), the set [[feedSet]]
+    // builds: loaded on the driver in one job up to [[keyFeedMaxTuples]]
+    // and written from a local relation (no shuffle, ~150 ms less per
+    // call than a frame's distinct in traced `table_churn` runs at the
+    // same job count), the feed's distinct past it. No separate
+    // emptiness probe evaluates the feed: the NULL keys drop before the
+    // set is built, so a feed with no non-NULL key leaves it empty and
+    // publishes nothing, and any other writes a non-empty sidecar.
+    val feed = feedSet(spark, cast.where(pks.map(col(_).isNotNull).reduce(_ && _)),
+      pks, probe = true)
     try {
-      val next = head + 1
-      publishManifest(fs, r, next,
-        carriedMeta ++ (s"#eqdel:$name:${physPks.mkString(",")}" +: meta) ++
-          carriedDataRaw(fs, r, head))
-      next
-    } catch {
+      if (feed.isEmpty) return head
+      val name = s"eq-${writerToken()}"
+      feed.sidecar.toDF(physPks: _*).write.parquet(eqSidecar(r, name, "keys").toString)
+      val sp = spark; import sp.implicits._
+      files.toDF("__path").coalesce(1).write.parquet(eqSidecar(r, name, "cover").toString)
+      publishDeleteLine(fs, r, head, s"#eqdel:$name:${physPks.mkString(",")}", meta,
+        new org.apache.hadoop.fs.Path(deletesDir(r), name))
+    } finally feed.release()
+  }
+
+  /** Publish `head + 1` as `head`'s files and metadata lines
+    * ([[carriedMetaLines]]) plus the delete-sidecar line `line` and
+    * `meta`: the metadata-only commit of the MoR deletes, which rewrite
+    * no data file. A lost race deletes `sidecar`, the files `line`
+    * references, and rethrows — the shared serializable contract. */
+  private def publishDeleteLine(fs: org.apache.hadoop.fs.FileSystem,
+      r: org.apache.hadoop.fs.Path, head: Long, line: String, meta: Seq[String],
+      sidecar: org.apache.hadoop.fs.Path): Long = {
+    val next = head + 1
+    try publishManifest(fs, r, next,
+      carriedMetaLines(fs, r, head) ++ (line +: meta) ++ carriedDataRaw(fs, r, head))
+    catch {
       case e: SnapshotConflictException =>
-        fs.delete(base, true)
+        fs.delete(sidecar, true)
         throw e
     }
+    next
   }
+
+  /** The lines a commit that keeps version `v`'s files carries from it:
+    * the stats pointer, the committed schema and the delete sidecars. */
+  private def carriedMetaLines(fs: org.apache.hadoop.fs.FileSystem,
+      r: org.apache.hadoop.fs.Path, v: Long): Seq[String] =
+    readManifestLines(fs, r, v).filter(l =>
+      l.startsWith("#stats:") || l.startsWith("#schema:") ||
+        l.startsWith("#dv:") || l.startsWith("#eqdel:"))
 
   /** EXACTLY-ONCE streaming equality delete — [[deleteSnapshotKeysMor]]
     * under the batch-id replay guard shared by every verb wrapper: a
@@ -3230,19 +3022,23 @@ object GraftCatalog {
     }
 
   /** Every data-file path a set of `#dv:`/`#eqdel:` lines still
-    * references — DV `__path` values, eqdel cover sets. Metadata-sized
-    * reads (sidecars are deleted-rows-sized by construction), used
-    * only on the transaction conflict path. */
+    * references — eqdel cover sets, and DV `__path` values mapped back
+    * from the scan keys they hold to the manifest paths of `files`
+    * ([[scanKeys]]; a key of no file in `files` passes as is).
+    * Metadata-sized reads (sidecars are deleted-rows-sized by
+    * construction), used only on the transaction conflict path. */
   private def deleteLineTargets(spark: SparkSession,
-      r: org.apache.hadoop.fs.Path, lines: Seq[String]): Set[String] =
+      r: org.apache.hadoop.fs.Path, lines: Seq[String],
+      files: Iterable[String]): Set[String] = {
+    lazy val byKey = scanKeys(spark, files)
     lines.flatMap { l =>
-      val pathsDf =
-        if (l.startsWith("#dv:")) readSidecar(spark, dvSchema,
-          new org.apache.hadoop.fs.Path(deletesDir(r), l.stripPrefix("#dv:")).toString)
-        else eqCover(spark, r, parseEqDel(l.stripPrefix("#eqdel:"))._1)
-      pathsDf.select(col("__path")).distinct().collect()
-        .map(_.getString(0))
+      if (l.startsWith("#dv:"))
+        readSidecar(spark, dvSchema, dvSidecar(r, l.stripPrefix("#dv:")).toString)
+          .select(col("__path")).distinct().collect()
+          .map { row => val k = row.getString(0); byKey.getOrElse(k, k) }
+      else eqCoverPaths(spark, r, parseEqDel(l.stripPrefix("#eqdel:"))._1).toSeq
     }.toSet
+  }
 
   /** MERGE-ON-READ row-level DELETE: same statement semantics as
     * [[deleteSnapshotWhere]] (rows where `pred` is TRUE go; FALSE and
@@ -3283,20 +3079,7 @@ object GraftCatalog {
       case Some(n) => n
       case None => return head // nothing live matched: a no-op
     }
-    val dvPath = new org.apache.hadoop.fs.Path(deletesDir(r), name)
-    val carriedMeta = readManifestLines(fs, r, head).filter(l =>
-      l.startsWith("#stats:") || l.startsWith("#schema:") ||
-        l.startsWith("#dv:") || l.startsWith("#eqdel:"))
-    try {
-      val next = head + 1
-      publishManifest(fs, r, next,
-        carriedMeta ++ (s"#dv:$name" +: meta) ++ carriedDataRaw(fs, r, head))
-      next
-    } catch {
-      case e: SnapshotConflictException =>
-        fs.delete(dvPath, true)
-        throw e
-    }
+    publishDeleteLine(fs, r, head, s"#dv:$name", meta, dvSidecar(r, name))
   }
 
   /** MERGE-ON-READ row-level UPDATE: `UPDATE t SET … WHERE pred` as a
@@ -3400,10 +3183,12 @@ object GraftCatalog {
       // rows still live under the prior DVs, PHYSICAL names (keys are
       // stored physical, rename-proof): a row a prior DV deleted needs
       // no second position
-      else Some(eqDeleted(spark, r, name, physPks, covered,
-          liveRows(spark, r, scanPhysical(spark, covered, cs), covered,
-            priorDvNames, Seq.empty, None, withPos = true))
-        .select(col("__path"), col("__pos")))
+      else {
+        val live = liveRows(spark, r, scanPhysical(spark, covered, cs), covered,
+          priorDvNames, Seq.empty, None, withPos = true)
+        Some(eqDeleteSet(spark, r, name, physPks, covered, live, "__path").keep(live)
+          .select(col("__path"), col("__pos")))
+      }
     }
     val carriedMeta = lines.filter(l =>
       l.startsWith("#stats:") || l.startsWith("#schema:") || l.startsWith("#dv:"))
@@ -3434,11 +3219,11 @@ object GraftCatalog {
     val head = snapshotVersions(spark, root).last
     val files = readManifest(fs, r, head)
     val cs = readSchemaLine(fs, r, head)
-    // Same statement-scoped key feed as the CoW verbs ([[loadKeyFeed]]):
+    // Same statement-scoped key feed as the CoW verbs ([[feedSet]]):
     // the distinct tuples drive nomination, the DV's positions (the
     // candidates' live rows the feed keeps, written once) and the
     // empty-feed early-out.
-    val keys = loadKeyFeed(spark, updates, pks, cs)
+    val keys = feedSet(spark, updates, pks, probeableKeys(updates, pks, cs))
     try {
       if (keys.isEmpty) return head
       validateChecks(spark, root, updates)
@@ -3533,7 +3318,7 @@ object GraftCatalog {
     * candidates; files constrained on ≥1 column go through one
     * broadcast range-join of the |files|-sized envelope frame against
     * the key tuples (`keys` MUST already be distinct — every verb
-    * passes its [[KeyFeed]]'s frame, so re-deduplicating here would
+    * passes its [[Feed]]'s frame, so re-deduplicating here would
     * stack a second shuffle on the first for nothing).
     * Manifest order is preserved.
     *
@@ -3602,19 +3387,11 @@ object GraftCatalog {
     * job with no exchange: each partition's distinct `__path` values
     * (the raw scan's own `_metadata.file_path` in [[dvPathKey]] form,
     * which survives every delete-chain join), collected and mapped back
-    * to the candidates they were read from. That form keeps a path's
-    * authority (`s3a://b/t/f` reads `/b/t/f`) while the manifest drops
-    * it (`/t/f`), so each candidate is keyed by the path its scan reads,
-    * qualified as the scan qualifies it; a key no candidate yields
-    * fails the statement rather than pin nothing. */
+    * to the candidates they were read from ([[scanKeys]]); a key no
+    * candidate yields fails the statement rather than pin nothing. */
   private def pinnedFiles(spark: SparkSession, hits: DataFrame,
       candidates: Seq[String]): Set[String] = {
-    val conf = spark.sessionState.newHadoopConf()
-    val byKey = candidates.map { f =>
-      val p = new org.apache.hadoop.fs.Path(f)
-      p.getFileSystem(conf).makeQualified(p).toUri.toString
-        .replaceFirst(dvPathScheme, "/") -> f
-    }.toMap
+    val byKey = scanKeys(spark, candidates)
     val sp = spark; import sp.implicits._
     hits.select(col("__path")).as[String].mapPartitions(_.toSet.iterator)
       .collect().map(k => byKey.getOrElse(k, throw new IllegalStateException(
@@ -3627,7 +3404,7 @@ object GraftCatalog {
     * conjoined — the predicate [[republishPinnedRewrite]] uses to
     * prove a racing commit's new files hold no row this verb could
     * have touched. Evaluated only on the CONFLICT path (one agg over
-    * the key feed's frame, [[KeyFeed.frame]]). None when any bound is
+    * the key feed's frame, [[Feed.frame]]). None when any bound is
     * NULL (all-null key column — no provable scope, strict abort). */
   private def keyScopeEnvelope(keys: DataFrame, pks: Seq[String]): Option[Column] = {
     val aggs = pks.flatMap(c => Seq(min(col(c)), max(col(c))))
@@ -3659,7 +3436,7 @@ object GraftCatalog {
     * `keys` drops). */
   private def pinFilesByKeys(spark: SparkSession,
       fs: org.apache.hadoop.fs.FileSystem, r: org.apache.hadoop.fs.Path,
-      head: Long, files: Seq[String], keys: KeyFeed,
+      head: Long, files: Seq[String], keys: Feed,
       pks: Seq[String]): (Set[String], Seq[String], DataFrame) = {
     val cs = readSchemaLine(fs, r, head)
     val candidates = nominateFilesByKeys(spark, files,
@@ -3676,18 +3453,242 @@ object GraftCatalog {
   }
 
   // ---------------------------------------------------------------------
-  // KEY FEEDS. The key-scoped verbs (MERGE, CDC apply, MoR MERGE, the
-  // equality delete) scope their work by the distinct key tuples of a
-  // feed that is nearly always small next to the table. Like the delete
-  // sidecars, a feed has two regimes: up to [[keyFeedMaxTuples]]
-  // tuples one job loads it onto the driver and the verbs probe it
-  // through a broadcast [[graft.functions.EqDeleteIndex]] — the small
-  // side of a collect-left hash join, collected once, every partition of
-  // the big side probing it (the equality delete writes its sidecar from
-  // the loaded tuples); past the bound, or when a key column's feed type
-  // differs from its committed type, the verbs join a persisted distinct
-  // key frame.
+  // KEY SETS. Every row-level decision graft makes against a small side
+  // asks whether a row's key tuple sits in a set: a version's deletion
+  // vectors ((file, position) pairs, [[DvSet]]), one equality-delete
+  // sidecar (key tuples over the files it covers, [[eqDeleteSet]]) and a
+  // key-scoped verb's feed (MERGE, CDC apply, MoR MERGE and the
+  // equality delete, [[feedSet]]). Each constructor is the only code
+  // that loads its input and compares it with its bound, and so decides
+  // the set's regime: up to the bound it loads once on the driver and
+  // every partition of the scan probes it through a broadcast
+  // ([[graft.functions.DvHit]], [[graft.functions.EqDeleteHit]]) — the
+  // small side of a collect-left hash join, collected once; past it (or,
+  // for a feed, when a key column's type differs from its committed
+  // type) the scan joins a frame of it. Callers only `keep` and `drop`;
+  // a feed ([[Feed]]) also gives its tuples as a frame, its emptiness
+  // and its tally, and a DV set its deleted rows per file.
+  // Sidecars name data files by the path a scan reports (DV `__path`
+  // values) or by manifest path (a cover list); [[scanKeys]] is the one
+  // mapping between the two.
   // ---------------------------------------------------------------------
+
+  /** Rows bound for what graft loads onto the driver and broadcasts:
+    * DV positions and the key tuples of each equality-delete sidecar.
+    * 4M rows ≈ tens of MB on the driver/executors — far beyond any sane
+    * between-compaction sidecar, far below driver danger. Tunable per
+    * session (`spark.graft.dv.broadcastMaxPositions`); 0 forces the
+    * joins (test hook), the key feeds' included ([[keyFeedMaxTuples]]). */
+  private def dvBroadcastMaxPositions(spark: SparkSession): Long =
+    spark.conf.getOption("spark.graft.dv.broadcastMaxPositions")
+      .map(_.toLong).getOrElse(4_000_000L)
+
+  /** Distinct tuples bound for a key-scoped verb's feed on the driver
+    * ([[loadTuples]]): [[dvBroadcastMaxPositions]], capped at 10,000,
+    * the largest feed measured to gain from the probe. A MERGE whose
+    * keys spread over a 2M-row, 8-file table (4 cores, median of 3)
+    * took 1.60 s probed against 1.83 s joined at 10^4 keys; the two
+    * were within noise at 2·10^4 and 5·10^4, and the probe lost at 10^5
+    * (2.40 s against 1.80 s) and 10^6 (11.7 s against 3.8 s): every
+    * scanned row hashes a boxed tuple into a driver-built set, where
+    * the join's broadcast hash relation probes unboxed. */
+  private def keyFeedMaxTuples(spark: SparkSession): Long =
+    math.min(dvBroadcastMaxPositions(spark), 10_000L)
+
+  /** Rows of graft-written delete sidecars (parquet directories or
+    * files) read as `schema` on the driver, with no Spark job
+    * ([[org.apache.spark.sql.GraftLocalParquet]]: a scan's own reader,
+    * so a key sidecar written before a type widening reads widened), or
+    * None when they hold more than `bound` rows — the read stops one
+    * row past it. */
+  private def sidecarRows(spark: SparkSession, root: org.apache.hadoop.fs.Path,
+      schema: org.apache.spark.sql.types.StructType,
+      paths: Seq[org.apache.hadoop.fs.Path], bound: Long = Long.MaxValue)
+      : Option[Array[org.apache.spark.sql.catalyst.InternalRow]] = {
+    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
+    val files = paths.flatMap(p => fs.listStatus(p)).filterNot { st =>
+      val n = st.getPath.getName
+      n.startsWith("_") || n.startsWith(".")
+    }
+    val rows = org.apache.spark.sql.GraftLocalParquet.read(spark, schema, files,
+      if (bound >= Int.MaxValue) Int.MaxValue else (bound + 1).toInt)
+    if (rows.length > bound) None else Some(rows)
+  }
+
+  /** The manifest paths `files` keyed by the path a scan of each
+    * reports as `_metadata.file_path`, in [[dvPathKey]] form: the one
+    * mapping from a data file's manifest identity to its scan identity.
+    * A manifest path drops scheme and authority (`/t/f`) where the scan
+    * keeps the authority (`s3a://b/t/f` reads `/b/t/f`), so each path is
+    * qualified as the scan qualifies it. */
+  private def scanKeys(spark: SparkSession,
+      files: Iterable[String]): Map[String, String] = {
+    val conf = spark.sessionState.newHadoopConf()
+    files.iterator.map { f =>
+      val p = new org.apache.hadoop.fs.Path(f)
+      p.getFileSystem(conf).makeQualified(p).toUri.toString
+        .replaceFirst(dvPathScheme, "/") -> f
+    }.toMap
+  }
+
+  /** `byKey`, keyed by scan key, rekeyed by the manifest paths of
+    * `files` ([[scanKeys]]); a key of no file in `files` drops. */
+  private def byManifestPath[V](spark: SparkSession, files: Iterable[String],
+      byKey: Map[String, V]): Map[String, V] = {
+    val manifestOf = scanKeys(spark, files)
+    byKey.flatMap { case (k, v) => manifestOf.get(k).map(_ -> v) }
+  }
+
+  /** The DV loader every reader shares: a version's DV sidecars `names`
+    * as `scan key → sorted positions`, or None above the bound. */
+  private def dvPositions(spark: SparkSession, root: org.apache.hadoop.fs.Path,
+      names: Seq[String]): Option[Map[String, Array[Long]]] =
+    sidecarRows(spark, root, dvSchema, names.map(dvSidecar(root, _)),
+      dvBroadcastMaxPositions(spark))
+      .map(_.groupBy(_.getUTF8String(0).toString).map {
+        case (p, rows) => p -> rows.map(_.getLong(1)).sorted
+      })
+
+  /** The key loader every equality-delete reader shares: one sidecar's
+    * key tuples, read as `keySchema`, indexed over `covered` (scan
+    * keys); or None when the sidecar holds more than
+    * [[dvBroadcastMaxPositions]] keys. */
+  private def eqKeyIndex(spark: SparkSession, root: org.apache.hadoop.fs.Path,
+      name: String, keySchema: org.apache.spark.sql.types.StructType,
+      covered: Iterable[String]): Option[graft.functions.EqDeleteIndex] =
+    sidecarRows(spark, root, keySchema, Seq(eqSidecar(root, name, "keys")),
+      dvBroadcastMaxPositions(spark))
+      .map(rows => new graft.functions.EqDeleteIndex(covered,
+        rows.map(_.toSeq(keySchema).toArray)))
+
+  /** `df`'s types of the key columns `physPks`: what an equality-delete
+    * sidecar's keys read as. */
+  private def keySchemaOf(df: DataFrame,
+      physPks: Seq[String]): org.apache.spark.sql.types.StructType =
+    org.apache.spark.sql.types.StructType(
+      physPks.zip(df.select(physPks.map(col): _*).schema.fields).map {
+        case (p, f) => f.copy(name = p)
+      })
+
+  /** The broadcast [[graft.functions.EqDeleteHit]] probe of `index`
+    * over `cols`: a file-path column, then the key columns. */
+  private def eqHit(spark: SparkSession, index: graft.functions.EqDeleteIndex,
+      cols: Seq[Column]): Column =
+    org.apache.spark.sql.GraftColumnBridge.column(graft.functions.EqDeleteHit(
+      cols.map(org.apache.spark.sql.GraftColumnBridge.expression),
+      spark.sparkContext.broadcast(index)))
+
+  /** A set of key tuples a scan's rows are matched against, in the
+    * regime its constructor chose. */
+  private sealed trait KeySet {
+    /** `df`'s rows whose key tuple the set holds: the semi-join. */
+    def keep(df: DataFrame): DataFrame
+    /** `df`'s rows whose key tuple it does not hold: the anti-join. */
+    def drop(df: DataFrame): DataFrame
+  }
+
+  /** The driver regime: `hit`, built on first use, is the broadcast
+    * probe of a row. */
+  private final class Probed(hit: => Column) extends KeySet {
+    private lazy val probe = hit
+    def keep(df: DataFrame): DataFrame = df.where(probe)
+    def drop(df: DataFrame): DataFrame = df.where(!probe)
+  }
+
+  /** The join regime: a row's `on` columns match a row of `frame`, which
+    * has as many columns. */
+  private final class Joined(frame: DataFrame, on: Seq[Column]) extends KeySet {
+    private def join(df: DataFrame, how: String): DataFrame = {
+      val names = Iterator.from(0).map(i => s"__ks$i")
+        .filterNot(df.columns.toSet).take(on.size).toSeq
+      df.select(col("*") +: on.zip(names).map { case (c, n) => c.as(n) }: _*)
+        .join(frame.toDF(names: _*), names, how)
+        .drop(names: _*)
+    }
+    def keep(df: DataFrame): DataFrame = join(df, "left_semi")
+    def drop(df: DataFrame): DataFrame = join(df, "left_anti")
+  }
+
+  /** A version's deletion vectors `names` as a set of (file, row
+    * position) pairs, matched on the scan's own `_metadata` columns, so
+    * `keep` and `drop` need a frame that still resolves them
+    * ([[liveRows]] applies this first). Up to [[dvBroadcastMaxPositions]]
+    * positions (the overwhelmingly common state between compactions)
+    * the DV loads once as `file → sorted positions` ([[dvPositions]], no
+    * Spark job) and the scan filters through the codegen'd
+    * [[graft.functions.DvHit]] probe — no exchange in the plan at any
+    * scan size, the per-file application shape Iceberg readers use.
+    * Past it (a pathological DV right before compaction, too big to pin
+    * on the driver) a join on (file_path, row_index), correct at any
+    * size, which AQE still broadcasts when the runtime size allows.
+    * [[deletedRows]] counts the rows it deletes per file off the same
+    * load. */
+  private final class DvSet(spark: SparkSession, root: org.apache.hadoop.fs.Path,
+      names: Seq[String]) extends KeySet {
+    private lazy val positions = dvPositions(spark, root, names)
+    private def frame =
+      readSidecar(spark, dvSchema, names.map(dvSidecar(root, _).toString): _*)
+    private lazy val set: KeySet = {
+      val on = Seq(dvPathKey(col("_metadata.file_path")), col("_metadata.row_index"))
+      positions match {
+        case Some(byPath) =>
+          new Probed({
+            val byFile = new java.util.HashMap[
+              org.apache.spark.unsafe.types.UTF8String, Array[Long]]()
+            byPath.foreach { case (p, pos) =>
+              byFile.put(org.apache.spark.unsafe.types.UTF8String.fromString(p), pos)
+            }
+            org.apache.spark.sql.GraftColumnBridge.column(graft.functions.DvHit(
+              org.apache.spark.sql.GraftColumnBridge.expression(on(0)),
+              org.apache.spark.sql.GraftColumnBridge.expression(on(1)),
+              spark.sparkContext.broadcast(byFile)))
+          })
+        case None => new Joined(frame, on)
+      }
+    }
+    def keep(df: DataFrame): DataFrame = set.keep(df)
+    def drop(df: DataFrame): DataFrame = set.drop(df)
+
+    /** The rows the set deletes from each file of `files` (manifest
+      * paths; a file with none is absent): counted on the driver up to
+      * the bound, by one job past it. DESCRIBE's per-file and
+      * per-partition counts, and the files CDC reads a DV version's
+      * deleted rows from. */
+    def deletedRows(files: Iterable[String]): Map[String, Long] =
+      if (names.isEmpty) Map.empty
+      else byManifestPath(spark, files, positions match {
+        case Some(byKey) => byKey.map { case (k, pos) => k -> pos.length.toLong }
+        case None => frame.groupBy("__path").count().collect()
+          .map(row => row.getString(0) -> row.getLong(1)).toMap
+      })
+  }
+
+  /** One equality-delete sidecar `name`'s key tuples over the key
+    * columns `physPks` of `scan`, the frame it filters, scoped to the
+    * files it `covered` (manifest paths), which match `pathCol` — the
+    * scan's [[dvPathKey]] file path — through their [[scanKeys]]. The
+    * keys read as `scan`'s key types ([[keySchemaOf]]), which parquet
+    * widens a sidecar written before a type widening to, exactly as it
+    * widens the data files. Up to [[dvBroadcastMaxPositions]] keys they
+    * load on the driver and the scan filters through the broadcast
+    * [[graft.functions.EqDeleteHit]] probe — no join, no exchange; past
+    * it a join on the keys and on whether the row's file is covered.
+    * Either way a NULL key component never matches and float/double
+    * `-0.0` matches `0.0`. */
+  private def eqDeleteSet(spark: SparkSession, root: org.apache.hadoop.fs.Path,
+      name: String, physPks: Seq[String], covered: Seq[String], scan: DataFrame,
+      pathCol: String): KeySet = {
+    val keySchema = keySchemaOf(scan, physPks)
+    val keyCols = physPks.map(col)
+    val scope = scanKeys(spark, covered).keys
+    eqKeyIndex(spark, root, name, keySchema, scope) match {
+      case Some(index) => new Probed(eqHit(spark, index, col(pathCol) +: keyCols))
+      case None =>
+        new Joined(readSidecar(spark, keySchema, eqSidecar(root, name, "keys").toString)
+            .select(col("*"), lit(true)),
+          keyCols :+ col(pathCol).isInCollection(scope))
+    }
+  }
 
   /** A loaded feed row: Catalyst values, float and double zeros folded. */
   private type KeyTuple = org.apache.spark.sql.catalyst.expressions.GenericInternalRow
@@ -3746,70 +3747,73 @@ object GraftCatalog {
       org.apache.spark.sql.catalyst.plans.logical.LocalRelation(
         org.apache.spark.sql.catalyst.types.DataTypeUtils.toAttributes(schema), rows))
 
-  /** A key-scoped verb's distinct key tuples over `pks`, in either
-    * regime: what it nominates files by, keeps and drops rows by, and
-    * scopes a lost race by ([[keyScopeEnvelope]] of [[frame]]). */
-  private sealed trait KeyFeed {
-    /** The feed had no row (a row with a NULL key counts as one). */
-    def isEmpty: Boolean
-    /** The distinct tuples as a frame ([[nominateFilesByKeys]]' and
-      * [[keyScopeEnvelope]]'s input). */
-    def frame: DataFrame
-    /** `df`'s rows whose key tuple the feed holds: the semi-join. */
-    def keep(df: DataFrame): DataFrame
-    /** `df`'s rows whose key tuple it does not hold: the anti-join. */
-    def drop(df: DataFrame): DataFrame
-    def release(): Unit
-  }
-
-  /** The driver regime: the tuples, typed `types`, probed through one
-    * broadcast index. A tuple with a NULL component never matches, and
-    * float/double `-0.0` matches `0.0` and NaN matches NaN, as in the
-    * join. */
-  private final class LoadedKeys(spark: SparkSession, pks: Seq[String],
-      types: Seq[org.apache.spark.sql.types.DataType],
-      tuples: Iterable[KeyTuple])
-      extends KeyFeed {
-    def isEmpty: Boolean = tuples.isEmpty
-    lazy val frame: DataFrame = localFrame(spark,
-      org.apache.spark.sql.types.StructType(pks.zip(types).map { case (c, t) =>
-        org.apache.spark.sql.types.StructField(c, t)
-      }), tuples.toSeq)
-    private lazy val hit = eqHit(spark,
-      new graft.functions.EqDeleteIndex(Seq(""), tuples.map(_.values)),
-      lit("") +: pks.map(col))
-    def keep(df: DataFrame): DataFrame = df.where(hit)
-    def drop(df: DataFrame): DataFrame = df.where(!hit)
-    def release(): Unit = ()
-  }
-
-  /** The join regime: `frame` holds the distinct tuples, computed from
-    * `persisted`, which [[release]] unpersists. */
-  private final class JoinedKeys(pks: Seq[String], val frame: DataFrame,
-      persisted: DataFrame, empty: => Boolean) extends KeyFeed {
+  /** A key-scoped verb's feed ([[feedSet]]): its [[KeySet]] and what
+    * only a feed has. `frame` holds the distinct tuples: what a verb
+    * nominates files by ([[nominateFilesByKeys]]) and scopes a lost race
+    * by ([[keyScopeEnvelope]]). [[release]] unpersists `persisted`. */
+  private final class Feed(set: KeySet, val frame: DataFrame, written: => DataFrame,
+      empty: => Boolean, tallied: => (Long, Set[String]),
+      persisted: Option[DataFrame]) extends KeySet {
+    def keep(df: DataFrame): DataFrame = set.keep(df)
+    def drop(df: DataFrame): DataFrame = set.drop(df)
+    /** The feed holds no tuple (a row with a NULL key counts as one). */
     lazy val isEmpty: Boolean = empty
-    def keep(df: DataFrame): DataFrame = df.join(frame, pks, "left_semi")
-    def drop(df: DataFrame): DataFrame = df.join(frame, pks, "left_anti")
-    def release(): Unit = persisted.unpersist()
+    /** The most rows one tuple has, and the distinct tags. */
+    lazy val tally: (Long, Set[String]) = tallied
+    /** The tuples as the equality delete writes them: one partition
+      * when loaded, the feed's own distinct (parallel, not cached) past
+      * the bound. */
+    def sidecar: DataFrame = written
+    def release(): Unit = persisted.foreach(_.unpersist())
   }
 
-  /** The distinct `pks` tuples of `updates`, for the verbs that probe
-    * the table `cs` describes: loaded onto the driver when the key types
-    * are [[probeableKeys]] and the feed holds at most
-    * [[keyFeedMaxTuples]] tuples ([[loadTuples]]); otherwise
-    * persisted as a distinct frame. */
-  private def loadKeyFeed(spark: SparkSession, updates: DataFrame,
-      pks: Seq[String], cs: Option[org.apache.spark.sql.types.StructType]): KeyFeed = {
-    val keys = updates.select(pks.map(col): _*)
-    val probed = probeableKeys(keys, pks, cs)
-    (if (probed) loadTuples(keys, keyFeedMaxTuples(spark)) else None) match {
-      case Some(tuples) =>
-        new LoadedKeys(spark, pks, keys.schema.map(_.dataType), tuples.keys)
+  /** A key-scoped verb's feed as the set of its distinct `pks` tuples,
+    * with its tally: the most rows one tuple has and the distinct values
+    * of `tag` (CDC's op tags; none without one). With `probe` (the
+    * caller's [[probeableKeys]], or a feed only written out) one job
+    * loads the (tuple, tag) pairs onto the driver when there are at
+    * most [[keyFeedMaxTuples]] ([[loadTuples]]); the verbs then probe the
+    * tuples through a broadcast [[graft.functions.EqDeleteIndex]], where
+    * a tuple with a NULL component never matches, float/double `-0.0`
+    * matches `0.0` and NaN matches NaN, as in the join, and the tally
+    * costs nothing more. Otherwise the tuples persist as a grouped frame
+    * the verbs join, and the tally is one small job over it (never a
+    * per-key collect), which also answers `isEmpty` when no load ran. */
+  private def feedSet(spark: SparkSession, feed: DataFrame, pks: Seq[String],
+      probe: Boolean, tag: Option[Column] = None): Feed = {
+    val rows = feed.select(pks.map(col) ++ tag.map(_.as("__tag")): _*)
+    val schema = org.apache.spark.sql.types.StructType(rows.schema.fields.take(pks.size))
+    (if (probe) loadTuples(rows, keyFeedMaxTuples(spark)) else None) match {
+      case Some(loaded) =>
+        val perKey = loaded.toSeq.groupMapReduce[KeyTuple, Long] {
+          case (t, _) => new KeyTuple(t.values.take(pks.size))
+        }(_._2)(_ + _)
+        val tuples = perKey.keys
+        val frame = localFrame(spark, schema, tuples.toSeq)
+        new Feed(new Probed(eqHit(spark,
+            new graft.functions.EqDeleteIndex(Seq(""), tuples.map(_.values)),
+            lit("") +: pks.map(col))),
+          frame, frame.coalesce(1), tuples.isEmpty,
+          (perKey.values.max,
+            if (tag.isEmpty) Set.empty
+            else loaded.keys.map(_.getUTF8String(pks.size).toString).toSet),
+          None)
       case None =>
-        val d = keys.distinct()
+        val aggs = count(lit(1)).as("__n") +:
+          tag.toSeq.map(_ => collect_set(col("__tag")).as("__tags"))
+        val grouped = rows.groupBy(pks.map(col): _*).agg(aggs.head, aggs.tail: _*)
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        // a global agg yields ONE row even over an empty frame — a null
+        // max is the empty-feed signal
+        lazy val tally = grouped.select(col("__n"),
+            if (tag.isEmpty) lit(null).cast("string").as("__tag")
+            else explode(col("__tags")).as("__tag"))
+          .groupBy().agg(max(col("__n")), collect_set(col("__tag"))).head()
+        val frame = grouped.select(pks.map(col): _*)
         // a load that overflowed saw rows
-        new JoinedKeys(pks, d, d, !probed && d.isEmpty)
+        new Feed(new Joined(frame, pks.map(col)), frame,
+          rows.select(pks.map(col): _*).distinct(), !probe && tally.isNullAt(0),
+          (tally.getLong(0), tally.getSeq[String](1).toSet), Some(grouped))
     }
   }
 
@@ -4441,15 +4445,17 @@ object GraftCatalog {
     // Deletion vectors apply PER FILE inside each bucket's own reader
     // (each InputPartition ships only its files' position slices), so
     // a merge-on-read table keeps its shuffle-free join between
-    // compactions. The positions load once on the driver to slice; a
-    // pathological DV beyond the planning bound still demands a
-    // compaction first (the same loud contract the pre-DV SPJ had).
+    // compactions. The positions load once on the driver to slice,
+    // keyed by the manifest paths the groups use; a pathological DV
+    // beyond the planning bound still demands a compaction first (the
+    // same loud contract the pre-DV SPJ had).
     def overBound(what: String): Nothing = throw new IllegalArgumentException(
       s"SPJ read of $root v$v: more than ${dvBroadcastMaxPositions(spark)} " +
         s"$what exceed the planning bound - compact first " +
         "(spark.graft.dv.broadcastMaxPositions)")
+    val files = readManifest(fs, r, v)
     val dvByFile: Map[String, Array[Long]] =
-      dvPositions(spark, r, readDvNames(fs, r, v))
+      dvPositions(spark, r, readDvNames(fs, r, v)).map(byManifestPath(spark, files, _))
         .getOrElse(overBound("DV positions"))
     val specs = readPartitionSpecsAt(fs, r)
     require(specs.nonEmpty, s"SPJ read of $root: no partition spec")
@@ -4481,7 +4487,6 @@ object GraftCatalog {
           s"SPJ identity field $c: unsupported key type ${other.simpleString}")
       }
     }
-    val files = readManifest(fs, r, v)
     val stats = readStats(spark, root, v)
     val groups: Map[Seq[Any], Seq[(String, Long)]] = files.map { f =>
       val tuple = filePartitionTuple(f)
@@ -4551,10 +4556,7 @@ object GraftCatalog {
     val v = version.getOrElse(snapshotVersions(spark, root).last)
     val files = readManifest(fs, r, v)
     val stats = readStats(spark, root, v)
-    val dvCounts: Map[String, Long] =
-      dvDf(spark, r, readDvNames(fs, r, v)).fold(Map.empty[String, Long])(dv =>
-        dv.groupBy("__path").count().collect()
-          .map(row => row.getString(0) -> row.getLong(1)).toMap)
+    val dvCounts = new DvSet(spark, r, readDvNames(fs, r, v)).deletedRows(files)
     val rows = files.map { f =>
       val st = stats.get(f)
       val tuple = filePartitionTuple(f)
@@ -4711,10 +4713,7 @@ object GraftCatalog {
     // list, so data skipping, the committed schema, the deletion
     // vectors, AND the equality-delete sidecars survive the rollback —
     // a rollback must not resurrect keys the target version had purged.
-    val carriedMeta = readManifestLines(fs, r, to)
-      .filter(l => l.startsWith("#stats:") || l.startsWith("#schema:") ||
-        l.startsWith("#dv:") || l.startsWith("#eqdel:"))
-    publishManifest(fs, r, next, carriedMeta ++ carriedDataRaw(fs, r, to))
+    publishManifest(fs, r, next, carriedMetaLines(fs, r, to) ++ carriedDataRaw(fs, r, to))
     next
   }
 
@@ -6076,10 +6075,7 @@ object GraftCatalog {
     // physical count, so metadata==data holds on MoR-deleted tables
     // too (the only non-metadata touch is the DV sidecar itself,
     // deleted-rows-sized).
-    val dvCounts: Map[String, Long] =
-      dvDf(spark, r, readDvNames(fs, r, v)).fold(Map.empty[String, Long])(dv =>
-        dv.groupBy("__path").count().collect()
-          .map(row => row.getString(0) -> row.getLong(1)).toMap)
+    val dvCounts = new DvSet(spark, r, readDvNames(fs, r, v)).deletedRows(files)
     val grouped = files.groupBy { f =>
       // files written under a RETIRED spec report as unpartitioned
       // (all-null tuple) rather than misreading their positional
@@ -7176,7 +7172,7 @@ object GraftCatalog {
     // wrote and kept is validated as alive like any fork target).
     val liveTargets =
       if (dvAdded.isEmpty) Set.empty[String]
-      else deleteLineTargets(spark, br2, dvAdded)
+      else deleteLineTargets(spark, br2, dvAdded, bFiles)
         .intersect(bFiles.toSet) -- newFiles.toSet
     val migrated = migrateDeleteLines(bfs, br2, dvAdded, fs, r)
     def dropMigrated(): Unit = migrated.foreach { l =>

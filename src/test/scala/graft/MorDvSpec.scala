@@ -687,9 +687,12 @@ class MorDvSpec extends AnyFunSuite {
         pks)
       GraftCatalog.deleteSnapshotKeysMor(spark, root, frame("id bigint, grp bigint",
         Row(20L, 2L), Row(21L, null), Row(22L, 1L), Row(22L, 1L)), pks)
+      // a NaN key is a value, not a NULL: it purges the NaN row (901)
+      GraftCatalog.deleteSnapshotKeysMor(spark, root,
+        frame("d double", Row(Double.NaN), Row(null)), Seq("d"))
       val t = GraftCatalog.readSnapshot(spark, root)
-      assert(t.where(col("id").isin(0L, 1L, 11L, 20L, 22L)).count() == 0)
-      assert(t.where(col("id").isin(5L, 7L, 10L, 21L, 30L, 31L, 900L, 901L, 1000L))
+      assert(t.where(col("id").isin(0L, 1L, 11L, 20L, 22L, 901L)).count() == 0)
+      assert(t.where(col("id").isin(5L, 7L, 10L, 21L, 30L, 31L, 900L, 1000L))
         .groupBy("id").count().where(col("count") =!= 1L).select("id")
         .collect().map(_.getLong(0)).toSeq == Seq(7L))
       val head = GraftCatalog.snapshotVersions(spark, root).last
@@ -699,8 +702,8 @@ class MorDvSpec extends AnyFunSuite {
     val (probe, join) = bothRegimes(run())
     assert(probe._1 == join._1, "head rows differ between the regimes")
     assert(probe._2 == join._2, "CDC rows differ between the regimes")
-    // 400, +3 from the MERGE, -1 +1 from the CDC apply, -2 from the purge
-    assert(probe._1.size == 401)
+    // 400, +3 from the MERGE, -1 +1 from the CDC apply, -2 -1 from the purges
+    assert(probe._1.size == 400)
   }
 
   test("a MERGE of a cached feed into a small table runs at most 3 jobs, none joining the keys") {
@@ -735,21 +738,31 @@ class MorDvSpec extends AnyFunSuite {
       Set(1L, 2L))
   }
 
-  test("CoW pins map a scan path with an authority back to the manifest path") {
-    import spark.implicits._
-    // Under a view filesystem every scanned path carries an authority
-    // (viewfs://<mount>/t/...) that the manifest's paths (/t/...) drop.
+  /** Runs `body` with a fresh table directory under a session whose
+    * default filesystem is a `viewfs://<mount>/` view with one link,
+    * `/t`, to a local temp dir: every scanned path then carries an
+    * authority (viewfs://<mount>/t/...) that the manifest's paths
+    * (/t/...) drop. */
+  private def onViewFs[T](body: String => T): T = {
     val mount = s"graftpin${System.nanoTime()}"
     val local = java.nio.file.Files.createTempDirectory("graft-viewfs").toUri.toString
     val confs = Seq("fs.defaultFS" -> s"viewfs://$mount/",
       s"fs.viewfs.mounttable.$mount.link./t" -> local)
     confs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try {
-      val root = "/t/authpin"
-      GraftCatalog.commitSnapshot(
-        spark.range(1000).select(col("id"), (col("id") % 7).as("grp"),
-          (col("id") * 10).as("amount")).repartitionByRange(4, col("id")),
-        root, append = false)
+    try body("/t") finally confs.foreach { case (k, _) => spark.conf.unset(k) }
+  }
+
+  private def commitIds(root: String): Unit =
+    GraftCatalog.commitSnapshot(
+      spark.range(1000).select(col("id"), (col("id") % 7).as("grp"),
+        (col("id") * 10).as("amount")).repartitionByRange(4, col("id")),
+      root, append = false)
+
+  test("CoW pins map a scan path with an authority back to the manifest path") {
+    import spark.implicits._
+    onViewFs { base =>
+      val root = s"$base/authpin"
+      commitIds(root)
       val files = dataFiles(root)
       assert(files.size == 4)
       def carried() = dataFiles(root).count(files.contains)
@@ -764,6 +777,72 @@ class MorDvSpec extends AnyFunSuite {
       assert(t.count() == 999)
       assert(t.where(col("id").isin(42L, 43L, 44L)).orderBy("id")
         .select("amount").as[Long].collect().toSeq == Seq(0L, 7L))
-    } finally confs.foreach { case (k, _) => spark.conf.unset(k) }
+    }
+  }
+
+  test("MoR deletes, CDC, DESCRIBE FILES and the SPJ read map a scan path with an authority back to the manifest path") {
+    import spark.implicits._
+    def cdcIds(root: String, v: Long): Seq[Long] =
+      GraftCatalog.readChanges(spark, root, v - 1, v).select("id").as[Long]
+        .collect().toSeq
+    def run(): (Seq[String], Seq[Long], Seq[Long], Long) = onViewFs { base =>
+      val root = s"$base/authmor"
+      commitIds(root)
+      val eqV = GraftCatalog.deleteSnapshotKeysMor(spark, root, Seq(42L).toDF("id"), Seq("id"))
+      val t = GraftCatalog.readSnapshot(spark, root)
+      assert(t.count() == 999 && t.where(col("id") === 42L).isEmpty,
+        "the equality delete removes id 42")
+      val dvV = GraftCatalog.deleteSnapshotWhereMor(spark, root, col("id") === 43L)
+      val dvRows = GraftCatalog.describeSnapshotFiles(spark, root)
+        .agg(sum("dv_deleted_rows")).as[Long].head()
+      (GraftCatalog.readSnapshot(spark, root).collect().map(_.toString).sorted.toSeq,
+        cdcIds(root, eqV), cdcIds(root, dvV), dvRows)
+    }
+    val (probe, join) = bothRegimes(run())
+    assert(probe == join)
+    assert(probe._1.size == 998)
+    assert(probe._2 == Seq(42L), "CDC of the equality delete streams id 42")
+    assert(probe._3 == Seq(43L), "CDC of the DV streams id 43")
+    assert(probe._4 == 1L, "DESCRIBE FILES counts the DV-deleted row")
+    // the SPJ read applies DVs only in the probe regime (past the bound
+    // it asks for a compaction)
+    onViewFs { base =>
+      val root = s"$base/authspj"
+      GraftCatalog.setSnapshotPartitionSpec(spark, root,
+        Seq(graft.sources.PartitionField("id", "bucket", 4)))
+      commitIds(root)
+      GraftCatalog.deleteSnapshotWhereMor(spark, root, col("id") === 42L)
+      val spj = GraftCatalog.readSnapshotSpj(spark, root)
+      assert(spj.count() == 999 && spj.where(col("id") === 42L).isEmpty)
+      // a MoR delete racing a CoW verb over a file it consumed aborts the
+      // verb, so the deleted row cannot come back with the rewrite
+      val raced = s"$base/authrace"
+      commitIds(raced)
+      GraftCatalog.cowPublishFault.put(raced, new Runnable {
+        def run(): Unit =
+          { GraftCatalog.deleteSnapshotWhereMor(spark, raced, col("id") === 40L); () }
+      })
+      intercept[graft.sources.SnapshotConflictException](
+        GraftCatalog.mergeSnapshotKeys(spark, raced,
+          Seq((41L, 0L, 1L)).toDF("id", "grp", "amount"), Seq("id")))
+      assert(GraftCatalog.readSnapshot(spark, raced).where(col("id") === 40L).isEmpty,
+        "the racer's MoR delete stands")
+    }
+  }
+
+  test("CDC of a MoR delete returns the same rows probed or joined, and plans with no job when probed") {
+    def run(): (Seq[String], Int) = {
+      val root = freshTable("dvcdc")
+      val v = GraftCatalog.deleteSnapshotWhereMor(spark, root, col("id").isin(7L, 300L, 999L))
+      var cdc: org.apache.spark.sql.DataFrame = null
+      val jobs = TestSpark.jobsLaunched(spark) {
+        cdc = GraftCatalog.readChanges(spark, root, v - 1, v)
+      }
+      (cdc.collect().map(_.toString).sorted.toSeq, jobs)
+    }
+    val ((probe, probeJobs), (join, _)) = bothRegimes(run())
+    assert(probe == join)
+    assert(probe == Seq("[300,6,3000,delete,2]", "[7,0,70,delete,2]", "[999,5,9990,delete,2]"))
+    assert(probeJobs == 0, s"building the probed CDC frame launched $probeJobs jobs")
   }
 }
