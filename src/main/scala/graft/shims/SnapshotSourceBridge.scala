@@ -1,11 +1,17 @@
 package org.apache.spark.sql
 
 import org.apache.hadoop.fs.{FileStatus, Path}
-import org.apache.spark.paths.SparkPath
+import org.apache.hadoop.mapreduce.{Job, TaskAttemptID}
+import org.apache.hadoop.mapred.FileSplit
+import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.ParquetInputFormat
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.execution.datasources.{FileFormat, FileIndex, HadoopFsRelation, PartitionDirectory, PartitionedFile}
-import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.spark.sql.execution.datasources.{DataSourceUtils, FileIndex, HadoopFsRelation, PartitionDirectory}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetOptions, ParquetReadSupport, VectorizedParquetRecordReader}
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.StructType
 
 /** A manifest-backed [[FileIndex]] — the piece that makes graft's
@@ -53,33 +59,71 @@ object GraftSnapshotRelation {
   }
 }
 
-/** Reads small parquet files ON THE DRIVER through the function a
-  * parquet file scan's tasks call, so the requested schema, type
-  * widening and value conversions are exactly a scan's — but no Spark
-  * job runs. For metadata-sized files only (graft's delete sidecars).
-  * Stops after `limit` rows; rows come back as copies (the reader
-  * reuses its buffers). */
+/** Reads and writes small parquet files ON THE DRIVER with no Spark
+  * job, through the reader and writer a parquet scan's and write's
+  * tasks use. For metadata-sized files only (graft's delete sidecars).
+  * Each call builds its own Hadoop conf and keeps nothing afterwards. */
 object GraftLocalParquet {
+  /** Rows of `files` read as `schema` by Spark's vectorized parquet
+    * record reader, set up as a scan's reader factory sets it up (the
+    * requested schema, the schema-conversion flags and the footer's
+    * datetime rebase modes), so type widening and value conversions
+    * are exactly a scan's; unlike the factory, no broadcast of the conf.
+    * Stops after `limit` rows; rows come back as copies (the reader
+    * reuses its buffers). */
   def read(spark: SparkSession, schema: StructType, files: Seq[FileStatus],
       limit: Int): Array[InternalRow] = {
-    val cs = spark.asInstanceOf[classic.SparkSession]
-    val readFile = new ParquetFileFormat().buildReaderWithPartitionValues(cs,
-      schema, StructType(Nil), schema, Nil,
-      Map(FileFormat.OPTION_RETURNING_BATCH -> "false"),
-      cs.sessionState.newHadoopConf())
+    val sqlConf = spark.sessionState.conf
+    val conf = spark.sessionState.newHadoopConf()
+    conf.set(ParquetInputFormat.READ_SUPPORT_CLASS, classOf[ParquetReadSupport].getName)
+    conf.set(ParquetReadSupport.SPARK_ROW_REQUESTED_SCHEMA, schema.json)
+    conf.set(SQLConf.SESSION_LOCAL_TIMEZONE.key, sqlConf.sessionLocalTimeZone)
+    conf.setBoolean(SQLConf.CASE_SENSITIVE.key, sqlConf.caseSensitiveAnalysis)
+    conf.setBoolean(SQLConf.PARQUET_BINARY_AS_STRING.key, sqlConf.isParquetBinaryAsString)
+    conf.setBoolean(SQLConf.PARQUET_INT96_AS_TIMESTAMP.key, sqlConf.isParquetINT96AsTimestamp)
+    conf.setBoolean(SQLConf.PARQUET_INFER_TIMESTAMP_NTZ_ENABLED.key,
+      sqlConf.parquetInferTimestampNTZEnabled)
+    conf.setBoolean(SQLConf.LEGACY_PARQUET_NANOS_AS_LONG.key, sqlConf.legacyParquetNanosAsLong)
+    val options = new ParquetOptions(Map.empty[String, String], sqlConf)
+    val ctx = new TaskAttemptContextImpl(conf, new TaskAttemptID())
     val out = scala.collection.mutable.ArrayBuffer.empty[InternalRow]
     val it = files.iterator
     while (out.length < limit && it.hasNext) {
       val st = it.next()
-      val rows = readFile(PartitionedFile(InternalRow.empty,
-        SparkPath.fromPath(st.getPath), 0L, st.getLen, Array.empty,
-        st.getModificationTime, st.getLen))
-      try while (out.length < limit && rows.hasNext) out += rows.next().copy()
-      finally rows match {
-        case c: java.io.Closeable => c.close()
-        case _ =>
-      }
+      val input = HadoopInputFile.fromStatus(st, conf)
+      val footer = ParquetFooterReader.readFooter(input, ParquetMetadataConverter.NO_FILTER)
+      val meta = footer.getFileMetaData.getKeyValueMetaData
+      val dates = DataSourceUtils.datetimeRebaseSpec(meta.get, options.datetimeRebaseModeInRead)
+      val int96 = DataSourceUtils.int96RebaseSpec(meta.get, options.int96RebaseModeInRead)
+      // no INT96 time-zone conversion: a scan applies one only to files
+      // not written by parquet-mr, and Spark writes through parquet-mr
+      val reader = new VectorizedParquetRecordReader(null, dates.mode.toString, dates.timeZone,
+        int96.mode.toString, int96.timeZone, false, sqlConf.parquetVectorizedReaderBatchSize)
+      try {
+        reader.initialize(new FileSplit(st.getPath, 0L, st.getLen, Array.empty[String]), ctx,
+          Some(input), None, Some(footer))
+        reader.initBatch(StructType(Nil), InternalRow.empty)
+        while (out.length < limit && reader.nextKeyValue())
+          out += reader.getCurrentValue.asInstanceOf[InternalRow].copy()
+      } finally reader.close()
     }
     out.toArray
+  }
+
+  /** Write `rows` of `schema` as one parquet file in the directory `dir`
+    * with the output writer a Spark write task opens (the same parquet
+    * schema, codec and file metadata), on the driver and with no output
+    * committer: the file is written in place under `dir`. Columns are
+    * nullable, as a Spark write makes them. */
+  def write(spark: SparkSession, schema: StructType, rows: Iterable[InternalRow],
+      dir: Path): Unit = {
+    val job = Job.getInstance(spark.sessionState.newHadoopConf())
+    val nullable = schema.asNullable
+    val factory = new ParquetFileFormat().prepareWrite(spark, job, Map.empty, nullable)
+    val ctx = new TaskAttemptContextImpl(job.getConfiguration, new TaskAttemptID())
+    val file = new Path(dir,
+      s"part-00000-${java.util.UUID.randomUUID()}-c000${factory.getFileExtension(ctx)}")
+    val writer = factory.newInstance(file.toString, nullable, ctx)
+    try rows.foreach(writer.write) finally writer.close()
   }
 }

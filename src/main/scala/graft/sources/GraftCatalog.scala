@@ -919,8 +919,11 @@ object GraftCatalog {
     try {
       val out = files.map { f =>
         val p = new org.apache.hadoop.fs.Path(f)
+        // options from `conf`: parquet's defaults build a fresh Hadoop
+        // conf (and re-parse its default resources) for every file
         val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
-          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p, conf))
+          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p, conf),
+          org.apache.parquet.HadoopReadOptions.builder(conf, p).build())
         try {
           val footer = reader.getFooter
           val blocks = scala.jdk.CollectionConverters
@@ -1388,14 +1391,14 @@ object GraftCatalog {
         .partitionBy(spec.indices.map(i => s"__pt_$i"): _*)
         .parquet(batch.toString)
     }
-    val it = fs.listFiles(batch, true)
-    val buf = scala.collection.mutable.ArrayBuffer
-      .empty[org.apache.hadoop.fs.FileStatus]
-    while (it.hasNext) {
-      val f = it.next()
-      if (f.getPath.getName.endsWith(".parquet")) buf += f
-    }
-    val newStatuses: Seq[org.apache.hadoop.fs.FileStatus] = buf.toSeq
+    // listStatus, walked into the partition directories: `listFiles`
+    // returns located statuses, which load each file's owner and
+    // permission (a child process per file on the local filesystem
+    // without native Hadoop); only length and mtime are used
+    def leaves(dir: org.apache.hadoop.fs.Path): Seq[org.apache.hadoop.fs.FileStatus] =
+      fs.listStatus(dir).toSeq.flatMap(st =>
+        if (st.isDirectory) leaves(st.getPath) else Seq(st))
+    val newStatuses = leaves(batch).filter(_.getPath.getName.endsWith(".parquet"))
     val newFiles = newStatuses.map(st => org.apache.hadoop.fs.Path
       .getPathWithoutSchemeAndAuthority(st.getPath).toString).sorted
     (batch, newFiles, newStatuses, batchObs)
@@ -2316,8 +2319,22 @@ object GraftCatalog {
         .map(_.stripPrefix("#eqdel:"))
     var prevEq: Set[String] =
       if (fromV <= 0) Set.empty else eqLinesAt(fromV).toSet
+    var prevSchema: Option[org.apache.spark.sql.types.StructType] =
+      if (fromV <= 0) None else readSchemaLine(fs, r, fromV)
+    // Every part reads its files under the committed schema they were
+    // live in (`v`'s, or the previous version's for the files `v`
+    // removed), so none plans a Spark job; a version without a schema
+    // line merges the files' footers, one job per read. The parts then
+    // serve their versions' committed columns.
+    def readUnder(files: Seq[String],
+        cs: Option[org.apache.spark.sql.types.StructType]): DataFrame =
+      if (cs.isEmpty) spark.read.option("mergeSchema", "true").parquet(files: _*)
+      else scanPhysical(spark, files, cs)
     val parts = versions.flatMap { v =>
       val vLines = readManifestLines(fs, r, v)
+      val vSchema = readSchemaLine(fs, r, v)
+      val removedSchema = prevSchema
+      prevSchema = vSchema
       val cur = vLines.filterNot(_.startsWith("#")).toSet
       // A content-preserving eqdel→DV fold (rewriteEqDeletesToDv) is
       // dataChange = FALSE: its fresh DV only materializes rows the
@@ -2333,10 +2350,7 @@ object GraftCatalog {
       // reference ([[DvSet.deletedRows]], off the same load), matched on
       // the scan's own metadata columns; the read opens only those
       // files, so cost ∝ touched files, like the file-level stream
-      // everywhere else. When `v` records its schema the files read
-      // under it, so a probed DV plans with no Spark job; a column a
-      // file holds beyond its commit then reads only in the other
-      // parts, which merge footers.
+      // everywhere else.
       val curDv = readDvNames(fs, r, v).toSet
       val freshDv = (curDv -- prevDv).toSeq.sorted
       val priorDv = prevDv.toSeq.sorted
@@ -2346,11 +2360,8 @@ object GraftCatalog {
         else {
           val dv = new DvSet(spark, r, freshDv)
           val touched = dv.deletedRows(cur).keys.toSeq.sorted
-          val vSchema = readSchemaLine(fs, r, v)
           if (touched.isEmpty) None
-          else Some(dv.keep(
-              if (vSchema.isEmpty) spark.read.option("mergeSchema", "true").parquet(touched: _*)
-              else scanPhysical(spark, touched, vSchema))
+          else Some(dv.keep(readUnder(touched, vSchema))
             .withColumn("_change", lit("delete")).withColumn("_version", lit(v)))
         }
       // An EQUALITY delete also changes no files: emit the covered
@@ -2366,8 +2377,7 @@ object GraftCatalog {
         val covered = eqCoverPaths(spark, r, name).filter(cur).sorted
         if (covered.isEmpty) None
         else {
-          val live = liveRows(spark, r,
-            spark.read.option("mergeSchema", "true").parquet(covered: _*),
+          val live = liveRows(spark, r, readUnder(covered, vSchema),
             covered, priorDv, priorEq, None, withPos = true)
           Some(eqDeleteSet(spark, r, name, physPks, covered, live, "__path").keep(live)
             .drop("__path", "__pos")
@@ -2376,11 +2386,11 @@ object GraftCatalog {
       }
       val ins =
         if (added.isEmpty) None
-        else Some(spark.read.option("mergeSchema", "true").parquet(added: _*)
+        else Some(readUnder(added, vSchema)
           .withColumn("_change", lit("insert")).withColumn("_version", lit(v)))
       val del =
         if (removed.isEmpty) None
-        else Some(spark.read.option("mergeSchema", "true").parquet(removed: _*)
+        else Some(readUnder(removed, removedSchema)
           .withColumn("_change", lit("delete")).withColumn("_version", lit(v)))
       ins.toSeq ++ del.toSeq ++ dvDel.toSeq ++ eqDel
     }
@@ -2882,20 +2892,23 @@ object GraftCatalog {
     // The sidecar is the feed's distinct key tuples with no NULL
     // component (NaN is a value, and matches NaN), the set [[feedSet]]
     // builds: loaded on the driver in one job up to [[keyFeedMaxTuples]]
-    // and written from a local relation (no shuffle, ~150 ms less per
-    // call than a frame's distinct in traced `table_churn` runs at the
-    // same job count), the feed's distinct past it. No separate
-    // emptiness probe evaluates the feed: the NULL keys drop before the
-    // set is built, so a feed with no non-NULL key leaves it empty and
-    // publishes nothing, and any other writes a non-empty sidecar.
+    // and written there as one file, so the whole verb is that job; the
+    // feed's distinct, a Spark write, past it. The cover list (the
+    // manifest) is always on the driver and always written there. No
+    // separate emptiness probe evaluates the feed: the NULL keys drop
+    // before the set is built, so a feed with no non-NULL key leaves it
+    // empty and publishes nothing, and any other writes a non-empty
+    // sidecar.
     val feed = feedSet(spark, cast.where(pks.map(col(_).isNotNull).reduce(_ && _)),
       pks, probe = true)
     try {
       if (feed.isEmpty) return head
       val name = s"eq-${writerToken()}"
-      feed.sidecar.toDF(physPks: _*).write.parquet(eqSidecar(r, name, "keys").toString)
-      val sp = spark; import sp.implicits._
-      files.toDF("__path").coalesce(1).write.parquet(eqSidecar(r, name, "cover").toString)
+      feed.writeSidecar(eqSidecar(r, name, "keys"), physPks)
+      org.apache.spark.sql.GraftLocalParquet.write(spark, coverSchema,
+        files.map(f => org.apache.spark.sql.catalyst.InternalRow(
+          org.apache.spark.unsafe.types.UTF8String.fromString(f))),
+        eqSidecar(r, name, "cover"))
       publishDeleteLine(fs, r, head, s"#eqdel:$name:${physPks.mkString(",")}", meta,
         new org.apache.hadoop.fs.Path(deletesDir(r), name))
     } finally feed.release()
@@ -3497,8 +3510,9 @@ object GraftCatalog {
 
   /** Rows of graft-written delete sidecars (parquet directories or
     * files) read as `schema` on the driver, with no Spark job
-    * ([[org.apache.spark.sql.GraftLocalParquet]]: a scan's own reader,
-    * so a key sidecar written before a type widening reads widened), or
+    * ([[org.apache.spark.sql.GraftLocalParquet]]: a scan's own record
+    * reader, so a key sidecar written before a type widening reads
+    * widened; no broadcast), or
     * None when they hold more than `bound` rows — the read stops one
     * row past it. */
   private def sidecarRows(spark: SparkSession, root: org.apache.hadoop.fs.Path,
@@ -3750,8 +3764,13 @@ object GraftCatalog {
   /** A key-scoped verb's feed ([[feedSet]]): its [[KeySet]] and what
     * only a feed has. `frame` holds the distinct tuples: what a verb
     * nominates files by ([[nominateFilesByKeys]]) and scopes a lost race
-    * by ([[keyScopeEnvelope]]). [[release]] unpersists `persisted`. */
-  private final class Feed(set: KeySet, val frame: DataFrame, written: => DataFrame,
+    * by ([[keyScopeEnvelope]]). `writeSidecar(dir, names)` writes the
+    * tuples, their columns named `names`, as the parquet directory `dir`
+    * (the equality delete's key sidecar): one file written on the driver
+    * when loaded, the feed's own distinct (a parallel Spark write, not
+    * cached) past the bound. [[release]] unpersists `persisted`. */
+  private final class Feed(set: KeySet, val frame: DataFrame,
+      val writeSidecar: (org.apache.hadoop.fs.Path, Seq[String]) => Unit,
       empty: => Boolean, tallied: => (Long, Set[String]),
       persisted: Option[DataFrame]) extends KeySet {
     def keep(df: DataFrame): DataFrame = set.keep(df)
@@ -3760,10 +3779,6 @@ object GraftCatalog {
     lazy val isEmpty: Boolean = empty
     /** The most rows one tuple has, and the distinct tags. */
     lazy val tally: (Long, Set[String]) = tallied
-    /** The tuples as the equality delete writes them: one partition
-      * when loaded, the feed's own distinct (parallel, not cached) past
-      * the bound. */
-    def sidecar: DataFrame = written
     def release(): Unit = persisted.foreach(_.unpersist())
   }
 
@@ -3793,7 +3808,12 @@ object GraftCatalog {
         new Feed(new Probed(eqHit(spark,
             new graft.functions.EqDeleteIndex(Seq(""), tuples.map(_.values)),
             lit("") +: pks.map(col))),
-          frame, frame.coalesce(1), tuples.isEmpty,
+          frame,
+          (dir, names) => org.apache.spark.sql.GraftLocalParquet.write(spark,
+            org.apache.spark.sql.types.StructType(schema.fields.zip(names).map {
+              case (f, n) => f.copy(name = n)
+            }), tuples, dir),
+          tuples.isEmpty,
           (perKey.values.max,
             if (tag.isEmpty) Set.empty
             else loaded.keys.map(_.getUTF8String(pks.size).toString).toSet),
@@ -3812,7 +3832,9 @@ object GraftCatalog {
         val frame = grouped.select(pks.map(col): _*)
         // a load that overflowed saw rows
         new Feed(new Joined(frame, pks.map(col)), frame,
-          rows.select(pks.map(col): _*).distinct(), !probe && tally.isNullAt(0),
+          (dir, names) => rows.select(pks.map(col): _*).distinct().toDF(names: _*)
+            .write.parquet(dir.toString),
+          !probe && tally.isNullAt(0),
           (tally.getLong(0), tally.getSeq[String](1).toSet), Some(grouped))
     }
   }

@@ -845,4 +845,50 @@ class MorDvSpec extends AnyFunSuite {
     assert(probe == Seq("[300,6,3000,delete,2]", "[7,0,70,delete,2]", "[999,5,9990,delete,2]"))
     assert(probeJobs == 0, s"building the probed CDC frame launched $probeJobs jobs")
   }
+
+  test("an equality delete below the bound runs only its load job and writes each sidecar part as one driver-written file") {
+    import spark.implicits._
+    def listing(dir: String) = new java.io.File(dir).listFiles().map(_.getName)
+      .filterNot(_.startsWith(".")).sorted.toSeq
+    def run() = {
+      val root = freshTable("eqdriver")
+      var v = 0L
+      val jobs = TestSpark.jobsLaunched(spark) {
+        v = GraftCatalog.deleteSnapshotKeysMor(spark, root,
+          Seq(3L, 5L, 5L, 700L, 5000L).toDF("id"), Seq("id"))
+      }
+      val sidecars = listing(s"$root/_deletes")
+      assert(sidecars.size == 1 && sidecars.head.startsWith("eq-"), sidecars)
+      val dir = s"$root/_deletes/${sidecars.head}"
+      (jobs, listing(s"$dir/keys"), listing(s"$dir/cover"),
+        GraftCatalog.readSnapshot(spark, root).collect().map(_.toString).sorted.toSeq,
+        GraftCatalog.readChanges(spark, root, v - 1, v).collect().map(_.toString).sorted.toSeq)
+    }
+    val ((pJobs, pKeys, pCover, pRows, pCdc), (jJobs, jKeys, jCover, jRows, jCdc)) =
+      bothRegimes(run())
+    assert(pJobs == 1, s"below the bound the delete launched $pJobs jobs, the load expected")
+    def oneFile(names: Seq[String]) =
+      names.size == 1 && names.head.endsWith(".parquet")
+    assert(oneFile(pKeys), s"keys: $pKeys")
+    assert(oneFile(pCover) && oneFile(jCover), s"cover: $pCover / $jCover")
+    // past the bound the keys are the feed's distinct, a Spark write
+    assert(jKeys.contains("_SUCCESS") && jKeys.exists(_.endsWith(".parquet")), s"keys: $jKeys")
+    assert(!(pKeys ++ pCover ++ jKeys ++ jCover).exists(_.startsWith("_temporary")))
+    assert(jJobs > pJobs)
+    assert(pRows == jRows && pCdc == jCdc)
+    assert(pRows.size == 997)
+    assert(pCdc == Seq("[3,3,30,delete,2]", "[5,5,50,delete,2]", "[700,0,7000,delete,2]"))
+  }
+
+  test("sidecar loads broadcast nothing: a read over a DV and an equality delete adds only the two probe indexes") {
+    import spark.implicits._
+    val root = freshTable("bcast")
+    GraftCatalog.deleteSnapshotWhereMor(spark, root, col("id") === 7L)
+    GraftCatalog.deleteSnapshotKeysMor(spark, root, Seq(300L).toDF("id"), Seq("id"))
+    val before = org.apache.spark.GraftBroadcasts.ids().maxOption.getOrElse(-1L)
+    val t = GraftCatalog.readSnapshot(spark, root)
+    val added = org.apache.spark.GraftBroadcasts.ids().filter(_ > before)
+    assert(added.size == 2, s"${added.size} broadcasts: the DV and key probes expected")
+    assert(t.count() == 998 && t.where(col("id").isin(7L, 300L)).isEmpty)
+  }
 }

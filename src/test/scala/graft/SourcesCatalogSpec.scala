@@ -1551,6 +1551,14 @@ class SourcesCatalogSpec extends AnyFunSuite {
         .groupBy("id").agg(max("_version").as("dv")), Seq("id"), "left")
       .where(col("dv").isNull || col("iv") > col("dv"))
     assert(net.select("id").collect().map(_.getLong(0)).toSet == Set(100L, 101L))
+    // every version records its schema, so an append's CDC reads its
+    // files under it and plans with no footer-merge job
+    var append: org.apache.spark.sql.DataFrame = null
+    val jobs = TestSpark.jobsLaunched(spark) {
+      append = GraftCatalog.readChanges(spark, root, 1L, 2L)
+    }
+    assert(jobs == 0, s"CDC of an append planned with $jobs jobs")
+    assert(append.select("id").as[Long].collect().sorted.toSeq == Seq(6L, 7L, 8L))
   }
 
   test("vacuum never deletes clone/branch-carried foreign files: the source survives a clone's vacuum") {
