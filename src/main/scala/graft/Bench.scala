@@ -14,7 +14,8 @@ import org.apache.spark.sql.SparkSession
   * are reported explicitly in a "failed" list — a -1 can't silently
   * shrink the total. A failed query's entry in the detailed line's
   * `errors` object names the exception class and the first line of
-  * its message, so the record says why it failed.
+  * its message, so the record says why it failed; a failed index build
+  * has its entry there too, as `build:<name>`.
   *
   * WHY TWO LINES (r16): the detailed line carries all 270+ per-query
   * medians and is ~9 KB — any log tail shorter than that truncates it
@@ -60,6 +61,11 @@ object Bench {
       } catch { case e: Throwable => Left(e) }
     }
 
+    /** A failure as "ExceptionClass: first message line". */
+    def errText(e: Throwable): String =
+      e.getClass.getName + ": " +
+        Option(e.getMessage).flatMap(_.linesIterator.nextOption()).getOrElse("")
+
     /** (reps, median, t_start offset secs, loadavg at start, first
       * failure) — the reps/offset/load ride into the record so an
       * outlier median is diagnosable from the file alone (r17). A
@@ -72,10 +78,7 @@ object Bench {
       val runs = Seq.fill(3)(once(fn))
       val ts = runs.map(_.getOrElse(-1.0))
       val med = if (ts.exists(_ < 0)) -1.0 else ts.sorted.apply(1)
-      val err = runs.collectFirst { case Left(e) =>
-        e.getClass.getName + ": " +
-          Option(e.getMessage).flatMap(_.linesIterator.nextOption()).getOrElse("")
-      }
+      val err = runs.collectFirst { case Left(e) => errText(e) }
       (ts, med, off, load, err)
     }
 
@@ -92,14 +95,15 @@ object Bench {
     // layout already exists on disk) its index, so the per-query
     // medians below exclude build cost BY CONSTRUCTION rather than by
     // median-of-3 accounting (VERDICT r6 §next-6 / SURVEY §9.4). A
-    // build that fails records -1 and leaves its consumers to rebuild.
-    def timedBuild(f: => Any): Double = {
+    // build that fails records -1, its failure under `errors` as
+    // `build:<name>`, and leaves its consumers to rebuild.
+    def timedBuild(f: => Any): Either[Throwable, Double] = {
       val t0 = System.nanoTime()
-      try { f; (System.nanoTime() - t0) / 1e9 }
-      catch { case _: Throwable => -1.0 }
+      try { f; Right((System.nanoTime() - t0) / 1e9) }
+      catch { case e: Throwable => Left(e) }
     }
     val docsDf = Tables.df(spark, sfDir, "documents")
-    val builds: Seq[(String, Double)] = Seq(
+    val buildRuns: Seq[(String, Either[Throwable, Double])] = Seq(
       "pair_cache" -> timedBuild(graft.operators.Dedup.jaccardPairs(docsDf)),
       "dup_label_index" -> timedBuild(graft.operators.Dedup.dupLabelIndex(docsDf)),
       "lsh_layout" -> timedBuild(graft.operators.Similarity.lshIndex(spark, sfDir)),
@@ -107,6 +111,7 @@ object Bench {
       "pq_codebook" -> timedBuild(graft.operators.Similarity.pqIndex(spark, sfDir)),
       "ivfpq_layout" -> timedBuild(graft.operators.Similarity.ivfpqIndex(spark, sfDir)),
       "sq8_layout" -> timedBuild(graft.operators.Similarity.sq8Index(spark, sfDir)))
+    val builds = buildRuns.map { case (k, r) => k -> r.getOrElse(-1.0) }
     val tBuilds = builds.map(_._2).filter(_ >= 0).sum
 
     // JIT/codegen/session warm-up (not reported): one query per major
@@ -149,8 +154,10 @@ object Bench {
       "\"" + k + "\":" + BenchControls.num(off, 1) }.mkString("{", ",", "}")
     val loadJson = detailed.map { case (k, (_, _, _, ld, _)) =>
       "\"" + k + "\":" + BenchControls.num(ld, 2) }.mkString("{", ",", "}")
-    val errorsJson = detailed.collect { case (k, (_, _, _, _, Some(e))) =>
-      "\"" + k + "\":" + graft.sources.GraftCatalog.jsonEsc(e) }.mkString("{", ",", "}")
+    val errorsJson = (buildRuns.collect { case (k, Left(e)) => s"build:$k" -> errText(e) } ++
+      detailed.collect { case (k, (_, _, _, _, Some(e))) => k -> e })
+      .map { case (k, e) => "\"" + k + "\":" + graft.sources.GraftCatalog.jsonEsc(e) }
+      .mkString("{", ",", "}")
     val failed = results.collect { case (k, v) if v < 0 => "\"" + k + "\"" }
       .mkString("[", ",", "]")
     val total = results.map(_._2).filter(_ >= 0).sum

@@ -614,17 +614,104 @@ object GraftCatalog {
     }
   }
 
-  /** Manifest lines of a version with `#include:` SEGMENT pointers
-    * resolved in place — the flat view every consumer sees (see the
-    * segment-reuse notes on [[publishManifest]]). */
-  private def readManifestLines(fs: org.apache.hadoop.fs.FileSystem,
-      root: org.apache.hadoop.fs.Path, v: Long, strict: Boolean = true): Seq[String] =
-    resolveIncludes(fs, root, readManifestRawLines(fs, root, v, strict), strict)
+  /** Version `v` of the table at `r` as ONE read of its manifest file
+    * ([[readManifestRawLines]]) and everything derived from those lines:
+    * the only parser of the manifest line format on the read side. A
+    * manifest is immutable once `#eof`-terminated, so a verb resolves
+    * its head once and hands this value down; it lives for one verb
+    * attempt (a conflict retry resolves the head afresh). `strict`
+    * governs segment resolution the way it governs the raw read. */
+  private final class Manifest(val fs: org.apache.hadoop.fs.FileSystem,
+      val r: org.apache.hadoop.fs.Path, val v: Long, val raw: Seq[String],
+      strict: Boolean = true) {
+    private def tagged(prefix: String): Seq[String] =
+      raw.filter(_.startsWith(prefix)).map(_.stripPrefix(prefix))
 
-  /** Data-file list of a version (metadata `#key:value` lines skipped). */
-  private def readManifest(fs: org.apache.hadoop.fs.FileSystem,
-      root: org.apache.hadoop.fs.Path, v: Long, strict: Boolean = true): Seq[String] =
-    readManifestLines(fs, root, v, strict).filterNot(_.startsWith("#"))
+    /** Data-file list, `#include:` SEGMENT pointers resolved in place
+      * (see the segment-reuse notes on [[publishManifest]]). */
+    lazy val files: Seq[String] =
+      resolveIncludes(fs, r, raw, strict).filterNot(_.startsWith("#"))
+    /** The committed schema (`#schema:` line), if the version records one. */
+    lazy val schema: Option[org.apache.spark.sql.types.StructType] =
+      tagged("#schema:").headOption.map(s => org.apache.spark.sql.types.DataType
+        .fromJson(s).asInstanceOf[org.apache.spark.sql.types.StructType])
+    /** The stats sidecar's name (`#stats:` line). */
+    def statsName: Option[String] = tagged("#stats:").headOption
+    /** DV sidecar names, accumulating across MoR deletes until a
+      * compaction folds them. */
+    def dvNames: Seq[String] = tagged("#dv:")
+    /** `#eqdel:` suffixes, `<name>:<physPk1,…>` ([[parseEqDel]]). */
+    def eqDels: Seq[String] = tagged("#eqdel:")
+    /** The `#dv:` and `#eqdel:` lines as written. */
+    def deleteLines: Seq[String] =
+      raw.filter(l => l.startsWith("#dv:") || l.startsWith("#eqdel:"))
+    /** Every meta line (`#batch:`/`#stats:`/… tags and `#eof`) — segment
+      * pointers excluded: meta lines never live inside segments. */
+    def metaLines: Seq[String] =
+      raw.filter(l => l.startsWith("#") && !l.startsWith("#include:"))
+    /** The commit's own tags: meta lines bar the stats pointer and `#eof`. */
+    def tags: Seq[String] = metaLines.filter(l => !l.startsWith("#stats:") && l != "#eof")
+    /** What a commit that keeps this version's files carries from it:
+      * the stats pointer, the committed schema and the delete sidecars —
+      * less what the commit replaces. */
+    def carriedMeta(stats: Boolean = true, schema: Boolean = true,
+        eqDels: Boolean = true): Seq[String] =
+      raw.filter(l => (stats && l.startsWith("#stats:")) ||
+        (schema && l.startsWith("#schema:")) || l.startsWith("#dv:") ||
+        (eqDels && l.startsWith("#eqdel:")))
+    /** The UNRESOLVED data section — `#include:` pointers as written plus
+      * inline data lines, in manifest order. Delta-shaped commits
+      * republish THIS instead of [[files]], making their manifest write
+      * O(delta). Only ever republished to the same root. */
+    def dataRaw: Seq[String] =
+      raw.filter(l => l.startsWith("#include:") || !l.startsWith("#"))
+    /** [[dataRaw]] minus `excluded` — Iceberg's manifest-level
+      * filtering: a segment containing NO excluded file carries as its
+      * pointer (zero bytes rewritten); a segment a CoW rewrite touched
+      * re-inlines only its survivors (resealed downstream if the run is
+      * still oversized). This is what keeps a 2-file MERGE on a 1M-file
+      * table from rewriting ~100 MB of unchanged manifest text. */
+    def dataRawExcluding(excluded: Set[String]): Seq[String] =
+      if (excluded.isEmpty) dataRaw
+      else dataRaw.flatMap {
+        case l if l.startsWith("#include:") =>
+          val seg = readSegmentLines(fs, r, l.stripPrefix("#include:"), strict = true)
+          if (seg.exists(excluded)) seg.filterNot(excluded) else Seq(l)
+        case l => if (excluded(l)) Seq.empty else Seq(l)
+      }
+    /** Stats of this version, keyed by data-file path. Empty when the
+      * version predates stats or the sidecar is gone — every consumer
+      * treats a missing entry as "cannot prune", never as an error.
+      * Scoped to [[files]]: version-scoped consumers may ITERATE this
+      * map (CBO fold, branch merge), and a delta-chained sidecar
+      * ([[writeStatsDelta]]) is exact along pure-append chains only. */
+    lazy val stats: Map[String, FileStat] = {
+      val m = readStatsNamed(fs, r, statsName)
+      val live = files.toSet
+      if (m.keysIterator.forall(live)) m else m.filter { case (p, _) => live(p) }
+    }
+  }
+
+  /** Version `v`'s [[Manifest]], read once. */
+  private def manifestAt(fs: org.apache.hadoop.fs.FileSystem,
+      r: org.apache.hadoop.fs.Path, v: Long): Manifest =
+    new Manifest(fs, r, v, readManifestRawLines(fs, r, v))
+
+  /** The resolve step every verb opens with: the head's [[Manifest]]
+    * (one listing, one manifest read). */
+  private def headOf(spark: SparkSession, root: String): Manifest =
+    manifestOf(spark, root, None)
+
+  /** `version`'s [[Manifest]], else the head's; throws on an empty table. */
+  private def manifestOf(spark: SparkSession, root: String,
+      version: Option[Long]): Manifest = {
+    val (fs, r) = fsOf(spark, root)
+    manifestAt(fs, r, version.getOrElse {
+      val vs = versionsAt(fs, r)
+      require(vs.nonEmpty, s"no snapshots published under $root")
+      vs.last
+    })
+  }
 
   // ------------------------------------------------------------------
   // Manifest SEGMENTS: O(delta) commit metadata at 100 TB
@@ -644,7 +731,7 @@ object GraftCatalog {
   // (data lines + `#eof`, nothing else). Delta-shaped commits —
   // appends, MoR DV / equality-delete sidecar commits, the eqdel
   // fold, metadata-only schema DDL, rollback — republish the previous
-  // version's UNRESOLVED data section ([[carriedDataRaw]]), so their
+  // version's UNRESOLVED data section ([[Manifest.dataRaw]]), so their
   // manifest write is O(delta). Remove-shaped commits (CoW verbs,
   // compaction) inherently resolve to a survivor list and publish
   // flat; [[publishManifest]] seals any inline run over
@@ -795,35 +882,6 @@ object GraftCatalog {
       case l if l.startsWith("#include:") =>
         readSegmentLines(fs, root, l.stripPrefix("#include:"), strict)
       case l => Seq(l)
-    }
-
-  /** UNRESOLVED data section of a version — `#include:` pointers as
-    * written plus inline data lines, in manifest order, every other
-    * meta line dropped. Delta-shaped commits republish THIS instead of
-    * the resolved list, making their manifest write O(delta). Only
-    * ever republished to the same `root`. */
-  private def carriedDataRaw(fs: org.apache.hadoop.fs.FileSystem,
-      root: org.apache.hadoop.fs.Path, v: Long): Seq[String] =
-    readManifestRawLines(fs, root, v).filter(l =>
-      l.startsWith("#include:") || (!l.startsWith("#")))
-
-  /** [[carriedDataRaw]] minus `excluded` — Iceberg's manifest-level
-    * filtering: a segment containing NO excluded file carries as its
-    * pointer (zero bytes rewritten); a segment a CoW rewrite touched
-    * re-inlines only its survivors (resealed downstream if the run is
-    * still oversized). This is what keeps a 2-file MERGE on a 1M-file
-    * table from rewriting ~100 MB of unchanged manifest text. */
-  private def carriedDataRawExcluding(fs: org.apache.hadoop.fs.FileSystem,
-      root: org.apache.hadoop.fs.Path, v: Long,
-      excluded: Set[String]): Seq[String] =
-    if (excluded.isEmpty) carriedDataRaw(fs, root, v)
-    else readManifestRawLines(fs, root, v).flatMap {
-      case l if l.startsWith("#include:") =>
-        val name = l.stripPrefix("#include:")
-        val seg = readSegmentLines(fs, root, name, strict = true)
-        if (seg.exists(excluded)) seg.filterNot(excluded) else Seq(l)
-      case l if !l.startsWith("#") => if (excluded(l)) Seq.empty else Seq(l)
-      case _ => Seq.empty
     }
 
   /** Stat-able top-level column types: everything with a total order
@@ -1320,17 +1378,16 @@ object GraftCatalog {
     * (batch dir, sorted data-file paths, their statuses). */
   private def writeBatch(spark: SparkSession,
       fs: org.apache.hadoop.fs.FileSystem, r: org.apache.hadoop.fs.Path,
-      df0: DataFrame): (org.apache.hadoop.fs.Path, Seq[String],
+      df0: DataFrame, headSchema: Option[org.apache.spark.sql.types.StructType])
+      : (org.apache.hadoop.fs.Path, Seq[String],
         Seq[org.apache.hadoop.fs.FileStatus], Option[BatchObs]) = {
     // Column mapping: data files ALWAYS store physical names, so a
     // logically-named batch translates here — the single choke point
     // every data write (append, CoW rewrite, MoR batch, compaction)
-    // funnels through. No-op on never-renamed tables. Best-effort on
-    // an unreadable head (torn/alien manifest): there is no committed
-    // mapping to honor, and the verbs that NEED the head fail on their
-    // own reads — an overwrite over it must still proceed.
-    val headSchema = versionsAt(fs, r).lastOption
-      .flatMap(v => scala.util.Try(readSchemaLine(fs, r, v)).toOption.flatten)
+    // funnels through, under the committed schema of the head the
+    // caller resolved. No-op on never-renamed tables, and on an
+    // unreadable head (torn/alien manifest): there is no committed
+    // mapping to honor, and an overwrite over it must still proceed.
     val df1 = toPhysicalDf(df0, headSchema)
     // Write-time stats observation (r18, verdict #3): NDV sketches and
     // string lengths ride the write job itself (see [[BatchObs]]) —
@@ -1501,47 +1558,10 @@ object GraftCatalog {
     name
   }
 
-  /** Stats of a version, keyed by data-file path. Empty when the
-    * version predates stats or the sidecar is gone — every consumer
-    * treats a missing entry as "cannot prune", never as an error. */
-  /** Everything a read needs from one version's manifest, parsed from
-    * a SINGLE read of the file: the previous structure re-read the
-    * same manifest 3-4 times per table read (file list, `#schema:`,
-    * `#dv:`, `#stats:` pointer) — 3 redundant GETs of the same small
-    * object per query on an object store. Manifests are immutable once
-    * `#eof`-terminated, so one strict read serves all four. */
-  private final case class ParsedManifest(files: Seq[String],
-      schema: Option[org.apache.spark.sql.types.StructType],
-      dvNames: Seq[String], statsName: Option[String],
-      eqDels: Seq[String])
-
-  private def parseManifest(fs: org.apache.hadoop.fs.FileSystem,
-      r: org.apache.hadoop.fs.Path, v: Long): ParsedManifest = {
-    val lines = readManifestLines(fs, r, v)
-    ParsedManifest(
-      lines.filterNot(_.startsWith("#")),
-      lines.find(_.startsWith("#schema:"))
-        .map(l => org.apache.spark.sql.types.DataType
-          .fromJson(l.stripPrefix("#schema:"))
-          .asInstanceOf[org.apache.spark.sql.types.StructType]),
-      lines.filter(_.startsWith("#dv:")).map(_.stripPrefix("#dv:")),
-      lines.find(_.startsWith("#stats:")).map(_.stripPrefix("#stats:")),
-      lines.filter(_.startsWith("#eqdel:")).map(_.stripPrefix("#eqdel:")))
-  }
-
+  /** [[Manifest.stats]] of version `v`. */
   private[graft] def readStats(spark: SparkSession, root: String, v: Long): Map[String, FileStat] = {
     val (fs, r) = fsOf(spark, root)
-    val lines = readManifestLines(fs, r, v)
-    val m = readStatsNamed(spark, fs, r,
-      lines.find(_.startsWith("#stats:")).map(_.stripPrefix("#stats:")))
-    // Version-scoped consumers may ITERATE this map (CBO fold, branch
-    // merge), so scope it to the version's own files — a delta-chained
-    // sidecar ([[writeStatsDelta]]) is exact along pure-append chains
-    // by construction, but this keeps the contract independent of the
-    // writer's history.
-    val files = lines.filterNot(_.startsWith("#")).toSet
-    if (m.keysIterator.forall(files)) m
-    else m.filter { case (p, _) => files(p) }
+    manifestAt(fs, r, v).stats
   }
 
   /** Parsed-sidecar memo. Sidecar NAMES are writer-unique and their
@@ -1562,7 +1582,7 @@ object GraftCatalog {
           size() > statsCacheMax
       })
 
-  private def readStatsNamed(spark: SparkSession,
+  private def readStatsNamed(
       fs: org.apache.hadoop.fs.FileSystem, r: org.apache.hadoop.fs.Path,
       statsName: Option[String]): Map[String, FileStat] = statsName match {
     case None => Map.empty
@@ -1587,7 +1607,7 @@ object GraftCatalog {
         val base = metaL.filter(_.startsWith("#include:"))
           .map(_.stripPrefix("#include:"))
           .foldLeft(Map.empty[String, FileStat]) { (m, inc) =>
-            m ++ readStatsNamed(spark, fs, r, Some(inc))
+            m ++ readStatsNamed(fs, r, Some(inc))
           }
         // driver-side parse ([[parseStatLine]]): a stats consult runs
         // before EVERY verb and read plan — it must never cost a
@@ -1661,7 +1681,7 @@ object GraftCatalog {
         if (d < 0) writeStatsFile(spark, fs, r, newStats.sortBy(_.path))
         else if (d + 1 > depthMax) {
           val live = liveAtFlatten
-          val all = readStatsNamed(spark, fs, r, Some(prev))
+          val all = readStatsNamed(fs, r, Some(prev))
             .filter { case (p, _) => live(p) } ++
             newStats.map(f => f.path -> f)
           writeStatsFile(spark, fs, r, all.values.toSeq.sortBy(_.path))
@@ -1677,15 +1697,6 @@ object GraftCatalog {
         }
     }
 
-  /** The committed schema recorded in a version's manifest (`#schema:`
-    * meta line, schema JSON), if the version carries one. */
-  private def readSchemaLine(fs: org.apache.hadoop.fs.FileSystem,
-      root: org.apache.hadoop.fs.Path, v: Long): Option[org.apache.spark.sql.types.StructType] =
-    // meta lines never live inside segments — raw read skips resolution
-    readManifestRawLines(fs, root, v).find(_.startsWith("#schema:"))
-      .map(s => org.apache.spark.sql.types.DataType.fromJson(s.stripPrefix("#schema:"))
-        .asInstanceOf[org.apache.spark.sql.types.StructType])
-
   /** The table schema of a version (head by default) as COMMITTED in
     * the manifest — the authoritative answer on a schema-evolved table,
     * independent of which file the manifest happens to list first.
@@ -1694,8 +1705,8 @@ object GraftCatalog {
   def snapshotSchema(spark: SparkSession, root: String,
       version: Option[Long] = None): Option[org.apache.spark.sql.types.StructType] = {
     val (fs, r) = fsOf(spark, root)
-    val vs = snapshotVersions(spark, root)
-    if (vs.isEmpty) None else readSchemaLine(fs, r, version.getOrElse(vs.last))
+    val vs = versionsAt(fs, r)
+    if (vs.isEmpty) None else manifestAt(fs, r, version.getOrElse(vs.last)).schema
   }
 
   /** Recursively nullable-normalized: the committed schema is a READ
@@ -1925,69 +1936,73 @@ object GraftCatalog {
       meta: Seq[String] = Seq.empty, maxRetries: Int = 0,
       expectedHead: Option[Long] = None,
       rewriteOf: Option[Set[String]] = None): Long = {
+    val (fs, r) = fsOf(df.sparkSession, root)
+    commitOver(df, root, fs, r, append, meta, maxRetries, expectedHead, None, rewriteOf)
+  }
+
+  /** [[commitSnapshot]], given the [[Manifest]] of the base a caller
+    * already resolved (`known`, used while it is the base). */
+  private def commitOver(df: DataFrame, root: String,
+      fs: org.apache.hadoop.fs.FileSystem, r: org.apache.hadoop.fs.Path,
+      append: Boolean, meta: Seq[String], maxRetries: Int,
+      expectedHead: Option[Long], known: Option[Manifest],
+      rewriteOf: Option[Set[String]]): Long = {
     val spark = df.sparkSession
     validateChecks(spark, root, df)
-    val (fs, r) = fsOf(spark, root)
-    val (batch, newFiles, newStatuses, batchObs) = writeBatch(spark, fs, r, df)
+    // `expectedHead` PINS the commit's base (a REWRITE's contract —
+    // compaction preserves content, so publishing a stale version's
+    // rewrite over a concurrent commit's head would ERASE that
+    // commit: no serial order produces that outcome; the pinned
+    // publish aborts instead and the caller replans). A plain
+    // overwrite keeps the recomputed head: "replace the contents"
+    // after a racing merge IS the serial (merge, overwrite) order.
+    // ONE read of the base manifest per base version serves the batch's
+    // physical names, the stats pointer, committed schema, delete-
+    // sidecar carry AND the unresolved data section below — the
+    // commit's metadata cost is O(meta+includes), never O(live files).
+    // Appending to a torn base must fail (strict); an overwrite over
+    // one proceeds with a clean slate.
+    var baseV: Option[Long] = None
+    var base: Option[Manifest] = None
+    def resolveBase(): Unit = {
+      val v = expectedHead.orElse(versionsAt(fs, r).lastOption)
+      if (v != baseV) {
+        baseV = v
+        base = v.flatMap(v => known.filter(_.v == v).orElse(
+          if (append) Some(manifestAt(fs, r, v))
+          else scala.util.Try(manifestAt(fs, r, v)).toOption))
+      }
+    }
+    resolveBase()
+    val (batch, newFiles, newStatuses, batchObs) =
+      writeBatch(spark, fs, r, df, base.flatMap(_.schema))
     val newStats = batchFileStats(spark, newFiles, fsMetaOf(newStatuses),
       readBloomConfAt(fs, r), batchObs)
     var attempt = 0
     while (true) {
-      val versions = snapshotVersions(spark, root)
-      // `expectedHead` PINS the commit's base (a REWRITE's contract —
-      // compaction preserves content, so publishing a stale version's
-      // rewrite over a concurrent commit's head would ERASE that
-      // commit: no serial order produces that outcome; the pinned
-      // publish aborts instead and the caller replans). A plain
-      // overwrite keeps the recomputed head: "replace the contents"
-      // after a racing merge IS the serial (merge, overwrite) order.
-      val next = expectedHead.fold(versions.lastOption.getOrElse(0L) + 1)(_ + 1)
-      val baseV = expectedHead.orElse(versions.lastOption)
-      // ONE raw read of the base manifest serves the stats pointer,
-      // committed schema, delete-sidecar carry AND the unresolved data
-      // section below — the commit's metadata cost is O(meta+includes),
-      // never O(live files). Appending to a torn base must fail
-      // (strict); an overwrite over one proceeds with a clean slate.
-      val baseRaw: Seq[String] =
-        if (baseV.isEmpty) Seq.empty
-        else if (append) readManifestRawLines(fs, r, baseV.get)
-        else scala.util.Try(readManifestRawLines(fs, r, baseV.get))
-          .getOrElse(Seq.empty)
-      def baseSchemaLine: Option[org.apache.spark.sql.types.StructType] =
-        baseRaw.find(_.startsWith("#schema:"))
-          .map(s => org.apache.spark.sql.types.DataType
-            .fromJson(s.stripPrefix("#schema:"))
-            .asInstanceOf[org.apache.spark.sql.types.StructType])
+      resolveBase() // a racer that landed during the batch write is the base
+      val next = baseV.getOrElse(0L) + 1
+      val carry = if (append) base else None
       // Appends chain a DELTA stats sidecar at the base's (O(delta)
       // write, and no full sidecar parse per commit); overwrites and
       // first commits write flat.
-      val statsName =
-        if (append && baseV.nonEmpty)
-          writeStatsDelta(spark, fs, r,
-            baseRaw.find(_.startsWith("#stats:")).map(_.stripPrefix("#stats:")),
-            newStats,
-            liveAtFlatten =
-              readManifest(fs, r, baseV.get).toSet ++ newFiles)
-        else writeStatsFile(spark, fs, r, newStats.sortBy(_.path))
+      val statsName = carry match {
+        case Some(b) => writeStatsDelta(spark, fs, r, b.statsName, newStats,
+          liveAtFlatten = b.files.toSet ++ newFiles)
+        case None => writeStatsFile(spark, fs, r, newStats.sortBy(_.path))
+      }
       // Committed schema: an overwrite IS the batch's schema; an append
       // unions the prior committed schema (falling back to one carried
       // footer on pre-schema-line tables — only THAT legacy path pays
       // the full manifest resolve) with the batch's.
-      val priorSchema =
-        if (append && baseV.nonEmpty)
-          baseSchemaLine
-            .orElse(resolveIncludes(fs, r, baseRaw, strict = true)
-              .filterNot(_.startsWith("#")).headOption
-              .map(f => spark.read.parquet(f).schema))
-        else None
+      val priorSchema = carry.flatMap(b => b.schema
+        .orElse(b.files.headOption.map(f => spark.read.parquet(f).schema)))
       val merged = priorSchema.fold(df.schema)(p => unionSchema(p, df.schema))
       // Physical names are STICKY across overwrites (the Delta
       // column-mapping contract): an overwrite's schema is the batch's,
       // but any surviving logical name keeps its storage name — the
       // files writeBatch just landed used exactly that translation.
-      val headMap =
-        if (baseV.isEmpty) Map.empty[String, String]
-        else baseSchemaLine.map(physicalMap).getOrElse(Map.empty)
+      val headMap = base.flatMap(_.schema).map(physicalMap).getOrElse(Map.empty)
       val stamped =
         if (headMap.isEmpty) merged
         else org.apache.spark.sql.types.StructType(merged.fields.map { f =>
@@ -1999,21 +2014,13 @@ object GraftCatalog {
       val schemaLine = schemaLineOf(stamped)
       // appends carry the head's deletion vectors AND equality deletes
       // (same files, same dead rows; the new batch is outside every
-      // eqdel's covered set, so re-inserts survive); an overwrite
-      // starts a clean file list
-      val dvCarried =
-        if (append && baseV.nonEmpty)
-          baseRaw.filter(l => l.startsWith("#dv:") || l.startsWith("#eqdel:"))
-        else Seq.empty
-      // the publish carries the base's UNRESOLVED data section — the
-      // O(delta) commit path
-      val carriedRaw =
-        if (append && baseV.nonEmpty)
-          baseRaw.filter(l => l.startsWith("#include:") || !l.startsWith("#"))
-        else Seq.empty
+      // eqdel's covered set, so re-inserts survive) and its UNRESOLVED
+      // data section — the O(delta) commit path; an overwrite starts a
+      // clean file list
       try {
         publishManifest(fs, r, next,
-          Seq(s"#stats:$statsName", schemaLine) ++ dvCarried ++ meta ++ carriedRaw ++ newFiles)
+          Seq(s"#stats:$statsName", schemaLine) ++ carry.toSeq.flatMap(_.deleteLines) ++
+            meta ++ carry.toSeq.flatMap(_.dataRaw) ++ newFiles)
         return next
       } catch {
         case e: SnapshotConflictException =>
@@ -2031,9 +2038,9 @@ object GraftCatalog {
           // (a CoW rewrite of a consumed file, a new DV/eqdel covering
           // one, a schema flip) falls through to the abort+replan path.
           if (expectedHead.isDefined && rewriteOf.isDefined) {
-            try return republishPinnedRewrite(spark, fs, r,
-              expectedHead.get, rewriteOf.get, newFiles, newStats,
-              schemaLine, meta, carriesLines = append, e)
+            try return republishPinnedRewrite(spark,
+              base.getOrElse(manifestAt(fs, r, expectedHead.get)), rewriteOf.get,
+              newFiles, newStats, schemaLine, meta, carriesLines = append, e)
             catch {
               case e2: SnapshotConflictException =>
                 fs.delete(batch, true)
@@ -2110,30 +2117,25 @@ object GraftCatalog {
     * union application is idempotent, so overlap with racer sidecars
     * is harmless. */
   private def republishPinnedRewrite(spark: SparkSession,
-      fs: org.apache.hadoop.fs.FileSystem, r: org.apache.hadoop.fs.Path,
-      pinBase: Long, consumed: Set[String], newFiles: Seq[String],
+      base: Manifest, consumed: Set[String], newFiles: Seq[String],
       newStats: Seq[FileStat], schemaLine: String, meta: Seq[String],
       carriesLines: Boolean, original: SnapshotConflictException,
       scopeDisjoint: Option[org.apache.spark.sql.catalyst.expressions.Expression] = None,
       mustStayLive: Set[String] = Set.empty,
       extraDvLines: Seq[String] = Seq.empty,
       racerDeletesOutOfScope: Boolean = false): Long = {
-    def dvEq(lines: Seq[String]) =
-      lines.filter(l => l.startsWith("#dv:") || l.startsWith("#eqdel:")).toSet
-    val baseLines = readManifestLines(fs, r, pinBase)
-    val baseSchema = baseLines.find(_.startsWith("#schema:"))
-    val baseFiles = baseLines.filterNot(_.startsWith("#")).toSet
-    val baseDvEq = dvEq(baseLines)
+    val (fs, r) = (base.fs, base.r)
+    val baseFiles = base.files.toSet
+    val baseDvEq = base.deleteLines.toSet
     var attempt = 0
     while (attempt < 20) {
       attempt += 1
-      val head = versionsAt(fs, r).last
-      val headLines = readManifestLines(fs, r, head)
-      val headFiles = headLines.filterNot(_.startsWith("#"))
-      val headDvEq = dvEq(headLines)
+      val head = manifestAt(fs, r, versionsAt(fs, r).last)
+      val headFiles = head.files
+      val headDvEq = head.deleteLines.toSet
       val safe =
         (consumed ++ mustStayLive).subsetOf(headFiles.toSet) &&
-          headLines.find(_.startsWith("#schema:")) == baseSchema &&
+          head.schema == base.schema &&
           baseDvEq.subsetOf(headDvEq) &&
           !deleteLinesTouch(spark, r, (headDvEq -- baseDvEq).toSeq, consumed)
       if (!safe) throw original
@@ -2154,11 +2156,8 @@ object GraftCatalog {
         // #dv:/#eqdel: line covers has a stats envelope provably
         // DISJOINT from the scope (then the deleted rows are out of
         // scope too). Unprovable → the strict abort stands.
-        lazy val mayMatch = {
-          val csHead = readSchemaLine(fs, r, head)
-          filePruner(spark, fs, r,
-            statsLogical(readStats(spark, r.toString, head), csHead), csHead)
-        }
+        lazy val mayMatch =
+          filePruner(spark, fs, r, statsLogical(head.stats, head.schema), head.schema)
         val racerDvNew = (headDvEq -- baseDvEq).toSeq
         if (racerDeletesOutOfScope && racerDvNew.nonEmpty &&
             deleteLineTargets(spark, r, racerDvNew, headFiles).exists(mayMatch(_, scope)))
@@ -2169,18 +2168,16 @@ object GraftCatalog {
       // structural carry + chained stats, like commitCow: the
       // re-publish only rewrites manifest text for segments the
       // rewrite actually consumed files from
-      val statsName = writeStatsDelta(spark, fs, r,
-        readManifestRawLines(fs, r, head)
-          .find(_.startsWith("#stats:")).map(_.stripPrefix("#stats:")),
+      val statsName = writeStatsDelta(spark, fs, r, head.statsName,
         newStats, liveAtFlatten = carriedFiles.toSet ++ newFiles)
       val dvLines =
         ((if (carriesLines) headDvEq else headDvEq -- baseDvEq)
           ++ extraDvLines).toSeq.distinct.sorted
       try {
-        publishManifest(fs, r, head + 1,
+        publishManifest(fs, r, head.v + 1,
           Seq(s"#stats:$statsName", schemaLine) ++ dvLines ++ meta ++
-            carriedDataRawExcluding(fs, r, head, consumed) ++ newFiles)
-        return head + 1
+            head.dataRawExcluding(consumed) ++ newFiles)
+        return head.v + 1
       } catch {
         case _: SnapshotConflictException =>
           fs.delete(new org.apache.hadoop.fs.Path(manifestDir(r), statsName), false)
@@ -2214,7 +2211,7 @@ object GraftCatalog {
   private[graft] def snapshotMeta(spark: SparkSession, root: String,
       v: Long): Seq[String] = {
     val (fs, r) = fsOf(spark, root)
-    readManifestLines(fs, r, v).filter(_.startsWith("#"))
+    manifestAt(fs, r, v).metaLines
   }
 
   /** BOUNDED replay probe for the exactly-once batch wrappers: scan
@@ -2308,19 +2305,14 @@ object GraftCatalog {
   def readChanges(spark: SparkSession, root: String,
       fromV: Long, toV: Long): DataFrame = {
     val (fs, r) = fsOf(spark, root)
-    val versions = snapshotVersions(spark, root).filter(v => v > fromV && v <= toV)
+    val versions = versionsAt(fs, r).filter(v => v > fromV && v <= toV)
     require(versions.nonEmpty, s"no versions in ($fromV, $toV] under $root")
-    var prev: Set[String] =
-      if (fromV <= 0) Set.empty else readManifest(fs, r, fromV).toSet
-    var prevDv: Set[String] =
-      if (fromV <= 0) Set.empty else readDvNames(fs, r, fromV).toSet
-    def eqLinesAt(v0: Long): Seq[String] =
-      readManifestLines(fs, r, v0).filter(_.startsWith("#eqdel:"))
-        .map(_.stripPrefix("#eqdel:"))
-    var prevEq: Set[String] =
-      if (fromV <= 0) Set.empty else eqLinesAt(fromV).toSet
-    var prevSchema: Option[org.apache.spark.sql.types.StructType] =
-      if (fromV <= 0) None else readSchemaLine(fs, r, fromV)
+    val from = if (fromV <= 0) None else Some(manifestAt(fs, r, fromV))
+    var prev: Set[String] = from.fold(Set.empty[String])(_.files.toSet)
+    var prevDv: Set[String] = from.fold(Set.empty[String])(_.dvNames.toSet)
+    var prevEq: Set[String] = from.fold(Set.empty[String])(_.eqDels.toSet)
+    var prevSchema: Option[org.apache.spark.sql.types.StructType] = from.flatMap(_.schema)
+    var last: Option[Manifest] = None
     // Every part reads its files under the committed schema they were
     // live in (`v`'s, or the previous version's for the files `v`
     // removed), so none plans a Spark job; a version without a schema
@@ -2331,16 +2323,17 @@ object GraftCatalog {
       if (cs.isEmpty) spark.read.option("mergeSchema", "true").parquet(files: _*)
       else scanPhysical(spark, files, cs)
     val parts = versions.flatMap { v =>
-      val vLines = readManifestLines(fs, r, v)
-      val vSchema = readSchemaLine(fs, r, v)
+      val m = manifestAt(fs, r, v)
+      last = Some(m)
+      val vSchema = m.schema
       val removedSchema = prevSchema
       prevSchema = vSchema
-      val cur = vLines.filterNot(_.startsWith("#")).toSet
+      val cur = m.files.toSet
       // A content-preserving eqdel→DV fold (rewriteEqDeletesToDv) is
       // dataChange = FALSE: its fresh DV only materializes rows the
       // eqdel sidecars ALREADY retracted in their own versions — a CDC
       // subscriber must not see a second retraction of a dead row.
-      val isFold = vLines.contains("#rewrite:eqdels")
+      val isFold = m.metaLines.contains("#rewrite:eqdels")
       val added = (cur -- prev).toSeq.sorted
       val removed = (prev -- cur).toSeq.sorted
       prev = cur
@@ -2351,7 +2344,7 @@ object GraftCatalog {
       // the scan's own metadata columns; the read opens only those
       // files, so cost ∝ touched files, like the file-level stream
       // everywhere else.
-      val curDv = readDvNames(fs, r, v).toSet
+      val curDv = m.dvNames.toSet
       val freshDv = (curDv -- prevDv).toSeq.sorted
       val priorDv = prevDv.toSeq.sorted
       prevDv = curDv
@@ -2368,7 +2361,7 @@ object GraftCatalog {
       // files' rows matching the fresh key sets — LIVE at the previous
       // version (prior positional DVs and prior eq sidecars filtered),
       // so an already-dead row never re-emits. Cost ∝ covered files.
-      val curEq = eqLinesAt(v).toSet
+      val curEq = m.eqDels.toSet
       val freshEq = (curEq -- prevEq).toSeq.sorted
       val priorEq = prevEq.toSeq.sorted
       prevEq = curEq
@@ -2421,7 +2414,8 @@ object GraftCatalog {
     val all = treeUnion(parts).select(orderedCols.map(col): _*)
     // the stream's raw file reads carry PHYSICAL names; serve the
     // consumer `toV`'s logical names (Delta-CDF's latest-schema contract)
-    readSchemaLine(fs, r, toV).fold(all)(s => toLogicalDf(all, s))
+    last.filter(_.v == toV).getOrElse(manifestAt(fs, r, toV)).schema
+      .fold(all)(s => toLogicalDf(all, s))
   }
 
   /** ROW-LEVEL CDC between two versions: [[readChanges]]' file-level
@@ -2496,19 +2490,16 @@ object GraftCatalog {
   def mergeSnapshotKeys(spark: SparkSession, root: String,
       updates: DataFrame, pks: Seq[String], meta: Seq[String] = Seq.empty,
       allowSchemaEvolution: Boolean = false): Long = {
-    val (fs, r) = fsOf(spark, root)
-    val head = snapshotVersions(spark, root).last
-    val files = readManifest(fs, r, head)
+    val head = headOf(spark, root)
     // The distinct key tuples drive nomination, the pin, the survivors
     // and the empty-feed early-out. One job loads them onto the driver
     // and the pin and survivors probe them ([[feedSet]]); a feed past
     // the bound persists them as a frame those steps join instead.
-    val keys = feedSet(spark, updates, pks,
-      probeableKeys(updates, pks, readSchemaLine(fs, r, head)))
+    val keys = feedSet(spark, updates, pks, probeableKeys(updates, pks, head.schema))
     try {
-      if (keys.isEmpty) return head
+      if (keys.isEmpty) return head.v
       validateChecks(spark, root, updates)
-      val (_, carried, survivors) = pinFilesByKeys(spark, fs, r, head, files, keys, pks)
+      val (_, carried, survivors) = pinFilesByKeys(spark, head, keys, pks)
       // Schema evolution (opt-in, Delta's mergeSchema-on-MERGE): columns
       // new in `updates` land in the rewritten batch; carried files stay
       // as-is and read NULL for them under readSnapshot(mergeSchema).
@@ -2525,7 +2516,7 @@ object GraftCatalog {
       // but carrying OUR file list rather than blind-appending the head.
       // A lost race re-validates against the merge's key envelope —
       // disjoint concurrent ingest no longer starves a backfill MERGE.
-      commitCow(spark, fs, r, head, carried, newData, meta,
+      commitCow(spark, head, carried, newData, meta,
         scopePred = Some(() => keyScopeEnvelope(keys.frame, pks)))
     } finally keys.release()
   }
@@ -2590,8 +2581,7 @@ object GraftCatalog {
   def applyCdcSnapshotKeys(spark: SparkSession, root: String,
       batch: DataFrame, pks: Seq[String], opCol: String = "_op",
       meta: Seq[String] = Seq.empty, seqCol: Option[String] = None): Long = {
-    val (fs, r) = fsOf(spark, root)
-    val head = snapshotVersions(spark, root).last
+    val head = headOf(spark, root)
     val batchCols = batch.columns.toSet
     val resolved = seqCol match {
       case Some(sc) =>
@@ -2613,11 +2603,10 @@ object GraftCatalog {
     val pinned = resolved
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      val keys = feedSet(spark, pinned, pks,
-        probeableKeys(pinned, pks, readSchemaLine(fs, r, head)),
+      val keys = feedSet(spark, pinned, pks, probeableKeys(pinned, pks, head.schema),
         tag = Some(coalesce(col(opCol), lit("NULL"))))
       try {
-        if (keys.isEmpty) return head
+        if (keys.isEmpty) return head.v
         val (most, ops) = keys.tally
         if (seqCol.isEmpty) require(most <= 1,
           s"CDC batch carries multiple events for one ${pks.mkString(",")} — " +
@@ -2629,14 +2618,12 @@ object GraftCatalog {
         // table-schema select below like any other extra column.
         val upserts = pinned.where(col(opCol) =!= "D").drop(opCol)
         validateChecks(spark, root, upserts)
-        val files = readManifest(fs, r, head)
-        val (matchedFiles, carried, survivors) =
-          pinFilesByKeys(spark, fs, r, head, files, keys, pks)
+        val (matchedFiles, carried, survivors) = pinFilesByKeys(spark, head, keys, pks)
         // every op is I, U or D by now: the upserts are empty iff all are D
-        if (matchedFiles.isEmpty && ops == Set("D")) return head
+        if (matchedFiles.isEmpty && ops == Set("D")) return head.v
         val newData = survivors.unionByName(
           upserts.select(survivors.columns.toSeq.map(col): _*))
-        commitCow(spark, fs, r, head, carried, newData, meta,
+        commitCow(spark, head, carried, newData, meta,
           scopePred = Some(() => keyScopeEnvelope(keys.frame, pks)))
       } finally keys.release()
     } finally pinned.unpersist()
@@ -2687,19 +2674,14 @@ object GraftCatalog {
     * the batch deleted, same serializable contract as merge. */
   def deleteSnapshotWhere(spark: SparkSession, root: String,
       pred: Column, meta: Seq[String] = Seq.empty): Long = {
-    val (fs, r) = fsOf(spark, root)
-    val head = snapshotVersions(spark, root).last
-    val files = readManifest(fs, r, head)
-    val cs = readSchemaLine(fs, r, head)
-    val candidates = filesMayMatch(spark, fs, r, files,
-      readStats(spark, root, head), cs, pred)
-    val matchedFiles = pinFilesWhere(spark, fs, r, head, candidates, pred)
-    if (matchedFiles.isEmpty) return head
-    val carried = files.filterNot(matchedFiles)
+    val head = headOf(spark, root)
+    val matchedFiles = pinFilesWhere(spark, head, filesMayMatch(spark, head, pred), pred)
+    if (matchedFiles.isEmpty) return head.v
+    val carried = head.files.filterNot(matchedFiles)
     // DELETE WHERE p removes rows where p is TRUE; FALSE and NULL stay.
-    val survivors = readLiveFiles(spark, fs, r, head, matchedFiles.toSeq.sorted)
+    val survivors = readLiveFiles(spark, head, matchedFiles.toSeq.sorted)
       .where(!coalesce(pred, lit(false)))
-    commitCow(spark, fs, r, head, carried, survivors, meta,
+    commitCow(spark, head, carried, survivors, meta,
       scopePred = Some(() => Some(pred)))
   }
 
@@ -2728,14 +2710,6 @@ object GraftCatalog {
   private def dvPathKey(c: Column): Column =
     regexp_replace(c, dvPathScheme, "/")
   private val dvPathScheme = "^[a-z][a-zA-Z0-9+.-]*:/+"
-
-  /** DV sidecar names a version's manifest references (`#dv:` lines,
-    * accumulating across MoR deletes until a compaction folds them). */
-  private def readDvNames(fs: org.apache.hadoop.fs.FileSystem,
-      root: org.apache.hadoop.fs.Path, v: Long): Seq[String] =
-    // meta lines never live inside segments — raw read skips resolution
-    readManifestRawLines(fs, root, v).filter(_.startsWith("#dv:"))
-      .map(_.stripPrefix("#dv:"))
 
   /** Graft writes every deletion-vector sidecar with exactly
     * (__path string, __pos long) and every equality-delete `cover` list
@@ -2846,18 +2820,15 @@ object GraftCatalog {
     cs.fold(cleaned)(toLogicalDf(cleaned, _))
   }
 
-  /** [[liveRows]] of specific data files at version `v`, logical names
+  /** [[liveRows]] of specific data files of `m`'s version, logical names
     * — what every CoW rewrite reads its survivor/source rows through,
     * so a rewrite can never resurrect a deleted row, and (`withPos`)
     * what the MoR verbs find their hit positions in, the CoW pins their
     * files and the key verbs' feeds `keep` and `drop` rows of. */
-  private def readLiveFiles(spark: SparkSession,
-      fs: org.apache.hadoop.fs.FileSystem, root: org.apache.hadoop.fs.Path,
-      v: Long, files: Seq[String], withPos: Boolean = false): DataFrame = {
-    val pm = parseManifest(fs, root, v)
-    liveRows(spark, root, scanPhysical(spark, files, pm.schema), files,
-      pm.dvNames, pm.eqDels, pm.schema, withPos)
-  }
+  private def readLiveFiles(spark: SparkSession, m: Manifest,
+      files: Seq[String], withPos: Boolean = false): DataFrame =
+    liveRows(spark, m.r, scanPhysical(spark, files, m.schema), files,
+      m.dvNames, m.eqDels, m.schema, withPos)
 
   /** MERGE-ON-READ EQUALITY DELETE: remove every row whose `pks` tuple
     * appears in `keys`, publishing ONE key-list sidecar and ZERO data
@@ -2871,10 +2842,8 @@ object GraftCatalog {
   def deleteSnapshotKeysMor(spark: SparkSession, root: String,
       keys: DataFrame, pks: Seq[String], meta: Seq[String] = Seq.empty): Long = {
     require(pks.nonEmpty, "equality delete needs at least one key column")
-    val (fs, r) = fsOf(spark, root)
-    val head = snapshotVersions(spark, root).last
-    val files = readManifest(fs, r, head)
-    val cs = readSchemaLine(fs, r, head)
+    val head = headOf(spark, root)
+    val (r, cs) = (head.r, head.schema)
     // Resolve each pk to its COMMITTED field case-insensitively (the
     // validation below already is), then derive both the canonical type
     // and the physical name FROM THAT FIELD — a case-sensitive
@@ -2902,44 +2871,35 @@ object GraftCatalog {
     val feed = feedSet(spark, cast.where(pks.map(col(_).isNotNull).reduce(_ && _)),
       pks, probe = true)
     try {
-      if (feed.isEmpty) return head
+      if (feed.isEmpty) return head.v
       val name = s"eq-${writerToken()}"
       feed.writeSidecar(eqSidecar(r, name, "keys"), physPks)
       org.apache.spark.sql.GraftLocalParquet.write(spark, coverSchema,
-        files.map(f => org.apache.spark.sql.catalyst.InternalRow(
+        head.files.map(f => org.apache.spark.sql.catalyst.InternalRow(
           org.apache.spark.unsafe.types.UTF8String.fromString(f))),
         eqSidecar(r, name, "cover"))
-      publishDeleteLine(fs, r, head, s"#eqdel:$name:${physPks.mkString(",")}", meta,
+      publishDeleteLine(head, s"#eqdel:$name:${physPks.mkString(",")}", meta,
         new org.apache.hadoop.fs.Path(deletesDir(r), name))
     } finally feed.release()
   }
 
-  /** Publish `head + 1` as `head`'s files and metadata lines
-    * ([[carriedMetaLines]]) plus the delete-sidecar line `line` and
+  /** Publish `head`'s next version as its files and metadata lines
+    * ([[Manifest.carriedMeta]]) plus the delete-sidecar line `line` and
     * `meta`: the metadata-only commit of the MoR deletes, which rewrite
     * no data file. A lost race deletes `sidecar`, the files `line`
     * references, and rethrows — the shared serializable contract. */
-  private def publishDeleteLine(fs: org.apache.hadoop.fs.FileSystem,
-      r: org.apache.hadoop.fs.Path, head: Long, line: String, meta: Seq[String],
+  private def publishDeleteLine(head: Manifest, line: String, meta: Seq[String],
       sidecar: org.apache.hadoop.fs.Path): Long = {
-    val next = head + 1
-    try publishManifest(fs, r, next,
-      carriedMetaLines(fs, r, head) ++ (line +: meta) ++ carriedDataRaw(fs, r, head))
+    val next = head.v + 1
+    try publishManifest(head.fs, head.r, next,
+      head.carriedMeta() ++ (line +: meta) ++ head.dataRaw)
     catch {
       case e: SnapshotConflictException =>
-        fs.delete(sidecar, true)
+        head.fs.delete(sidecar, true)
         throw e
     }
     next
   }
-
-  /** The lines a commit that keeps version `v`'s files carries from it:
-    * the stats pointer, the committed schema and the delete sidecars. */
-  private def carriedMetaLines(fs: org.apache.hadoop.fs.FileSystem,
-      r: org.apache.hadoop.fs.Path, v: Long): Seq[String] =
-    readManifestLines(fs, r, v).filter(l =>
-      l.startsWith("#stats:") || l.startsWith("#schema:") ||
-        l.startsWith("#dv:") || l.startsWith("#eqdel:"))
 
   /** EXACTLY-ONCE streaming equality delete — [[deleteSnapshotKeysMor]]
     * under the batch-id replay guard shared by every verb wrapper: a
@@ -2994,18 +2954,15 @@ object GraftCatalog {
     * fast-forwards carry data files by PATH but must not reference a
     * foreign `_deletes/` dir — the source's vacuum could reap it.
     * Cost ∝ deleted rows (DVs are tiny by construction). */
-  private def copyDvSidecars(sfs: org.apache.hadoop.fs.FileSystem,
-      sr: org.apache.hadoop.fs.Path, v: Long,
+  private def copyDvSidecars(src: Manifest,
       dfs: org.apache.hadoop.fs.FileSystem,
-      dr: org.apache.hadoop.fs.Path): Seq[String] = {
-    val dvLines = readDvNames(sfs, sr, v).map(n => s"#dv:$n")
+      dr: org.apache.hadoop.fs.Path): Seq[String] =
     // equality-delete sidecars copy the same way (keys + cover dirs);
     // the covered paths reference the SOURCE's files, which the clone
     // carries by path — so coverage keeps meaning "files from before
     // the delete" on the cloned line too
-    val eqLines = readManifestLines(sfs, sr, v).filter(_.startsWith("#eqdel:"))
-    migrateDeleteLines(sfs, sr, dvLines ++ eqLines, dfs, dr)
-  }
+    migrateDeleteLines(src.fs, src.r,
+      src.dvNames.map(n => s"#dv:$n") ++ src.eqDels.map(l => s"#eqdel:$l"), dfs, dr)
 
   /** Copy SPECIFIC `#dv:`/`#eqdel:` sidecars from one table root's
     * `_deletes/` into another's under fresh unique names, returning
@@ -3078,21 +3035,18 @@ object GraftCatalog {
     * no-op). */
   def deleteSnapshotWhereMor(spark: SparkSession, root: String,
       pred: Column, meta: Seq[String] = Seq.empty): Long = {
-    val (fs, r) = fsOf(spark, root)
-    val head = snapshotVersions(spark, root).last
-    val files = readManifest(fs, r, head)
-    val candidates = filesMayMatch(spark, fs, r, files,
-      readStats(spark, root, head), readSchemaLine(fs, r, head), pred)
-    if (candidates.isEmpty) return head
+    val head = headOf(spark, root)
+    val candidates = filesMayMatch(spark, head, pred)
+    if (candidates.isEmpty) return head.v
     // live rows only: a row a prior DV or equality delete already
     // removed is no hit, so it is never deleted (and streamed) twice
-    val name = writeDv(spark, fs, r,
-      readLiveFiles(spark, fs, r, head, candidates, withPos = true)
+    val name = writeDv(spark, head.fs, head.r,
+      readLiveFiles(spark, head, candidates, withPos = true)
         .where(coalesce(pred, lit(false)))) match {
       case Some(n) => n
-      case None => return head // nothing live matched: a no-op
+      case None => return head.v // nothing live matched: a no-op
     }
-    publishDeleteLine(fs, r, head, s"#dv:$name", meta, dvSidecar(r, name))
+    publishDeleteLine(head, s"#dv:$name", meta, dvSidecar(head.r, name))
   }
 
   /** MERGE-ON-READ row-level UPDATE: `UPDATE t SET … WHERE pred` as a
@@ -3108,14 +3062,12 @@ object GraftCatalog {
   def updateSnapshotWhereMor(spark: SparkSession, root: String,
       pred: Column, set: Seq[(String, Column)],
       meta: Seq[String] = Seq.empty): Long = {
-    val (fs, r) = fsOf(spark, root)
-    val head = snapshotVersions(spark, root).last
-    val files = readManifest(fs, r, head)
-    val candidates = filesMayMatch(spark, fs, r, files,
-      readStats(spark, root, head), readSchemaLine(fs, r, head), pred)
-    if (candidates.isEmpty) return head
+    val head = headOf(spark, root)
+    val (fs, r) = (head.fs, head.r)
+    val candidates = filesMayMatch(spark, head, pred)
+    if (candidates.isEmpty) return head.v
     // the hits persist: the DV write computes them, the batch reuses them
-    val hit = readLiveFiles(spark, fs, r, head, candidates, withPos = true)
+    val hit = readLiveFiles(spark, head, candidates, withPos = true)
       .where(coalesce(pred, lit(false)))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
@@ -3130,7 +3082,7 @@ object GraftCatalog {
       }: _*)
       val dv = writeDv(spark, fs, r, hit) match {
         case Some(n) => n
-        case None => return head // no matching live row → no-op
+        case None => return head.v // no matching live row → no-op
       }
       // a rejected statement leaves no DV behind
       try {
@@ -3142,7 +3094,7 @@ object GraftCatalog {
           fs.delete(new org.apache.hadoop.fs.Path(deletesDir(r), dv), true)
           throw e
       }
-      publishDvPlusBatch(spark, fs, r, head, files, Some(dv), updated, meta)
+      publishDvPlusBatch(spark, head, Some(dv), updated, meta)
     } finally hit.unpersist()
   }
 
@@ -3180,16 +3132,11 @@ object GraftCatalog {
     * SQL surface: `CALL graft.system.rewrite_eqdels('db.t')`. */
   def rewriteEqDeletesToDv(spark: SparkSession, root: String,
       meta: Seq[String] = Seq.empty): Long = {
-    val (fs, r) = fsOf(spark, root)
-    val head = snapshotVersions(spark, root).last
-    val lines = readManifestLines(fs, r, head)
-    val eqLines = lines.filter(_.startsWith("#eqdel:")).map(_.stripPrefix("#eqdel:"))
-    if (eqLines.isEmpty) return head
-    val files = lines.filterNot(_.startsWith("#"))
-    val liveSet = files.toSet
-    val cs = readSchemaLine(fs, r, head)
-    val priorDvNames = readDvNames(fs, r, head)
-    val hits: Seq[DataFrame] = eqLines.flatMap { l =>
+    val head = headOf(spark, root)
+    val (fs, r, cs) = (head.fs, head.r, head.schema)
+    if (head.eqDels.isEmpty) return head.v
+    val liveSet = head.files.toSet
+    val hits: Seq[DataFrame] = head.eqDels.flatMap { l =>
       val (name, physPks) = parseEqDel(l)
       val covered = eqCoverPaths(spark, r, name).filter(liveSet).sorted
       if (covered.isEmpty) None
@@ -3198,19 +3145,18 @@ object GraftCatalog {
       // no second position
       else {
         val live = liveRows(spark, r, scanPhysical(spark, covered, cs), covered,
-          priorDvNames, Seq.empty, None, withPos = true)
+          head.dvNames, Seq.empty, None, withPos = true)
         Some(eqDeleteSet(spark, r, name, physPks, covered, live, "__path").keep(live)
           .select(col("__path"), col("__pos")))
       }
     }
-    val carriedMeta = lines.filter(l =>
-      l.startsWith("#stats:") || l.startsWith("#schema:") || l.startsWith("#dv:"))
     def publish(extraDv: Option[String], cleanup: => Unit): Long = {
-      val next = head + 1
+      val next = head.v + 1
       try {
         publishManifest(fs, r, next,
-          carriedMeta ++ extraDv.map(n => s"#dv:$n").toSeq ++
-            ("#rewrite:eqdels" +: meta) ++ carriedDataRaw(fs, r, head))
+          head.carriedMeta(eqDels = false) ++
+            extraDv.map(n => s"#dv:$n").toSeq ++
+            ("#rewrite:eqdels" +: meta) ++ head.dataRaw)
         next
       } catch {
         case e: SnapshotConflictException => cleanup; throw e
@@ -3228,17 +3174,15 @@ object GraftCatalog {
   def mergeSnapshotMorKeys(spark: SparkSession, root: String,
       updates: DataFrame, pks: Seq[String], meta: Seq[String] = Seq.empty,
       allowSchemaEvolution: Boolean = false): Long = {
-    val (fs, r) = fsOf(spark, root)
-    val head = snapshotVersions(spark, root).last
-    val files = readManifest(fs, r, head)
-    val cs = readSchemaLine(fs, r, head)
+    val head = headOf(spark, root)
+    val (files, cs) = (head.files, head.schema)
     // Same statement-scoped key feed as the CoW verbs ([[feedSet]]):
     // the distinct tuples drive nomination, the DV's positions (the
     // candidates' live rows the feed keeps, written once) and the
     // empty-feed early-out.
     val keys = feedSet(spark, updates, pks, probeableKeys(updates, pks, cs))
     try {
-      if (keys.isEmpty) return head
+      if (keys.isEmpty) return head.v
       validateChecks(spark, root, updates)
       val tableCols = cs.map(_.fieldNames.toSeq)
         .getOrElse(spark.read.parquet(files.head).columns.toSeq)
@@ -3254,14 +3198,14 @@ object GraftCatalog {
           updates.select(cols.map(col): _*)
         } else updates.select(tableCols.map(col): _*)
       val candidates = nominateFilesByKeys(spark, files,
-        statsLogical(readStats(spark, root, head), cs), keys.frame, pks)
+        statsLogical(head.stats, cs), keys.frame, pks)
       // no candidate, or no live match: a pure append. The DV is written
       // last, after every check that can reject the statement.
       val dv =
         if (candidates.isEmpty) None
-        else writeDv(spark, fs, r,
-          keys.keep(readLiveFiles(spark, fs, r, head, candidates, withPos = true)))
-      publishDvPlusBatch(spark, fs, r, head, files, dv, batch, meta)
+        else writeDv(spark, head.fs, head.r,
+          keys.keep(readLiveFiles(spark, head, candidates, withPos = true)))
+      publishDvPlusBatch(spark, head, dv, batch, meta)
     } finally keys.release()
   }
 
@@ -3280,20 +3224,18 @@ object GraftCatalog {
   }
 
   /** Shared MoR commit: land `newData` as one appended batch and
-    * publish head+1 carrying ALL existing files plus the already-written
+    * publish `head`'s next version carrying ALL its files plus the already-written
     * DV sidecar `dvName` ([[writeDv]]; None for a pure append).
     * Conflict aborts clean up both the sidecar and the batch. */
-  private def publishDvPlusBatch(spark: SparkSession,
-      fs: org.apache.hadoop.fs.FileSystem, r: org.apache.hadoop.fs.Path,
-      head: Long, files: Seq[String], dvName: Option[String], newData: DataFrame,
-      meta: Seq[String]): Long = {
+  private def publishDvPlusBatch(spark: SparkSession, head: Manifest,
+      dvName: Option[String], newData: DataFrame, meta: Seq[String]): Long = {
     try {
-      commitCow(spark, fs, r, head, carried = files,
+      commitCow(spark, head, carried = head.files,
         newData = newData, meta = dvName.map(n => s"#dv:$n").toSeq ++ meta)
     } catch {
       case e: SnapshotConflictException =>
-        dvName.foreach(n => fs.delete(
-          new org.apache.hadoop.fs.Path(deletesDir(r), n), true))
+        dvName.foreach(n => head.fs.delete(
+          new org.apache.hadoop.fs.Path(deletesDir(head.r), n), true))
         throw e
     }
   }
@@ -3433,35 +3375,31 @@ object GraftCatalog {
     * satisfies `pred` ([[pinnedFiles]]). A row a DV or an equality
     * delete already removed pins nothing, so such a verb publishes
     * nothing. */
-  private def pinFilesWhere(spark: SparkSession,
-      fs: org.apache.hadoop.fs.FileSystem, r: org.apache.hadoop.fs.Path,
-      head: Long, candidates: Seq[String], pred: Column): Set[String] =
+  private def pinFilesWhere(spark: SparkSession, head: Manifest,
+      candidates: Seq[String], pred: Column): Set[String] =
     if (candidates.isEmpty) Set.empty
     else pinnedFiles(spark,
-      readLiveFiles(spark, fs, r, head, candidates, withPos = true).where(pred),
-      candidates)
+      readLiveFiles(spark, head, candidates, withPos = true).where(pred), candidates)
 
   /** [[pinFilesWhere]]'s key-scoped twin, the front end of the CoW key
-    * verbs (MERGE, CDC apply): nominate `head`'s `files` by their key
+    * verbs (MERGE, CDC apply): nominate `head`'s files by their key
     * envelopes ([[nominateFilesByKeys]]), pin the candidates holding a
     * live row whose `pks` tuple `keys` keeps, and return (the pinned
     * files, the rest — carried by path —, the pinned files' live rows
     * `keys` drops). */
-  private def pinFilesByKeys(spark: SparkSession,
-      fs: org.apache.hadoop.fs.FileSystem, r: org.apache.hadoop.fs.Path,
-      head: Long, files: Seq[String], keys: Feed,
+  private def pinFilesByKeys(spark: SparkSession, head: Manifest, keys: Feed,
       pks: Seq[String]): (Set[String], Seq[String], DataFrame) = {
-    val cs = readSchemaLine(fs, r, head)
+    val files = head.files
     val candidates = nominateFilesByKeys(spark, files,
-      statsLogical(readStats(spark, r.toString, head), cs), keys.frame, pks)
+      statsLogical(head.stats, head.schema), keys.frame, pks)
     val matched: Set[String] =
       if (candidates.isEmpty) Set.empty
       else pinnedFiles(spark, keys.keep(
-        readLiveFiles(spark, fs, r, head, candidates, withPos = true)), candidates)
+        readLiveFiles(spark, head, candidates, withPos = true)), candidates)
     val survivors =
       if (matched.isEmpty)
-        readLiveFiles(spark, fs, r, head, Seq(files.head)).where(lit(false))
-      else keys.drop(readLiveFiles(spark, fs, r, head, matched.toSeq.sorted))
+        readLiveFiles(spark, head, Seq(files.head)).where(lit(false))
+      else keys.drop(readLiveFiles(spark, head, matched.toSeq.sorted))
     (matched, files.filterNot(matched), survivors)
   }
 
@@ -3852,48 +3790,43 @@ object GraftCatalog {
     * conflict path (a merge's key envelope costs one agg over the
     * source — never paid on the conflict-free fast path); `None` from
     * the thunk means "no provable scope" and keeps the strict abort. */
-  private def commitCow(spark: SparkSession,
-      fs: org.apache.hadoop.fs.FileSystem, r: org.apache.hadoop.fs.Path,
-      head: Long, carried: Seq[String],
+  private def commitCow(spark: SparkSession, head: Manifest, carried: Seq[String],
       newData: DataFrame, meta: Seq[String],
       rewriteOf: Option[Set[String]] = None,
       scopePred: Option[() => Option[Column]] = None): Long = {
+    val (fs, r) = (head.fs, head.r)
     // STRUCTURAL carry (Iceberg's manifest-level filtering): the carried
     // list is "the head's files minus the consumed ones", so the commit
     // republishes the head's raw data section excluding the consumed
     // files — untouched segments ride as pointers — and chains the
     // stats sidecar at the head's. Both make the commit's METADATA cost
     // ∝ touched files.
-    val headResolved = readManifest(fs, r, head).toSet
+    val headResolved = head.files.toSet
     val carriedSet = carried.toSet
     require(carriedSet.subsetOf(headResolved),
-      s"CoW carry must be a subset of v$head's files")
+      s"CoW carry must be a subset of v${head.v}'s files")
     val consumed = headResolved -- carriedSet
-    val (batch, newFiles, newStatuses, batchObs) = writeBatch(spark, fs, r, newData)
+    val (batch, newFiles, newStatuses, batchObs) =
+      writeBatch(spark, fs, r, newData, head.schema)
     val newStats = batchFileStats(spark, newFiles, fsMetaOf(newStatuses),
       readBloomConfAt(fs, r), batchObs)
-    val statsName = writeStatsDelta(spark, fs, r,
-      readManifestRawLines(fs, r, head)
-        .find(_.startsWith("#stats:")).map(_.stripPrefix("#stats:")),
+    val statsName = writeStatsDelta(spark, fs, r, head.statsName,
       newStats, liveAtFlatten = carriedSet ++ newFiles)
-    val carryLines = carriedDataRawExcluding(fs, r, head, consumed)
     // Committed schema: carried files are covered by the head's
     // recorded schema; the rewritten batch may add evolved columns.
-    val priorSchema = readSchemaLine(fs, r, head)
+    val priorSchema = head.schema
       .orElse(carried.headOption.map(f => spark.read.parquet(f).schema))
     val schemaLine =
       schemaLineOf(priorSchema.fold(newData.schema)(p => unionSchema(p, newData.schema)))
-    // Deletion vectors + equality deletes carry forward: carried files
-    // may still have dead rows; rewritten files' DV rows and eqdel
-    // coverage self-invalidate (both path-keyed — a new batch path is
-    // in no covered set)
-    val dvCarried = readManifestRawLines(fs, r, head).filter(l =>
-      l.startsWith("#dv:") || l.startsWith("#eqdel:"))
     try {
-      val next = head + 1
+      val next = head.v + 1
       Option(cowPublishFault.remove(r.toString)).foreach(_.run())
-      publishManifest(fs, r, next,
-        Seq(s"#stats:$statsName", schemaLine) ++ dvCarried ++ meta ++ carryLines ++ newFiles)
+      // Deletion vectors + equality deletes carry forward: carried files
+      // may still have dead rows; rewritten files' DV rows and eqdel
+      // coverage self-invalidate (both path-keyed — a new batch path is
+      // in no covered set)
+      publishManifest(fs, r, next, Seq(s"#stats:$statsName", schemaLine) ++
+        head.deleteLines ++ meta ++ head.dataRawExcluding(consumed) ++ newFiles)
       next
     } catch {
       case e: SnapshotConflictException =>
@@ -3910,7 +3843,7 @@ object GraftCatalog {
           else scopePred.flatMap(f => f())
             .map(org.apache.spark.sql.GraftColumnBridge.expression)
         if (rewriteOf.isDefined || verbScope.isDefined) {
-          try return republishPinnedRewrite(spark, fs, r, head,
+          try return republishPinnedRewrite(spark, head,
             rewriteOf.getOrElse(consumed), newFiles, newStats, schemaLine, meta,
             carriesLines = true, e, scopeDisjoint = verbScope)
           catch {
@@ -3950,16 +3883,11 @@ object GraftCatalog {
   def updateSnapshotWhere(spark: SparkSession, root: String,
       pred: Column, set: Seq[(String, Column)],
       meta: Seq[String] = Seq.empty): Long = {
-    val (fs, r) = fsOf(spark, root)
-    val head = snapshotVersions(spark, root).last
-    val files = readManifest(fs, r, head)
-    val cs = readSchemaLine(fs, r, head)
-    val candidates = filesMayMatch(spark, fs, r, files,
-      readStats(spark, root, head), cs, pred)
-    val matchedFiles = pinFilesWhere(spark, fs, r, head, candidates, pred)
-    if (matchedFiles.isEmpty) return head
-    val carried = files.filterNot(matchedFiles)
-    val src = readLiveFiles(spark, fs, r, head, matchedFiles.toSeq.sorted)
+    val head = headOf(spark, root)
+    val matchedFiles = pinFilesWhere(spark, head, filesMayMatch(spark, head, pred), pred)
+    if (matchedFiles.isEmpty) return head.v
+    val carried = head.files.filterNot(matchedFiles)
+    val src = readLiveFiles(spark, head, matchedFiles.toSeq.sorted)
     val known = src.schema.fieldNames.toSet
     val unknown = set.map(_._1).filterNot(known)
     require(unknown.isEmpty,
@@ -3982,7 +3910,7 @@ object GraftCatalog {
       } :+ col(hitCol)): _*)
     validateChecks(spark, root, marked.where(col(hitCol)).drop(hitCol))
     val updated = marked.drop(hitCol)
-    commitCow(spark, fs, r, head, carried, updated, meta,
+    commitCow(spark, head, carried, updated, meta,
       scopePred = Some(() => Some(pred)))
   }
 
@@ -4003,24 +3931,20 @@ object GraftCatalog {
     require(rows.where(!coalesce(pred, lit(false))).isEmpty,
       "replaceWhere: every incoming row must satisfy the overwrite predicate")
     validateChecks(spark, root, rows)
-    val (fs, r) = fsOf(spark, root)
-    val head = snapshotVersions(spark, root).last
-    val files = readManifest(fs, r, head)
-    val cs = readSchemaLine(fs, r, head)
-    val candidates = filesMayMatch(spark, fs, r, files,
-      readStats(spark, root, head), cs, pred)
-    val matchedFiles = pinFilesWhere(spark, fs, r, head, candidates, pred)
-    if (matchedFiles.isEmpty && rows.isEmpty) return head
+    val head = headOf(spark, root)
+    val files = head.files
+    val matchedFiles = pinFilesWhere(spark, head, filesMayMatch(spark, head, pred), pred)
+    if (matchedFiles.isEmpty && rows.isEmpty) return head.v
     val carried = files.filterNot(matchedFiles)
-    val tableCols = cs.map(_.fieldNames.toSeq)
+    val tableCols = head.schema.map(_.fieldNames.toSeq)
       .getOrElse(spark.read.parquet(files.head).columns.toSeq)
     val survivors =
       if (matchedFiles.isEmpty) rows.select(tableCols.map(col): _*).where(lit(false))
-      else readLiveFiles(spark, fs, r, head, matchedFiles.toSeq.sorted)
+      else readLiveFiles(spark, head, matchedFiles.toSeq.sorted)
         .where(!coalesce(pred, lit(false)))
     val newData = survivors.select(tableCols.map(col): _*)
       .unionByName(rows.select(tableCols.map(col): _*))
-    commitCow(spark, fs, r, head, carried, newData, meta,
+    commitCow(spark, head, carried, newData, meta,
       scopePred = Some(() => Some(pred)))
   }
 
@@ -4057,6 +3981,12 @@ object GraftCatalog {
           .getBytes("UTF-8")))
       throw new SnapshotConflictException(
         s"snapshot commit conflict: version $v already published under $root")
+    // The publisher knows its manifest is sealed, and one without a
+    // `#txmarker:` line is visible for good: record the listing's
+    // verdict, so the next verb's resolve reads the new head once.
+    if (!files.exists(_.startsWith("#txmarker:")))
+      scala.util.Try(fs.getFileStatus(fin).getModificationTime).foreach(mt =>
+        txVisibilityCache.put(s"$md#v$v@$mt", java.lang.Boolean.TRUE))
   }
 
   /** Publish-time segmentation (see the segment notes above
@@ -4291,16 +4221,13 @@ object GraftCatalog {
       tupleMayMatch(specs, cs, f, e, tz)
   }
 
-  /** The PLAN step every predicate reader and verb shares: the `files`
-    * [[filePruner]] keeps for `pred`, given their raw (physical-name)
-    * `stats` and the committed schema `cs`. */
-  private def filesMayMatch(spark: SparkSession,
-      fs: org.apache.hadoop.fs.FileSystem, r: org.apache.hadoop.fs.Path,
-      files: Seq[String], stats: Map[String, FileStat],
-      cs: Option[org.apache.spark.sql.types.StructType], pred: Column): Seq[String] = {
-    val mayMatch = filePruner(spark, fs, r, statsLogical(stats, cs), cs)
+  /** The PLAN step every predicate reader and verb shares: the files of
+    * `m` [[filePruner]] keeps for `pred`, given their raw (physical-name)
+    * stats and the committed schema. */
+  private def filesMayMatch(spark: SparkSession, m: Manifest, pred: Column): Seq[String] = {
+    val mayMatch = filePruner(spark, m.fs, m.r, statsLogical(m.stats, m.schema), m.schema)
     val e = org.apache.spark.sql.GraftColumnBridge.expression(pred)
-    files.filter(mayMatch(_, e))
+    m.files.filter(mayMatch(_, e))
   }
 
   /** The file list a read of `version` under `predicate` will scan,
@@ -4309,15 +4236,8 @@ object GraftCatalog {
     * Files without stats are always kept. */
   def snapshotScanFiles(spark: SparkSession, root: String,
       version: Option[Long] = None, predicate: Option[Column] = None): (Seq[String], Int) = {
-    val (fs, r) = fsOf(spark, root)
-    val v = version.getOrElse {
-      val vs = snapshotVersions(spark, root)
-      require(vs.nonEmpty, s"no snapshots published under $root")
-      vs.last
-    }
-    val files = readManifest(fs, r, v)
-    (predicate.fold(files)(p => filesMayMatch(spark, fs, r, files,
-      readStats(spark, root, v), readSchemaLine(fs, r, v), p)), files.size)
+    val m = manifestOf(spark, root, version)
+    (predicate.fold(m.files)(filesMayMatch(spark, m, _)), m.files.size)
   }
 
   /** Read a snapshot — the latest version, or an explicit one (time
@@ -4342,13 +4262,15 @@ object GraftCatalog {
     val (fs, r) = fsOf(spark, root)
     val vs = versionsAt(fs, r)
     require(vs.nonEmpty, s"snapshot of $root is empty")
-    val v = version.getOrElse(vs.last)
-    // ONE manifest read serves the file list, committed schema, DV
-    // names and stats pointer (object-store GET discipline).
-    val pm = parseManifest(fs, r, v)
+    readVersion(spark, root, manifestAt(fs, r, version.getOrElse(vs.last)),
+      mergeSchema, predicate)
+  }
+
+  /** [[readSnapshot]] of a [[Manifest]] already in hand. */
+  private def readVersion(spark: SparkSession, root: String, pm: Manifest,
+      mergeSchema: Boolean = false, predicate: Option[Column] = None): DataFrame = {
     require(pm.files.nonEmpty, s"snapshot of $root is empty")
-    val kept = predicate.fold(pm.files)(p => filesMayMatch(spark, fs, r,
-      pm.files, readStatsNamed(spark, fs, r, pm.statsName), pm.schema, p))
+    val kept = predicate.fold(pm.files)(filesMayMatch(spark, pm, _))
     // All files pruned: scan one manifest file so the schema survives;
     // the row filter below still yields the (correct) empty result.
     val files = if (kept.nonEmpty) kept else pm.files.take(1)
@@ -4362,7 +4284,7 @@ object GraftCatalog {
       if (mergeSchema) spark.read.option("mergeSchema", "true").parquet(files: _*)
       else scanPhysical(spark, files, pm.schema)
     // the user predicate (logical names) applies above the delete chain
-    val live = liveRows(spark, r, df, files, pm.dvNames, pm.eqDels, pm.schema)
+    val live = liveRows(spark, pm.r, df, files, pm.dvNames, pm.eqDels, pm.schema)
     predicate.fold(live)(live.where)
   }
 
@@ -4380,17 +4302,12 @@ object GraftCatalog {
     * driver before any footer I/O. */
   def readSnapshotAuto(spark: SparkSession, root: String,
       version: Option[Long] = None, mergeSchema: Boolean = false): DataFrame = {
-    val (fs, r) = fsOf(spark, root)
-    val v = version.getOrElse {
-      val vs = snapshotVersions(spark, root)
-      require(vs.nonEmpty, s"no snapshots published under $root")
-      vs.last
-    }
     // ONE manifest read serves the file list, committed schema, DV
     // names and stats pointer (object-store GET discipline).
-    val pm = parseManifest(fs, r, v)
+    val pm = manifestOf(spark, root, version)
+    val (fs, r) = (pm.fs, pm.r)
     val files = pm.files
-    val stats = readStatsNamed(spark, fs, r, pm.statsName)
+    val stats = pm.stats
     // Planning metadata comes from the manifest's own sidecar: file
     // length + mtime were recorded at commit, so building the scan's
     // FileStatus list issues ZERO per-file status RPCs — the listing
@@ -4449,10 +4366,8 @@ object GraftCatalog {
     * stats-skipping FileIndex for the co-located-join layout. */
   def readSnapshotSpj(spark: SparkSession, root: String,
       version: Option[Long] = None): DataFrame = {
-    val (fs, r) = fsOf(spark, root)
-    val vs = snapshotVersions(spark, root)
-    require(vs.nonEmpty, s"no snapshots published under $root")
-    val v = version.getOrElse(vs.last)
+    val m = manifestOf(spark, root, version)
+    val (fs, r, v) = (m.fs, m.r, m.v)
     // Equality deletes apply PER ROW inside the covered files' readers
     // (r14 — the same per-partition application shape as DV slices):
     // each sidecar's key tuples load once on the driver (bounded by
@@ -4461,9 +4376,7 @@ object GraftCatalog {
     // append re-inserting a purged key still survives. The
     // shuffle-free join stays intact — a bucketed MoR table keeps its
     // SPJ through a GDPR purge, no compaction required.
-    val eqLines = readManifestLines(fs, r, v)
-      .filter(_.startsWith("#eqdel:")).map(_.stripPrefix("#eqdel:"))
-    val eqParsed = eqLines.map(parseEqDel)
+    val eqParsed = m.eqDels.map(parseEqDel)
     // Deletion vectors apply PER FILE inside each bucket's own reader
     // (each InputPartition ships only its files' position slices), so
     // a merge-on-read table keeps its shuffle-free join between
@@ -4475,9 +4388,9 @@ object GraftCatalog {
       s"SPJ read of $root v$v: more than ${dvBroadcastMaxPositions(spark)} " +
         s"$what exceed the planning bound - compact first " +
         "(spark.graft.dv.broadcastMaxPositions)")
-    val files = readManifest(fs, r, v)
+    val files = m.files
     val dvByFile: Map[String, Array[Long]] =
-      dvPositions(spark, r, readDvNames(fs, r, v)).map(byManifestPath(spark, files, _))
+      dvPositions(spark, r, m.dvNames).map(byManifestPath(spark, files, _))
         .getOrElse(overBound("DV positions"))
     val specs = readPartitionSpecsAt(fs, r)
     require(specs.nonEmpty, s"SPJ read of $root: no partition spec")
@@ -4492,8 +4405,7 @@ object GraftCatalog {
     require(spec.nonEmpty && spec.forall(f =>
         f.transform == "bucket" || f.transform == "identity"),
       s"SPJ read of $root: active spec must be bucket/identity fields, got $spec")
-    val schema = readSchemaLine(fs, r, v).getOrElse(
-      spark.read.parquet(readManifest(fs, r, v).head).schema)
+    val schema = m.schema.getOrElse(spark.read.parquet(files.head).schema)
     // an identity field's tuple renders as a string in the path — map
     // it back to the Catalyst-internal value of its COLUMN type for
     // the partition key rows
@@ -4509,7 +4421,7 @@ object GraftCatalog {
           s"SPJ identity field $c: unsupported key type ${other.simpleString}")
       }
     }
-    val stats = readStats(spark, root, v)
+    val stats = m.stats
     val groups: Map[Seq[Any], Seq[(String, Long)]] = files.map { f =>
       val tuple = filePartitionTuple(f)
       require(specIdOfPath(f) == activeId && tuple.nonEmpty,
@@ -4574,11 +4486,9 @@ object GraftCatalog {
     * exists. */
   def describeSnapshotFiles(spark: SparkSession, root: String,
       version: Option[Long] = None): DataFrame = {
-    val (fs, r) = fsOf(spark, root)
-    val v = version.getOrElse(snapshotVersions(spark, root).last)
-    val files = readManifest(fs, r, v)
-    val stats = readStats(spark, root, v)
-    val dvCounts = new DvSet(spark, r, readDvNames(fs, r, v)).deletedRows(files)
+    val m = manifestOf(spark, root, version)
+    val (files, stats) = (m.files, m.stats)
+    val dvCounts = new DvSet(spark, m.r, m.dvNames).deletedRows(files)
     val rows = files.map { f =>
       val st = stats.get(f)
       val tuple = filePartitionTuple(f)
@@ -4618,14 +4528,11 @@ object GraftCatalog {
     * LISTED, zero parquet opens. */
   def describeSnapshotHistory(spark: SparkSession, root: String): DataFrame = {
     val (fs, r) = fsOf(spark, root)
-    val versions = snapshotVersions(spark, root)
     var prev = Set.empty[String]
-    val rows = versions.map { v =>
-      val lines = readManifestLines(fs, r, v)
-      val files = lines.filterNot(l => l.startsWith("#"))
-      val tags = lines.filter(l => l.startsWith("#") && !l.startsWith("#stats:") &&
-        l != "#eof")
-      val stats = readStats(spark, root, v)
+    val rows = versionsAt(fs, r).map { v =>
+      val m = manifestAt(fs, r, v)
+      val (files, stats) = (m.files, m.stats)
+      val tags = m.tags
       val nRows: Option[Long] =
         if (files.nonEmpty && files.forall(stats.contains))
           Some(files.map(f => stats(f).rows).sum)
@@ -4665,17 +4572,12 @@ object GraftCatalog {
     * race deletes the flat sidecar and aborts — pure metadata, the
     * caller just reruns. SQL: `CALL graft.system.rewrite_manifests`. */
   def rewriteManifests(spark: SparkSession, root: String): Long = {
-    val (fs, r) = fsOf(spark, root)
-    val head = snapshotVersions(spark, root).last
-    val files = readManifest(fs, r, head)
-    val flatStats = writeStatsFile(spark, fs, r,
-      readStats(spark, root, head).values.toSeq.sortBy(_.path))
-    val keptMeta = readManifestRawLines(fs, r, head).filter(l =>
-      l.startsWith("#schema:") || l.startsWith("#dv:") ||
-        l.startsWith("#eqdel:"))
-    val next = head + 1
-    try publishManifest(fs, r, next,
-      Seq(s"#stats:$flatStats", "#rewrite:manifests") ++ keptMeta ++ files)
+    val head = headOf(spark, root)
+    val (fs, r) = (head.fs, head.r)
+    val flatStats = writeStatsFile(spark, fs, r, head.stats.values.toSeq.sortBy(_.path))
+    val next = head.v + 1
+    try publishManifest(fs, r, next, Seq(s"#stats:$flatStats", "#rewrite:manifests") ++
+      head.carriedMeta(stats = false) ++ head.files)
     catch {
       case e: SnapshotConflictException =>
         fs.delete(new org.apache.hadoop.fs.Path(manifestDir(r), flatStats), false)
@@ -4696,15 +4598,13 @@ object GraftCatalog {
     * pure metadata, the caller just reruns. SQL:
     * `CALL graft.system.analyze(table)`. */
   def analyzeSnapshot(spark: SparkSession, root: String): Long = {
-    val (fs, r) = fsOf(spark, root)
-    val head = snapshotVersions(spark, root).last
-    val files = readManifest(fs, r, head)
-    val existing = readStats(spark, root, head)
+    val head = headOf(spark, root)
+    val (fs, r, files, existing) = (head.fs, head.r, head.files, head.stats)
     val need = files.filter(f => existing.get(f) match {
       case None => true
       case Some(st) => st.cols.exists(_.hll.isEmpty)
     })
-    if (need.isEmpty) return head
+    if (need.isEmpty) return head.v
     val fsMeta = existing.collect {
       case (p, st) if st.len.isDefined && st.mtime.isDefined =>
         p -> (st.len.get, st.mtime.get)
@@ -4714,12 +4614,9 @@ object GraftCatalog {
     val merged = files.map(f => fresh.getOrElse(f,
       existing.getOrElse(f, FileStat(f, 0L, Seq.empty))))
     val statsName = writeStatsFile(spark, fs, r, merged.sortBy(_.path))
-    val keptMeta = readManifestRawLines(fs, r, head).filter(l =>
-      l.startsWith("#schema:") || l.startsWith("#dv:") ||
-        l.startsWith("#eqdel:"))
-    val next = head + 1
-    try publishManifest(fs, r, next,
-      Seq(s"#stats:$statsName", "#analyze:stats") ++ keptMeta ++ files)
+    val next = head.v + 1
+    try publishManifest(fs, r, next, Seq(s"#stats:$statsName", "#analyze:stats") ++
+      head.carriedMeta(stats = false) ++ files)
     catch {
       case e: SnapshotConflictException =>
         fs.delete(new org.apache.hadoop.fs.Path(manifestDir(r), statsName), false)
@@ -4730,12 +4627,13 @@ object GraftCatalog {
 
   def rollbackSnapshot(spark: SparkSession, root: String, to: Long): Long = {
     val (fs, r) = fsOf(spark, root)
-    val next = snapshotVersions(spark, root).last + 1
+    val next = versionsAt(fs, r).last + 1
     // The target's #stats/#schema/#dv/#eqdel meta carry with its file
     // list, so data skipping, the committed schema, the deletion
     // vectors, AND the equality-delete sidecars survive the rollback —
     // a rollback must not resurrect keys the target version had purged.
-    publishManifest(fs, r, next, carriedMetaLines(fs, r, to) ++ carriedDataRaw(fs, r, to))
+    val target = manifestAt(fs, r, to)
+    publishManifest(fs, r, next, target.carriedMeta() ++ target.dataRaw)
     next
   }
 
@@ -4756,10 +4654,9 @@ object GraftCatalog {
       drop: Seq[String] = Seq.empty): Long = {
     import java.util.Locale.ROOT
     require(add.nonEmpty || drop.nonEmpty, "nothing to evolve")
-    val (fs, r) = fsOf(spark, root)
-    val head = snapshotVersions(spark, root).last
-    val prior = snapshotSchema(spark, root, Some(head)).getOrElse(
-      readSnapshot(spark, root, Some(head)).schema)
+    val head = headOf(spark, root)
+    val prior = head.schema.getOrElse(
+      readVersion(spark, root, head).schema)
     val lower = prior.fieldNames.map(_.toLowerCase(ROOT)).toSet
     add.fields.foreach(f => require(!lower(f.name.toLowerCase(ROOT)),
       s"column ${f.name} already exists on $root"))
@@ -4774,9 +4671,7 @@ object GraftCatalog {
         "the partition spec / sort order / bloom sidecars")
     // active equality deletes key on columns by PHYSICAL name — a drop
     // would leave the sidecar unevaluable and silently resurrect rows
-    val eqKeyCols = readManifestLines(fs, r, head)
-      .filter(_.startsWith("#eqdel:"))
-      .flatMap(l => parseEqDel(l.stripPrefix("#eqdel:"))._2)
+    val eqKeyCols = head.eqDels.flatMap(l => parseEqDel(l)._2)
       .map(_.toLowerCase(ROOT)).toSet
     val eqClash = prior.fields
       .filter(f => dropSet(f.name.toLowerCase(ROOT)))
@@ -4788,7 +4683,7 @@ object GraftCatalog {
       prior.fields.filterNot(f => dropSet(f.name.toLowerCase(ROOT))) ++
         add.fields.map(_.copy(nullable = true)))
     require(evolved.nonEmpty, s"cannot drop every column of $root")
-    publishEvolvedSchema(fs, r, head, evolved)
+    publishEvolvedSchema(head, evolved)
   }
 
   /** The SAFE type widenings (Iceberg's ALTER COLUMN TYPE set, which
@@ -4824,10 +4719,9 @@ object GraftCatalog {
   def widenSnapshotColumn(spark: SparkSession, root: String,
       column: String, to: org.apache.spark.sql.types.DataType): Long = {
     import java.util.Locale.ROOT
-    val (fs, r) = fsOf(spark, root)
-    val head = snapshotVersions(spark, root).last
-    val prior = snapshotSchema(spark, root, Some(head)).getOrElse(
-      readSnapshot(spark, root, Some(head)).schema)
+    val head = headOf(spark, root)
+    val prior = head.schema.getOrElse(
+      readVersion(spark, root, head).schema)
     val f = prior.fields.find(_.name.equalsIgnoreCase(column)).getOrElse(
       throw new IllegalArgumentException(s"no column $column on $root"))
     val hashed = (snapshotPartitionSpec(spark, root).map(_.col) ++
@@ -4842,7 +4736,7 @@ object GraftCatalog {
     val evolved = org.apache.spark.sql.types.StructType(
       prior.fields.map(x => if (x.name.equalsIgnoreCase(column))
         x.copy(dataType = to) else x))
-    publishEvolvedSchema(fs, r, head, evolved)
+    publishEvolvedSchema(head, evolved)
   }
 
   /** ALTER COLUMN … RENAME as a PURE-METADATA commit — Delta's
@@ -4867,9 +4761,8 @@ object GraftCatalog {
     import java.util.Locale.ROOT
     require(to.nonEmpty && !to.contains(".") && !to.contains("`"),
       s"bad column name: '$to'")
-    val (fs, r) = fsOf(spark, root)
-    val head = snapshotVersions(spark, root).last
-    val prior = snapshotSchema(spark, root, Some(head)).getOrElse(
+    val head = headOf(spark, root)
+    val prior = head.schema.getOrElse(
       throw new IllegalArgumentException(
         s"cannot rename on $root: the table predates committed schemas — " +
           "republish it (any commit) to record one first"))
@@ -4897,7 +4790,7 @@ object GraftCatalog {
     val evolved = org.apache.spark.sql.types.StructType(prior.fields.map(x =>
       if (x.name.equalsIgnoreCase(from)) x.copy(name = to, metadata = newMeta)
       else x))
-    publishEvolvedSchema(fs, r, head, evolved)
+    publishEvolvedSchema(head, evolved)
   }
 
   /** Rewrite the struct at `path` inside a committed schema (descends
@@ -4940,15 +4833,12 @@ object GraftCatalog {
     * immutable PHYSICAL column names, so they stay valid across every
     * metadata-only DDL; dropping them would resurrect purged rows on
     * an unrelated ALTER TABLE. */
-  private def publishEvolvedSchema(fs: org.apache.hadoop.fs.FileSystem,
-      r: org.apache.hadoop.fs.Path, head: Long,
+  private def publishEvolvedSchema(head: Manifest,
       evolved: org.apache.spark.sql.types.StructType): Long = {
-    val carried = readManifestLines(fs, r, head).filter(l =>
-      l.startsWith("#stats:") || l.startsWith("#dv:") ||
-        l.startsWith("#eqdel:"))
-    val next = head + 1
-    publishManifest(fs, r, next,
-      carried ++ Seq(schemaLineOf(evolved)) ++ carriedDataRaw(fs, r, head))
+    val next = head.v + 1
+    publishManifest(head.fs, head.r, next,
+      head.carriedMeta(schema = false) ++
+        Seq(schemaLineOf(evolved)) ++ head.dataRaw)
     next
   }
 
@@ -4960,9 +4850,8 @@ object GraftCatalog {
     * table a required new subfield is unsatisfiable by definition. */
   def addSnapshotNestedField(spark: SparkSession, root: String,
       parent: String, field: org.apache.spark.sql.types.StructField): Long = {
-    val (fs, r) = fsOf(spark, root)
-    val head = snapshotVersions(spark, root).last
-    val prior = snapshotSchema(spark, root, Some(head)).getOrElse(
+    val head = headOf(spark, root)
+    val prior = head.schema.getOrElse(
       throw new IllegalArgumentException(
         s"cannot evolve nested fields on $root: no committed schema"))
     val evolved = transformNestedStruct(prior, parent.split('.').toSeq) { st =>
@@ -4977,7 +4866,7 @@ object GraftCatalog {
       org.apache.spark.sql.types.StructType(
         st.fields :+ field.copy(nullable = true))
     }
-    publishEvolvedSchema(fs, r, head, evolved)
+    publishEvolvedSchema(head, evolved)
   }
 
   /** DROP a NESTED struct subfield as a PURE-METADATA commit: the
@@ -4988,9 +4877,8 @@ object GraftCatalog {
   def dropSnapshotNestedField(spark: SparkSession, root: String,
       fieldPath: String): Long = {
     import java.util.Locale.ROOT
-    val (fs, r) = fsOf(spark, root)
-    val head = snapshotVersions(spark, root).last
-    val prior = snapshotSchema(spark, root, Some(head)).getOrElse(
+    val head = headOf(spark, root)
+    val prior = head.schema.getOrElse(
       throw new IllegalArgumentException(
         s"cannot evolve nested fields on $root: no committed schema"))
     val parts = fieldPath.split('.').toSeq
@@ -5011,7 +4899,7 @@ object GraftCatalog {
           s"the ${parts.init.mkString(".")} column itself instead")
       org.apache.spark.sql.types.StructType(kept)
     }
-    publishEvolvedSchema(fs, r, head, evolved)
+    publishEvolvedSchema(head, evolved)
   }
 
   /** RENAME a NESTED struct subfield as a PURE-METADATA commit — the
@@ -5028,9 +4916,8 @@ object GraftCatalog {
     import java.util.Locale.ROOT
     require(to.nonEmpty && !to.contains(".") && !to.contains("`"),
       s"bad field name: '$to'")
-    val (fs, r) = fsOf(spark, root)
-    val head = snapshotVersions(spark, root).last
-    val prior = snapshotSchema(spark, root, Some(head)).getOrElse(
+    val head = headOf(spark, root)
+    val prior = head.schema.getOrElse(
       throw new IllegalArgumentException(
         s"cannot evolve nested fields on $root: no committed schema"))
     val parts = fieldPath.split('.').toSeq
@@ -5059,7 +4946,7 @@ object GraftCatalog {
       org.apache.spark.sql.types.StructType(st.fields.map(x =>
         if (x eq f) x.copy(name = to, metadata = newMeta) else x))
     }
-    publishEvolvedSchema(fs, r, head, evolved)
+    publishEvolvedSchema(head, evolved)
   }
 
   /** WIDEN a NESTED struct subfield's type as a PURE-METADATA commit —
@@ -5069,9 +4956,8 @@ object GraftCatalog {
     * type. */
   def widenSnapshotNestedField(spark: SparkSession, root: String,
       fieldPath: String, to: org.apache.spark.sql.types.DataType): Long = {
-    val (fs, r) = fsOf(spark, root)
-    val head = snapshotVersions(spark, root).last
-    val prior = snapshotSchema(spark, root, Some(head)).getOrElse(
+    val head = headOf(spark, root)
+    val prior = head.schema.getOrElse(
       throw new IllegalArgumentException(
         s"cannot evolve nested fields on $root: no committed schema"))
     val parts = fieldPath.split('.').toSeq
@@ -5086,7 +4972,7 @@ object GraftCatalog {
       org.apache.spark.sql.types.StructType(st.fields.map(x =>
         if (x eq f) x.copy(dataType = to) else x))
     }
-    publishEvolvedSchema(fs, r, head, evolved)
+    publishEvolvedSchema(head, evolved)
   }
 
   /** RENAME a snapshot table root — one filesystem rename plus a
@@ -5178,11 +5064,10 @@ object GraftCatalog {
   def snapshotStatsEstimate(spark: SparkSession, root: String,
       version: Option[Long] = None): (Option[Long], Option[Long]) = {
     val (fs, r) = fsOf(spark, root)
-    val vs = snapshotVersions(spark, root)
+    val vs = versionsAt(fs, r)
     if (vs.isEmpty) return (Some(0L), Some(0L))
-    val v = version.getOrElse(vs.last)
-    val files = readManifest(fs, r, v)
-    val stats = readStats(spark, root, v)
+    val m = manifestAt(fs, r, version.getOrElse(vs.last))
+    val (files, stats) = (m.files, m.stats)
     val rows =
       if (files.forall(stats.contains)) Some(files.map(f => stats(f).rows).sum)
       else None
@@ -5201,10 +5086,8 @@ object GraftCatalog {
     * simply becomes the new head. */
   def compactSnapshot(spark: SparkSession, root: String,
       targetBytes: Long = 128L * 1024 * 1024): Long = {
-    val (fs, r) = fsOf(spark, root)
-    val v = snapshotVersions(spark, root).last
-    val files = readManifest(fs, r, v)
-    val stats = readStats(spark, root, v)
+    val head = headOf(spark, root)
+    val (fs, r, files, stats) = (head.fs, head.r, head.files, head.stats)
     val bytes = files.map(f => stats.get(f).flatMap(_.len).getOrElse(
       fs.getFileStatus(new org.apache.hadoop.fs.Path(f)).getLen)).sum
     val nOut = math.max(1, math.ceil(bytes.toDouble / targetBytes).toInt)
@@ -5213,8 +5096,9 @@ object GraftCatalog {
     // `rewriteOf` = the consumed files: a harmless race (disjoint
     // append / MoR on other files) re-publishes at metadata price
     // instead of aborting (see republishPinnedRewrite).
-    commitSnapshot(readSnapshot(spark, root, Some(v)).coalesce(nOut), root,
-      append = false, expectedHead = Some(v), rewriteOf = Some(files.toSet))
+    commitOver(readVersion(spark, root, head).coalesce(nOut), root, fs, r,
+      append = false, meta = Seq.empty, maxRetries = 0, expectedHead = Some(head.v),
+      known = Some(head), rewriteOf = Some(files.toSet))
   }
 
   /** Z-ORDERED snapshot compaction: rewrite the current head
@@ -5228,10 +5112,9 @@ object GraftCatalog {
   def compactSnapshotZOrdered(spark: SparkSession, root: String,
       cols: Seq[String], nFiles: Int,
       rowGroupBytes: Long = 128L * 1024 * 1024): Long = {
-    val (fs, r) = fsOf(spark, root)
-    val v = snapshotVersions(spark, root).last
-    val files = readManifest(fs, r, v)
-    val df = readSnapshot(spark, root, Some(v))
+    val head = headOf(spark, root)
+    val (fs, r, v) = (head.fs, head.r, head.v)
+    val df = readVersion(spark, root, head)
     val batch = new org.apache.hadoop.fs.Path(r, s"data/b${writerToken()}")
     zOrderWriteN(df, cols, batch.toString, nFiles, rowGroupBytes)
     val newStatuses = fs.listStatus(batch)
@@ -5254,7 +5137,7 @@ object GraftCatalog {
     catch {
       case e: SnapshotConflictException =>
         fs.delete(new org.apache.hadoop.fs.Path(manifestDir(r), statsName), false)
-        try return republishPinnedRewrite(spark, fs, r, v, files.toSet,
+        try return republishPinnedRewrite(spark, head, head.files.toSet,
           newFiles, newStats, schemaLine, Seq.empty,
           carriesLines = false, e)
         catch {
@@ -5506,23 +5389,24 @@ object GraftCatalog {
         case _ => None
       }).sorted
     }
-    // ONE raw read per version, shared by the torn and fresh-torn
-    // passes below: (aged, has #eof, pending-unconfirmed). The pending
+    // ONE raw read per version, shared by every pass below: (aged, has
+    // #eof, pending-unconfirmed, its lines). The pending
     // reclassification applies ONLY to the trailing version — by
     // protocol a pending manifest blocks all successors, so any
     // version WITH successors was necessarily confirmed; treating it
     // as pending just because its marker no longer resolves (the
     // coordinator table was dropped later) would reap kept and even
     // tagged history of this table.
-    val vState: Map[Long, (Boolean, Boolean, Boolean, Option[String])] =
+    val vState: Map[Long, (Boolean, Boolean, Boolean, Seq[String])] =
       rawVs.map { v =>
         val p = new org.apache.hadoop.fs.Path(manifestDir(r), s"v$v.manifest")
         val aged = fs.getFileStatus(p).getModificationTime < horizon0
         val lines = readManifestRawLines(fs, r, v, strict = false)
         val sealed0 = lines.lastOption.contains("#eof")
         val pending = v == rawVs.last && sealed0 && txPendingFromLines(fs, r, lines)
-        v -> (aged, sealed0, pending, lines.find(_.startsWith("#txmarker:")))
+        v -> (aged, sealed0, pending, lines)
       }.toMap
+    def txMarkerLine(lines: Seq[String]) = lines.find(_.startsWith("#txmarker:"))
     // CLAIM-BEFORE-REAP (r18, ADVICE): an aged unconfirmed pending is
     // reapable only once this vacuum WINS the tx's marker path with a
     // reap tombstone — the same exclusive-create primitive the
@@ -5541,8 +5425,8 @@ object GraftCatalog {
     // candidate as "would reap" without side effects.
     val claimFailed: Set[Long] = if (!claim) Set.empty else
       vState.toSeq.collect {
-        case (v, (aged, _, true, Some(ml))) if aged =>
-          val marker = txMarkerPathOf(ml)
+        case (v, (aged, _, true, lines)) if aged && txMarkerLine(lines).nonEmpty =>
+          val marker = txMarkerPathOf(txMarkerLine(lines).get)
           val intent = txReapIntentPath(marker)
           scala.util.Try {
             fs.mkdirs(intent.getParent)
@@ -5584,17 +5468,20 @@ object GraftCatalog {
     // its slot is self-protecting and its fresh batch dirs sit inside
     // the orphan grace window, the same argument as fresh-torn). The
     // first pass reuses the shared per-version read; only the rare
-    // actual candidates pay the settle re-read.
+    // actual candidates pay the settle re-read, and one that settled
+    // sealed joins kept with the lines of THAT read.
     val allVs = rawVs
-    val freshTorn = allVs.filter { v =>
+    val settled: Map[Long, Seq[String]] = allVs.filter { v =>
       val (_, sealed0, pending, _) = vState(v)
       !torn.contains(v) && (!sealed0 || pending)
-    }.filter { v =>
+    }.map { v =>
       Thread.sleep(50)
-      val lines = readManifestRawLines(fs, r, v, strict = false)
-      !lines.lastOption.contains("#eof") ||
-        (v == rawVs.last && txPendingFromLines(fs, r, lines))
-    }
+      v -> readManifestRawLines(fs, r, v, strict = false)
+    }.toMap
+    val freshTorn = settled.collect {
+      case (v, lines) if !lines.lastOption.contains("#eof") ||
+        (v == rawVs.last && txPendingFromLines(fs, r, lines)) => v
+    }.toSet
     // Tagged versions are pinned: a release tag outlives routine
     // retention no matter where the horizon sits.
     val tagged = listSnapshotTags(spark, root).map(_._2).toSet
@@ -5608,27 +5495,23 @@ object GraftCatalog {
     // the dead-file sweep delete data still live in that version).
     // strict=false stays correct only on the OLD side, where a
     // half-reaped version merely enumerates deletion candidates.
-    val keepFiles = kept.flatMap(readManifest(fs, r, _, strict = true)).toSet
+    val keptM = kept.map(v => new Manifest(fs, r, v,
+      settled.getOrElse(v, vState(v)._4), strict = true))
+    val keepFiles = keptM.flatMap(_.files).toSet
     val rootPrefix = org.apache.hadoop.fs.Path
       .getPathWithoutSchemeAndAuthority(fs.makeQualified(r)).toString + "/"
-    val dead = old.flatMap(readManifest(fs, r, _, strict = false))
+    val dead = old.flatMap(v => new Manifest(fs, r, v, vState(v)._4, strict = false).files)
       .distinct.filterNot(keepFiles)
       .filter(_.startsWith(rootPrefix)) // never delete clone/branch-carried foreign files
     // Stats sidecars referenced by no surviving manifest — including
     // TRANSITIVELY through delta-chain `#include:` pointers
     // ([[writeStatsDelta]]): reaping a chain link under a kept head
     // would silently blind its pruning.
-    // ONE raw read per kept manifest, shared by the stats, segment and
-    // tx-ref passes below.
-    val keptRaw: Map[Long, Seq[String]] = kept.map(v =>
-      v -> readManifestRawLines(fs, r, v, strict = false)).toMap
     val keepStats = {
       val seen = scala.collection.mutable.Set.empty[String]
       def walk(n: String): Unit =
         if (seen.add(n)) statsIncludesOf(fs, r, n).foreach(walk)
-      kept.flatMap(v => keptRaw(v)
-        .filter(_.startsWith("#stats:")).map(_.stripPrefix("#stats:")))
-        .foreach(walk)
+      keptM.flatMap(_.statsName).foreach(walk)
       seen.toSet
     }
     val md = manifestDir(r)
@@ -5644,7 +5527,7 @@ object GraftCatalog {
     // manifest claim still pending) is never reaped from under its
     // commit. Kept manifests are read RAW: resolution would hide the
     // very pointers this pass must preserve.
-    val keepSegs = kept.flatMap(v => keptRaw(v)
+    val keepSegs = keptM.flatMap(_.dataRaw
       .filter(_.startsWith("#include:")).map(_.stripPrefix("#include:"))).toSet
     val staleSegments =
       if (!fs.exists(md)) Seq.empty
@@ -5657,13 +5540,7 @@ object GraftCatalog {
     // aged past the grace window so an in-flight MoR commit (sidecar
     // written, manifest not yet published) is never reaped from under
     // its publish.
-    val keepDv = kept.flatMap(v => readManifestLines(fs, r, v, strict = false)
-      .flatMap {
-        case l if l.startsWith("#dv:") => Some(l.stripPrefix("#dv:"))
-        case l if l.startsWith("#eqdel:") =>
-          Some(parseEqDel(l.stripPrefix("#eqdel:"))._1)
-        case _ => None
-      }).toSet
+    val keepDv = keptM.flatMap(m => m.dvNames ++ m.eqDels.map(parseEqDel(_)._1)).toSet
     val dd = deletesDir(r)
     val staleDeletes =
       if (!fs.exists(dd)) Seq.empty
@@ -5713,7 +5590,7 @@ object GraftCatalog {
     // sidecar, and an intent is load-bearing exactly while its marker
     // is empty — reaping either would flip a stable reaped verdict
     // back to confirmed.
-    val keptTxids: Set[String] = kept.flatMap(v => keptRaw(v).flatMap {
+    val keptTxids: Set[String] = keptM.flatMap(_.metaLines.flatMap {
       case l if l.startsWith("#txmarker:") =>
         Some(l.stripPrefix("#txmarker:").takeWhile(_ != ':'))
       case l if l.startsWith("#mtx:") => Some(l.stripPrefix("#mtx:"))
@@ -5722,8 +5599,8 @@ object GraftCatalog {
     // the trailing pending head (confirmed or not) also pins its refs:
     // it is not in `kept` but its visibility still hangs on them
     val pendingTxids: Set[String] = vState.values.flatMap {
-      case (_, _, true, Some(ml)) =>
-        Some(ml.stripPrefix("#txmarker:").takeWhile(_ != ':'))
+      case (_, _, true, lines) => txMarkerLine(lines)
+        .map(_.stripPrefix("#txmarker:").takeWhile(_ != ':'))
       case _ => None
     }.toSet
     val txDir = new org.apache.hadoop.fs.Path(refsDir(r), "tx")
@@ -6088,16 +5965,14 @@ object GraftCatalog {
       version: Option[Long] = None): DataFrame = {
     val spec = snapshotPartitionSpec(spark, root)
     require(spec.nonEmpty, s"no partition spec on $root")
-    val (fs, r) = fsOf(spark, root)
-    val v = version.getOrElse(snapshotVersions(spark, root).last)
-    val files = readManifest(fs, r, v)
-    val stats = readStats(spark, root, v)
+    val m = manifestOf(spark, root, version)
+    val (fs, r, files, stats) = (m.fs, m.r, m.files, m.stats)
     val activeId = readPartitionSpecsAt(fs, r).keys.max
     // LIVE row counts: deletion vectors subtract from their file's
     // physical count, so metadata==data holds on MoR-deleted tables
     // too (the only non-metadata touch is the DV sidecar itself,
     // deleted-rows-sized).
-    val dvCounts = new DvSet(spark, r, readDvNames(fs, r, v)).deletedRows(files)
+    val dvCounts = new DvSet(spark, r, m.dvNames).deletedRows(files)
     val grouped = files.groupBy { f =>
       // files written under a RETIRED spec report as unpartitioned
       // (all-null tuple) rather than misreading their positional
@@ -6139,11 +6014,9 @@ object GraftCatalog {
     * NULL for the affected measures rather than a wrong number. */
   def snapshotColumnProfile(spark: SparkSession, root: String,
       version: Option[Long] = None): DataFrame = {
-    val (fs, r) = fsOf(spark, root)
-    val v = version.getOrElse(snapshotVersions(spark, root).last)
-    val files = readManifest(fs, r, v)
-    val stats = readStats(spark, root, v)
-    require(files.forall(stats.contains), s"version $v of $root lacks stats")
+    val m = manifestOf(spark, root, version)
+    val (files, stats) = (m.files, m.stats)
+    require(files.forall(stats.contains), s"version ${m.v} of $root lacks stats")
     val tz = spark.sessionState.conf.sessionLocalTimeZone
     val perFile = files.map(stats)
     val nRows = perFile.map(_.rows).sum
@@ -6216,10 +6089,9 @@ object GraftCatalog {
     val (fs, r) = fsOf(spark, root)
     val vs = versionsAt(fs, r)
     if (vs.isEmpty) return None
-    val v = version.getOrElse(vs.last)
-    val files = readManifest(fs, r, v)
-    val cs = readSchemaLine(fs, r, v)
-    val stats = statsLogical(readStats(spark, root, v), cs)
+    val m = manifestAt(fs, r, version.getOrElse(vs.last))
+    val files = m.files
+    val stats = statsLogical(m.stats, m.schema)
     if (files.isEmpty || !files.forall(stats.contains)) return None
     val tz = spark.sessionState.conf.sessionLocalTimeZone
     val perFile = files.map(stats)
@@ -6335,10 +6207,9 @@ object GraftCatalog {
       where: Option[Column] = None): Long = {
     val spec = snapshotPartitionSpec(spark, root)
     require(spec.nonEmpty, s"no partition spec on $root")
-    val (fs, r) = fsOf(spark, root)
-    val head = snapshotVersions(spark, root).last
-    val files = readManifest(fs, r, head)
-    val stats = readStats(spark, root, head)
+    val head = headOf(spark, root)
+    val (fs, r, files) = (head.fs, head.r, head.files)
+    val stats = head.stats
     val specs = readPartitionSpecsAt(fs, r)
     val activeId = specs.keys.max
     // PARTITION-SCOPED compaction (Delta's `OPTIMIZE … WHERE`): only
@@ -6351,9 +6222,8 @@ object GraftCatalog {
     // handles bucket ordinals. Tuple-less files (pre-spec /
     // retired-spec) belong to no partition and stay out of a scoped
     // run — the unscoped spelling migrates them.
-    val scoped = where.fold(files)(pred => filesMayMatch(spark, fs, r,
-      files.filter(f => specIdOfPath(f) == activeId && filePartitionTuple(f).nonEmpty),
-      stats, readSchemaLine(fs, r, head), pred))
+    val scoped = where.fold(files)(pred => filesMayMatch(spark, head, pred)
+      .filter(f => specIdOfPath(f) == activeId && filePartitionTuple(f).nonEmpty))
     val groups = scoped.groupBy(f =>
       // retired-spec files group as tuple-less -> they MIGRATE into
       // the active layout alongside pre-spec files
@@ -6362,7 +6232,7 @@ object GraftCatalog {
     val rewrite0 = groups.collect {
       case (t, fsOfTup) if t.isEmpty || fsOfTup.size > 1 => fsOfTup
     }.flatten.toSeq.sorted
-    if (rewrite0.isEmpty) return head
+    if (rewrite0.isEmpty) return head.v
     // ONE-PASS convergence: migrating rows (pre-spec / retired-spec
     // files) land in active tuples that may already hold a carried
     // single file — which would leave 2 files per tuple and force a
@@ -6374,8 +6244,8 @@ object GraftCatalog {
     val rewrite: Seq[String] =
       if (migrating.isEmpty) rewrite0
       else {
-        val committed = readSchemaLine(fs, r, head)
-        val mdf = readLiveFiles(spark, fs, r, head, migrating)
+        val committed = head.schema
+        val mdf = readLiveFiles(spark, head, migrating)
         def declared(c: String) = committed
           .flatMap(cs => cs.fields.find(_.name == c)).map(_.dataType)
           .getOrElse(mdf.schema(c).dataType)
@@ -6413,11 +6283,11 @@ object GraftCatalog {
     // DV-aware rewrite: folds this partition's deleted positions into
     // the clean files; carried partitions keep their #dv protection
     // via commitCow's dv carry (their DV rows stay path-valid).
-    val newData = readLiveFiles(spark, fs, r, head, rewrite)
+    val newData = readLiveFiles(spark, head, rewrite)
     val confKey = "spark.sql.files.maxRecordsPerFile"
     val prior = spark.conf.getOption(confKey)
     maxRecords.foreach(n => spark.conf.set(confKey, n.toString))
-    try commitCow(spark, fs, r, head, carried, newData,
+    try commitCow(spark, head, carried, newData,
       Seq("#compact:partitioned"), rewriteOf = Some(rewriteSet))
     finally prior match {
       case Some(v) => spark.conf.set(confKey, v)
@@ -6569,19 +6439,17 @@ object GraftCatalog {
     * protects tags) to pin it for the clone's lifetime. */
   def cloneSnapshot(spark: SparkSession, srcRoot: String, dstRoot: String,
       version: Option[Long] = None): Long = {
-    val (sfs, sr) = fsOf(spark, srcRoot)
-    val v = version.getOrElse(snapshotVersions(spark, srcRoot).last)
-    val files = readManifest(sfs, sr, v)
-    val stats = readStats(spark, srcRoot, v)
+    val src = manifestOf(spark, srcRoot, version)
+    val (sfs, sr) = (src.fs, src.r)
     val (dfs, dr) = fsOf(spark, dstRoot)
-    require(snapshotVersions(spark, dstRoot).isEmpty,
+    require(versionsAt(dfs, dr).isEmpty,
       s"clone target $dstRoot already has snapshots")
     val statsName = writeStatsFile(spark, dfs, dr,
-      stats.values.toSeq.sortBy(_.path))
-    val schemaLine = readSchemaLine(sfs, sr, v).map(s => schemaLineOf(s)).toSeq
-    val dvLines = copyDvSidecars(sfs, sr, v, dfs, dr)
+      src.stats.values.toSeq.sortBy(_.path))
+    val schemaLine = src.schema.map(s => schemaLineOf(s)).toSeq
+    val dvLines = copyDvSidecars(src, dfs, dr)
     publishManifest(dfs, dr, 1L,
-      Seq(s"#stats:$statsName") ++ schemaLine ++ dvLines ++ files)
+      Seq(s"#stats:$statsName") ++ schemaLine ++ dvLines ++ src.files)
     // The clone inherits the source's TABLE CONFIGURATION — CHECK
     // constraints, partition spec, bloom enrollment, sort order — or a
     // clone of a governed table would silently write unvalidated,
@@ -6678,18 +6546,14 @@ object GraftCatalog {
     if (head != base) throw new SnapshotConflictException(
       s"branch $name forked at v$base but $root is at v$head — " +
         "fast-forward would discard parent commits; rebase the branch")
-    val br = snapshotBranchRoot(root, name)
-    val (bfs, br2) = fsOf(spark, br)
-    val bHead = snapshotVersions(spark, br).last
-    val files = readManifest(bfs, br2, bHead)
-    val stats = readStats(spark, br, bHead)
+    val b = headOf(spark, snapshotBranchRoot(root, name))
     val (fs, r) = fsOf(spark, root)
-    val statsName = writeStatsFile(spark, fs, r, stats.values.toSeq.sortBy(_.path))
-    val schemaLine = readSchemaLine(bfs, br2, bHead).map(s => schemaLineOf(s)).toSeq
-    val dvLines = copyDvSidecars(bfs, br2, bHead, fs, r)
+    val statsName = writeStatsFile(spark, fs, r, b.stats.values.toSeq.sortBy(_.path))
+    val schemaLine = b.schema.map(s => schemaLineOf(s)).toSeq
+    val dvLines = copyDvSidecars(b, fs, r)
     publishManifest(fs, r, head + 1,
       Seq(s"#stats:$statsName", s"#branch-merge:$name") ++ meta ++
-        schemaLine ++ dvLines ++ files)
+        schemaLine ++ dvLines ++ b.files)
     head + 1
   }
 
@@ -7168,25 +7032,20 @@ object GraftCatalog {
       name: String, scope: Column,
       original: SnapshotConflictException,
       meta: Seq[String] = Seq.empty): Long = {
-    val base = resolveSnapshotTag(spark, root, branchBaseTag(name))
-    val br = snapshotBranchRoot(root, name)
-    val (bfs, br2) = fsOf(spark, br)
+    val b = headOf(spark, snapshotBranchRoot(root, name))
+    val (bfs, br2) = (b.fs, b.r)
     val (fs, r) = fsOf(spark, root)
-    val bHead = snapshotVersions(spark, br).last
-    def dvAt(v: Long): Set[String] =
-      readManifestLines(bfs, br2, v).filter(l =>
-        l.startsWith("#dv:") || l.startsWith("#eqdel:")).toSet
-    val bDvFork = dvAt(1L)
-    val bDvHead = dvAt(bHead)
+    val bDvFork = (if (b.v == 1L) b else manifestAt(bfs, br2, 1L)).deleteLines.toSet
+    val bDvHead = b.deleteLines.toSet
     if ((bDvFork -- bDvHead).nonEmpty) throw original
     val dvAdded = (bDvHead -- bDvFork).toSeq.sorted
-    val schemaLine = readSchemaLine(bfs, br2, bHead).map(schemaLineOf)
-      .getOrElse(throw original)
-    val forkFiles = readManifest(fs, r, base).toSet
-    val bFiles = readManifest(bfs, br2, bHead)
+    val schemaLine = b.schema.map(schemaLineOf).getOrElse(throw original)
+    val fork = manifestAt(fs, r, resolveSnapshotTag(spark, root, branchBaseTag(name)))
+    val forkFiles = fork.files.toSet
+    val bFiles = b.files
     val consumed = forkFiles -- bFiles.toSet
     val newFiles = bFiles.filterNot(forkFiles)
-    val newStats = readStats(spark, br, bHead)
+    val newStats = b.stats
       .collect { case (p, st) if newFiles.contains(p) => st }.toSeq
     // Targets a grafted line still covers = its referenced paths that
     // are still in the BRANCH head's list (a path a later branch verb
@@ -7203,7 +7062,7 @@ object GraftCatalog {
       fs.delete(new org.apache.hadoop.fs.Path(deletesDir(r), n), true)
     }
     val v =
-      try republishPinnedRewrite(spark, fs, r, base, consumed, newFiles,
+      try republishPinnedRewrite(spark, fork, consumed, newFiles,
         newStats, schemaLine, meta = Seq(s"#txn-merge:$name") ++ meta,
         carriesLines = true, original,
         scopeDisjoint =

@@ -891,4 +891,67 @@ class MorDvSpec extends AnyFunSuite {
     assert(added.size == 2, s"${added.size} broadcasts: the DV and key probes expected")
     assert(t.count() == 998 && t.where(col("id").isin(7L, 300L)).isEmpty)
   }
+
+  /** Runs `body` under a session whose `file:` paths go through
+    * [[org.apache.spark.GraftManifestOpens]], which counts the driver's
+    * manifest opens. */
+  private def countingManifestOpens[T](body: => T): T = {
+    val confs = org.apache.spark.GraftManifestOpens.confs
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body finally confs.foreach { case (k, _) => spark.conf.unset(k) }
+  }
+
+  test("a verb opens its head's manifest once, and vacuum each listed manifest at most once") {
+    import spark.implicits._
+    val opens = org.apache.spark.GraftManifestOpens
+    countingManifestOpens {
+      val root = freshTable("opens")
+      // the listing first records the head's visibility, so what a verb
+      // adds is its own resolve
+      def headOpens(verb: => Any): Int = {
+        val head = GraftCatalog.snapshotVersions(spark, root).last
+        val before = opens.of(root, head)
+        verb
+        opens.of(root, head) - before
+      }
+      def row(id: Long) = Seq((id, id % 7, id * 10)).toDF("id", "grp", "amount")
+      val counts = Seq(
+        "commitSnapshot" -> headOpens(
+          GraftCatalog.commitSnapshot(row(1000L), root, append = true)),
+        "mergeSnapshotKeys" -> headOpens(
+          GraftCatalog.mergeSnapshotKeys(spark, root, row(5L), Seq("id"))),
+        "mergeSnapshotMorKeys" -> headOpens(
+          GraftCatalog.mergeSnapshotMorKeys(spark, root, row(6L), Seq("id"))),
+        "deleteSnapshotKeysMor" -> headOpens(
+          GraftCatalog.deleteSnapshotKeysMor(spark, root, Seq(7L).toDF("id"), Seq("id"))),
+        "deleteSnapshotWhereMor" -> headOpens(
+          GraftCatalog.deleteSnapshotWhereMor(spark, root, col("id") === 8L)),
+        "updateSnapshotWhereMor" -> headOpens(GraftCatalog.updateSnapshotWhereMor(
+          spark, root, col("id") === 9L, Seq("amount" -> lit(0L)))),
+        "deleteSnapshotWhere" -> headOpens(
+          GraftCatalog.deleteSnapshotWhere(spark, root, col("id") === 10L)),
+        "updateSnapshotWhere" -> headOpens(GraftCatalog.updateSnapshotWhere(
+          spark, root, col("id") === 11L, Seq("amount" -> lit(0L)))),
+        "readSnapshot" -> headOpens(GraftCatalog.readSnapshot(
+          spark, root, predicate = Some(col("id") < 100L)).collect()))
+      assert(counts.forall(_._2 == 1), counts.mkString(", "))
+      val t = GraftCatalog.readSnapshot(spark, root)
+      assert(t.count() == 998 && t.where(col("id").isin(7L, 8L, 10L)).isEmpty)
+      assert(t.where(col("id").isin(9L, 11L)).select("amount").as[Long].collect().toSeq ==
+        Seq(0L, 0L))
+      // a fresh torn manifest (a publish in flight) is read once more by
+      // the vacuum's settle beat, and neither kept nor reaped
+      val vs = GraftCatalog.snapshotVersions(spark, root)
+      val torn = vs.last + 1
+      java.nio.file.Files.write(java.nio.file.Paths.get(s"$root/_manifests/v$torn.manifest"),
+        "#stats:none\n".getBytes("UTF-8"))
+      val all = vs :+ torn
+      val before = all.map(v => v -> opens.of(root, v)).toMap
+      GraftCatalog.vacuumSnapshots(spark, root, vs.last)
+      val read = all.map(v => v -> (opens.of(root, v) - before(v))).toMap
+      assert(vs.forall(read(_) <= 1) && read(torn) == 2, read.toSeq.sorted.mkString(", "))
+      assert(new java.io.File(s"$root/_manifests/v$torn.manifest").exists())
+      assert(GraftCatalog.readSnapshot(spark, root, Some(vs.last)).count() == 998)
+    }
+  }
 }
