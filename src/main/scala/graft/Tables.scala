@@ -121,7 +121,7 @@ object Tables {
     * sort-before-repartition tax, still deterministic).
     * `spark.graft.spread.enabled=false` turns every call into the
     * identity — the escape hatch that also powers same-session
-    * interleaved A/B measurement (SpreadAB). */
+    * interleaved A/B measurement (`ConfAB spark.graft.spread.enabled false true …`). */
   def spreadEnabled(spark: SparkSession): Boolean =
     spark.conf.getOption("spark.graft.spread.enabled").forall(_.toBoolean)
 

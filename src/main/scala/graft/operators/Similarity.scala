@@ -167,23 +167,42 @@ object Similarity {
     * cosine 0.37), so recall 0.6-0.8 costs a ~35% scan — on a real
     * embedding corpus with tighter neighbors the same plan prunes far
     * harder. */
-  /** Candidate-export paths are scoped PER SOURCE DATASET (r13 ADVICE):
-    * two concurrent runs at different SFs previously raced on one fixed
-    * path, and the oracle's result silently depended on which run wrote
-    * last. Each query records the path it wrote into [[exportPaths]];
-    * the oracle strings are defs and [[all]] is a def, so
-    * `SparkEntry.oracleSql` — which Verify evaluates AFTER running the
-    * queries — always names the export THIS run produced. */
+  /** Candidate-export paths are scoped PER SOURCE DATASET AND PROCESS
+    * (`<stage>-<dataset hash>-<pid>`): two runs at different SFs, or two
+    * processes at one SF, would otherwise race on one path, and the
+    * oracle's result would silently depend on which wrote last. Each
+    * query records the path it wrote into [[exportPaths]]; the oracle
+    * strings are defs and [[all]] is a def, so `SparkEntry.oracleSql` —
+    * which Verify evaluates in the same JVM AFTER running the queries —
+    * always names the export THIS process produced. A process's first
+    * export reaps dead processes' exports ([[reapDeadExports]]). */
   private[graft] val exportPaths =
     new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private lazy val reapedDeadExports: Unit = reapDeadExports()
   private[graft] def exportPath(stage: String, d: String): String = {
-    val p = s"$IndexRoot/$stage-${math.abs(d.hashCode.toLong)}"
+    reapedDeadExports
+    val p = s"$IndexRoot/$stage-${math.abs(d.hashCode.toLong)}-${ProcessHandle.current.pid}"
     exportPaths.put(stage, p)
     p
   }
   private[graft] def oracleExportPath(stage: String): String =
     exportPaths.getOrDefault(stage,
       s"$IndexRoot/$stage-${math.abs("/root/testdata/sf0.01".hashCode.toLong)}")
+
+  private val ExportDir = raw"[A-Za-z0-9]+-\d+-(\d+)".r
+
+  /** Delete each `<stage>-<hash>-<pid>` export (no other name under the
+    * index root has that shape) whose process is gone and which was last
+    * written a day ago or more: a finished Verify's exports must outlive
+    * it until the oracle compare has read them. */
+  private[graft] def reapDeadExports(): Unit = {
+    val cutoff = System.currentTimeMillis() - 24L * 3600 * 1000
+    Option(new java.io.File(IndexRoot).listFiles()).toSeq.flatten.foreach(f => f.getName match {
+      case ExportDir(pid) if f.lastModified < cutoff && !ProcessHandle.of(pid.toLong).isPresent =>
+        rmTree(f)
+      case _ =>
+    })
+  }
 
   private[graft] def s02ExportPath(d: String) = exportPath("s02cand", d)
 

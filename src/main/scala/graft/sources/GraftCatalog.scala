@@ -765,60 +765,6 @@ object GraftCatalog {
     * per-read segment fan-in. */
   @volatile private[graft] var manifestMaxIncludes: Int = 64
 
-  /** Per-TABLE overrides of the three segment/chain thresholds —
-    * `_refs/manifest.conf`, the same create-exclusive immutable conf
-    * surface as `bloom.conf`/`sort.conf`, and clone-inherited like
-    * them. A hot CDC target can seal/coalesce far more aggressively
-    * than the engine default without touching any other table. */
-  def setSnapshotManifestConf(spark: SparkSession, root: String,
-      inlineMax: Option[Int] = None, maxIncludes: Option[Int] = None,
-      statsDepthMax: Option[Int] = None): Unit = {
-    require(inlineMax.forall(_ >= 1) && maxIncludes.forall(_ >= 1) &&
-      statsDepthMax.forall(_ >= 0),
-      "inline.max and include.max must be >= 1; stats.depth.max must be >= 0")
-    val (fs, r) = fsOf(spark, root)
-    fs.mkdirs(refsDir(r))
-    val lines =
-      inlineMax.map(v => s"inline.max\t$v").toSeq ++
-        maxIncludes.map(v => s"include.max\t$v") ++
-        statsDepthMax.map(v => s"stats.depth.max\t$v")
-    require(lines.nonEmpty, "no manifest conf values given")
-    val p = new org.apache.hadoop.fs.Path(refsDir(r), "manifest.conf")
-    if (!claimExclusive(fs, p, lines.mkString("", "\n", "\n").getBytes("UTF-8")))
-      throw new IllegalStateException(s"manifest config already set on $root")
-  }
-
-  /** The table's OWN `manifest.conf` entries (empty when unset) — the
-    * SHOW TBLPROPERTIES surface; commit paths go through
-    * [[manifestConfAt]] which folds in the engine defaults. */
-  def snapshotManifestConf(spark: SparkSession, root: String): Map[String, Int] = {
-    val (fs, r) = fsOf(spark, root)
-    manifestConfKv(fs, r)
-  }
-
-  private def manifestConfKv(fs: org.apache.hadoop.fs.FileSystem,
-      r: org.apache.hadoop.fs.Path): Map[String, Int] = {
-    val p = new org.apache.hadoop.fs.Path(refsDir(r), "manifest.conf")
-    if (!fs.exists(p)) return Map.empty
-    val in = fs.open(p)
-    try scala.io.Source.fromInputStream(in, "UTF-8").getLines()
-      .filter(_.nonEmpty).map { l =>
-        val Array(k, v) = l.split("\t", 2); k -> v.trim.toInt
-      }.toMap
-    finally in.close()
-  }
-
-  /** (inlineMax, maxIncludes, statsDepthMax) governing commits to this
-    * root: the table's own `manifest.conf` where set, the engine
-    * defaults otherwise. */
-  private def manifestConfAt(fs: org.apache.hadoop.fs.FileSystem,
-      r: org.apache.hadoop.fs.Path): (Int, Int, Int) = {
-    val kv = manifestConfKv(fs, r)
-    (kv.getOrElse("inline.max", manifestInlineMax),
-      kv.getOrElse("include.max", manifestMaxIncludes),
-      kv.getOrElse("stats.depth.max", statsMaxDepth))
-  }
-
   /** Segment cache, bounded by TOTAL CACHED LINES (entries are whole
     * file lists — a count-bounded LRU could pin gigabytes). 2M lines
     * ≈ 300–400 MB of path strings worst case: two full manifests of a
@@ -1378,7 +1324,8 @@ object GraftCatalog {
     * (batch dir, sorted data-file paths, their statuses). */
   private def writeBatch(spark: SparkSession,
       fs: org.apache.hadoop.fs.FileSystem, r: org.apache.hadoop.fs.Path,
-      df0: DataFrame, headSchema: Option[org.apache.spark.sql.types.StructType])
+      df0: DataFrame, headSchema: Option[org.apache.spark.sql.types.StructType],
+      refs: Refs)
       : (org.apache.hadoop.fs.Path, Seq[String],
         Seq[org.apache.hadoop.fs.FileStatus], Option[BatchObs]) = {
     // Column mapping: data files ALWAYS store physical names, so a
@@ -1399,17 +1346,14 @@ object GraftCatalog {
     val scanMax0 = spark.conf.getOption("spark.graft.stats.verbScanMaxBytes")
       .map(_.toLong).getOrElse(256L << 20)
     val batchObs =
-      if (statFields.isEmpty || scanMax0 <= 0 ||
-          readBloomConfAt(fs, r).nonEmpty) None
+      if (statFields.isEmpty || scanMax0 <= 0 || refs.bloom.nonEmpty) None
       else Some(BatchObs(statFields,
         org.apache.spark.sql.Observation(s"graft_stats_${writerToken()}")))
     val df = batchObs.fold(df1) { bo =>
       val aggs = batchObserveAggs(bo.fields)
       df1.observe(bo.obs, aggs.head, aggs.tail: _*)
     }
-    val specs = readPartitionSpecsAt(fs, r)
-    val specId = if (specs.isEmpty) 0 else specs.keys.max
-    val spec = specs.getOrElse(specId, Seq.empty)
+    val (specId, spec) = (refs.activeSpecId, refs.spec)
     // spec-1 batches keep the legacy `data/b…` name; evolved-spec
     // batches encode their spec id so per-file pruning knows which
     // spec's fields a path tuple means (specIdOfPath)
@@ -1419,7 +1363,7 @@ object GraftCatalog {
     // Declared sort order: applied within write tasks (after the
     // partition-tuple shuffle when one exists) so every file's row
     // groups carry tight sort-key envelopes.
-    val sortCols = readSortOrderAt(fs, r)
+    val sortCols = refs.sortOrder
     def sorted(d: DataFrame, prefix: Seq[Column]): DataFrame =
       if (sortCols.isEmpty) d
       else d.sortWithinPartitions(prefix ++ sortCols.map(col): _*)
@@ -1670,11 +1614,11 @@ object GraftCatalog {
   private def writeStatsDelta(spark: SparkSession,
       fs: org.apache.hadoop.fs.FileSystem, r: org.apache.hadoop.fs.Path,
       prevName: Option[String], newStats: Seq[FileStat],
-      liveAtFlatten: => Set[String]): String =
+      liveAtFlatten: => Set[String], refs: Refs): String =
     prevName match {
       case None => writeStatsFile(spark, fs, r, newStats.sortBy(_.path))
       case Some(prev) =>
-        val depthMax = manifestConfAt(fs, r)._3
+        val depthMax = refs.manifestConf._3
         val d =
           try statsChainDepth(fs, r, prev)
           catch { case _: java.io.FileNotFoundException => -1 }
@@ -1948,7 +1892,6 @@ object GraftCatalog {
       expectedHead: Option[Long], known: Option[Manifest],
       rewriteOf: Option[Set[String]]): Long = {
     val spark = df.sparkSession
-    validateChecks(spark, root, df)
     // `expectedHead` PINS the commit's base (a REWRITE's contract —
     // compaction preserves content, so publishing a stale version's
     // rewrite over a concurrent commit's head would ERASE that
@@ -1974,10 +1917,12 @@ object GraftCatalog {
       }
     }
     resolveBase()
+    val refs = refsOf(fs, r)
+    validateChecks(spark, root, refs, base, df)
     val (batch, newFiles, newStatuses, batchObs) =
-      writeBatch(spark, fs, r, df, base.flatMap(_.schema))
+      writeBatch(spark, fs, r, df, base.flatMap(_.schema), refs)
     val newStats = batchFileStats(spark, newFiles, fsMetaOf(newStatuses),
-      readBloomConfAt(fs, r), batchObs)
+      refs.bloom, batchObs)
     var attempt = 0
     while (true) {
       resolveBase() // a racer that landed during the batch write is the base
@@ -1988,7 +1933,7 @@ object GraftCatalog {
       // first commits write flat.
       val statsName = carry match {
         case Some(b) => writeStatsDelta(spark, fs, r, b.statsName, newStats,
-          liveAtFlatten = b.files.toSet ++ newFiles)
+          liveAtFlatten = b.files.toSet ++ newFiles, refs)
         case None => writeStatsFile(spark, fs, r, newStats.sortBy(_.path))
       }
       // Committed schema: an overwrite IS the batch's schema; an append
@@ -2020,7 +1965,7 @@ object GraftCatalog {
       try {
         publishManifest(fs, r, next,
           Seq(s"#stats:$statsName", schemaLine) ++ carry.toSeq.flatMap(_.deleteLines) ++
-            meta ++ carry.toSeq.flatMap(_.dataRaw) ++ newFiles)
+            meta ++ carry.toSeq.flatMap(_.dataRaw) ++ newFiles, refs)
         return next
       } catch {
         case e: SnapshotConflictException =>
@@ -2039,7 +1984,7 @@ object GraftCatalog {
           // one, a schema flip) falls through to the abort+replan path.
           if (expectedHead.isDefined && rewriteOf.isDefined) {
             try return republishPinnedRewrite(spark,
-              base.getOrElse(manifestAt(fs, r, expectedHead.get)), rewriteOf.get,
+              base.getOrElse(manifestAt(fs, r, expectedHead.get)), refs, rewriteOf.get,
               newFiles, newStats, schemaLine, meta, carriesLines = append, e)
             catch {
               case e2: SnapshotConflictException =>
@@ -2117,7 +2062,7 @@ object GraftCatalog {
     * union application is idempotent, so overlap with racer sidecars
     * is harmless. */
   private def republishPinnedRewrite(spark: SparkSession,
-      base: Manifest, consumed: Set[String], newFiles: Seq[String],
+      base: Manifest, refs: Refs, consumed: Set[String], newFiles: Seq[String],
       newStats: Seq[FileStat], schemaLine: String, meta: Seq[String],
       carriesLines: Boolean, original: SnapshotConflictException,
       scopeDisjoint: Option[org.apache.spark.sql.catalyst.expressions.Expression] = None,
@@ -2157,7 +2102,7 @@ object GraftCatalog {
         // DISJOINT from the scope (then the deleted rows are out of
         // scope too). Unprovable → the strict abort stands.
         lazy val mayMatch =
-          filePruner(spark, fs, r, statsLogical(head.stats, head.schema), head.schema)
+          filePruner(spark, refs, statsLogical(head.stats, head.schema), head.schema)
         val racerDvNew = (headDvEq -- baseDvEq).toSeq
         if (racerDeletesOutOfScope && racerDvNew.nonEmpty &&
             deleteLineTargets(spark, r, racerDvNew, headFiles).exists(mayMatch(_, scope)))
@@ -2169,14 +2114,14 @@ object GraftCatalog {
       // re-publish only rewrites manifest text for segments the
       // rewrite actually consumed files from
       val statsName = writeStatsDelta(spark, fs, r, head.statsName,
-        newStats, liveAtFlatten = carriedFiles.toSet ++ newFiles)
+        newStats, liveAtFlatten = carriedFiles.toSet ++ newFiles, refs)
       val dvLines =
         ((if (carriesLines) headDvEq else headDvEq -- baseDvEq)
           ++ extraDvLines).toSeq.distinct.sorted
       try {
         publishManifest(fs, r, head.v + 1,
           Seq(s"#stats:$statsName", schemaLine) ++ dvLines ++ meta ++
-            head.dataRawExcluding(consumed) ++ newFiles)
+            head.dataRawExcluding(consumed) ++ newFiles, refs)
         return head.v + 1
       } catch {
         case _: SnapshotConflictException =>
@@ -2498,7 +2443,8 @@ object GraftCatalog {
     val keys = feedSet(spark, updates, pks, probeableKeys(updates, pks, head.schema))
     try {
       if (keys.isEmpty) return head.v
-      validateChecks(spark, root, updates)
+      val refs = refsOf(head.fs, head.r)
+      validateChecks(spark, root, refs, Some(head), updates)
       val (_, carried, survivors) = pinFilesByKeys(spark, head, keys, pks)
       // Schema evolution (opt-in, Delta's mergeSchema-on-MERGE): columns
       // new in `updates` land in the rewritten batch; carried files stay
@@ -2516,7 +2462,7 @@ object GraftCatalog {
       // but carrying OUR file list rather than blind-appending the head.
       // A lost race re-validates against the merge's key envelope —
       // disjoint concurrent ingest no longer starves a backfill MERGE.
-      commitCow(spark, head, carried, newData, meta,
+      commitCow(spark, head, refs, carried, newData, meta,
         scopePred = Some(() => keyScopeEnvelope(keys.frame, pks)))
     } finally keys.release()
   }
@@ -2617,13 +2563,14 @@ object GraftCatalog {
         // must survive; a metadata-only seqCol is clipped by the
         // table-schema select below like any other extra column.
         val upserts = pinned.where(col(opCol) =!= "D").drop(opCol)
-        validateChecks(spark, root, upserts)
+        val refs = refsOf(head.fs, head.r)
+        validateChecks(spark, root, refs, Some(head), upserts)
         val (matchedFiles, carried, survivors) = pinFilesByKeys(spark, head, keys, pks)
         // every op is I, U or D by now: the upserts are empty iff all are D
         if (matchedFiles.isEmpty && ops == Set("D")) return head.v
         val newData = survivors.unionByName(
           upserts.select(survivors.columns.toSeq.map(col): _*))
-        commitCow(spark, head, carried, newData, meta,
+        commitCow(spark, head, refs, carried, newData, meta,
           scopePred = Some(() => keyScopeEnvelope(keys.frame, pks)))
       } finally keys.release()
     } finally pinned.unpersist()
@@ -2675,13 +2622,14 @@ object GraftCatalog {
   def deleteSnapshotWhere(spark: SparkSession, root: String,
       pred: Column, meta: Seq[String] = Seq.empty): Long = {
     val head = headOf(spark, root)
-    val matchedFiles = pinFilesWhere(spark, head, filesMayMatch(spark, head, pred), pred)
+    val refs = refsOf(head.fs, head.r)
+    val matchedFiles = pinFilesWhere(spark, head, filesMayMatch(spark, head, refs, pred), pred)
     if (matchedFiles.isEmpty) return head.v
     val carried = head.files.filterNot(matchedFiles)
     // DELETE WHERE p removes rows where p is TRUE; FALSE and NULL stay.
     val survivors = readLiveFiles(spark, head, matchedFiles.toSeq.sorted)
       .where(!coalesce(pred, lit(false)))
-    commitCow(spark, head, carried, survivors, meta,
+    commitCow(spark, head, refs, carried, survivors, meta,
       scopePred = Some(() => Some(pred)))
   }
 
@@ -2878,7 +2826,8 @@ object GraftCatalog {
         head.files.map(f => org.apache.spark.sql.catalyst.InternalRow(
           org.apache.spark.unsafe.types.UTF8String.fromString(f))),
         eqSidecar(r, name, "cover"))
-      publishDeleteLine(head, s"#eqdel:$name:${physPks.mkString(",")}", meta,
+      publishDeleteLine(head, refsOf(head.fs, head.r),
+        s"#eqdel:$name:${physPks.mkString(",")}", meta,
         new org.apache.hadoop.fs.Path(deletesDir(r), name))
     } finally feed.release()
   }
@@ -2888,11 +2837,11 @@ object GraftCatalog {
     * `meta`: the metadata-only commit of the MoR deletes, which rewrite
     * no data file. A lost race deletes `sidecar`, the files `line`
     * references, and rethrows — the shared serializable contract. */
-  private def publishDeleteLine(head: Manifest, line: String, meta: Seq[String],
-      sidecar: org.apache.hadoop.fs.Path): Long = {
+  private def publishDeleteLine(head: Manifest, refs: Refs, line: String,
+      meta: Seq[String], sidecar: org.apache.hadoop.fs.Path): Long = {
     val next = head.v + 1
     try publishManifest(head.fs, head.r, next,
-      head.carriedMeta() ++ (line +: meta) ++ head.dataRaw)
+      head.carriedMeta() ++ (line +: meta) ++ head.dataRaw, refs)
     catch {
       case e: SnapshotConflictException =>
         head.fs.delete(sidecar, true)
@@ -2915,36 +2864,6 @@ object GraftCatalog {
       case Some(v) => v // replay — already applied
       case None => deleteSnapshotKeysMor(spark, root, keys, pks,
         meta = Seq(s"$prefix$batchId"))
-    }
-  }
-
-  /** Declare the table's row-level WRITE MODE — `"cow"` (default:
-    * DELETE/UPDATE/MERGE rewrite touched files) or `"mor"` (they
-    * publish deletion vectors + appended batches instead). Consulted
-    * by the SQL DML lowering so a pure-SQL client gets the table
-    * owner's chosen physics; the Scala verbs stay explicit. MUTABLE
-    * (an ALTER-able table property, unlike the create-exclusive
-    * layout configs): last write wins, which is safe because both
-    * modes produce the same logical table. */
-  def setSnapshotWriteMode(spark: SparkSession, root: String,
-      mode: String): Unit = {
-    require(mode == "cow" || mode == "mor", s"write mode must be cow|mor: $mode")
-    val (fs, r) = fsOf(spark, root)
-    fs.mkdirs(refsDir(r))
-    val out = fs.create(new org.apache.hadoop.fs.Path(refsDir(r), "write.mode"), true)
-    try out.write(s"$mode\n".getBytes("UTF-8")) finally out.close()
-  }
-
-  /** The table's declared write mode (default `"cow"`). */
-  def snapshotWriteMode(spark: SparkSession, root: String): String = {
-    val (fs, r) = fsOf(spark, root)
-    val p = new org.apache.hadoop.fs.Path(refsDir(r), "write.mode")
-    if (!fs.exists(p)) "cow"
-    else {
-      val in = fs.open(p)
-      try scala.io.Source.fromInputStream(in, "UTF-8").getLines()
-        .next().trim
-      finally in.close()
     }
   }
 
@@ -3036,7 +2955,8 @@ object GraftCatalog {
   def deleteSnapshotWhereMor(spark: SparkSession, root: String,
       pred: Column, meta: Seq[String] = Seq.empty): Long = {
     val head = headOf(spark, root)
-    val candidates = filesMayMatch(spark, head, pred)
+    val refs = refsOf(head.fs, head.r)
+    val candidates = filesMayMatch(spark, head, refs, pred)
     if (candidates.isEmpty) return head.v
     // live rows only: a row a prior DV or equality delete already
     // removed is no hit, so it is never deleted (and streamed) twice
@@ -3046,7 +2966,7 @@ object GraftCatalog {
       case Some(n) => n
       case None => return head.v // nothing live matched: a no-op
     }
-    publishDeleteLine(head, s"#dv:$name", meta, dvSidecar(head.r, name))
+    publishDeleteLine(head, refs, s"#dv:$name", meta, dvSidecar(head.r, name))
   }
 
   /** MERGE-ON-READ row-level UPDATE: `UPDATE t SET … WHERE pred` as a
@@ -3064,7 +2984,8 @@ object GraftCatalog {
       meta: Seq[String] = Seq.empty): Long = {
     val head = headOf(spark, root)
     val (fs, r) = (head.fs, head.r)
-    val candidates = filesMayMatch(spark, head, pred)
+    val refs = refsOf(fs, r)
+    val candidates = filesMayMatch(spark, head, refs, pred)
     if (candidates.isEmpty) return head.v
     // the hits persist: the DV write computes them, the batch reuses them
     val hit = readLiveFiles(spark, head, candidates, withPos = true)
@@ -3088,13 +3009,13 @@ object GraftCatalog {
       try {
         require(unknown.isEmpty,
           s"UPDATE SET on unknown column(s): ${unknown.mkString(", ")}")
-        validateChecks(spark, root, updated)
+        validateChecks(spark, root, refs, Some(head), updated)
       } catch {
         case scala.util.control.NonFatal(e) =>
           fs.delete(new org.apache.hadoop.fs.Path(deletesDir(r), dv), true)
           throw e
       }
-      publishDvPlusBatch(spark, head, Some(dv), updated, meta)
+      publishDvPlusBatch(spark, head, refs, Some(dv), updated, meta)
     } finally hit.unpersist()
   }
 
@@ -3156,7 +3077,7 @@ object GraftCatalog {
         publishManifest(fs, r, next,
           head.carriedMeta(eqDels = false) ++
             extraDv.map(n => s"#dv:$n").toSeq ++
-            ("#rewrite:eqdels" +: meta) ++ head.dataRaw)
+            ("#rewrite:eqdels" +: meta) ++ head.dataRaw, refsOf(fs, r))
         next
       } catch {
         case e: SnapshotConflictException => cleanup; throw e
@@ -3183,7 +3104,8 @@ object GraftCatalog {
     val keys = feedSet(spark, updates, pks, probeableKeys(updates, pks, cs))
     try {
       if (keys.isEmpty) return head.v
-      validateChecks(spark, root, updates)
+      val refs = refsOf(head.fs, head.r)
+      validateChecks(spark, root, refs, Some(head), updates)
       val tableCols = cs.map(_.fieldNames.toSeq)
         .getOrElse(spark.read.parquet(files.head).columns.toSeq)
       // Schema evolution (opt-in, mirrors the CoW contract): evolved
@@ -3205,7 +3127,7 @@ object GraftCatalog {
         if (candidates.isEmpty) None
         else writeDv(spark, head.fs, head.r,
           keys.keep(readLiveFiles(spark, head, candidates, withPos = true)))
-      publishDvPlusBatch(spark, head, dv, batch, meta)
+      publishDvPlusBatch(spark, head, refs, dv, batch, meta)
     } finally keys.release()
   }
 
@@ -3227,10 +3149,10 @@ object GraftCatalog {
     * publish `head`'s next version carrying ALL its files plus the already-written
     * DV sidecar `dvName` ([[writeDv]]; None for a pure append).
     * Conflict aborts clean up both the sidecar and the batch. */
-  private def publishDvPlusBatch(spark: SparkSession, head: Manifest,
+  private def publishDvPlusBatch(spark: SparkSession, head: Manifest, refs: Refs,
       dvName: Option[String], newData: DataFrame, meta: Seq[String]): Long = {
     try {
-      commitCow(spark, head, carried = head.files,
+      commitCow(spark, head, refs, carried = head.files,
         newData = newData, meta = dvName.map(n => s"#dv:$n").toSeq ++ meta)
     } catch {
       case e: SnapshotConflictException =>
@@ -3790,8 +3712,8 @@ object GraftCatalog {
     * conflict path (a merge's key envelope costs one agg over the
     * source — never paid on the conflict-free fast path); `None` from
     * the thunk means "no provable scope" and keeps the strict abort. */
-  private def commitCow(spark: SparkSession, head: Manifest, carried: Seq[String],
-      newData: DataFrame, meta: Seq[String],
+  private def commitCow(spark: SparkSession, head: Manifest, refs: Refs,
+      carried: Seq[String], newData: DataFrame, meta: Seq[String],
       rewriteOf: Option[Set[String]] = None,
       scopePred: Option[() => Option[Column]] = None): Long = {
     val (fs, r) = (head.fs, head.r)
@@ -3807,11 +3729,11 @@ object GraftCatalog {
       s"CoW carry must be a subset of v${head.v}'s files")
     val consumed = headResolved -- carriedSet
     val (batch, newFiles, newStatuses, batchObs) =
-      writeBatch(spark, fs, r, newData, head.schema)
+      writeBatch(spark, fs, r, newData, head.schema, refs)
     val newStats = batchFileStats(spark, newFiles, fsMetaOf(newStatuses),
-      readBloomConfAt(fs, r), batchObs)
+      refs.bloom, batchObs)
     val statsName = writeStatsDelta(spark, fs, r, head.statsName,
-      newStats, liveAtFlatten = carriedSet ++ newFiles)
+      newStats, liveAtFlatten = carriedSet ++ newFiles, refs)
     // Committed schema: carried files are covered by the head's
     // recorded schema; the rewritten batch may add evolved columns.
     val priorSchema = head.schema
@@ -3826,7 +3748,7 @@ object GraftCatalog {
       // coverage self-invalidate (both path-keyed — a new batch path is
       // in no covered set)
       publishManifest(fs, r, next, Seq(s"#stats:$statsName", schemaLine) ++
-        head.deleteLines ++ meta ++ head.dataRawExcluding(consumed) ++ newFiles)
+        head.deleteLines ++ meta ++ head.dataRawExcluding(consumed) ++ newFiles, refs)
       next
     } catch {
       case e: SnapshotConflictException =>
@@ -3843,7 +3765,7 @@ object GraftCatalog {
           else scopePred.flatMap(f => f())
             .map(org.apache.spark.sql.GraftColumnBridge.expression)
         if (rewriteOf.isDefined || verbScope.isDefined) {
-          try return republishPinnedRewrite(spark, head,
+          try return republishPinnedRewrite(spark, head, refs,
             rewriteOf.getOrElse(consumed), newFiles, newStats, schemaLine, meta,
             carriesLines = true, e, scopeDisjoint = verbScope)
           catch {
@@ -3884,7 +3806,8 @@ object GraftCatalog {
       pred: Column, set: Seq[(String, Column)],
       meta: Seq[String] = Seq.empty): Long = {
     val head = headOf(spark, root)
-    val matchedFiles = pinFilesWhere(spark, head, filesMayMatch(spark, head, pred), pred)
+    val refs = refsOf(head.fs, head.r)
+    val matchedFiles = pinFilesWhere(spark, head, filesMayMatch(spark, head, refs, pred), pred)
     if (matchedFiles.isEmpty) return head.v
     val carried = head.files.filterNot(matchedFiles)
     val src = readLiveFiles(spark, head, matchedFiles.toSeq.sorted)
@@ -3908,9 +3831,9 @@ object GraftCatalog {
           when(col(hitCol), e.cast(f.dataType)).otherwise(col(f.name)).as(f.name)
         }
       } :+ col(hitCol)): _*)
-    validateChecks(spark, root, marked.where(col(hitCol)).drop(hitCol))
+    validateChecks(spark, root, refs, Some(head), marked.where(col(hitCol)).drop(hitCol))
     val updated = marked.drop(hitCol)
-    commitCow(spark, head, carried, updated, meta,
+    commitCow(spark, head, refs, carried, updated, meta,
       scopePred = Some(() => Some(pred)))
   }
 
@@ -3930,10 +3853,11 @@ object GraftCatalog {
       pred: Column, rows: DataFrame, meta: Seq[String] = Seq.empty): Long = {
     require(rows.where(!coalesce(pred, lit(false))).isEmpty,
       "replaceWhere: every incoming row must satisfy the overwrite predicate")
-    validateChecks(spark, root, rows)
     val head = headOf(spark, root)
+    val refs = refsOf(head.fs, head.r)
+    validateChecks(spark, root, refs, Some(head), rows)
     val files = head.files
-    val matchedFiles = pinFilesWhere(spark, head, filesMayMatch(spark, head, pred), pred)
+    val matchedFiles = pinFilesWhere(spark, head, filesMayMatch(spark, head, refs, pred), pred)
     if (matchedFiles.isEmpty && rows.isEmpty) return head.v
     val carried = files.filterNot(matchedFiles)
     val tableCols = head.schema.map(_.fieldNames.toSeq)
@@ -3944,7 +3868,7 @@ object GraftCatalog {
         .where(!coalesce(pred, lit(false)))
     val newData = survivors.select(tableCols.map(col): _*)
       .unionByName(rows.select(tableCols.map(col): _*))
-    commitCow(spark, head, carried, newData, meta,
+    commitCow(spark, head, refs, carried, newData, meta,
       scopePred = Some(() => Some(pred)))
   }
 
@@ -3972,12 +3896,13 @@ object GraftCatalog {
     * refuse the version; [[vacuumSnapshots]] reaps it) instead of a
     * silently short file list. */
   private def publishManifest(fs: org.apache.hadoop.fs.FileSystem,
-      root: org.apache.hadoop.fs.Path, v: Long, files: Seq[String]): Unit = {
+      root: org.apache.hadoop.fs.Path, v: Long, files: Seq[String],
+      refs: Refs): Unit = {
     val md = manifestDir(root)
     fs.mkdirs(md)
     val fin = new org.apache.hadoop.fs.Path(md, s"v$v.manifest")
     if (!claimExclusive(fs, fin,
-        ((segmentLines(fs, root, files) :+ "#eof").mkString("\n") + "\n")
+        ((segmentLines(fs, root, files, refs) :+ "#eof").mkString("\n") + "\n")
           .getBytes("UTF-8")))
       throw new SnapshotConflictException(
         s"snapshot commit conflict: version $v already published under $root")
@@ -3998,8 +3923,9 @@ object GraftCatalog {
     * `manifestMaxIncludes`, the whole data section is resolved once
     * and resealed as a single segment (amortized O(1) per file). */
   private def segmentLines(fs: org.apache.hadoop.fs.FileSystem,
-      root: org.apache.hadoop.fs.Path, lines0: Seq[String]): Seq[String] = {
-    val (inlineMax, includesMax, _) = manifestConfAt(fs, root)
+      root: org.apache.hadoop.fs.Path, lines0: Seq[String],
+      refs: Refs): Seq[String] = {
+    val (inlineMax, includesMax, _) = refs.manifestConf
     val lines =
       if (lines0.count(_.startsWith("#include:")) <= includesMax) lines0
       else resolveIncludes(fs, root, lines0, strict = true)
@@ -4029,8 +3955,9 @@ object GraftCatalog {
   /** Claim `fin` with a genuinely ATOMIC exclusive create and write
     * `bytes` into the claimed file; returns false if someone else holds
     * the path (the caller's conflict). Used by every claim in the
-    * format — manifests, partition.spec, sort.order, bloom/tag/branch
-    * refs — so one primitive carries the whole protocol's atomicity. */
+    * format — manifests, config files ([[claimRef]]), tx markers and a
+    * clone's inherited configs — so one primitive carries the whole
+    * protocol's atomicity. */
   private def claimExclusive(fs: org.apache.hadoop.fs.FileSystem,
       fin: org.apache.hadoop.fs.Path, bytes: Array[Byte]): Boolean = {
     val qualified = fs.makeQualified(fin)
@@ -4210,12 +4137,11 @@ object GraftCatalog {
     * `stats` must name columns as the expressions do (logical names
     * for user predicates — [[statsLogical]]); `cs` types the bucket
     * source columns. */
-  private def filePruner(spark: SparkSession,
-      fs: org.apache.hadoop.fs.FileSystem, r: org.apache.hadoop.fs.Path,
+  private def filePruner(spark: SparkSession, refs: Refs,
       stats: Map[String, FileStat],
       cs: Option[org.apache.spark.sql.types.StructType])
       : (String, org.apache.spark.sql.catalyst.expressions.Expression) => Boolean = {
-    val specs = readPartitionSpecsAt(fs, r)
+    val specs = refs.specs
     val tz = spark.sessionState.conf.sessionLocalTimeZone
     (f, e) => stats.get(f).forall(mayContain(_, e, tz)) &&
       tupleMayMatch(specs, cs, f, e, tz)
@@ -4224,8 +4150,9 @@ object GraftCatalog {
   /** The PLAN step every predicate reader and verb shares: the files of
     * `m` [[filePruner]] keeps for `pred`, given their raw (physical-name)
     * stats and the committed schema. */
-  private def filesMayMatch(spark: SparkSession, m: Manifest, pred: Column): Seq[String] = {
-    val mayMatch = filePruner(spark, m.fs, m.r, statsLogical(m.stats, m.schema), m.schema)
+  private def filesMayMatch(spark: SparkSession, m: Manifest, refs: Refs,
+      pred: Column): Seq[String] = {
+    val mayMatch = filePruner(spark, refs, statsLogical(m.stats, m.schema), m.schema)
     val e = org.apache.spark.sql.GraftColumnBridge.expression(pred)
     m.files.filter(mayMatch(_, e))
   }
@@ -4237,7 +4164,7 @@ object GraftCatalog {
   def snapshotScanFiles(spark: SparkSession, root: String,
       version: Option[Long] = None, predicate: Option[Column] = None): (Seq[String], Int) = {
     val m = manifestOf(spark, root, version)
-    (predicate.fold(m.files)(filesMayMatch(spark, m, _)), m.files.size)
+    (predicate.fold(m.files)(filesMayMatch(spark, m, refsOf(m.fs, m.r), _)), m.files.size)
   }
 
   /** Read a snapshot — the latest version, or an explicit one (time
@@ -4270,7 +4197,7 @@ object GraftCatalog {
   private def readVersion(spark: SparkSession, root: String, pm: Manifest,
       mergeSchema: Boolean = false, predicate: Option[Column] = None): DataFrame = {
     require(pm.files.nonEmpty, s"snapshot of $root is empty")
-    val kept = predicate.fold(pm.files)(filesMayMatch(spark, pm, _))
+    val kept = predicate.fold(pm.files)(filesMayMatch(spark, pm, refsOf(pm.fs, pm.r), _))
     // All files pruned: scan one manifest file so the schema survives;
     // the row filter below still yields the (correct) empty result.
     val files = if (kept.nonEmpty) kept else pm.files.take(1)
@@ -4335,7 +4262,7 @@ object GraftCatalog {
         .getOrElse(spark.read.parquet(files.head).schema)
     // the pushed filters name the relation's physical columns, as the
     // raw stats do
-    val mayMatch = filePruner(spark, fs, r, stats, pm.schema)
+    val mayMatch = filePruner(spark, refsOf(fs, r), stats, pm.schema)
     val keep: Seq[org.apache.spark.sql.catalyst.expressions.Expression] =>
         Seq[org.apache.hadoop.fs.FileStatus] = filters =>
       if (filters.isEmpty) statuses
@@ -4392,10 +4319,9 @@ object GraftCatalog {
     val dvByFile: Map[String, Array[Long]] =
       dvPositions(spark, r, m.dvNames).map(byManifestPath(spark, files, _))
         .getOrElse(overBound("DV positions"))
-    val specs = readPartitionSpecsAt(fs, r)
-    require(specs.nonEmpty, s"SPJ read of $root: no partition spec")
-    val activeId = specs.keys.max
-    val spec = specs(activeId)
+    val refs = refsOf(fs, r)
+    require(refs.specs.nonEmpty, s"SPJ read of $root: no partition spec")
+    val (activeId, spec) = (refs.activeSpecId, refs.spec)
     // MULTI-FIELD specs report the whole transform tuple (r12): any mix
     // of `bucket` and `identity` fields becomes a composite
     // KeyGroupedPartitioning, so `PARTITIONED BY (bucket(8, k),
@@ -4577,7 +4503,7 @@ object GraftCatalog {
     val flatStats = writeStatsFile(spark, fs, r, head.stats.values.toSeq.sortBy(_.path))
     val next = head.v + 1
     try publishManifest(fs, r, next, Seq(s"#stats:$flatStats", "#rewrite:manifests") ++
-      head.carriedMeta(stats = false) ++ head.files)
+      head.carriedMeta(stats = false) ++ head.files, refsOf(fs, r))
     catch {
       case e: SnapshotConflictException =>
         fs.delete(new org.apache.hadoop.fs.Path(manifestDir(r), flatStats), false)
@@ -4609,14 +4535,15 @@ object GraftCatalog {
       case (p, st) if st.len.isDefined && st.mtime.isDefined =>
         p -> (st.len.get, st.mtime.get)
     }
-    val fresh = computeFileStats(spark, need, fsMeta, readBloomConfAt(fs, r))
+    val refs = refsOf(fs, r)
+    val fresh = computeFileStats(spark, need, fsMeta, refs.bloom)
       .map(f => f.path -> f).toMap
     val merged = files.map(f => fresh.getOrElse(f,
       existing.getOrElse(f, FileStat(f, 0L, Seq.empty))))
     val statsName = writeStatsFile(spark, fs, r, merged.sortBy(_.path))
     val next = head.v + 1
     try publishManifest(fs, r, next, Seq(s"#stats:$statsName", "#analyze:stats") ++
-      head.carriedMeta(stats = false) ++ files)
+      head.carriedMeta(stats = false) ++ files, refs)
     catch {
       case e: SnapshotConflictException =>
         fs.delete(new org.apache.hadoop.fs.Path(manifestDir(r), statsName), false)
@@ -4633,7 +4560,7 @@ object GraftCatalog {
     // vectors, AND the equality-delete sidecars survive the rollback —
     // a rollback must not resurrect keys the target version had purged.
     val target = manifestAt(fs, r, to)
-    publishManifest(fs, r, next, target.carriedMeta() ++ target.dataRaw)
+    publishManifest(fs, r, next, target.carriedMeta() ++ target.dataRaw, refsOf(fs, r))
     next
   }
 
@@ -4662,10 +4589,8 @@ object GraftCatalog {
       s"column ${f.name} already exists on $root"))
     val dropSet = drop.map(_.toLowerCase(ROOT)).toSet
     dropSet.foreach(d => require(lower(d), s"no column $d on $root"))
-    val layout = (snapshotPartitionSpec(spark, root).map(_.col) ++
-      snapshotSortOrder(spark, root).map(_.split("\\s+").head) ++
-      snapshotBloomFilters(spark, root).keys).map(_.toLowerCase(ROOT)).toSet
-    val clash = dropSet.intersect(layout)
+    val refs = refsOf(head.fs, head.r)
+    val clash = dropSet.intersect(refs.layoutCols)
     require(clash.isEmpty,
       s"cannot drop layout column(s) ${clash.mkString(", ")} — they drive " +
         "the partition spec / sort order / bloom sidecars")
@@ -4683,7 +4608,7 @@ object GraftCatalog {
       prior.fields.filterNot(f => dropSet(f.name.toLowerCase(ROOT))) ++
         add.fields.map(_.copy(nullable = true)))
     require(evolved.nonEmpty, s"cannot drop every column of $root")
-    publishEvolvedSchema(head, evolved)
+    publishEvolvedSchema(head, refs, evolved)
   }
 
   /** The SAFE type widenings (Iceberg's ALTER COLUMN TYPE set, which
@@ -4724,8 +4649,8 @@ object GraftCatalog {
       readVersion(spark, root, head).schema)
     val f = prior.fields.find(_.name.equalsIgnoreCase(column)).getOrElse(
       throw new IllegalArgumentException(s"no column $column on $root"))
-    val hashed = (snapshotPartitionSpec(spark, root).map(_.col) ++
-      snapshotBloomFilters(spark, root).keys).map(_.toLowerCase(ROOT)).toSet
+    val refs = refsOf(head.fs, head.r)
+    val hashed = (refs.spec.map(_.col) ++ refs.bloom.keys).map(_.toLowerCase(ROOT)).toSet
     require(!hashed(f.name.toLowerCase(ROOT)),
       s"cannot widen ${f.name}: it drives the partition spec or a bloom " +
         "sidecar, whose hashes are type-width-sensitive - rewrite via " +
@@ -4736,7 +4661,7 @@ object GraftCatalog {
     val evolved = org.apache.spark.sql.types.StructType(
       prior.fields.map(x => if (x.name.equalsIgnoreCase(column))
         x.copy(dataType = to) else x))
-    publishEvolvedSchema(head, evolved)
+    publishEvolvedSchema(head, refs, evolved)
   }
 
   /** ALTER COLUMN … RENAME as a PURE-METADATA commit — Delta's
@@ -4770,14 +4695,12 @@ object GraftCatalog {
       throw new IllegalArgumentException(s"no column $from on $root"))
     require(!prior.fields.exists(_.name.equalsIgnoreCase(to)),
       s"column $to already exists on $root")
-    val layout = (snapshotPartitionSpec(spark, root).map(_.col) ++
-      snapshotSortOrder(spark, root).map(_.split("\\s+").head) ++
-      snapshotBloomFilters(spark, root).keys).map(_.toLowerCase(ROOT)).toSet
-    require(!layout(f.name.toLowerCase(ROOT)),
+    val refs = refsOf(head.fs, head.r)
+    require(!refs.layoutCols(f.name.toLowerCase(ROOT)),
       s"cannot rename ${f.name}: it drives the partition spec / declared " +
         "sort / bloom sidecars — rewrite via compaction instead")
     val lowered = f.name.toLowerCase(ROOT)
-    require(!checkColumnRefs(spark, root).exists(ref =>
+    require(!checkColumnRefs(spark, refs).exists(ref =>
         ref == lowered || ref.startsWith(lowered + ".")),
       s"cannot rename ${f.name}: CHECK constraint(s) reference it — drop " +
         "and re-add the check under the new name")
@@ -4790,7 +4713,7 @@ object GraftCatalog {
     val evolved = org.apache.spark.sql.types.StructType(prior.fields.map(x =>
       if (x.name.equalsIgnoreCase(from)) x.copy(name = to, metadata = newMeta)
       else x))
-    publishEvolvedSchema(head, evolved)
+    publishEvolvedSchema(head, refs, evolved)
   }
 
   /** Rewrite the struct at `path` inside a committed schema (descends
@@ -4818,8 +4741,8 @@ object GraftCatalog {
   /** The dotted column paths a table's CHECK constraints reference —
     * the nested-DDL and rename guards consult this so a committed
     * predicate string can never silently stop binding. */
-  private def checkColumnRefs(spark: SparkSession, root: String): Set[String] =
-    listSnapshotChecks(spark, root).flatMap { case (_, p) =>
+  private def checkColumnRefs(spark: SparkSession, refs: Refs): Set[String] =
+    refs.checks.flatMap { case (_, p) =>
       scala.util.Try(spark.sessionState.sqlParser.parseExpression(p)
         .collect {
           case a: org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute =>
@@ -4833,12 +4756,12 @@ object GraftCatalog {
     * immutable PHYSICAL column names, so they stay valid across every
     * metadata-only DDL; dropping them would resurrect purged rows on
     * an unrelated ALTER TABLE. */
-  private def publishEvolvedSchema(head: Manifest,
+  private def publishEvolvedSchema(head: Manifest, refs: Refs,
       evolved: org.apache.spark.sql.types.StructType): Long = {
     val next = head.v + 1
     publishManifest(head.fs, head.r, next,
       head.carriedMeta(schema = false) ++
-        Seq(schemaLineOf(evolved)) ++ head.dataRaw)
+        Seq(schemaLineOf(evolved)) ++ head.dataRaw, refs)
     next
   }
 
@@ -4866,7 +4789,7 @@ object GraftCatalog {
       org.apache.spark.sql.types.StructType(
         st.fields :+ field.copy(nullable = true))
     }
-    publishEvolvedSchema(head, evolved)
+    publishEvolvedSchema(head, refsOf(head.fs, head.r), evolved)
   }
 
   /** DROP a NESTED struct subfield as a PURE-METADATA commit: the
@@ -4885,7 +4808,8 @@ object GraftCatalog {
     require(parts.length >= 2,
       s"'$fieldPath' is top-level — use evolveSnapshotSchema(drop = …)")
     val dropped = parts.map(_.toLowerCase(ROOT)).mkString(".")
-    val clash = checkColumnRefs(spark, root)
+    val refs = refsOf(head.fs, head.r)
+    val clash = checkColumnRefs(spark, refs)
       .filter(ref => ref == dropped || ref.startsWith(dropped + "."))
     require(clash.isEmpty,
       s"cannot drop $fieldPath: CHECK constraint(s) reference " +
@@ -4899,7 +4823,7 @@ object GraftCatalog {
           s"the ${parts.init.mkString(".")} column itself instead")
       org.apache.spark.sql.types.StructType(kept)
     }
-    publishEvolvedSchema(head, evolved)
+    publishEvolvedSchema(head, refs, evolved)
   }
 
   /** RENAME a NESTED struct subfield as a PURE-METADATA commit — the
@@ -4924,7 +4848,8 @@ object GraftCatalog {
     require(parts.length >= 2,
       s"'$fieldPath' is top-level — use renameSnapshotColumn")
     val lowered = parts.map(_.toLowerCase(ROOT)).mkString(".")
-    val clash = checkColumnRefs(spark, root)
+    val refs = refsOf(head.fs, head.r)
+    val clash = checkColumnRefs(spark, refs)
       .filter(ref => ref == lowered || ref.startsWith(lowered + "."))
     require(clash.isEmpty,
       s"cannot rename $fieldPath: CHECK constraint(s) reference " +
@@ -4946,7 +4871,7 @@ object GraftCatalog {
       org.apache.spark.sql.types.StructType(st.fields.map(x =>
         if (x eq f) x.copy(name = to, metadata = newMeta) else x))
     }
-    publishEvolvedSchema(head, evolved)
+    publishEvolvedSchema(head, refs, evolved)
   }
 
   /** WIDEN a NESTED struct subfield's type as a PURE-METADATA commit —
@@ -4972,7 +4897,7 @@ object GraftCatalog {
       org.apache.spark.sql.types.StructType(st.fields.map(x =>
         if (x eq f) x.copy(dataType = to) else x))
     }
-    publishEvolvedSchema(head, evolved)
+    publishEvolvedSchema(head, refsOf(head.fs, head.r), evolved)
   }
 
   /** RENAME a snapshot table root — one filesystem rename plus a
@@ -5133,11 +5058,12 @@ object GraftCatalog {
     // a disjoint racer re-publishes the z-clustered batch against the
     // new head; only a genuine overlap aborts for the replan path.
     val next = v + 1
-    try publishManifest(fs, r, next, Seq(s"#stats:$statsName", schemaLine) ++ newFiles)
+    val refs = refsOf(fs, r)
+    try publishManifest(fs, r, next, Seq(s"#stats:$statsName", schemaLine) ++ newFiles, refs)
     catch {
       case e: SnapshotConflictException =>
         fs.delete(new org.apache.hadoop.fs.Path(manifestDir(r), statsName), false)
-        try return republishPinnedRewrite(spark, head, head.files.toSet,
+        try return republishPinnedRewrite(spark, head, refs, head.files.toSet,
           newFiles, newStats, schemaLine, Seq.empty,
           carriesLines = false, e)
         catch {
@@ -5484,7 +5410,7 @@ object GraftCatalog {
     }.toSet
     // Tagged versions are pinned: a release tag outlives routine
     // retention no matter where the horizon sits.
-    val tagged = listSnapshotTags(spark, root).map(_._2).toSet
+    val tagged = refsOf(fs, r).tags.map(_._2).toSet
     val (old0, kept) = allVs
       .filterNot(torn.contains).filterNot(freshTorn.contains)
       .partition(v => v < keepFromEff && !tagged(v))
@@ -5628,96 +5554,203 @@ object GraftCatalog {
       orphanDirs, cursorTmps, staleTxRefs)
   }
 
+  // ---------------------------------------------------------------------
+  // TABLE CONFIGURATION: `_refs/` holds what the table's owner declared
+  // once — manifest thresholds, write mode, partition specs, bloom
+  // enrollment, sort order, CHECK constraints and tags — one small text
+  // file each. [[Refs]] is the only reader of those files and
+  // [[claimRef]] the only create-exclusive writer. `_refs/tx/` and
+  // `_refs/cursors/` are protocol state, not configuration: the
+  // transaction and stream-cursor code owns them.
+  // ---------------------------------------------------------------------
+
   private def refsDir(root: org.apache.hadoop.fs.Path) =
     new org.apache.hadoop.fs.Path(root, "_refs")
 
-  // ---------------------------------------------------------------------
-  // Hidden partitioning (Iceberg's model): the table owns a PARTITION
-  // SPEC of column transforms; writers derive the partition tuple on
-  // the fly and encode it in the file PATH ONLY — data files keep
-  // exactly the user's columns, reads never see a derived column, and
-  // a query on the RAW column still prunes (stats for ordered
-  // transforms, the path tuple for hash buckets). The failure mode
-  // this kills at 100 TB: a pipeline that materializes `event_month`
-  // by hand, then someone filters on `event_ts` and scans the world.
-  // ---------------------------------------------------------------------
+  private val ManifestConfRef = "manifest.conf"
+  private val WriteModeRef = "write.mode"
+  private val SpecRef = "partition.spec"
+  private val BloomRef = "bloom.conf"
+  private val SortRef = "sort.conf"
+  private val CheckSuffix = ".check"
+  private val TagSuffix = ".tag"
+
+  /** A table's `_refs/` configuration, read lazily: ONE listing of the
+    * directory when a field is first used (a missing directory is the
+    * empty configuration) and each config file opened at most once.
+    * A verb takes one per attempt ([[refsOf]]) and hands it to the
+    * helpers it calls; nothing outlives the verb. */
+  private[graft] final class Refs private[GraftCatalog] (
+      fs: org.apache.hadoop.fs.FileSystem, r: org.apache.hadoop.fs.Path) {
+    private lazy val listed: Map[String, org.apache.hadoop.fs.Path] =
+      try fs.listStatus(refsDir(r)).toSeq.filter(_.isFile)
+        .map(st => st.getPath.getName -> st.getPath).toMap
+      catch { case _: java.io.FileNotFoundException => Map.empty }
+
+    /** Config file `name`'s content; None when the table does not set it.
+      * Each field below reads its own files once; a clone copies each
+      * inherited file through this once. */
+    def text(name: String): Option[String] = listed.get(name).map { p =>
+      val in = fs.open(p)
+      try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
+    }
+    private def lines(name: String): Seq[String] =
+      text(name).toSeq.flatMap(_.linesIterator).filter(_.nonEmpty)
+    private def pairs(name: String): Seq[(String, String)] =
+      lines(name).map { l => val Array(k, v) = l.split("\t", 2); k -> v }
+    /** (name, first line) of every `<name><suffix>` file, name-sorted. */
+    private def named(suffix: String): Seq[(String, String)] =
+      listed.keys.filter(_.endsWith(suffix)).toSeq.map(n =>
+        n.stripSuffix(suffix) -> text(n).get.linesIterator.next()).sortBy(_._1)
+
+    /** The table's OWN `manifest.conf` entries (empty when unset). */
+    lazy val manifestKv: Map[String, Int] =
+      pairs(ManifestConfRef).map { case (k, v) => k -> v.trim.toInt }.toMap
+    /** (inlineMax, maxIncludes, statsDepthMax) governing commits: the
+      * table's own entries where set, the engine defaults otherwise. */
+    lazy val manifestConf: (Int, Int, Int) =
+      (manifestKv.getOrElse("inline.max", manifestInlineMax),
+        manifestKv.getOrElse("include.max", manifestMaxIncludes),
+        manifestKv.getOrElse("stats.depth.max", statsMaxDepth))
+    /** EVERY spec version, id → fields: `partition.spec` is spec 1 and
+      * [[evolveSnapshotPartitionSpec]] adds `partition.spec.N`. Pruning
+      * resolves each FILE's spec by the id its batch dir encodes
+      * ([[specIdOfPath]]) — Iceberg's spec-id chain. */
+    lazy val specs: Map[Int, Seq[PartitionField]] = listed.keys.flatMap { n =>
+      val id =
+        if (n == SpecRef) Some(1)
+        else if (n.startsWith(s"$SpecRef.")) n.stripPrefix(s"$SpecRef.").toIntOption
+        else None
+      id.map(_ -> lines(n).map { l =>
+        val Array(c, t, k) = l.split("\t", 3)
+        PartitionField(c, t, k.toInt)
+      })
+    }.toMap
+    /** The ACTIVE (highest) spec id writers derive tuples from; 0 when
+      * the table is unpartitioned. */
+    def activeSpecId: Int = if (specs.isEmpty) 0 else specs.keys.max
+    def spec: Seq[PartitionField] = specs.getOrElse(activeSpecId, Seq.empty)
+    lazy val bloom: Map[String, Int] =
+      pairs(BloomRef).map { case (c, b) => c -> b.toInt }.toMap
+    lazy val sortOrder: Seq[String] = lines(SortRef)
+    lazy val writeMode: String =
+      text(WriteModeRef).map(_.linesIterator.next().trim).getOrElse("cow")
+    lazy val checks: Seq[(String, String)] = named(CheckSuffix)
+    lazy val tags: Seq[(String, Long)] =
+      named(TagSuffix).map { case (n, v) => n -> v.trim.toLong }
+    /** The lower-cased columns the layout depends on: the active spec's
+      * sources, the declared sort and the bloom columns. */
+    def layoutCols: Set[String] = (spec.map(_.col) ++
+      sortOrder.map(_.split("\\s+").head) ++ bloom.keys)
+      .map(_.toLowerCase(java.util.Locale.ROOT)).toSet
+    /** The config files a clone inherits: all of them but the tags,
+      * which name versions of THIS table. */
+    def configFiles: Seq[String] = listed.keys.filter(n => n.endsWith(CheckSuffix) ||
+      n.startsWith(SpecRef) || Set(ManifestConfRef, WriteModeRef, BloomRef, SortRef)(n))
+      .toSeq.sorted
+  }
+
+  private def refsOf(fs: org.apache.hadoop.fs.FileSystem,
+      r: org.apache.hadoop.fs.Path): Refs = new Refs(fs, r)
+
+  /** The [[Refs]] of the table at `root`, for the catalog surface. */
+  private[graft] def snapshotRefs(spark: SparkSession, root: String): Refs = {
+    val (fs, r) = fsOf(spark, root)
+    refsOf(fs, r)
+  }
+
+  /** Set config file `name` to `lines` with the create-exclusive claim
+    * ([[claimExclusive]]): a config is immutable once set, and a racing
+    * setter gets `conflict` as an IllegalStateException. */
+  private def claimRef(fs: org.apache.hadoop.fs.FileSystem,
+      r: org.apache.hadoop.fs.Path, name: String, lines: Seq[String],
+      conflict: String): Unit = {
+    fs.mkdirs(refsDir(r))
+    if (!claimExclusive(fs, new org.apache.hadoop.fs.Path(refsDir(r), name),
+        lines.mkString("", "\n", "\n").getBytes("UTF-8")))
+      throw new IllegalStateException(conflict)
+  }
+
+  /** Per-TABLE overrides of the three segment/chain thresholds
+    * ([[manifestInlineMax]], [[manifestMaxIncludes]], [[statsMaxDepth]]),
+    * create-exclusive and clone-inherited like the other configs. A hot
+    * CDC target can seal/coalesce far more aggressively than the engine
+    * default without touching any other table. */
+  def setSnapshotManifestConf(spark: SparkSession, root: String,
+      inlineMax: Option[Int] = None, maxIncludes: Option[Int] = None,
+      statsDepthMax: Option[Int] = None): Unit = {
+    require(inlineMax.forall(_ >= 1) && maxIncludes.forall(_ >= 1) &&
+      statsDepthMax.forall(_ >= 0),
+      "inline.max and include.max must be >= 1; stats.depth.max must be >= 0")
+    val lines =
+      inlineMax.map(v => s"inline.max\t$v").toSeq ++
+        maxIncludes.map(v => s"include.max\t$v") ++
+        statsDepthMax.map(v => s"stats.depth.max\t$v")
+    require(lines.nonEmpty, "no manifest conf values given")
+    val (fs, r) = fsOf(spark, root)
+    claimRef(fs, r, ManifestConfRef, lines, s"manifest config already set on $root")
+  }
+
+  /** The table's OWN manifest conf entries (empty when unset) — the
+    * SHOW TBLPROPERTIES surface; commits use [[Refs.manifestConf]],
+    * which folds in the engine defaults. */
+  def snapshotManifestConf(spark: SparkSession, root: String): Map[String, Int] =
+    snapshotRefs(spark, root).manifestKv
+
+  /** Declare the table's row-level WRITE MODE — `"cow"` (default:
+    * DELETE/UPDATE/MERGE rewrite touched files) or `"mor"` (they
+    * publish deletion vectors + appended batches instead). Consulted
+    * by the SQL DML lowering so a pure-SQL client gets the table
+    * owner's chosen physics; the Scala verbs stay explicit. MUTABLE
+    * (an ALTER-able table property, unlike the create-exclusive
+    * layout configs): last write wins, which is safe because both
+    * modes produce the same logical table. */
+  def setSnapshotWriteMode(spark: SparkSession, root: String,
+      mode: String): Unit = {
+    require(mode == "cow" || mode == "mor", s"write mode must be cow|mor: $mode")
+    val (fs, r) = fsOf(spark, root)
+    fs.mkdirs(refsDir(r))
+    val out = fs.create(new org.apache.hadoop.fs.Path(refsDir(r), WriteModeRef), true)
+    try out.write(s"$mode\n".getBytes("UTF-8")) finally out.close()
+  }
+
+  /** The table's declared write mode (default `"cow"`). */
+  def snapshotWriteMode(spark: SparkSession, root: String): String =
+    snapshotRefs(spark, root).writeMode
 
   private val ptTransforms = Set("identity", "bucket", "truncate",
     "year", "month", "day", "hour")
 
-  /** Declare the table's hidden partition spec — create-exclusive and
-    * immutable (spec evolution is a non-goal of v1; Iceberg's spec-id
-    * chain is the extension point). Applies to every SUBSEQUENT commit,
-    * including CoW rewrites (which re-derive tuples from the raw
+  /** A spec's config lines, `col\ttransform\tn` each, after checking
+    * every field — shared by the first spec and every evolution. */
+  private def specLines(spec: Seq[PartitionField]): Seq[String] = {
+    require(spec.nonEmpty, "empty partition spec")
+    spec.map { f =>
+      require(ptTransforms(f.transform), s"unknown transform ${f.transform}")
+      require(!Set("bucket", "truncate")(f.transform) || f.n > 0,
+        s"${f.transform}(${f.col}) needs n > 0")
+      s"${f.col}\t${f.transform}\t${f.n}"
+    }
+  }
+
+  /** Declare the table's hidden partition spec (see the hidden
+    * partitioning notes below) — create-exclusive; later layouts come
+    * from [[evolveSnapshotPartitionSpec]]. Applies to every SUBSEQUENT
+    * commit, including CoW rewrites (which re-derive tuples from the raw
     * columns — transforms are deterministic); files committed before
     * the spec carry no tuple and stay unprunable-by-tuple until
     * [[compactSnapshotPartitioned]] migrates them. */
   def setSnapshotPartitionSpec(spark: SparkSession, root: String,
       spec: Seq[PartitionField]): Unit = {
-    require(spec.nonEmpty, "empty partition spec")
-    spec.foreach { f =>
-      require(ptTransforms(f.transform), s"unknown transform ${f.transform}")
-      require(!Set("bucket", "truncate")(f.transform) || f.n > 0,
-        s"${f.transform}(${f.col}) needs n > 0")
-    }
+    val lines = specLines(spec)
     val (fs, r) = fsOf(spark, root)
-    fs.mkdirs(refsDir(r))
-    val p = new org.apache.hadoop.fs.Path(refsDir(r), "partition.spec")
-    if (!claimExclusive(fs, p, spec.map(f => s"${f.col}\t${f.transform}\t${f.n}")
-        .mkString("", "\n", "\n").getBytes("UTF-8")))
-      throw new IllegalStateException(s"partition spec already set on $root")
+    claimRef(fs, r, SpecRef, lines, s"partition spec already set on $root")
   }
 
-  /** The table's hidden partition spec (empty when unpartitioned). */
-  def snapshotPartitionSpec(spark: SparkSession, root: String): Seq[PartitionField] = {
-    val (fs, r) = fsOf(spark, root)
-    readPartitionSpecAt(fs, r)
-  }
-
-  /** The ACTIVE (highest-id) partition spec — what writers derive
-    * tuples from. Older spec versions still govern the files they
-    * wrote (see [[readPartitionSpecsAt]]/[[specIdOfPath]]). */
-  private def readPartitionSpecAt(fs: org.apache.hadoop.fs.FileSystem,
-      r: org.apache.hadoop.fs.Path): Seq[PartitionField] =
-    readPartitionSpecsAt(fs, r).toSeq.sortBy(_._1).lastOption
-      .map(_._2).getOrElse(Seq.empty)
-
-  /** EVERY spec version of the table, id → fields. `partition.spec`
-    * is spec 1; [[evolveSnapshotPartitionSpec]] adds
-    * `partition.spec.N`. Pruning resolves each FILE's spec by the id
-    * its batch dir encodes, so files written under two different specs
-    * both prune correctly — Iceberg's spec-id chain. */
-  private def readPartitionSpecsAt(fs: org.apache.hadoop.fs.FileSystem,
-      r: org.apache.hadoop.fs.Path): Map[Int, Seq[PartitionField]] = {
-    val rd = refsDir(r)
-    if (!fs.exists(rd)) return Map.empty
-    fs.listStatus(rd).toSeq.flatMap { st =>
-      val n = st.getPath.getName
-      val id: Option[Int] =
-        if (n == "partition.spec") Some(1)
-        else if (n.startsWith("partition.spec."))
-          n.stripPrefix("partition.spec.").toIntOption
-        else None
-      id.map { i =>
-        val in = fs.open(st.getPath)
-        val lines =
-          try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toList
-          finally in.close()
-        i -> lines.filter(_.nonEmpty).map { l =>
-          val Array(c, t, n2) = l.split("\t", 3)
-          PartitionField(c, t, n2.toInt)
-        }
-      }
-    }.toMap
-  }
-
-  /** The spec id that wrote a data file: batch dirs carry it as
-    * `data/s<id>-b<nano>` (spec-1 batches keep the legacy `data/b…`
-    * name, so pre-evolution tables are untouched). Files with no
-    * partition tuple at all return 0 (pre-spec). */
-  private[graft] def specIdOfPath(path: String): Int =
-    "/s(\\d+)-b\\d".r.findFirstMatchIn(path).map(_.group(1).toInt)
-      .getOrElse(if (path.contains("__pt_")) 1 else 0)
+  /** The table's ACTIVE hidden partition spec (empty when unpartitioned).
+    * Older spec versions still govern the files they wrote. */
+  def snapshotPartitionSpec(spark: SparkSession, root: String): Seq[PartitionField] =
+    snapshotRefs(spark, root).spec
 
   /** PARTITION-SPEC EVOLUTION (a real table's first birthday problem:
     * the month layout that was right at launch needs day grain, or a
@@ -5729,22 +5762,14 @@ object GraftCatalog {
     * discipline as the original spec. */
   def evolveSnapshotPartitionSpec(spark: SparkSession, root: String,
       spec: Seq[PartitionField]): Unit = {
-    require(spec.nonEmpty, "empty partition spec")
-    spec.foreach { f =>
-      require(ptTransforms(f.transform), s"unknown transform ${f.transform}")
-      require(!Set("bucket", "truncate")(f.transform) || f.n > 0,
-        s"${f.transform}(${f.col}) needs n > 0")
-    }
+    val lines = specLines(spec)
     val (fs, r) = fsOf(spark, root)
-    val specs = readPartitionSpecsAt(fs, r)
-    require(specs.nonEmpty,
+    val refs = refsOf(fs, r)
+    require(refs.specs.nonEmpty,
       s"no partition spec on $root to evolve — use setSnapshotPartitionSpec")
-    val nextId = specs.keys.max + 1
-    val p = new org.apache.hadoop.fs.Path(refsDir(r), s"partition.spec.$nextId")
-    if (!claimExclusive(fs, p, spec.map(f => s"${f.col}\t${f.transform}\t${f.n}")
-        .mkString("", "\n", "\n").getBytes("UTF-8")))
-      throw new IllegalStateException(
-        s"partition spec $nextId already claimed on $root (racing evolve)")
+    val nextId = refs.activeSpecId + 1
+    claimRef(fs, r, s"$SpecRef.$nextId", lines,
+      s"partition spec $nextId already claimed on $root (racing evolve)")
   }
 
   /** Enroll columns for per-file BLOOM sidecars (the Iceberg-puffin /
@@ -5768,33 +5793,13 @@ object GraftCatalog {
     require(cols.nonEmpty, "no bloom columns given")
     require(bits >= 64 && bits <= (1 << 24), s"unreasonable bloom width $bits")
     val (fs, r) = fsOf(spark, root)
-    fs.mkdirs(refsDir(r))
-    val p = new org.apache.hadoop.fs.Path(refsDir(r), "bloom.conf")
-    if (!claimExclusive(fs, p, cols.map(c => s"$c\t$bits")
-        .mkString("", "\n", "\n").getBytes("UTF-8")))
-      throw new IllegalStateException(s"bloom config already set on $root")
+    claimRef(fs, r, BloomRef, cols.map(c => s"$c\t$bits"),
+      s"bloom config already set on $root")
   }
 
   /** The table's bloom-enrolled columns (col → bits); empty when none. */
-  def snapshotBloomFilters(spark: SparkSession, root: String): Map[String, Int] = {
-    val (fs, r) = fsOf(spark, root)
-    readBloomConfAt(fs, r)
-  }
-
-  private def readBloomConfAt(fs: org.apache.hadoop.fs.FileSystem,
-      r: org.apache.hadoop.fs.Path): Map[String, Int] = {
-    val p = new org.apache.hadoop.fs.Path(refsDir(r), "bloom.conf")
-    if (!fs.exists(p)) Map.empty
-    else {
-      val in = fs.open(p)
-      val lines =
-        try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toList
-        finally in.close()
-      lines.filter(_.nonEmpty).map { l =>
-        val Array(c, b) = l.split("\t", 2); c -> b.toInt
-      }.toMap
-    }
-  }
+  def snapshotBloomFilters(spark: SparkSession, root: String): Map[String, Int] =
+    snapshotRefs(spark, root).bloom
 
   /** Declare the table's SORT ORDER (Iceberg's sort_order / Delta's
     * OPTIMIZE ZORDER's simpler cousin): every subsequent batch —
@@ -5810,29 +5815,103 @@ object GraftCatalog {
       cols: Seq[String]): Unit = {
     require(cols.nonEmpty, "no sort columns given")
     val (fs, r) = fsOf(spark, root)
-    fs.mkdirs(refsDir(r))
-    val p = new org.apache.hadoop.fs.Path(refsDir(r), "sort.conf")
-    if (!claimExclusive(fs, p, cols.mkString("", "\n", "\n").getBytes("UTF-8")))
-      throw new IllegalStateException(s"sort order already set on $root")
+    claimRef(fs, r, SortRef, cols, s"sort order already set on $root")
   }
 
   /** The table's declared sort order; empty when none. */
-  def snapshotSortOrder(spark: SparkSession, root: String): Seq[String] = {
+  def snapshotSortOrder(spark: SparkSession, root: String): Seq[String] =
+    snapshotRefs(spark, root).sortOrder
+
+  /** Table-level CHECK constraints (Delta's CHECK / Iceberg's write
+    * validation): a named SQL predicate every INCOMING batch must
+    * satisfy before its commit publishes — data quality enforced at
+    * the write boundary, where a violation costs one aborted batch,
+    * not a 100 TB quarantine sweep later. SQL CHECK semantics: a row
+    * passes on TRUE or NULL (unknown is not a violation); the batch
+    * fails if any row evaluates FALSE. Validation cost is ∝ the batch
+    * (the new/rewritten rows only — carried files were validated by
+    * their own commits). Adding a check validates the CURRENT head
+    * first (one scan — the same trade Delta makes), so a check can
+    * never be born already-violated. */
+  def addSnapshotCheck(spark: SparkSession, root: String, name: String,
+      sqlPredicate: String): Unit = {
+    require(refName.matches(name), s"invalid check name: $name")
+    if (snapshotVersions(spark, root).nonEmpty)
+      requireChecksHold(readSnapshot(spark, root), Seq(name -> sqlPredicate))
     val (fs, r) = fsOf(spark, root)
-    readSortOrderAt(fs, r)
+    claimRef(fs, r, s"$name$CheckSuffix", Seq(sqlPredicate),
+      s"check $name already exists on $root")
   }
 
-  private def readSortOrderAt(fs: org.apache.hadoop.fs.FileSystem,
-      r: org.apache.hadoop.fs.Path): Seq[String] = {
-    val p = new org.apache.hadoop.fs.Path(refsDir(r), "sort.conf")
-    if (!fs.exists(p)) Seq.empty
-    else {
-      val in = fs.open(p)
-      try scala.io.Source.fromInputStream(in, "UTF-8").getLines()
-        .toList.filter(_.nonEmpty)
-      finally in.close()
-    }
+  /** All CHECK constraints on the table, (name, predicate). */
+  def listSnapshotChecks(spark: SparkSession, root: String): Seq[(String, String)] =
+    snapshotRefs(spark, root).checks
+
+  /** Drop a CHECK constraint. */
+  def dropSnapshotCheck(spark: SparkSession, root: String, name: String): Unit = {
+    val (fs, r) = fsOf(spark, root)
+    require(fs.delete(new org.apache.hadoop.fs.Path(refsDir(r), s"$name$CheckSuffix"), false),
+      s"no check $name on $root")
   }
+
+  private val refName = "[A-Za-z0-9][A-Za-z0-9._-]*".r
+
+  /** TAG a snapshot version with an immutable name (Iceberg tags) —
+    * release pinning for training-data reproducibility: "the corpus
+    * this model trained on" becomes a NAME instead of a number someone
+    * has to remember. The tag file is create-exclusive, so a tag can
+    * never be silently repointed (delete + recreate is the only way,
+    * and that is an auditable two-step); [[vacuumSnapshots]] protects
+    * tagged versions regardless of its retention horizon, so a pinned
+    * corpus outlives routine retention. */
+  def tagSnapshot(spark: SparkSession, root: String, name: String,
+      version: Long): Unit = {
+    require(refName.matches(name), s"invalid tag name: $name")
+    require(snapshotVersions(spark, root).contains(version),
+      s"cannot tag absent version $version of $root")
+    val (fs, r) = fsOf(spark, root)
+    claimRef(fs, r, s"$name$TagSuffix", Seq(version.toString),
+      s"tag $name already exists on $root")
+  }
+
+  /** All tags on the table, (name, version), name-sorted. */
+  def listSnapshotTags(spark: SparkSession, root: String): Seq[(String, Long)] =
+    snapshotRefs(spark, root).tags
+
+  /** The version a tag points at; throws on an unknown tag. */
+  def resolveSnapshotTag(spark: SparkSession, root: String, name: String): Long =
+    tagOf(snapshotRefs(spark, root), root, name)
+
+  private def tagOf(refs: Refs, root: String, name: String): Long =
+    refs.tags.collectFirst { case (`name`, v) => v }
+      .getOrElse(throw new NoSuchElementException(s"no tag $name on $root"))
+
+  /** Drop a tag (the version becomes subject to normal retention at
+    * the next vacuum — removal is the explicit, auditable step). */
+  def deleteSnapshotTag(spark: SparkSession, root: String, name: String): Unit = {
+    val (fs, r) = fsOf(spark, root)
+    val p = new org.apache.hadoop.fs.Path(refsDir(r), s"$name$TagSuffix")
+    require(fs.delete(p, false), s"no tag $name on $root")
+  }
+
+  // ---------------------------------------------------------------------
+  // Hidden partitioning (Iceberg's model): the table owns a PARTITION
+  // SPEC of column transforms; writers derive the partition tuple on
+  // the fly and encode it in the file PATH ONLY — data files keep
+  // exactly the user's columns, reads never see a derived column, and
+  // a query on the RAW column still prunes (stats for ordered
+  // transforms, the path tuple for hash buckets). The failure mode
+  // this kills at 100 TB: a pipeline that materializes `event_month`
+  // by hand, then someone filters on `event_ts` and scans the world.
+  // ---------------------------------------------------------------------
+
+  /** The spec id that wrote a data file: batch dirs carry it as
+    * `data/s<id>-b<nano>` (spec-1 batches keep the legacy `data/b…`
+    * name, so pre-evolution tables are untouched). Files with no
+    * partition tuple at all return 0 (pre-spec). */
+  private[graft] def specIdOfPath(path: String): Int =
+    "/s(\\d+)-b\\d".r.findFirstMatchIn(path).map(_.group(1).toInt)
+      .getOrElse(if (path.contains("__pt_")) 1 else 0)
 
   /** The derived partition-value Column for one spec field. Date
     * transforms render through `date_format` (session TZ — GraftSession
@@ -5963,11 +6042,12 @@ object GraftCatalog {
     * the right buckets" — otherwise need a full scan. */
   def describeSnapshotPartitions(spark: SparkSession, root: String,
       version: Option[Long] = None): DataFrame = {
-    val spec = snapshotPartitionSpec(spark, root)
+    val refs = snapshotRefs(spark, root)
+    val spec = refs.spec
     require(spec.nonEmpty, s"no partition spec on $root")
     val m = manifestOf(spark, root, version)
     val (fs, r, files, stats) = (m.fs, m.r, m.files, m.stats)
-    val activeId = readPartitionSpecsAt(fs, r).keys.max
+    val activeId = refs.activeSpecId
     // LIVE row counts: deletion vectors subtract from their file's
     // physical count, so metadata==data holds on MoR-deleted tables
     // too (the only non-metadata touch is the DV sidecar itself,
@@ -6205,13 +6285,12 @@ object GraftCatalog {
   def compactSnapshotPartitioned(spark: SparkSession, root: String,
       targetBytes: Long = 128L * 1024 * 1024,
       where: Option[Column] = None): Long = {
-    val spec = snapshotPartitionSpec(spark, root)
+    val refs = snapshotRefs(spark, root)
+    val spec = refs.spec
     require(spec.nonEmpty, s"no partition spec on $root")
     val head = headOf(spark, root)
-    val (fs, r, files) = (head.fs, head.r, head.files)
-    val stats = head.stats
-    val specs = readPartitionSpecsAt(fs, r)
-    val activeId = specs.keys.max
+    val (files, stats) = (head.files, head.stats)
+    val activeId = refs.activeSpecId
     // PARTITION-SCOPED compaction (Delta's `OPTIMIZE … WHERE`): only
     // tuples the predicate may match rewrite — a trickle-writer's one
     // hot partition compacts without touching the rest of a 100 TB
@@ -6222,7 +6301,7 @@ object GraftCatalog {
     // handles bucket ordinals. Tuple-less files (pre-spec /
     // retired-spec) belong to no partition and stay out of a scoped
     // run — the unscoped spelling migrates them.
-    val scoped = where.fold(files)(pred => filesMayMatch(spark, head, pred)
+    val scoped = where.fold(files)(pred => filesMayMatch(spark, head, refs, pred)
       .filter(f => specIdOfPath(f) == activeId && filePartitionTuple(f).nonEmpty))
     val groups = scoped.groupBy(f =>
       // retired-spec files group as tuple-less -> they MIGRATE into
@@ -6287,7 +6366,7 @@ object GraftCatalog {
     val confKey = "spark.sql.files.maxRecordsPerFile"
     val prior = spark.conf.getOption(confKey)
     maxRecords.foreach(n => spark.conf.set(confKey, n.toString))
-    try commitCow(spark, head, carried, newData,
+    try commitCow(spark, head, refs, carried, newData,
       Seq("#compact:partitioned"), rewriteOf = Some(rewriteSet))
     finally prior match {
       case Some(v) => spark.conf.set(confKey, v)
@@ -6295,119 +6374,38 @@ object GraftCatalog {
     }
   }
 
-  /** Table-level CHECK constraints (Delta's CHECK / Iceberg's write
-    * validation): a named SQL predicate every INCOMING batch must
-    * satisfy before its commit publishes — data quality enforced at
-    * the write boundary, where a violation costs one aborted batch,
-    * not a 100 TB quarantine sweep later. SQL CHECK semantics: a row
-    * passes on TRUE or NULL (unknown is not a violation); the batch
-    * fails if any row evaluates FALSE. Validation cost is ∝ the batch
-    * (the new/rewritten rows only — carried files were validated by
-    * their own commits). Adding a check validates the CURRENT head
-    * first (one scan — the same trade Delta makes), so a check can
-    * never be born already-violated. */
-  def addSnapshotCheck(spark: SparkSession, root: String, name: String,
-      sqlPredicate: String): Unit = {
-    require(refName.matches(name), s"invalid check name: $name")
-    if (snapshotVersions(spark, root).nonEmpty)
-      requireCheckHolds(readSnapshot(spark, root), name, sqlPredicate)
-    val (fs, r) = fsOf(spark, root)
-    fs.mkdirs(refsDir(r))
-    val p = new org.apache.hadoop.fs.Path(refsDir(r), s"$name.check")
-    if (!claimExclusive(fs, p, s"$sqlPredicate\n".getBytes("UTF-8")))
-      throw new IllegalStateException(s"check $name already exists on $root")
-  }
-
-  /** All CHECK constraints on the table, (name, predicate). */
-  def listSnapshotChecks(spark: SparkSession, root: String): Seq[(String, String)] = {
-    val (fs, r) = fsOf(spark, root)
-    val rd = refsDir(r)
-    if (!fs.exists(rd)) Seq.empty
-    else fs.listStatus(rd)
-      .filter(st => st.isFile && st.getPath.getName.endsWith(".check"))
-      .map { st =>
-        val in = fs.open(st.getPath)
-        val e = try scala.io.Source.fromInputStream(in, "UTF-8")
-          .getLines().next() finally in.close()
-        st.getPath.getName.stripSuffix(".check") -> e
-      }.sortBy(_._1).toSeq
-  }
-
-  /** Drop a CHECK constraint. */
-  def dropSnapshotCheck(spark: SparkSession, root: String, name: String): Unit = {
-    val (fs, r) = fsOf(spark, root)
-    require(fs.delete(new org.apache.hadoop.fs.Path(refsDir(r), s"$name.check"), false),
-      s"no check $name on $root")
-  }
-
-  private def requireCheckHolds(batch: DataFrame, name: String,
-      predicate: String): Unit = {
-    val violated = !batch
-      .where(coalesce(expr(predicate), lit(true)) === lit(false)).isEmpty
-    if (violated) throw new SnapshotCheckViolation(
-      s"CHECK $name ($predicate) violated by the incoming batch")
-  }
-
-  /** Validate `batch` against every CHECK on the table; called by the
-    * write paths BEFORE any data lands, so a violation aborts with
-    * zero cleanup. Table columns ABSENT from the batch (a
-    * schema-evolving feed may omit them — they land as NULL) are
-    * aligned in as NULLs first, so a check on such a column applies
-    * its SQL NULL-passes semantics instead of failing resolution. */
-  private[graft] def validateChecks(spark: SparkSession, root: String,
-      batch: DataFrame): Unit = {
-    val checks = listSnapshotChecks(spark, root)
-    if (checks.nonEmpty) {
-      val aligned =
-        if (snapshotVersions(spark, root).isEmpty) batch
-        else readSnapshot(spark, root).schema.fields
-          .filterNot(f => batch.columns.contains(f.name))
-          .foldLeft(batch)((d, f) => d.withColumn(f.name, lit(null).cast(f.dataType)))
-      checks.foreach { case (n, e) => requireCheckHolds(aligned, n, e) }
+  /** Throw [[SnapshotCheckViolation]] naming the first check (in the
+    * given order) some row of `batch` evaluates FALSE: one job tests
+    * them all, and only a violation pays a job per check to name it. */
+  private def requireChecksHold(batch: DataFrame,
+      checks: Seq[(String, String)]): Unit = {
+    def violates(p: String) = coalesce(expr(p), lit(true)) === lit(false)
+    if (checks.nonEmpty &&
+        !batch.where(checks.map(c => violates(c._2)).reduce(_ || _)).isEmpty) {
+      val (name, predicate) = checks.init
+        .find { case (_, p) => !batch.where(violates(p)).isEmpty }
+        .getOrElse(checks.last)
+      throw new SnapshotCheckViolation(
+        s"CHECK $name ($predicate) violated by the incoming batch")
     }
   }
 
-  private val refName = "[A-Za-z0-9][A-Za-z0-9._-]*".r
-
-  /** TAG a snapshot version with an immutable name (Iceberg tags) —
-    * release pinning for training-data reproducibility: "the corpus
-    * this model trained on" becomes a NAME instead of a number someone
-    * has to remember. The tag file is create-exclusive, so a tag can
-    * never be silently repointed (delete + recreate is the only way,
-    * and that is an auditable two-step); [[vacuumSnapshots]] protects
-    * tagged versions regardless of its retention horizon, so a pinned
-    * corpus outlives routine retention. */
-  def tagSnapshot(spark: SparkSession, root: String, name: String,
-      version: Long): Unit = {
-    require(refName.matches(name), s"invalid tag name: $name")
-    require(snapshotVersions(spark, root).contains(version),
-      s"cannot tag absent version $version of $root")
-    val (fs, r) = fsOf(spark, root)
-    fs.mkdirs(refsDir(r))
-    val p = new org.apache.hadoop.fs.Path(refsDir(r), s"$name.tag")
-    if (!claimExclusive(fs, p, s"$version\n".getBytes("UTF-8")))
-      throw new IllegalStateException(s"tag $name already exists on $root")
-  }
-
-  /** All tags on the table, (name, version), name-sorted. */
-  def listSnapshotTags(spark: SparkSession, root: String): Seq[(String, Long)] = {
-    val (fs, r) = fsOf(spark, root)
-    val rd = refsDir(r)
-    if (!fs.exists(rd)) Seq.empty
-    else fs.listStatus(rd)
-      .filter(st => st.isFile && st.getPath.getName.endsWith(".tag"))
-      .map { st =>
-        val in = fs.open(st.getPath)
-        val v = try scala.io.Source.fromInputStream(in, "UTF-8")
-          .getLines().next().trim.toLong finally in.close()
-        st.getPath.getName.stripSuffix(".tag") -> v
-      }.sortBy(_._1).toSeq
-  }
-
-  /** The version a tag points at; throws on an unknown tag. */
-  def resolveSnapshotTag(spark: SparkSession, root: String, name: String): Long =
-    listSnapshotTags(spark, root).collectFirst { case (`name`, v) => v }
-      .getOrElse(throw new NoSuchElementException(s"no tag $name on $root"))
+  /** Validate `batch` against every CHECK in `refs`; called by the
+    * write paths BEFORE any data lands, so a violation aborts with
+    * zero cleanup. Columns of `head`'s committed schema ABSENT from
+    * the batch (a schema-evolving feed may omit them — they land as
+    * NULL) are aligned in as NULLs first, so a check on such a column
+    * applies its SQL NULL-passes semantics instead of failing
+    * resolution. `head` is None on a table with no version yet. */
+  private def validateChecks(spark: SparkSession, root: String, refs: Refs,
+      head: Option[Manifest], batch: DataFrame): Unit =
+    if (refs.checks.nonEmpty) {
+      val aligned = head.fold(batch)(h =>
+        h.schema.getOrElse(readVersion(spark, root, h).schema).fields
+          .filterNot(f => batch.columns.contains(f.name))
+          .foldLeft(batch)((d, f) => d.withColumn(f.name, lit(null).cast(f.dataType))))
+      requireChecksHold(aligned, refs.checks)
+    }
 
   /** Read the table as of a tag — [[readSnapshot]] with the version
     * resolved by name (data skipping via `predicate` included). */
@@ -6415,14 +6413,6 @@ object GraftCatalog {
       predicate: Option[Column] = None): DataFrame =
     readSnapshot(spark, root, Some(resolveSnapshotTag(spark, root, name)),
       predicate = predicate)
-
-  /** Drop a tag (the version becomes subject to normal retention at
-    * the next vacuum — removal is the explicit, auditable step). */
-  def deleteSnapshotTag(spark: SparkSession, root: String, name: String): Unit = {
-    val (fs, r) = fsOf(spark, root)
-    val p = new org.apache.hadoop.fs.Path(refsDir(r), s"$name.tag")
-    require(fs.delete(p, false), s"no tag $name on $root")
-  }
 
   /** Zero-copy shallow CLONE (Delta's shallow clone / Iceberg's
     * snapshot branch-off): `dstRoot` becomes an independent snapshot
@@ -6448,38 +6438,21 @@ object GraftCatalog {
       src.stats.values.toSeq.sortBy(_.path))
     val schemaLine = src.schema.map(s => schemaLineOf(s)).toSeq
     val dvLines = copyDvSidecars(src, dfs, dr)
+    val dstRefs = refsOf(dfs, dr)
     publishManifest(dfs, dr, 1L,
-      Seq(s"#stats:$statsName") ++ schemaLine ++ dvLines ++ src.files)
+      Seq(s"#stats:$statsName") ++ schemaLine ++ dvLines ++ src.files, dstRefs)
     // The clone inherits the source's TABLE CONFIGURATION — CHECK
     // constraints, partition spec, bloom enrollment, sort order — or a
     // clone of a governed table would silently write unvalidated,
     // unpartitioned, unsorted batches. Tags and branch pins stay
-    // behind: they name SOURCE versions the clone doesn't have.
-    val srd = refsDir(sr)
-    if (sfs.exists(srd)) {
-      val cfg = sfs.listStatus(srd).filter(st => st.isFile && {
-        val n = st.getPath.getName
-        n.endsWith(".check") || n.startsWith("partition.spec") ||
-          n == "bloom.conf" || n == "sort.conf" || n == "write.mode" ||
-          n == "manifest.conf"
-      })
-      if (cfg.nonEmpty) dfs.mkdirs(refsDir(dr))
-      cfg.foreach { st =>
-        val dst = new org.apache.hadoop.fs.Path(refsDir(dr), st.getPath.getName)
-        // a config the caller pre-set on the clone target wins — the
-        // copy must not fail the clone after its manifest published
-        if (!dfs.exists(dst)) {
-          val in = sfs.open(st.getPath)
-          val bytes =
-            try {
-              val buf = new java.io.ByteArrayOutputStream()
-              org.apache.hadoop.io.IOUtils.copyBytes(in, buf, 8192, false)
-              buf.toByteArray
-            } finally in.close()
-          claimExclusive(dfs, dst, bytes) // racing pre-set: theirs wins
-        }
-      }
-    }
+    // behind: they name SOURCE versions the clone doesn't have. A
+    // config the caller pre-set on the clone target wins — the copy
+    // must not fail the clone after its manifest published.
+    val srcRefs = refsOf(sfs, sr)
+    val inherit = srcRefs.configFiles.filterNot(dstRefs.configFiles.contains)
+    if (inherit.nonEmpty) dfs.mkdirs(refsDir(dr))
+    inherit.foreach(n => claimExclusive(dfs, new org.apache.hadoop.fs.Path(refsDir(dr), n),
+      srcRefs.text(n).get.getBytes("UTF-8"))) // racing pre-set: theirs wins
     1L
   }
 
@@ -6541,19 +6514,20 @@ object GraftCatalog {
     * cleanup runs. */
   private def publishBranchFF(spark: SparkSession, root: String,
       name: String, meta: Seq[String]): Long = {
-    val base = resolveSnapshotTag(spark, root, branchBaseTag(name))
-    val head = snapshotVersions(spark, root).last
+    val (fs, r) = fsOf(spark, root)
+    val refs = refsOf(fs, r)
+    val base = tagOf(refs, root, branchBaseTag(name))
+    val head = versionsAt(fs, r).last
     if (head != base) throw new SnapshotConflictException(
       s"branch $name forked at v$base but $root is at v$head — " +
         "fast-forward would discard parent commits; rebase the branch")
     val b = headOf(spark, snapshotBranchRoot(root, name))
-    val (fs, r) = fsOf(spark, root)
     val statsName = writeStatsFile(spark, fs, r, b.stats.values.toSeq.sortBy(_.path))
     val schemaLine = b.schema.map(s => schemaLineOf(s)).toSeq
     val dvLines = copyDvSidecars(b, fs, r)
     publishManifest(fs, r, head + 1,
       Seq(s"#stats:$statsName", s"#branch-merge:$name") ++ meta ++
-        schemaLine ++ dvLines ++ b.files)
+        schemaLine ++ dvLines ++ b.files, refs)
     head + 1
   }
 
@@ -7040,7 +7014,8 @@ object GraftCatalog {
     if ((bDvFork -- bDvHead).nonEmpty) throw original
     val dvAdded = (bDvHead -- bDvFork).toSeq.sorted
     val schemaLine = b.schema.map(schemaLineOf).getOrElse(throw original)
-    val fork = manifestAt(fs, r, resolveSnapshotTag(spark, root, branchBaseTag(name)))
+    val refs = refsOf(fs, r)
+    val fork = manifestAt(fs, r, tagOf(refs, root, branchBaseTag(name)))
     val forkFiles = fork.files.toSet
     val bFiles = b.files
     val consumed = forkFiles -- bFiles.toSet
@@ -7062,7 +7037,7 @@ object GraftCatalog {
       fs.delete(new org.apache.hadoop.fs.Path(deletesDir(r), n), true)
     }
     val v =
-      try republishPinnedRewrite(spark, fork, consumed, newFiles,
+      try republishPinnedRewrite(spark, fork, refs, consumed, newFiles,
         newStats, schemaLine, meta = Seq(s"#txn-merge:$name") ++ meta,
         carriesLines = true, original,
         scopeDisjoint =

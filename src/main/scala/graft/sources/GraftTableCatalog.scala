@@ -423,15 +423,13 @@ final case class GraftSnapshotTable(root: String, pinned: Option[Long],
 
   override def properties(): java.util.Map[String, String] = {
     val m = new java.util.HashMap[String, String]()
-    m.put("write.mode", GraftCatalog.snapshotWriteMode(spark, root))
-    val sort = GraftCatalog.snapshotSortOrder(spark, root)
-    if (sort.nonEmpty) m.put("sort.order", sort.mkString(","))
-    GraftCatalog.snapshotManifestConf(spark, root.toString).foreach {
-      case (k, v) => m.put(s"manifest.$k", v.toString)
-    }
+    val refs = GraftCatalog.snapshotRefs(spark, root)
+    m.put("write.mode", refs.writeMode)
+    if (refs.sortOrder.nonEmpty) m.put("sort.order", refs.sortOrder.mkString(","))
+    refs.manifestKv.foreach { case (k, v) => m.put(s"manifest.$k", v.toString) }
     // CHECK constraints surface as check.<name> so SHOW TBLPROPERTIES
     // answers "what does this table enforce" without a Scala call
-    GraftCatalog.listSnapshotChecks(spark, root).foreach { case (n, p) =>
+    refs.checks.foreach { case (n, p) =>
       m.put(s"check.$n", p)
     }
     m.put(TableCatalog.PROP_PROVIDER, "graft")

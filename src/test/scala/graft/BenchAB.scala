@@ -5,32 +5,20 @@ import org.apache.spark.sql.SparkSession
 /** A/B harness: time queries on a session WITHOUT the graft
   * extensions vs WITH them, same JVM, interleaved reps — separates
   * "the injected rules cost analyzer time" from co-tenant host load.
+  * The extensions session comes first (`GraftSession.local()`, sized
+  * from SPARK_GRAFT_CPUS); the bare one shares its context and confs,
+  * so the two differ only in the injected rules.
   * `sbt "Test/runMain graft.BenchAB q115_corr_matrix,tpch_q6 [sfDir] [reps]"` */
 object BenchAB {
   def main(args: Array[String]): Unit = {
     val names = args(0).split(',').toSeq
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val reps = if (args.length > 2) args(2).toInt else 3
-    SparkSession.clearActiveSession(); SparkSession.clearDefaultSession()
-    val bare = SparkSession.builder().master("local[32]")
-      .appName("bench-ab-bare")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    bare.sparkContext.setLogLevel("ERROR")
-    graft.functions.GraftFunctions.register(bare) // functions, but no rules
-    SparkSession.clearActiveSession(); SparkSession.clearDefaultSession()
-    val ext = SparkSession.builder().master("local[32]")
-      .appName("bench-ab-ext")
-      .withExtensions(new GraftExtensions())
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val ext = GraftSession.local()
     ext.sparkContext.setLogLevel("ERROR")
+    SparkSession.clearActiveSession(); SparkSession.clearDefaultSession()
+    val bare = SparkSession.builder().appName("bench-ab-bare").getOrCreate()
+    graft.functions.GraftFunctions.register(bare) // functions, but no rules
     def once(s: SparkSession, n: String): Double = {
       SparkSession.setActiveSession(s); SparkSession.setDefaultSession(s)
       val t0 = System.nanoTime()

@@ -8,7 +8,7 @@ object BenchOne {
     val name = args(0)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val reps = if (args.length > 2) args(2).toInt else 4
-    val spark = GraftSession.builder("local[32]", 32).getOrCreate()
+    val spark = GraftSession.local()
     spark.sparkContext.setLogLevel("ERROR")
     val fn = SparkEntry.queries(name)
     for (i <- 1 to reps) {

@@ -42,6 +42,32 @@ class CoreSpec extends AnyFunSuite {
     assert(extra.isEmpty, s"oracles without queries: $extra")
   }
 
+  test("an export path carries the process id; day-old exports of dead processes are reaped") {
+    import graft.operators.Similarity
+    val pid = ProcessHandle.current.pid
+    val p = Similarity.exportPath("s02cand", sf)
+    assert(p.endsWith(s"-$pid") && Similarity.oracleExportPath("s02cand") == p, p)
+    val deadPid = Iterator.from(4194304).map(_.toLong).find(!ProcessHandle.of(_).isPresent).get
+    def plant(name: String, ageMs: Long): java.io.File = {
+      val dir = new java.io.File(s"/tmp/graft-index/$name")
+      dir.mkdirs()
+      java.nio.file.Files.write(new java.io.File(dir, "part-0.parquet").toPath, Array[Byte](1))
+      dir.setLastModified(System.currentTimeMillis() - ageMs)
+      dir
+    }
+    val twoDays = 2 * 24 * 3600 * 1000L
+    val dead = plant(s"s02cand-1-$deadPid", twoDays)
+    val fresh = plant(s"s02cand-2-$deadPid", 0L) // a finished run's, awaiting its compare
+    val live = plant(s"s02cand-1-$pid", twoDays)
+    try {
+      Similarity.reapDeadExports()
+      assert(!dead.exists() && fresh.exists() && live.exists())
+    } finally Seq(fresh, live).foreach { d =>
+      d.listFiles().foreach(_.delete())
+      d.delete()
+    }
+  }
+
   test("q01: column pruning reaches the parquet scan") {
     val schemas = readSchemas(SparkEntry.queries("q01_project")(spark, sf))
     assert(schemas.nonEmpty)

@@ -10,7 +10,7 @@ object DecProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
     val reps = if (args.length > 1) args(1).toInt else 3
-    val spark = GraftSession.builder("local[32]", 32).getOrCreate()
+    val spark = GraftSession.local()
     spark.sparkContext.setLogLevel("ERROR")
     val li = Tables.df(spark, sfDir, "lineitem")
     val x = col("l_quantity"); val y = col("l_extendedprice")

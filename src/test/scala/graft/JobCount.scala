@@ -10,7 +10,7 @@ object JobCount {
   def main(args: Array[String]): Unit = {
     val names = args(0).split(',').toSeq
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
-    val spark = GraftSession.builder("local[32]", 32).getOrCreate()
+    val spark = GraftSession.local()
     spark.sparkContext.setLogLevel("ERROR")
     val jobs = new AtomicInteger(0)
     spark.sparkContext.addSparkListener(new SparkListener {

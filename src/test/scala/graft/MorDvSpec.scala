@@ -954,4 +954,62 @@ class MorDvSpec extends AnyFunSuite {
       assert(GraftCatalog.readSnapshot(spark, root, Some(vs.last)).count() == 998)
     }
   }
+
+  test("a verb lists _refs/ once, opens each config file at most once, and its head's manifest once") {
+    import spark.implicits._
+    val opens = org.apache.spark.GraftManifestOpens
+    countingManifestOpens {
+      def row(id: Long) = Seq((id, id % 7, id * 10)).toDF("id", "grp", "amount")
+      // the table's configuration calls: `_refs` itself ("") and its
+      // config files; `tx/` and `cursors/` are protocol state
+      def config(root: String) = opens.refs(root).filter { case ((_, p), _) =>
+        !(p == "tx" || p.startsWith("tx/") || p == "cursors" || p.startsWith("cursors/")) }
+      // (verb, head-manifest opens, its configuration calls) per verb
+      def measured(root: String): Seq[(String, Int, Map[(String, String), Int])] = Seq[(String, () => Any)](
+        "commitSnapshot" -> (() => GraftCatalog.commitSnapshot(row(1000L), root, append = true)),
+        "mergeSnapshotKeys" -> (() =>
+          GraftCatalog.mergeSnapshotKeys(spark, root, row(5L), Seq("id"))),
+        "updateSnapshotWhere" -> (() => GraftCatalog.updateSnapshotWhere(
+          spark, root, col("id") === 11L, Seq("amount" -> lit(0L)))),
+        "deleteSnapshotWhereMor" -> (() =>
+          GraftCatalog.deleteSnapshotWhereMor(spark, root, col("id") === 8L)),
+        "readSnapshot" -> (() => GraftCatalog.readSnapshot(
+          spark, root, predicate = Some(col("id") < 100L)).collect()),
+        // rejects on a table without a partition spec, after its one read
+        "compactSnapshotPartitioned" -> (() => scala.util.Try(
+          GraftCatalog.compactSnapshotPartitioned(spark, root))),
+        "vacuumSnapshots" -> (() => GraftCatalog.vacuumSnapshots(
+          spark, root, GraftCatalog.snapshotVersions(spark, root).last))
+      ).map { case (name, verb) =>
+        val head = GraftCatalog.snapshotVersions(spark, root).last
+        val (headBefore, before) = (opens.of(root, head), config(root))
+        verb()
+        (name, opens.of(root, head) - headBefore, config(root).map { case (k, n) =>
+          k -> (n - before.getOrElse(k, 0)) }.filter(_._2 > 0))
+      }
+      val root = freshTable("refs")
+      GraftCatalog.setSnapshotPartitionSpec(spark, root,
+        Seq(graft.sources.PartitionField("grp", "identity")))
+      GraftCatalog.setSnapshotBloomFilters(spark, root, Seq("amount"))
+      GraftCatalog.setSnapshotSortOrder(spark, root, Seq("id"))
+      GraftCatalog.setSnapshotManifestConf(spark, root, inlineMax = Some(100000))
+      GraftCatalog.addSnapshotCheck(spark, root, "amount_nonneg", "amount >= 0")
+      GraftCatalog.addSnapshotCheck(spark, root, "grp_range", "grp < 7")
+      GraftCatalog.tagSnapshot(spark, root, "first", 1L)
+      val configured = measured(root)
+      val report = configured.mkString("\n")
+      configured.foreach { case (verb, headOpens, calls) =>
+        assert(calls.get(("listStatus", "")).contains(1), s"$verb: one listing\n$report")
+        assert(!calls.keys.exists(_._1 == "getFileStatus"), s"$verb: no status\n$report")
+        assert(calls.forall { case ((call, _), n) => call != "open" || n <= 1 },
+          s"$verb: one open per config file\n$report")
+        assert(headOpens == 1, s"$verb: one head open\n$report")
+      }
+      val t = GraftCatalog.readSnapshot(spark, root)
+      assert(t.count() == 1000 && t.where(col("id") === 8L).isEmpty)
+      assert(t.where(col("id") === 11L).select("amount").as[Long].collect().toSeq == Seq(0L))
+      val bare = measured(freshTable("refs0"))
+      assert(bare.forall(_._3.values.sum <= 1), bare.mkString("\n"))
+    }
+  }
 }

@@ -7,7 +7,7 @@ object QueryLoop {
     val name = args(0)
     val reps = if (args.length > 1) args(1).toInt else 20
     val sfDir = if (args.length > 2) args(2) else "/root/testdata/sf0.1"
-    val spark = GraftSession.builder("local[32]", 32).getOrCreate()
+    val spark = GraftSession.local()
     spark.sparkContext.setLogLevel("ERROR")
     def once(n: String): Double = {
       val t0 = System.nanoTime()
